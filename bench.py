@@ -1,5 +1,6 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+$SPARK_GRAFT_CPUS defaults to the CPUs this process may run on.
 
 Prints the full JSON record:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}

@@ -11,7 +11,11 @@ long-lived serving driver should call it per request batch.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+log = logging.getLogger(__name__)
 
 # entries are DataFrames (unpersist) or zero-arg cleanup callables
 _PERSISTED: list = []
@@ -71,10 +75,12 @@ def tracked_local_checkpoint(df: DataFrame) -> DataFrame:
 
 
 def clear_tracked_cache() -> None:
-    """Unpersist every tracked intermediate. Call after collecting results."""
+    """Unpersist every tracked intermediate. Call after collecting results.
+    A cleanup that fails is logged as a warning and the rest are still
+    freed."""
     while _PERSISTED:
         item = _PERSISTED.pop()
         try:
             item() if callable(item) else item.unpersist()
         except Exception:
-            pass
+            log.warning("could not free tracked cache entry %r", item, exc_info=True)

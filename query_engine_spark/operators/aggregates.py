@@ -12,6 +12,8 @@ import datetime as _dt
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from query_engine_spark.operators.inputs import NOW_COL, with_now
+
 __all__ = [
     "trending_tags",
     "tag_variations",
@@ -41,14 +43,14 @@ def trending_tags(
     One explode + two-level agg; the variation argmax is `max_by` over the
     per-(tag, spelling) counts — no driver-side loops.
 
-    `now=None` pins the window to max(ts) IN-PLAN via a broadcast one-row
-    crossJoin (the SC5 broadcast-scalar pattern) — no driver round-trip. A
-    datetime `now` (serving: the request time) folds to a literal the parquet
-    reader can min/max-skip on.
+    `now=None` pins the window to max(ts) IN-PLAN (`inputs.with_now`: the
+    column a published PostStore snapshot carries, else a broadcast one-row
+    crossJoin) — no driver round-trip. A datetime `now` (serving: the
+    request time) folds to a literal the parquet reader can min/max-skip on.
     """
     if now is None:
-        posts = posts.crossJoin(F.broadcast(posts.agg(F.max(ts).alias("__now"))))
-        now = F.col("__now")
+        posts = with_now(posts, ts)
+        now = F.col(NOW_COL)
     if isinstance(now, Column):
         window = F.col(ts) >= now - F.expr(f"INTERVAL {int(minutes)} MINUTE")
     else:

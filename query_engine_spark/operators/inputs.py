@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 from query_engine_spark.operators.scoring import weight_fn
 
 __all__ = [
+    "NOW_COL",
+    "with_now",
     "window_pred",
     "input_firehose",
     "input_list",
@@ -34,11 +36,30 @@ __all__ = [
 ]
 
 
+# hidden "now" column of the in-plan now mode (now=None): max(ts) of the
+# posts, attached as data by `with_now` and dropped on output
+NOW_COL = "__qe_now"
+
+
+def with_now(posts: DataFrame, ts: str = "ts") -> DataFrame:
+    """posts carrying NOW_COL = max(ts) over all of them, so window cutoffs
+    and ages stay in-plan with no driver round-trip.
+
+    A frame that already carries the column (a published
+    ``PostStore.serving_view`` snapshot) is returned as is. Otherwise the
+    column comes from a broadcast one-row crossJoin (the SC5
+    broadcast-scalar pattern), which Spark re-plans with every query that
+    reads it: one extra shuffle stage (the max) and one broadcast stage."""
+    if NOW_COL in posts.columns:
+        return posts
+    return posts.crossJoin(F.broadcast(posts.agg(F.max(ts).alias(NOW_COL))))
+
+
 def window_pred(now: _dt.datetime | Column, seconds: int, ts: str = "ts") -> Column:
     """ts >= now - seconds (main.rs:1417-1424 cutoff-TID range).
 
-    `now` may be a Column (e.g. a broadcast-scalar "data max" column attached
-    by PipelineContext) so the cutoff stays in-plan — no driver round-trip.
+    `now` may be a Column (the NOW_COL attached by `with_now`) so the
+    cutoff stays in-plan — no driver round-trip.
     A datetime `now` folds to a literal, which parquet min/max skipping and
     partition pruning can use directly."""
     if isinstance(now, Column):

@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from query_engine_spark.operators import filters as Fi
 from query_engine_spark.operators import inputs as In
+from query_engine_spark.operators.inputs import NOW_COL
 from query_engine_spark.operators import joins as J
 from query_engine_spark.operators import scoring as Sc
 from query_engine_spark.operators import sorts as So
@@ -70,10 +71,6 @@ FINAL_LIMIT = 500  # main.rs:2510-2512
 # sort→limit fusion / final limit) → cheap single-task stamp
 _ORD_HIDDEN = "__qe_o"
 
-# hidden broadcast-scalar "now" column for the in-plan now mode (now=None):
-# attached to posts once via crossJoin(broadcast(agg)), dropped on output
-NOW_COL = "__qe_now"
-
 
 @dataclass
 class PipelineContext:
@@ -88,11 +85,12 @@ class PipelineContext:
     # precomputed mutual-affinity ("moots") edges
     communities: DataFrame | None = None  # (community, user_key)
     moots: DataFrame | None = None  # (src_key, dst_key, weight)
-    # now=None → "in-plan now": every window cutoff / age computation reads a
-    # hidden broadcast-scalar column pinned to max(posts.ts) — zero driver
-    # round-trips (deterministic fixtures). A datetime pins it explicitly
-    # (production: the serving layer passes request time), which folds to a
-    # literal that parquet min/max skipping can push down.
+    # now=None → "in-plan now": every window cutoff / age computation reads
+    # the hidden NOW_COL = max(posts.ts) — carried as data by a published
+    # PostStore snapshot, else attached in-plan (inputs.with_now); zero
+    # driver round-trips. A datetime pins it explicitly (production: the
+    # serving layer passes request time), which folds to a literal that
+    # parquet min/max skipping can push down.
     now: _dt.datetime | None = field(default_factory=lambda: _dt.datetime.now(_dt.timezone.utc))
     random_seed: int | None = None
     # opt-in for the sandboxed pandas-UDF script tier (scripting.py): scripts
@@ -390,11 +388,13 @@ def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> Da
 
     posts = ctx.posts
     if ctx.now is None:
-        # in-plan "now": one hidden broadcast-scalar column pinned to
-        # max(posts.ts) — the SC5 broadcast-scalar crossJoin pattern. Every
-        # window cutoff / age expression below reads the column; zero extra
-        # Spark jobs, zero driver round-trips.
-        posts = posts.crossJoin(F.broadcast(posts.agg(F.max("ts").alias(NOW_COL))))
+        # every window cutoff / age expression below reads NOW_COL. Over
+        # posts that do not carry it, with_now's max(ts) subtree costs each
+        # query one shuffle stage and one broadcast stage (AQE reuses them
+        # for the plan's other copies of the subtree): measured warm on 4
+        # cores at 100k posts, flagship runs 10 Spark jobs over a parquet
+        # window and 8 over a published PostStore snapshot
+        posts = In.with_now(posts)
         now_arg: _dt.datetime | Column = F.col(NOW_COL)
         now_epoch_expr = f"unix_seconds({NOW_COL})"
         now_us: Column = F.unix_micros(F.col(NOW_COL))

@@ -789,8 +789,10 @@ def o5_sort_score_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from query_engine_spark.plans.blocks import PipelineContext, translate_pipeline
 
     posts = posts_view(spark, sf_dir)
-    # now=None → in-plan "now" pinned to max(ts) via broadcast scalar: the
-    # whole query is ONE Spark job, no driver round-trip (VERDICT r3 #4)
+    # now=None → in-plan "now" pinned to max(ts) via broadcast scalar: no
+    # driver round-trip, but not one job — measured warm on 4 cores at 100k
+    # events, the query runs 12 Spark jobs (one per AQE query stage), the
+    # max(ts) shuffle and its broadcast among them
     ctx = PipelineContext(spark=spark, posts=posts, now=None)
     blocks = [
         {"type": "input", "inputType": "firehose"},  # window twice → duplicates
@@ -3274,8 +3276,10 @@ def pipeline_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     from query_engine_spark.plans.blocks import PipelineContext, translate_pipeline
 
     posts = posts_view(spark, sf_dir)
-    # now=None → in-plan "now" pinned to max(ts) via broadcast scalar: the
-    # whole query is ONE Spark job, no driver round-trip (VERDICT r3 #4)
+    # now=None → in-plan "now" pinned to max(ts) via broadcast scalar: no
+    # driver round-trip, but not one job — measured warm on 4 cores at 100k
+    # events, the query runs 10 Spark jobs (one per AQE query stage), the
+    # max(ts) shuffle and its broadcast among them
     ctx = PipelineContext(spark=spark, posts=posts, now=None)
     blocks = [
         {"type": "input", "inputType": "firehose", "firehoseSeconds": 7 * 86400},

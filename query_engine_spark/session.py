@@ -1,8 +1,9 @@
 """SparkSession factory.
 
-Local test profile runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32) but every
-config below is chosen for the real target: a multi-executor cluster scanning
-~100 TB of date-partitioned parquet. AQE handles runtime partition coalescing
+Local test profile runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs
+this process may run on, ``os.sched_getaffinity``) but every config below is
+chosen for the real target: a multi-executor cluster scanning ~100 TB of
+date-partitioned parquet. AQE handles runtime partition coalescing
 and skew joins; shuffle partitions default to a value sized for local runs and
 should be raised (or left to AQE) on a cluster.
 """
@@ -17,10 +18,12 @@ __all__ = ["get_spark", "stop_spark"]
 
 
 def _cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the CPUs this process may run on: more task
+    threads than CPUs only adds scheduling overhead."""
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    except ValueError:
-        return 32
+        return max(1, int(os.environ["SPARK_GRAFT_CPUS"]))
+    except (KeyError, ValueError):
+        return len(os.sched_getaffinity(0))
 
 
 def get_spark(app_name: str = "query_engine_spark", *, shuffle_partitions: int | None = None) -> SparkSession:

@@ -4,13 +4,26 @@ The reference's loop: page new rows with a 1000-row overlap → dedup on id →
 merge count views → evict beyond the 7-day window → spill old days to archive
 blobs (/root/reference/src/main.rs:328-464, 1004-1087, 1101-1175).
 
-Here the post store IS day-partitioned parquet (`dt=YYYY-MM-DD/`), which
-collapses the reference's three storage tiers (RAM window, day blobs, eviction)
-into one: the serving view is a retention predicate (partition pruning), the
-"archive" is simply the older partitions, and eviction is a partition delete.
+Here the post store IS day-partitioned parquet (`dt=YYYY-MM-DD/`): the
+"archive" is simply the older partitions and eviction is a partition delete.
 Ingest merges idempotently per micro-batch with dynamic partition overwrite —
 only the days touched by the batch are rewritten. Drive it from a scheduler
 or Structured Streaming's foreachBatch.
+
+Serving reads an in-memory window, as the reference serves from RAM and
+refreshes its window once per fetch cycle (main.rs:218-222, 1106-1110).
+`serving_view` publishes a snapshot once per commit: the dt-pruned read of
+the window, materialized into the block manager with its lineage cut
+(`localCheckpoint`), carrying the window's in-plan "now" (max ts) as the
+data column `inputs.NOW_COL`. Feed requests then plan no parquet scan and
+no max(ts) subtree, and because `now` is data rather than a literal, their
+generated code stays cached across commits. The store keeps exactly one
+live snapshot and frees the previous one when it publishes the next.
+
+Concurrency: a snapshot depends on no file, so reads of it may overlap an
+`ingest` (which rewrites the day partitions it was read from). They must not
+overlap a publish: publishing frees the previous snapshot's blocks under
+any reader still scanning them.
 """
 
 from __future__ import annotations
@@ -21,6 +34,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from query_engine_spark.cache import local_checkpoint_with_free
+from query_engine_spark.operators.inputs import with_now
 from query_engine_spark.streaming.ingest import merge_incremental
 
 __all__ = ["PostStore"]
@@ -34,6 +49,7 @@ class PostStore:
         self.path = path
         self.ts_col = ts_col
         self.id_col = id_col
+        self._free_snapshot = None  # frees the live serving snapshot
 
     def _exists(self) -> bool:
         return os.path.isdir(self.path) and any(
@@ -61,11 +77,24 @@ class PostStore:
         # as a storage layout instead of an index
         merged.sortWithinPartitions(self.id_col).write.mode("overwrite").partitionBy("dt").parquet(self.path)
 
-    def serving_view(self, now: _dt.datetime, days: int = 7) -> DataFrame:
-        """The reference's in-RAM window (main.rs:218-222) as a pruned read:
-        the dt predicate eliminates whole partitions before any IO."""
+    def window(self, now: _dt.datetime, days: int = 7) -> DataFrame:
+        """The last `days` days before `now` as a lazy read: the dt predicate
+        eliminates whole partitions before any IO."""
         cutoff = (now - _dt.timedelta(days=days)).strftime("%Y-%m-%d")
         return self.read().filter(F.col("dt") >= cutoff)
+
+    def serving_view(self, now: _dt.datetime, days: int = 7) -> DataFrame:
+        """Publish the reference's in-RAM window (main.rs:218-222): `window`
+        materialized once, with its max(ts) as the `inputs.NOW_COL` column
+        that `now=None` pipelines read, and the lineage cut so no later
+        `ingest` can invalidate it. Frees the previously published snapshot:
+        call it once per commit, never while a read of the previous snapshot
+        is running."""
+        snapshot, free = local_checkpoint_with_free(with_now(self.window(now, days), self.ts_col))
+        if self._free_snapshot is not None:
+            self._free_snapshot()
+        self._free_snapshot = free
+        return snapshot
 
     def evict(self, now: _dt.datetime, days: int = 8, archive_path: str | None = None) -> list[str]:
         """Eviction / archive spill (main.rs:1020-1083): partitions older than

@@ -3,9 +3,16 @@
 from __future__ import annotations
 
 import datetime as dt
+import re
+
+import pytest
 
 from pyspark.sql import functions as F
 
+from perfbench import inputs
+from query_engine_spark.operators.ordering import ORD
+from query_engine_spark.plans.blocks import PipelineContext, translate_pipeline
+from query_engine_spark.sources.testdata import posts_view
 from query_engine_spark.streaming.job import PostStore
 
 NOW = dt.datetime(2024, 3, 10, 12, 0, 0)
@@ -133,3 +140,92 @@ def test_store_compaction(spark, tmp_path):
             .parquet(store.path)
         )
     assert store.compact(target_bytes=64 * 1024 * 1024, older_than_days=1, now=NOW) == {}
+
+
+# --- serving snapshots ------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def feed_store(spark, tmp_path_factory):
+    """A store holding the benchmark's posts shape (3000 events over 30 days)
+    and the ts of its newest post."""
+    root = tmp_path_factory.mktemp("feed")
+    inputs.write_tables(str(root), events=3000)
+    posts = posts_view(spark, str(root))
+    store = PostStore(spark, str(root / "store"))
+    store.ingest(posts)
+    newest = posts.agg(F.max("ts")).collect()[0][0]
+    return store, newest
+
+
+def _feed(spark, posts, blocks):
+    out = translate_pipeline(blocks, PipelineContext(spark=spark, posts=posts, now=None))
+    out = out.select(ORD, "id", "score").orderBy(ORD)
+    return out, [(r["id"], r["score"]) for r in out.collect()]
+
+
+def _shape_requests():
+    return [inputs.request(shape, i) for shape, (params, _) in inputs.SHAPES.items() for i in range(len(params))]
+
+
+@pytest.mark.parametrize("days_ahead", [0, 30])  # 30: the window is empty
+def test_snapshot_serves_the_same_feeds_as_the_lazy_window(spark, feed_store, days_ahead):
+    store, newest = feed_store
+    now = newest + dt.timedelta(days=days_ahead)
+    lazy = store.window(now)
+    snapshot = store.serving_view(now)
+    assert snapshot.count() == lazy.count()
+    for r in _shape_requests():
+        want = _feed(spark, lazy, r["blocks"])[1]
+        assert _feed(spark, snapshot, r["blocks"])[1] == want, r["key"]
+        assert want or days_ahead, f"{r['key']}: empty feed over a full window"
+
+
+def test_snapshot_outlives_ingest_of_its_partitions(spark, tmp_path):
+    store = PostStore(spark, str(tmp_path / "store"))
+    store.ingest(_batch(spark, [(1, 0.1, "a"), (2, 1.2, "b")]))
+    snapshot = store.serving_view(NOW)
+    # rewrites both day partitions the snapshot was read from
+    store.ingest(_batch(spark, [(1, 0.1, "A"), (2, 1.2, "B"), (3, 0.1, "c")]))
+    assert {r["id"]: r["v"] for r in store.read().collect()} == {1: "A", 2: "B", 3: "c"}
+    assert {r["id"]: r["v"] for r in snapshot.collect()} == {1: "a", 2: "b"}
+
+
+def test_store_keeps_one_snapshot(spark, tmp_path):
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    store = PostStore(spark, str(tmp_path / "store"))
+    store.ingest(_batch(spark, [(1, 0.1, "a"), (2, 1.2, "b")]))
+    for _ in range(5):
+        snapshot = store.serving_view(NOW)
+    live = set(jsc.getPersistentRDDs().keySet().toArray()) - before
+    assert len(live) == 1
+    assert snapshot.count() == 2
+
+
+def test_snapshot_scan_prunes_partitions(spark, tmp_path, monkeypatch):
+    """The dt predicate reaches the scan that materializes the snapshot."""
+    from query_engine_spark.streaming import job
+
+    store = PostStore(spark, str(tmp_path / "store"))
+    store.ingest(_batch(spark, [(1, 0.1, "a"), (2, 9.5, "old")]))
+    materialized = []
+    checkpoint = job.local_checkpoint_with_free
+    monkeypatch.setattr(job, "local_checkpoint_with_free", lambda df: checkpoint(materialized.append(df) or df))
+    assert [r["id"] for r in store.serving_view(NOW, days=7).collect()] == [1]
+    plan = materialized[0]._jdf.queryExecution().executedPlan().toString()
+    pruned = re.findall(r"PartitionFilters: \[isnotnull\(dt#\d+\), \(dt#\d+ >= 2024-03-03\)\]", plan)
+    assert pruned and len(pruned) == plan.count("FileScan parquet")
+
+
+def test_served_request_plans_no_scan_and_no_now_join(spark, feed_store):
+    store, newest = feed_store
+    blocks = inputs.request("flagship", 0)["blocks"]
+    for posts, served in ((store.window(newest), False), (store.serving_view(newest), True)):
+        out, _ = _feed(spark, posts, blocks)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan
+        assert ("FileScan parquet" in plan) != served
+        # the in-plan now: max(ts) broadcast into a nested-loop cross join
+        assert bool(re.search(r"functions=\[max\(ts#", plan)) != served
+        assert bool(re.search(r"BroadcastNestedLoopJoin[^\n]*__qe_now", plan)) != served
