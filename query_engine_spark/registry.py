@@ -13,6 +13,10 @@ Conventions keeping the cross-engine value-hash honest:
 
 Query functions take (spark, sf_dir) and use the operator library — they are
 the operator inventory's integration tests, not ad-hoc SQL.
+
+Every pair registers here through `_register`, which rejects a repeated
+name; `queries()` / `oracle_sql()` return REGISTRY in registration order.
+tests/test_oracles.py runs every pair against its oracle at two scales.
 """
 
 from __future__ import annotations
@@ -53,6 +57,8 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 def _register(name: str, oracle: str | None, doc: str = ""):
     def deco(fn):
+        if name in REGISTRY:
+            raise ValueError(f"duplicate registration: {name}")
         REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
         return fn
 
@@ -7393,281 +7399,4515 @@ def multimodal_webp_lossy_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return WB.webp_meta_features(media)
 
 
-# Driver verification history. The CORRECTNESS_r01–r04 artifacts prove the
-# driver hash-checks exactly the FIRST 50 names of _driver_order() each round
-# (the r3 and r4 sample sets are identical and equal order[:50]). The order
-# therefore IS the verification schedule: never-driver-verified queries first,
-# then queries whose machinery this round changed, then everything else,
-# least-recently-verified first. The map below is transcribed from the
-# CORRECTNESS files: name -> last round a driver hash-match was recorded.
-_DRIVER_LAST_VERIFIED: dict[str, int] = {
-    # Transcribed per-round by tools/ledger_transcribe.py from the
-    # CORRECTNESS_r*.json artifacts: name -> last round a driver
-    # hash-match (or designed rows-only pass) was recorded. Post-r16:
-    # the r16 window (49 hash-green + the designed rows-only
-    # f12_where_udf_tier, 50/50) verified the 13 _ROUND16_TOUCHED
-    # riders plus 37 rotation names (drained the r9-era 20-name cohort
-    # and most of the r10 TPC-H/eventless tail); cohorts now
-    # 28 r10 / 37 r11 / 40 r12 / 38 r13 / 41 r14 / 38 r15 / 50 r16
-    # = 272.
-    **{n: 10 for n in (
-        "asof_join_directions", "asof_join_events", "events_ema",
-        "events_transition_matrix", "funnel_events", "graph_triangles",
-        "group_quantiles_events", "hopping_window_events",
-        "kmv_distinct_users", "llm_balanced_sample",
-        "llm_bpe_pair_counts", "llm_chunk_docs", "llm_curation_flags",
-        "llm_doc_lm_score", "llm_domain_mix", "llm_ngram_lm",
-        "llm_pack_chunks", "llm_stupid_backoff", "multimodal_audio_au",
-        "multimodal_fits", "multimodal_pnm", "multimodal_subtitles",
-        "multimodal_svg", "multimodal_woff", "range_join_events",
-        "retention_cohorts", "stream_interval_join_pairs",
-        "text_top_terms_per_lang",
-    )},
-    **{n: 11 for n in (
-        "dedup_containment", "dedup_incremental", "embed_ivfpq_topk",
-        "embed_pq_topk", "events_anomaly_zscore", "events_countmin",
-        "events_cusum_drift", "events_ohlc", "events_salted_counts",
-        "events_zorder_box", "f10_embed_prefix", "f13_videos_notnull",
-        "f14_regex", "f15_profile_filters", "f9_non_duplicates",
-        "kmv_set_ops_events", "llm_bpe_apply", "llm_bpe_train",
-        "llm_curation_pipeline", "llm_dsir_weights",
-        "llm_weighted_sample", "media_audio_dedup",
-        "media_decode_dispatch", "multimodal_audio_resample",
-        "multimodal_features", "multimodal_resize",
-        "q12_priority_lines", "q20_promotion_suppliers",
-        "q21_waiting_suppliers", "rollup_gapfill_events",
-        "sc4_created_at_score", "sc_hn_normalized", "sessionize_events",
-        "text_bm25_indexed", "text_strip_boilerplate",
-        "text_tfidf_pairs", "text_winnowing",
-    )},
-    **{n: 12 for n in (
-        "crawl_schedule", "llm_compressed_ingest", "llm_epub_ingest",
-        "llm_sitemap_frontier", "llm_tar_ingest", "llm_tar_longnames",
-        "llm_tar_mixed_ingest", "llm_zip64_ingest", "llm_zip_ingest",
-        "media_jpeg_perceptual_dedup", "media_mp4_video_dedup",
-        "media_video_dedup", "multimodal_audio_flac",
-        "multimodal_audio_flac24", "multimodal_bmp_rle8",
-        "multimodal_gif", "multimodal_gif_animated",
-        "multimodal_gif_composited", "multimodal_gif_local_palettes",
-        "multimodal_ico", "multimodal_jpeg", "multimodal_jpeg_420",
-        "multimodal_jpeg_cmyk", "multimodal_jpeg_color",
-        "multimodal_jpeg_oriented", "multimodal_jpeg_progressive",
-        "multimodal_png", "multimodal_png16", "multimodal_png_adam7",
-        "multimodal_png_gray", "multimodal_png_packed",
-        "multimodal_png_rgba", "multimodal_png_trns", "multimodal_qoi",
-        "multimodal_video_avi_mjpeg", "multimodal_video_frames",
-        "multimodal_video_mp4", "multimodal_webp",
-        "multimodal_webp_animated", "multimodal_webp_palette",
-    )},
-    **{n: 13 for n in (
-        "a1_trending_tags", "a1_trending_windowed",
-        "dedup_embedding_cosine", "dedup_minhash_lsh",
-        "dedup_ngram_jaccard", "embed_ivf_indexed", "embed_ivf_topk",
-        "embed_kmeans", "hybrid_rrf_search", "j10_mutuals",
-        "j10_two_hop", "j1_replace_parent", "j3_replace_record",
-        "j4_direct_replies", "j5_all_replies", "j6_quote_posts",
-        "llm_curation_pipeline_decontam", "llm_curation_pipeline_scrub",
-        "media_perceptual_dedup", "multimodal_audio_adpcm",
-        "multimodal_audio_mulaw", "multimodal_pdf_text",
-        "multimodal_pdf_xrefstream", "multimodal_video_rle",
-        "o1_sort_created_top", "o2_sort_hn", "o3_sort_counts",
-        "o4_sort_random", "o5_sort_score_dedup", "o7_posts_per_user",
-        "profile_pipeline", "s2_input_list", "s6_input_did",
-        "text_doc_segment_dedup", "text_dup_spans", "text_langid_ngram",
-        "text_redact_pii", "u_stash_pipeline",
-    )},
-    **{n: 14 for n in (
-        "a2_tag_variations", "a3_count_views", "a4_degree_counts",
-        "a5_user_like_totals", "a7_admin_stats", "agg_cube",
-        "agg_distinct_users", "agg_pivot", "dedup_exact",
-        "dedup_simhash", "embed_cosine_topk", "embed_srp_near_dup",
-        "events_anomaly_static", "f11_labels_remove", "f1_item_kind",
-        "f2_image_count", "f6_language", "f7_list_semi_anti",
-        "f8_duplicates_first", "f_count_cmp", "j2_replace_root",
-        "llm_curation_pipeline_neardup", "media_incremental_dedup",
-        "q18_large_orders", "q1_pricing_summary",
-        "q3_shipping_priority", "q5_local_supplier_volume",
-        "s10_liked_by_likers", "s3_input_tags", "s4_input_labels",
-        "s5_input_feed", "s7_input_post_prepend", "s8_archived_scan",
-        "s9_liked_weighted", "stream_windowed_counts",
-        "text_contamination", "text_fingerprint", "text_langid",
-        "text_quality", "text_tokens", "window_running_revenue",
-    )},
-    **{n: 15 for n in (
-        "agg_rollup", "dedup_clusters", "embed_label_centroids",
-        "embed_pq_indexed", "embed_semdedup", "j10_community",
-        "j10_top_moots", "llm_curation_pipeline_balance",
-        "llm_hash_sample", "llm_prepare_corpus", "llm_split_assign",
-        "llm_top_terms", "media_dedup", "multimodal_audio",
-        "multimodal_audio_aiff", "multimodal_audio_alaw",
-        "multimodal_audio_flac_stereo", "multimodal_audio_pcm24",
-        "multimodal_audio_sphere", "multimodal_audio_wav_stereo",
-        "multimodal_bmp8", "multimodal_gif_disposals",
-        "multimodal_gif_interlaced", "multimodal_jpeg_422",
-        "multimodal_jpeg_restart", "multimodal_png_palette",
-        "multimodal_tiff", "multimodal_tiff_multipage",
-        "q16_supplier_variety", "q17_small_quantity", "q19_disjunctive",
-        "q22_no_order_customers", "q4_order_priority",
-        "q7_nation_volume", "text_bm25_search",
-        "text_repetition_features", "text_strip_dup_spans",
-        "window_revenue_deciles",
-    )},
-    **{n: 16 for n in (
-        "crawl_frontier_bloom", "crawl_host_rank",
-        "crawl_politeness_schedule", "dedup_best_of_cluster",
-        "embed_dim_stats", "embed_label_cohesion", "f12_where_script",
-        "f12_where_script_stmt", "f12_where_udf_tier", "graph_pagerank",
-        "group_quantiles_bucketed", "llm_cdx_select",
-        "llm_csv_roundtrip", "llm_decontaminate", "llm_dedup_funnel",
-        "llm_export_manifest", "llm_html_image_pairs",
-        "llm_html_jsonld", "llm_html_metadata", "llm_html_outlinks",
-        "llm_jsonl_roundtrip", "llm_mbox_ingest",
-        "llm_quality_calibrated", "llm_quality_classifier",
-        "llm_robots_rules", "llm_robots_wildcards", "llm_warc_ingest",
-        "media_type_sniff", "multimodal_audio_multichannel",
-        "multimodal_audio_wav_extensible", "multimodal_bmp_topdown",
-        "multimodal_exif_metadata", "multimodal_id3_metadata",
-        "multimodal_image_text_pairs", "multimodal_mp3_frames",
-        "multimodal_tiff_rgb", "multimodal_webp_lossy_meta",
-        "pipeline_flagship", "q10_returned_items",
-        "q11_important_value", "q13_customer_distribution",
-        "q14_promo_revenue", "q15_top_supplier", "q2_min_cost_supplier",
-        "q6_forecast_revenue", "q8_market_share", "q9_product_profit",
-        "s1_firehose", "sc1_script_score", "text_nfc_normalize",
-    )},
-}
+# ---------------------------------------------------------------------------
+# JPEG family: transport variants of verified oracles. Progressive and
+# restart-interval JPEG reuse the baseline oracles verbatim: the entropy
+# transport changes, the decoded pixels do not (the fixed-point decoder
+# contract). 4:2:2 adapts the 4:2:0 oracle's geometry: Y grid 2·mw × mh,
+# chroma upsample map (gx div 2, gy).
 
 
-# Rows whose oracle or machinery changed AFTER their last driver check, so the
-# recorded verification is stale — schedule them as if never verified.
-_STALE_VERIFICATION: set[str] = set()
+@_register(
+    "multimodal_jpeg_progressive",
+    _jpeg_color_oracle(),
+    "PROGRESSIVE (SOF2) color JPEG decode: the default multi-scan script "
+    "(spectral selection, EOB runs, DC+AC successive approximation) over "
+    "the SAME jpeg_color_qcoefs coefficients as multimodal_jpeg_color — "
+    "the oracle is that query's verbatim, because progressive transport "
+    "must reconstruct identical pixels (llmdata/multimodal.py "
+    "encode_jpeg_progressive/_decode_jpeg_progressive)",
+)
+def multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
 
-# Queries whose machinery round 16/17 changed after their last driver
-# check. The r16 VERDICT's top finding: the r16 window spent its 50
-# slots on inherited mid-build riders and rotation names while every
-# query whose RESULT-PRODUCING machinery round 16 rewrote was steered
-# away from the driver's oracle. These 17 rewrites (bounded-rank family,
-# KMV array sketches, shingle persist+hash-key join, fused curation
-# flags, AQE-reuse de-persists, dHash-band persist) ride at the window
-# head this round so CORRECTNESS_r17.json actually exercises them —
-# verdict item 1, which "outranks every perf task". Queries whose
-# operators round 17 touches join the set as the round progresses.
-_ROUND17_TOUCHED: set[str] = {
-    # r16 rewrites the driver never verified (VERDICT r16 "What's wrong" #1)
-    "kmv_set_ops_events", "hybrid_rrf_search", "text_bm25_search",
-    "text_bm25_indexed", "llm_bpe_train", "llm_weighted_sample",
-    "llm_top_terms", "dedup_ngram_jaccard", "dedup_containment",
-    "llm_curation_flags", "llm_curation_pipeline_neardup",
-    "text_langid_ngram", "s9_liked_weighted", "s10_liked_by_likers",
-    "dedup_simhash", "media_perceptual_dedup", "media_incremental_dedup",
-    # r17 machinery changes: minhash_dedup_pairs drops the stage-input
-    # persist (AQE reuses the repartition exchange) — every caller rides
-    "dedup_minhash_lsh", "dedup_clusters", "llm_dedup_funnel",
-    "dedup_best_of_cluster", "llm_prepare_corpus",
-    # r17: semdedup persists the assignment output
-    "embed_semdedup",
-    # r17: pagerank cadence branch now frees checkpoint blocks; the
-    # unroll body changed on the happy path — both riders re-earn
-    # (r16 precedent)
-    "graph_pagerank", "crawl_host_rank",
-    # r17 text-machinery rewrites (collect-verified identical, but the
-    # executed code changed, so every consumer re-earns):
-    # word_shingles -> regexp_extract_all lookahead capture
-    "dedup_incremental", "llm_decontaminate", "llm_doc_lm_score",
-    "llm_dsir_weights", "llm_ngram_lm", "llm_stupid_backoff",
-    "text_contamination", "text_doc_segment_dedup", "text_dup_spans",
-    "text_fingerprint", "text_strip_dup_spans", "text_winnowing",
-    # quality/langid stopword counts -> lookahead regexp_count
-    "text_langid", "text_quality", "llm_quality_calibrated",
-    # srp verify-join norm hoist
-    "embed_srp_near_dup",
-    # translate_curation_pipeline (shared __q column, run() tail) — all
-    # pipeline queries' happy path runs the new code (r11 precedent)
-    "llm_curation_pipeline", "llm_curation_pipeline_balance",
-    "llm_curation_pipeline_decontam", "llm_curation_pipeline_scrub",
-    "text_repetition_features",
-}
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 48).select(F.col("doc_id").alias("media_id"))
 
-# Stable alias so _driver_order and the scheduling tests survive the
-# per-round rename of the touched set.
-_ROUND_TOUCHED = _ROUND17_TOUCHED
+    def maker(i: int) -> bytes:
+        bw, bh = 2 + i % 2, 2 + (i // 2) % 2
+        blocks = {
+            c: [MM.jpeg_color_qcoefs(i, bi, c) for bi in range(bw * bh)]
+            for c in range(3)
+        }
+        return MM.encode_jpeg_progressive(blocks, bw, bh)
+
+    media = MM.attach_media_meta(_pack_media(ids, maker), media_type="image/jpeg")
+    return MM.jpeg_color_features(media)
 
 
-def _driver_order() -> list[str]:
-    pos = {n: i for i, n in enumerate(REGISTRY)}
-    never = [
-        n for n in REGISTRY
-        if n not in _DRIVER_LAST_VERIFIED or n in _STALE_VERIFICATION
-    ]
-    touched = [n for n in REGISTRY if n not in never and n in _ROUND_TOUCHED]
-    head = set(never) | set(touched)
-    rest = sorted(
-        (n for n in REGISTRY if n not in head),
-        key=lambda n: (_DRIVER_LAST_VERIFIED[n], pos[n]),
+@_register(
+    "multimodal_jpeg_restart",
+    _jpeg_oracle(),
+    "baseline grayscale JPEG with RESTART INTERVALS (DRI + RSTn markers, "
+    "modulo-8 sequence, DC-predictor resets) over the same jpeg_qcoefs "
+    "coefficients as multimodal_jpeg — markers are transport, so that "
+    "query's oracle applies verbatim",
+)
+def multimodal_jpeg_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 48).select(F.col("doc_id").alias("media_id"))
+
+    def maker(i: int) -> bytes:
+        bw, bh = 2 + i % 2, 2 + (i // 2) % 2
+        blocks = [MM.jpeg_qcoefs(i, bi) for bi in range(bw * bh)]
+        return MM.encode_jpeg_blocks(blocks, bw, bh, restart_interval=1 + i % 3)
+
+    media = MM.attach_media_meta(_pack_media(ids, maker), media_type="image/jpeg")
+    return MM.jpeg_features(media)
+
+
+def _jpeg_422_oracle() -> str:
+    """The 4:2:0 oracle's geometry adapted to 2×1 luma: Y-block grid
+    2·mw × mh, chroma at (gx div 2, gy), image mw·16 × mh·8."""
+    from query_engine_spark.llmdata.multimodal import (
+        _JPEG_IDCT_A,
+        _JPEG_QTAB,
+        _JPEG_QTAB_C,
+        _JPEG_ZIGZAG,
     )
-    return never + touched + rest
+
+    a_rows = ", ".join(
+        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
+    )
+    used = [0, 1, 3, 8, 20, 40, 55]
+    cmap = ", ".join(
+        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, "
+        f"{_JPEG_QTAB[i]}, {_JPEG_QTAB_C[i]})"
+        for i in used
+    )
+    half, full = 1 << 25, 1 << 26
+    fd = (
+        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
+        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
+    )
+
+    def fd16(v: str) -> str:
+        return (
+            f"(({v} + 32768) // 65536) - (CASE WHEN ({v} + 32768) % 65536 != 0 "
+            f"AND {v} + 32768 < 0 THEN 1 ELSE 0 END)"
+        )
+
+    return f"""
+    WITH m AS (
+      SELECT doc_id AS media_id, 1 + doc_id % 2 AS mw, 1 + (doc_id // 2) % 2 AS mh
+      FROM documents WHERE doc_id < 48),
+    cm(zi, cu, cv, q0, q1) AS (VALUES {cmap}),
+    a(au, ax, aval) AS (VALUES {a_rows}),
+    yb AS (
+      SELECT media_id, mw, mh, b.b AS bi
+      FROM m, generate_series(0, 7) AS b(b) WHERE b.b < 2 * mw * mh),
+    ycoefs AS (
+      SELECT media_id, mw, mh, bi, cm.cu, cm.cv,
+             (CASE WHEN cm.zi = 0 THEN ((media_id*7 + bi*5) % 13) - 6
+                   ELSE ((media_id*11 + bi*3 + cm.zi) % 9) - 4 END) * cm.q0 AS cq
+      FROM yb, cm),
+    yterms AS (
+      SELECT c.media_id, c.mw, c.mh, c.bi, px.x AS x, py.y AS y,
+             CAST(sum(c.cq * aa.aval * ab.aval) AS BIGINT) AS t
+      FROM ycoefs c, generate_series(0, 7) AS px(x), generate_series(0, 7) AS py(y)
+      JOIN a aa ON aa.au = c.cu AND aa.ax = px.x
+      JOIN a ab ON ab.au = c.cv AND ab.ax = py.y
+      GROUP BY 1, 2, 3, 4, 5, 6),
+    yplane AS (
+      SELECT media_id, mw, mh,
+             (bi % (2*mw)) * 8 + x AS gx, (bi // (2*mw)) * 8 + y AS gy,
+             greatest(0, least(255, 128 + {fd})) AS yy
+      FROM yterms),
+    cb AS (
+      SELECT media_id, mw, mh, b.b AS mi
+      FROM m, generate_series(0, 3) AS b(b) WHERE b.b < mw * mh),
+    ccoefs AS (
+      SELECT media_id, mw, mi, comp.c AS c, cm.cu, cm.cv,
+             (CASE WHEN cm.zi = 0 THEN ((media_id*7 + mi*5 + comp.c*17) % 13) - 6
+                   ELSE ((media_id*11 + mi*3 + comp.c*29 + cm.zi) % 9) - 4 END)
+             * cm.q1 AS cq
+      FROM cb, cm, generate_series(1, 2) AS comp(c)),
+    cterms AS (
+      SELECT co.media_id, co.mw, co.mi, co.c, px.x AS x, py.y AS y,
+             CAST(sum(co.cq * aa.aval * ab.aval) AS BIGINT) AS t
+      FROM ccoefs co, generate_series(0, 7) AS px(x), generate_series(0, 7) AS py(y)
+      JOIN a aa ON aa.au = co.cu AND aa.ax = px.x
+      JOIN a ab ON ab.au = co.cv AND ab.ax = py.y
+      GROUP BY 1, 2, 3, 4, 5, 6),
+    cplane AS (
+      SELECT media_id, (mi % mw) * 8 + x AS cx, (mi // mw) * 8 + y AS cy,
+             max(CASE WHEN c = 1 THEN p END) AS cbv,
+             max(CASE WHEN c = 2 THEN p END) AS crv
+      FROM (SELECT media_id, mw, mi, c, x, y,
+                   greatest(0, least(255, 128 + {fd})) AS p
+            FROM cterms)
+      GROUP BY 1, 2, 3),
+    rgb AS (
+      SELECT yp.media_id, yp.mw, yp.mh, yp.gx, yp.gy,
+             greatest(0, least(255, yy + ({fd16("91881 * (crv - 128)")}))) AS r,
+             greatest(0, least(255, yy - ({fd16("22554 * (cbv - 128) + 46802 * (crv - 128)")}))) AS g,
+             greatest(0, least(255, yy + ({fd16("116130 * (cbv - 128)")}))) AS b
+      FROM yplane yp JOIN cplane cp
+        ON cp.media_id = yp.media_id AND cp.cx = yp.gx // 2 AND cp.cy = yp.gy)
+    SELECT media_id, CAST(mw * 16 AS INT) AS width, CAST(mh * 8 AS INT) AS height,
+           CAST(sum(r) AS BIGINT) AS r_sum,
+           CAST(sum(g) AS BIGINT) AS g_sum,
+           CAST(sum(b) AS BIGINT) AS b_sum,
+           CAST(max(CASE WHEN gx = 0 AND gy = 0 THEN r END) AS INT) AS top_left_r
+    FROM rgb GROUP BY 1, 2, 3
+    """
+
+
+@_register(
+    "multimodal_jpeg_422",
+    _jpeg_422_oracle(),
+    "baseline 4:2:2 YCbCr JPEG (Y sampled 2x1 — two luma blocks + "
+    "half-horizontal chroma per 16x8 MCU) through the generalized MCU "
+    "walker; oracle = the 4:2:0 form with (gx div 2, gy) chroma map",
+)
+def multimodal_jpeg_422(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 48).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_jpeg_422(i, 1 + i % 2, 1 + (i // 2) % 2)),
+        media_type="image/jpeg",
+    )
+    return MM.jpeg_color_features(media)
+
+
+@_register(
+    "multimodal_gif_interlaced",
+    REGISTRY["multimodal_gif"].oracle,
+    "INTERLACED GIF with LOCAL color tables (alternating by doc_id): the "
+    "4-pass de-interlace and the LCT override are transport, so "
+    "multimodal_gif's oracle applies verbatim",
+)
+def multimodal_gif_interlaced(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(
+            ids,
+            lambda i: MM.make_gif(
+                i, 28 + i % 5, 18 + i % 4,
+                interlace=True, local_palette=bool(i % 2),
+            ),
+        ),
+        media_type="image/gif",
+    )
+    return MM.gif_features(media)
+
+
+@_register(
+    "multimodal_png_adam7",
+    REGISTRY["multimodal_png"].oracle,
+    "ADAM7 interlaced PNG: seven independently-filtered passes are "
+    "transport, so multimodal_png's oracle applies verbatim",
+)
+def multimodal_png_adam7(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    # mirror multimodal_png's fixture dims exactly (oracle reuse)
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(
+            ids, lambda i: MM.make_png(i, 4 + i % 5, 3 + i % 4, interlace=True)
+        ),
+        media_type="image/png",
+    )
+    return MM.png_features(media)
+
+
+@_register(
+    "multimodal_bmp8",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 20 + doc_id % 5 AS width, 15 + doc_id % 4 AS height
+      FROM documents WHERE doc_id < 64),
+    px AS (
+      SELECT m.media_id, m.width, m.height,
+             (m.media_id*31 + y.y*7 + x.x*3) % 256 AS idx
+      FROM m, generate_series(0, 18) AS y(y), generate_series(0, 24) AS x(x)
+      WHERE y.y < m.height AND x.x < m.width)
+    SELECT media_id, CAST(width AS INT) AS width, CAST(height AS INT) AS height,
+           CAST(sum(idx) AS BIGINT) AS idx_sum,
+           CAST(sum((idx*7) % 256 + (idx*3) % 256 + idx) AS BIGINT) AS rgb_sum,
+           CAST(media_id*31 % 256 AS INT) AS top_left_idx
+    FROM px GROUP BY media_id, width, height
+    """,
+    "8-bpp PALETTE BMP (BGRA table, bottom-up stride rows) — the "
+    "non-24-bpp boundary; oracle predicts index and palette-RGB sums by "
+    "integer arithmetic like the GIF form",
+)
+def multimodal_bmp8(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import pandas as pd
+    from typing import Iterator
+
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_bmp8(i, 20 + i % 5, 15 + i % 4)),
+        media_type="image/bmp",
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
+                w, h, isum, rsum, tl = MM.decode_bmp8(bytes(blob))
+                rows.append({
+                    "media_id": mid, "width": w, "height": h,
+                    "idx_sum": isum, "rgb_sum": rsum, "top_left_idx": tl,
+                })
+            yield pd.DataFrame(rows, columns=[
+                "media_id", "width", "height", "idx_sum", "rgb_sum", "top_left_idx",
+            ])
+
+    return media.select("media_id", "payload").mapInPandas(
+        run,
+        "media_id long, width int, height int, idx_sum long, rgb_sum long, top_left_idx int",
+    )
+
+
+@_register(
+    "multimodal_gif_animated",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 10 + doc_id % 5 AS w, 8 + doc_id % 4 AS h
+      FROM documents WHERE doc_id < 48),
+    px AS (
+      SELECT m.media_id, f.f AS fi, m.w, m.h,
+             (m.media_id*31 + f.f*97 + y.y*7 + x.x*3) % 256 AS v
+      FROM m, generate_series(0, 2) AS f(f),
+           generate_series(0, 11) AS y(y), generate_series(0, 14) AS x(x)
+      WHERE y.y < m.h AND x.x < m.w)
+    SELECT media_id, CAST(fi AS INT) AS frame_idx,
+           CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+           CAST(sum(v) AS BIGINT) AS idx_sum,
+           CAST(sum(v + (v*3) % 256 + (v*7) % 256) AS BIGINT) AS rgb_sum,
+           CAST((media_id*31 + fi*97) % 256 AS INT) AS top_left_idx
+    FROM px GROUP BY media_id, fi, w, h
+    """,
+    "REAL ANIMATED-GIF decode — the web-crawl shape: NETSCAPE looping "
+    "extension skipped per spec, Graphic Control Extensions PARSED (not "
+    "skipped) so transparency / restore-previous disposal raise the "
+    "honest compositing boundary, every full-frame image descriptor "
+    "LZW-decoded, one row per frame with palette-folded features "
+    "(llmdata/multimodal.py make_gif_animated/decode_gif_frames/"
+    "gif_frame_features)",
+)
+def multimodal_gif_animated(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 48).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_gif_animated(i, 10 + i % 5, 8 + i % 4, 3)),
+        media_type="image/gif",
+    )
+    return MM.gif_frame_features(media)
+
+
+@_register(
+    "multimodal_png_gray",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
+      FROM documents WHERE doc_id < 64),
+    px AS (
+      SELECT m.media_id, m.w, m.h,
+             (m.media_id*31 + y.y*7 + x.x*3) % 256 AS v
+      FROM m, generate_series(0, 5) AS y(y), generate_series(0, 7) AS x(x)
+      WHERE y.y < m.h AND x.x < m.w)
+    SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+           CAST(sum(v) AS BIGINT) AS px_sum,
+           CAST(media_id*31 % 256 AS INT) AS top_left
+    FROM px GROUP BY media_id, w, h
+    """,
+    "REAL GRAYSCALE PNG decode (color type 0 — one byte per pixel through "
+    "the same five-filter unfiltering; odd media are ADAM7 interlaced, so "
+    "the driver path exercises the per-pass scatter at 1 byte/px too); "
+    "oracle = the BMP8/GIF index-formula arithmetic "
+    "(llmdata/multimodal.py make_png(color_type=0)/decode_png_pixels)",
+)
+def multimodal_png_gray(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(
+            ids,
+            lambda i: MM.make_png(
+                i, 4 + i % 5, 3 + i % 4, color_type=0, interlace=bool(i % 2)
+            ),
+        ),
+        media_type="image/png",
+    )
+    return MM.png_features(media)
+
+
+@_register(
+    "multimodal_png_rgba",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
+      FROM documents WHERE doc_id < 64),
+    px AS (
+      SELECT m.media_id, m.w, m.h,
+             (m.media_id*31 + y.y*7 + x.x*3 + c.c) % 256 AS v
+      FROM m, generate_series(0, 5) AS y(y), generate_series(0, 7) AS x(x),
+           generate_series(0, 3) AS c(c)
+      WHERE y.y < m.h AND x.x < m.w)
+    SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+           CAST(sum(v) AS BIGINT) AS px_sum,
+           CAST(media_id*31 % 256 AS INT) AS top_left
+    FROM px GROUP BY media_id, w, h
+    """,
+    "REAL RGBA PNG decode (color type 6 — the screenshot/web-asset shape: "
+    "4 bytes per pixel through the same five-filter unfiltering, alpha as "
+    "channel 3 of the formula; odd media ADAM7 interlaced so the per-pass "
+    "scatter runs at 4 bytes/px) (llmdata/multimodal.py "
+    "make_png(color_type=6)/decode_png_pixels)",
+)
+def multimodal_png_rgba(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(
+            ids,
+            lambda i: MM.make_png(
+                i, 4 + i % 5, 3 + i % 4, color_type=6, interlace=bool(i % 2)
+            ),
+        ),
+        media_type="image/png",
+    )
+    return MM.png_features(media)
+
+
+@_register(
+    "multimodal_png_palette",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
+      FROM documents WHERE doc_id < 64),
+    px AS (
+      SELECT m.media_id, m.w, m.h,
+             (m.media_id*31 + y.y*7 + x.x*3) % 256 AS i
+      FROM m, generate_series(0, 5) AS y(y), generate_series(0, 7) AS x(x)
+      WHERE y.y < m.h AND x.x < m.w)
+    SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+           CAST(sum(i + (i*3) % 256 + (i*7) % 256) AS BIGINT) AS px_sum,
+           CAST(media_id*31 % 256 AS INT) AS top_left
+    FROM px GROUP BY media_id, w, h
+    """,
+    "REAL PALETTE PNG decode (color type 3 — the web-graphics shape: PLTE "
+    "table, 8-bit indices through the five-filter unfiltering, indices "
+    "FOLDED through the palette with out-of-range rejection; odd media "
+    "ADAM7 interlaced); the palette is the GIF fixture's (i, 3i, 7i) "
+    "table, so the oracle folds the index formula through the same "
+    "arithmetic (llmdata/multimodal.py make_png(color_type=3))",
+)
+def multimodal_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(
+            ids,
+            lambda i: MM.make_png(
+                i, 4 + i % 5, 3 + i % 4, color_type=3, interlace=bool(i % 2)
+            ),
+        ),
+        media_type="image/png",
+    )
+    return MM.png_features(media)
+
+
+# ---------------------------------------------------------------------------
+# audio containers: one SQL form, four transports. FLAC mono/stereo, AIFF
+# and SPHERE share make_wav's sample formula, so ONE SQL form covers all
+# four; the stereo fixture interleaves the same formula stream, so its
+# features equal the mono form at 2n samples.
+
+
+def _pcm_first_sample_fix(n_expr: str, rate_expr: str, id_cap: int = 64) -> str:
+    """first_sample must be sample 0 exactly, not a max over matches —
+    compute it directly from the formula."""
+    return f"""
+    WITH m AS (SELECT doc_id AS media_id, {n_expr} AS n, {rate_expr} AS rate
+               FROM documents WHERE doc_id < {id_cap}),
+    s AS (
+      SELECT m.media_id, m.rate, m.n,
+             ((m.media_id*131 + i.i*17) % 65536) - 32768 AS v
+      FROM m, generate_series(0, 1999) AS i(i) WHERE i.i < m.n)
+    SELECT media_id, CAST(max(rate) AS INT) AS sample_rate,
+           CAST(max(n) AS BIGINT) AS n_samples,
+           CAST(sum(abs(v)) AS BIGINT) AS amp_sum,
+           CAST(max(v) AS INT) AS peak,
+           CAST(((media_id*131) % 65536) - 32768 AS INT) AS first_sample
+    FROM s GROUP BY media_id
+    """
+
+
+@_register(
+    "multimodal_audio_flac",
+    _pcm_first_sample_fix("600 + doc_id % 7 * 100", "8000 + doc_id % 4 * 4000"),
+    "REAL FLAC decode (frames, fixed predictors, rice partitions, CRCs, "
+    "STREAMINFO MD5) of the make_wav sample formula — compression is "
+    "transport, so the WAV oracle arithmetic applies",
+)
+def multimodal_audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_flac(i, 600 + i % 7 * 100, 8000 + i % 4 * 4000)),
+        media_type="audio/flac",
+    )
+    return MM.flac_features(media)
+
+
+@_register(
+    "multimodal_audio_flac_stereo",
+    # n_samples reports INTERCHANNEL frames (the FLAC STREAMINFO contract)
+    # while amp_sum/peak/first cover the full interleaved stream (2n)
+    """
+    WITH m AS (SELECT doc_id AS media_id, 400 + doc_id % 5 * 100 AS n, 16000 AS rate
+               FROM documents WHERE doc_id < 64),
+    s AS (
+      SELECT m.media_id, m.rate, m.n,
+             ((m.media_id*131 + i.i*17) % 65536) - 32768 AS v
+      FROM m, generate_series(0, 1999) AS i(i) WHERE i.i < 2 * m.n)
+    SELECT media_id, CAST(max(rate) AS INT) AS sample_rate,
+           CAST(max(n) AS BIGINT) AS n_samples,
+           CAST(sum(abs(v)) AS BIGINT) AS amp_sum,
+           CAST(max(v) AS INT) AS peak,
+           CAST(((media_id*131) % 65536) - 32768 AS INT) AS first_sample
+    FROM s GROUP BY media_id
+    """,
+    "REAL STEREO FLAC decode (per-frame cheapest of independent / "
+    "left-side / side-right / mid-side decorrelation, 17-bit side "
+    "subframes): the interleaved stream IS the mono formula stream at 2n "
+    "samples, so the same oracle covers it",
+)
+def multimodal_audio_flac_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+
+    def maker(i: int) -> bytes:
+        n = 400 + i % 5 * 100
+        inter = [((i * 131 + k * 17) % 65536) - 32768 for k in range(2 * n)]
+        return MM.encode_flac(inter, 16000, frame_size=128, channels=2)
+
+    media = MM.attach_media_meta(
+        _pack_media(ids, maker), media_type="audio/flac"
+    )
+    return MM.flac_features(media)
+
+
+@_register(
+    "multimodal_audio_aiff",
+    _pcm_first_sample_fix("500 + doc_id % 6 * 80", "8000 + doc_id % 3 * 8000"),
+    "REAL AIFF decode (FORM walk, 80-bit extended-float rate, big-endian "
+    "PCM honoring the SSND offset) of the make_wav formula",
+)
+def multimodal_audio_aiff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_aiff(i, 500 + i % 6 * 80, 8000 + i % 3 * 8000)),
+        media_type="audio/aiff",
+    )
+    return MM.aiff_features(media)
+
+
+@_register(
+    "multimodal_audio_sphere",
+    _pcm_first_sample_fix("500 + doc_id % 6 * 80", "16000"),
+    "REAL NIST SPHERE decode (TIMIT-family ASCII header, typed fields, "
+    "declared byte order) of the make_wav formula",
+)
+def multimodal_audio_sphere(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_sphere(i, 500 + i % 6 * 80, 16000)),
+        media_type="audio/x-nist",
+    )
+    return MM.sphere_features(media)
+
+
+@_register(
+    "llm_curation_pipeline_scrub",
+    r"""
+    WITH aug AS (
+      SELECT doc_id,
+             text || ' contact: u' || doc_id || '@example.com or +1 555 000 '
+                  || doc_id AS text
+      FROM documents),
+    red AS (
+      SELECT doc_id,
+             regexp_replace(
+               regexp_replace(
+                 regexp_replace(text,
+                   '[A-Za-z0-9._%+-]{1,320}@[A-Za-z0-9.-]{1,255}\.[A-Za-z]{2,24}', '<EMAIL>', 'g'),
+                 '\+?[0-9][0-9()\- ]{7,30}[0-9]', '<PHONE>', 'g'),
+               '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g') AS text
+      FROM aug),
+    tok AS (
+      SELECT doc_id, text,
+             len(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), '\s+')) AS n
+      FROM red)
+    SELECT doc_id, md5(text) AS text_fp
+    FROM tok
+    WHERE n >= 40 AND n <= 90
+      AND ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000 < 5000
+    """,
+    "curation pipeline with the three new scrub-stage ops: pii_redact "
+    "(in-place regex scrub of synthetic emails/phones appended per doc), "
+    "token_filter (post-redaction whitespace-token bounds, both ends "
+    "exercised), and sample (deterministic md5-bucket downsample — "
+    "reproducible across engines, unlike rand()). All three are pure "
+    "column expressions folded into ONE lazy map-only plan by "
+    "translate_curation_pipeline; the oracle chains the identical "
+    "regex/tokenize/bucket forms (llmdata/pipeline.py)",
+)
+def llm_curation_pipeline_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata.pipeline import translate_curation_pipeline
+
+    docs = load_table(spark, sf_dir, "documents")
+    with_pii = docs.select(
+        "doc_id",
+        "source",
+        F.concat(
+            F.col("text"),
+            F.lit(" contact: u"),
+            F.col("doc_id").cast("string"),
+            F.lit("@example.com or +1 555 000 "),
+            F.col("doc_id").cast("string"),
+        ).alias("text"),
+    )
+    run = translate_curation_pipeline(
+        [
+            {"op": "pii_redact"},
+            {"op": "token_filter", "min_tokens": 40, "max_tokens": 90},
+            {"op": "sample", "rate": 0.5},
+        ]
+    )
+    out = run(with_pii)
+    return out.select("doc_id", F.md5(F.encode(F.col("text"), "utf-8")).alias("text_fp"))
+
+
+@_register(
+    "multimodal_tiff_multipage",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 16 + doc_id % 5 AS w, 12 + doc_id % 4 AS h
+      FROM documents WHERE doc_id < 48),
+    px AS (
+      SELECT m.media_id, p.p AS p, m.w, m.h,
+             (m.media_id*31 + p.p*97 + y.y*7 + x.x*3) % 256 AS v
+      FROM m, generate_series(0, 2) AS p(p),
+           generate_series(0, 15) AS y(y), generate_series(0, 20) AS x(x)
+      WHERE y.y < m.h AND x.x < m.w)
+    SELECT media_id, CAST(p AS INT) AS page_idx,
+           CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+           CAST(sum(v) AS BIGINT) AS px_sum,
+           CAST((media_id*31 + p*97) % 256 AS INT) AS top_left
+    FROM px GROUP BY media_id, p, w, h
+    """,
+    "REAL multi-page TIFF decode (the scanned-document corpus shape): one "
+    "IFD per page linked by the next-IFD pointer, each page with its OWN "
+    "Compression tag (none/PackBits/LZW cycling by page, so the walker "
+    "must re-read every IFD), both byte orders cycling by media parity, "
+    "cycle-guarded chain walk. One media row in, one row per page out — "
+    "the frame-features shape for documents (llmdata/multimodal.py "
+    "make_tiff_multipage/decode_tiff_pages/tiff_page_features)",
+)
+def multimodal_tiff_multipage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 48).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(
+            ids,
+            lambda i: MM.make_tiff_multipage(
+                i, 16 + i % 5, 12 + i % 4, 3, byte_order="II" if i % 2 == 0 else "MM"
+            ),
+        ),
+        media_type="image/tiff",
+    )
+    return MM.tiff_page_features(media)
+
+
+def _mp4_mjpeg_oracle() -> str:
+    """The grayscale-JPEG oracle arithmetic (_jpeg_oracle) with a
+    frame dimension: frame fi of media m decodes the coefficient formula at
+    derived key k = m*131 + fi*17, through the same literal IDCT basis
+    table and floor rounding. Sampling mirrors multimodal_video_frames:
+    every 2nd frame of 6, capped at 3 (fi in 0, 2, 4)."""
+    from query_engine_spark.llmdata.multimodal import (
+        _JPEG_IDCT_A,
+        _JPEG_QTAB,
+        _JPEG_ZIGZAG,
+    )
+
+    a_rows = ", ".join(
+        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
+    )
+    used = [0, 1, 3, 8, 20, 40, 55]  # jpeg_qcoefs' nonzero zigzag indices
+    cmap = ", ".join(
+        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, {_JPEG_QTAB[i]})"
+        for i in used
+    )
+    half, full = 1 << 25, 1 << 26
+    fd = (
+        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
+        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
+    )
+    return f"""
+    WITH m AS (
+      SELECT doc_id AS media_id, 2 + doc_id % 2 AS bw, 2 + (doc_id // 2) % 2 AS bh
+      FROM documents WHERE doc_id < 48),
+    mf AS (
+      SELECT media_id, bw, bh, f.f * 2 AS fi, media_id*131 + f.f*2*17 AS k
+      FROM m, generate_series(0, 2) AS f(f)),
+    blocks AS (
+      SELECT media_id, bw, bh, fi, k, b.b AS bi
+      FROM mf, generate_series(0, 8) AS b(b) WHERE b.b < bw * bh),
+    cm(zi, cu, cv, q) AS (VALUES {cmap}),
+    coefs AS (
+      SELECT media_id, bw, bh, fi, bi, cm.cu, cm.cv,
+             (CASE WHEN cm.zi = 0 THEN ((k*7 + bi*5) % 13) - 6
+                   ELSE ((k*11 + bi*3 + cm.zi) % 9) - 4 END) * cm.q AS cq
+      FROM blocks, cm),
+    a(au, ax, aval) AS (VALUES {a_rows}),
+    terms AS (
+      SELECT c.media_id, c.bw, c.bh, c.fi, c.bi, px.x AS x, py.y AS y,
+             CAST(sum(c.cq * aa.aval * ab.aval) AS BIGINT) AS t
+      FROM coefs c, generate_series(0, 7) AS px(x), generate_series(0, 7) AS py(y)
+      JOIN a aa ON aa.au = c.cu AND aa.ax = px.x
+      JOIN a ab ON ab.au = c.cv AND ab.ax = py.y
+      GROUP BY 1, 2, 3, 4, 5, 6, 7),
+    pix AS (
+      SELECT media_id, bw, bh, fi, bi, x, y,
+             greatest(0, least(255, 128 + {fd})) AS p
+      FROM terms)
+    SELECT media_id, CAST(fi AS INT) AS frame_idx,
+           CAST(bw * 8 AS INT) AS width, CAST(bh * 8 AS INT) AS height,
+           CAST(sum(p) AS BIGINT) AS px_sum,
+           CAST(max(CASE WHEN bi = 0 AND x = 0 AND y = 0 THEN p END) AS INT) AS top_left
+    FROM pix GROUP BY 1, 2, 3, 4
+    """
+
+
+@_register(
+    "multimodal_video_mp4",
+    _mp4_mjpeg_oracle(),
+    "REAL MP4/MOV demux + MJPEG decode: ISO BMFF box walk, stsd "
+    "sample-entry validation, stsc chunk-run expansion against stco "
+    "absolute offsets and stsz sizes (2-per-chunk layout with odd tails; "
+    "mdat/moov order flips by media parity), then the hash-verified "
+    "baseline-JPEG decode per sampled frame — the oracle predicts every "
+    "pixel of every sampled frame from the coefficient formula at the "
+    "per-frame derived key. Transform codecs (avc1/hvc1/mp4v) raise the "
+    "honest boundary (llmdata/multimodal.py make_mp4_mjpeg/demux_mp4/"
+    "mp4_frame_features)",
+)
+def multimodal_video_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 48).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_mp4_mjpeg(i, 6)),
+        media_type="video/mp4",
+    )
+    return MM.mp4_frame_features(media, every_n=2, max_frames=3)
+
+
+@_register(
+    "llm_curation_pipeline_balance",
+    r"""
+    WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY source),
+    m AS (SELECT min(n) AS n_min FROM c),
+    bal AS (
+      SELECT d.doc_id, d.source, d.text
+      FROM documents d JOIN c USING (source) CROSS JOIN m
+      WHERE (('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000) * c.n
+            < m.n_min * 10000),
+    tok AS (
+      SELECT doc_id, source,
+             len(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), '\s+')) AS n
+      FROM bal)
+    SELECT doc_id, source FROM tok WHERE n >= 40
+    """,
+    "curation pipeline with the balance stage: every source stratum capped "
+    "at ~the smallest stratum's size (counts computed over the STAGE "
+    "INPUT, broadcast back onto the scan; keep-test is exact int64 bucket "
+    "math — no float thresholds), composed with a downstream token_filter. "
+    "The oracle replays the count/min/bucket arithmetic then the token "
+    "bound (llmdata/pipeline.py + textstats.balanced_sample)",
+)
+def llm_curation_pipeline_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata.pipeline import translate_curation_pipeline
+
+    docs = load_table(spark, sf_dir, "documents")
+    run = translate_curation_pipeline(
+        [
+            {"op": "balance", "strat_col": "source"},
+            {"op": "token_filter", "min_tokens": 40},
+        ]
+    )
+    return run(docs.select("doc_id", "source", "text")).select("doc_id", "source")
+
+
+def _mp4_video_dedup_oracle() -> str:
+    """The full composition chain for compressed-video near-dup: per-frame
+    JPEG pixels by the integer IDCT (frame key pat*131 + fi*17), per-frame
+    grayscale dHash (9×8 grid, gradient bits, 4×16-bit bands), distinct
+    hash sets per video, containment join on the full 64-bit hash — the
+    `media_video_dedup` shape over a LOSSY compressed corpus. Ids 24-35
+    are planted copies of patterns 0-11 with DIFFERENT frame counts
+    (clipped copies) and different container layouts."""
+    from query_engine_spark.llmdata.multimodal import (
+        _JPEG_IDCT_A,
+        _JPEG_QTAB,
+        _JPEG_ZIGZAG,
+    )
+
+    a_rows = ", ".join(
+        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
+    )
+    used = [0, 1, 3, 8, 20, 40, 55]
+    cmap = ", ".join(
+        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, {_JPEG_QTAB[i]})"
+        for i in used
+    )
+    half, full = 1 << 25, 1 << 26
+    fd = (
+        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
+        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
+    )
+    return f"""
+    WITH m AS (
+      SELECT doc_id AS media_id, doc_id % 24 AS pat,
+             2 + (doc_id % 24) % 2 AS bw, 2 + ((doc_id % 24) // 2) % 2 AS bh,
+             4 + (doc_id % 5) % 3 AS nf
+      FROM documents WHERE doc_id < 36),
+    mf AS (
+      SELECT media_id, pat, bw, bh, f.f AS fi, pat*131 + f.f*17 AS k
+      FROM m, generate_series(0, 5) AS f(f) WHERE f.f < nf),
+    blocks AS (
+      SELECT media_id, bw, bh, fi, k, b.b AS bi
+      FROM mf, generate_series(0, 8) AS b(b) WHERE b.b < bw * bh),
+    cm(zi, cu, cv, q) AS (VALUES {cmap}),
+    coefs AS (
+      SELECT media_id, bw, bh, fi, bi, cm.cu, cm.cv,
+             (CASE WHEN cm.zi = 0 THEN ((k*7 + bi*5) % 13) - 6
+                   ELSE ((k*11 + bi*3 + cm.zi) % 9) - 4 END) * cm.q AS cq
+      FROM blocks, cm),
+    a(au, ax, aval) AS (VALUES {a_rows}),
+    terms AS (
+      SELECT c.media_id, c.bw, c.bh, c.fi, c.bi, px.x AS x, py.y AS y,
+             CAST(sum(c.cq * aa.aval * ab.aval) AS BIGINT) AS t
+      FROM coefs c, generate_series(0, 7) AS px(x), generate_series(0, 7) AS py(y)
+      JOIN a aa ON aa.au = c.cu AND aa.ax = px.x
+      JOIN a ab ON ab.au = c.cv AND ab.ax = py.y
+      GROUP BY 1, 2, 3, 4, 5, 6, 7),
+    pix AS (
+      SELECT media_id, bw, bh, fi,
+             (bi % bw) * 8 + x AS px_x, (bi // bw) * 8 + y AS px_y,
+             greatest(0, least(255, 128 + {fd})) AS p
+      FROM terms),
+    g AS (
+      SELECT p.media_id, p.fi, gy.gy AS gy, gx.gx AS gx, p.p AS gray
+      FROM pix p
+      JOIN generate_series(0, 7) AS gy(gy) ON p.px_y = (gy.gy * (p.bh * 8)) // 8
+      JOIN generate_series(0, 8) AS gx(gx) ON p.px_x = (gx.gx * (p.bw * 8)) // 9),
+    bits AS (
+      SELECT a2.media_id, a2.fi, a2.gy AS gy, a2.gx AS kk,
+             CASE WHEN a2.gray > b2.gray THEN 1 ELSE 0 END AS bit
+      FROM g a2 JOIN g b2 ON a2.media_id = b2.media_id AND a2.fi = b2.fi
+                         AND a2.gy = b2.gy AND b2.gx = a2.gx + 1),
+    bands AS (
+      SELECT media_id, fi, (gy*8 + kk) // 16 AS band_id,
+             CAST(sum(bit * (1 << ((gy*8 + kk) % 16))) AS BIGINT) AS val
+      FROM bits GROUP BY 1, 2, 3),
+    wide AS (
+      SELECT media_id, fi,
+             CAST(max(CASE WHEN band_id = 0 THEN val END) AS BIGINT) AS b0,
+             CAST(max(CASE WHEN band_id = 1 THEN val END) AS BIGINT) AS b1,
+             CAST(max(CASE WHEN band_id = 2 THEN val END) AS BIGINT) AS b2,
+             CAST(max(CASE WHEN band_id = 3 THEN val END) AS BIGINT) AS b3
+      FROM bands GROUP BY 1, 2),
+    sig AS (SELECT DISTINCT media_id, b0, b1, b2, b3 FROM wide)
+    SELECT a4.media_id AS media_a, b4.media_id AS media_b,
+           CAST(count(*) AS BIGINT) AS n_common
+    FROM sig a4 JOIN sig b4
+      ON a4.b0 = b4.b0 AND a4.b1 = b4.b1 AND a4.b2 = b4.b2 AND a4.b3 = b4.b3
+     AND a4.media_id < b4.media_id
+    GROUP BY 1, 2 HAVING count(*) >= 2
+    ORDER BY media_a, media_b
+    """
+
+
+@_register(
+    "media_mp4_video_dedup",
+    _mp4_video_dedup_oracle(),
+    "PERCEPTUAL video near-dup over a COMPRESSED corpus — the web-crawl "
+    "video shape: MP4/MJPEG payloads (ids 24-35 planted as CLIPPED copies "
+    "of patterns 0-11, different frame counts AND different container "
+    "layouts) are demuxed via the sample tables, every frame Huffman-decoded "
+    "+ integer-IDCT'd and dHashed in one map-only Arrow pass, then the "
+    "frame-hash containment join of media_video_dedup — only 8-byte "
+    "hashes ever leave the executor. The oracle chains the verified "
+    "per-frame IDCT CTEs into the verified dHash/band/containment CTEs "
+    "(llmdata/multimodal.py mp4_video_frame_hashes + video_dedup_pairs)",
+)
+def media_mp4_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 36).select(F.col("doc_id").alias("media_id"))
+    media = _pack_media(
+        ids,
+        lambda i: MM.make_mp4_mjpeg(i, 4 + (i % 5) % 3, pattern=i % 24),
+    )
+    hashes = MM.mp4_video_frame_hashes(media, every_n=1, max_frames=8)
+    return MM.video_dedup_pairs(hashes, min_common=2).orderBy("media_a", "media_b")
+
+
+@_register(
+    "multimodal_video_avi_mjpeg",
+    _mp4_mjpeg_oracle(),
+    "MJPEG-in-AVI demux + decode (the legacy webcam/capture-card shape): "
+    "'00dc' chunks carrying complete baseline JPEGs, strf biCompression "
+    "= 'MJPG'. The per-frame content formula matches make_mp4_mjpeg, so "
+    "the MP4 oracle applies VERBATIM — container is transport "
+    "(llmdata/multimodal.py make_avi_mjpeg/demux_avi_mjpeg/"
+    "avi_mjpeg_frame_features)",
+)
+def multimodal_video_avi_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 48).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_avi_mjpeg(i, 6)),
+        media_type="video/x-msvideo",
+    )
+    return MM.avi_mjpeg_frame_features(media, every_n=2, max_frames=3)
+
+
+@_register(
+    "multimodal_audio_alaw",
+    """
+    WITH m AS (SELECT doc_id AS media_id, 400 + (doc_id % 5) * 50 AS n
+               FROM documents WHERE doc_id < 64),
+    s AS (SELECT media_id, n, j.j AS j,
+                 xor((media_id*11 + j.j*5) % 256, 85) AS inv
+          FROM m, generate_series(0, 599) AS j(j) WHERE j.j < n),
+    mag AS (SELECT media_id, n, j, inv,
+              CASE WHEN (inv & 112) = 0 THEN ((inv & 15) << 4) + 8
+                   WHEN (inv & 112) = 16 THEN ((inv & 15) << 4) + 264
+                   ELSE (((inv & 15) << 4) + 264) << (((inv & 112) >> 4) - 1)
+              END AS t
+            FROM s),
+    d AS (SELECT media_id, n, j,
+                 CASE WHEN (inv & 128) != 0 THEN t ELSE -t END AS sample
+          FROM mag)
+    SELECT media_id, 8000 AS sample_rate,
+           CAST(any_value(n) AS BIGINT) AS n_samples,
+           CAST(sum(sample) AS BIGINT) AS amp_sum,
+           CAST(max(sample) AS INT) AS peak,
+           CAST(max(CASE WHEN j = 0 THEN sample END) AS INT) AS first_sample
+    FROM d GROUP BY 1
+    """,
+    "REAL G.711 A-law decode (format tag 6 — the European telephony "
+    "sibling of the hash-green mu-law query): XOR-0x55 even-bit "
+    "uninversion, mantissa rebuild, segment shift with the 0/1 special "
+    "cases, inverted sign convention. Stateless per byte, so the oracle "
+    "is a CASE expression; the fixture formula (11,5) differs from "
+    "mu-law's (13,7) so the two expansions cannot be confused "
+    "(llmdata/multimodal.py make_wav_alaw/decode_wav_alaw/alaw_features)",
+)
+def multimodal_audio_alaw(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_wav_alaw(i, 400 + (i % 5) * 50)),
+        media_type="audio/PCMA",
+    )
+    return MM.alaw_features(media)
+
+
+@_register(
+    "multimodal_audio_wav_stereo",
+    # the stereo-FLAC oracle applies VERBATIM: same interleaved formula
+    # stream at 2n, same frames-vs-samples convention — container is
+    # transport
+    """
+    WITH m AS (SELECT doc_id AS media_id, 400 + doc_id % 5 * 100 AS n, 16000 AS rate
+               FROM documents WHERE doc_id < 64),
+    s AS (
+      SELECT m.media_id, m.rate, m.n,
+             ((m.media_id*131 + i.i*17) % 65536) - 32768 AS v
+      FROM m, generate_series(0, 1999) AS i(i) WHERE i.i < 2 * m.n)
+    SELECT media_id, CAST(max(rate) AS INT) AS sample_rate,
+           CAST(max(n) AS BIGINT) AS n_samples,
+           CAST(sum(abs(v)) AS BIGINT) AS amp_sum,
+           CAST(max(v) AS INT) AS peak,
+           CAST(((media_id*131) % 65536) - 32768 AS INT) AS first_sample
+    FROM s GROUP BY media_id
+    """,
+    "REAL stereo PCM WAV decode: 2-channel 16-bit frames with block_align/"
+    "byte_rate consistency checks and the frames-vs-interleaved-samples "
+    "convention shared with stereo FLAC, whose oracle applies verbatim "
+    "(llmdata/multimodal.py make_wav_stereo/decode_wav_stereo/"
+    "wav_stereo_features)",
+)
+def multimodal_audio_wav_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_wav_stereo(i, 400 + i % 5 * 100, 16000)),
+        media_type="audio/wav",
+    )
+    return MM.wav_stereo_features(media)
+
+
+# ---------------------------------------------------------------------------
+# TIFF: compression/byte-order transport over the BMP/GIF pixel formula.
+# Compression (none / PackBits / early-change LZW) and byte order are
+# transport, cycled by doc_id so every run exercises all six combinations.
+
+
+@_register(
+    "multimodal_tiff",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 20 + doc_id % 5 AS width, 15 + doc_id % 4 AS height
+      FROM documents WHERE doc_id < 64),
+    px AS (
+      SELECT m.media_id, m.width, m.height,
+             (m.media_id*31 + y.y*7 + x.x*3) % 256 AS p
+      FROM m, generate_series(0, 18) AS y(y), generate_series(0, 24) AS x(x)
+      WHERE y.y < m.height AND x.x < m.width)
+    SELECT media_id, CAST(width AS INT) AS width, CAST(height AS INT) AS height,
+           CAST(sum(p) AS BIGINT) AS px_sum,
+           CAST(media_id*31 % 256 AS INT) AS top_left
+    FROM px GROUP BY media_id, width, height
+    """,
+    "REAL TIFF decode (typed IFD walk, ragged multi-strip reassembly, "
+    "none/PackBits/early-change-LZW cycled by doc_id%3, II/MM byte order "
+    "by doc_id%2) — compression and byte order are transport over the "
+    "BMP/GIF pixel formula",
+)
+def multimodal_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    comps = (1, 32773, 5)
+
+    def maker(i: int) -> bytes:
+        return MM.make_tiff(
+            i, 20 + i % 5, 15 + i % 4,
+            compression=comps[i % 3],
+            byte_order="II" if i % 2 == 0 else "MM",
+        )
+
+    media = MM.attach_media_meta(_pack_media(ids, maker), media_type="image/tiff")
+    return MM.tiff_features(media)
+
+
+# ---------------------------------------------------------------------------
+# WARC crawl ingest: oracle predicts the extracted text from the template.
+# It rebuilds the EXPECTED extracted text by string concatenation from the
+# deterministic page template, predicting the html_to_text output from
+# first principles rather than replaying the regex pipeline.
+
+
+@_register(
+    "llm_warc_ingest",
+    """
+    WITH w AS (SELECT doc_id AS warc_id FROM documents WHERE doc_id < 32),
+    pages AS (
+      SELECT w.warc_id, CAST(p.p AS INT) AS page
+      FROM w, generate_series(0, 2) AS p(p)),
+    expected AS (
+      SELECT warc_id,
+             'http://site' || (warc_id % 7) || '.example/d/' || page
+               || '?id=' || page AS url,
+             200 AS http_status,
+             'T Doc ' || warc_id || '-' || page || chr(10)
+               || 'alpha ' || (warc_id*13 + page*7) % 97 || ' beta' || chr(10)
+               || 'tail & done' AS text
+      FROM pages)
+    SELECT warc_id, url, CAST(http_status AS INT) AS http_status,
+           md5(text) AS text_fp
+    FROM expected
+    ORDER BY warc_id, url
+    """,
+    "WARC crawl ingestion end to end: gzip-member WARC fixtures -> "
+    "response records -> HTTP envelope strip -> html_to_text (column "
+    "expressions) -> canonical_url (tracking-param drop, default-port "
+    "strip, lowercase host). The oracle predicts the EXTRACTED text by "
+    "string concatenation from the deterministic page template — first "
+    "principles, not regex replay (llmdata/warc.py)",
+)
+def llm_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import warc as W
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 32).select(F.col("doc_id").alias("warc_id"))
+
+    def maker(i: int) -> bytes:
+        recs = [{"type": "warcinfo", "body": b"software: fixture\r\n"}]
+        for p in range(3):
+            url = f"HTTP://Site{i % 7}.Example:80/d/{p}?utm_source=x&id={p}"
+            body = (
+                f"<html><head><title>T</title></head><body><h1>Doc {i}-{p}</h1>"
+                f"<p>alpha {(i * 13 + p * 7) % 97} beta</p>"
+                f"<script>var x = 1;</script>"
+                f"<p>tail &amp; done</p></body></html>"
+            ).encode()
+            recs.append({"type": "request", "target_uri": url, "body": b"GET /\r\n"})
+            recs.append({
+                "type": "response", "target_uri": url,
+                "content_type": "text/html; charset=utf-8", "body": body,
+            })
+        return W.make_warc(recs)
+
+    packed = _pack_media(ids.withColumnRenamed("warc_id", "media_id"), maker).select(
+        F.col("media_id").alias("warc_id"), "payload"
+    )
+    return (
+        W.warc_documents(packed)
+        .select(
+            "warc_id",
+            W.canonical_url(F.col("url")).alias("url"),
+            "http_status",
+            F.md5(F.encode(W.html_to_text(F.col("text")), "utf-8")).alias("text_fp"),
+        )
+        .orderBy("warc_id", "url")
+    )
+
+
+
+# ---------------------------------------------------------------------------
+# RGB TIFF: the color-scan corpus shape
+
+
+@_register(
+    "multimodal_tiff_rgb",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 9 + doc_id % 4 AS w, 8 + doc_id % 3 AS h
+      FROM documents WHERE doc_id < 64),
+    px AS (
+      SELECT m.media_id, m.w, m.h, c.c,
+             (m.media_id*31 + y.y*7 + x.x*3 + c.c*11) % 256 AS v
+      FROM m, generate_series(0, 12) AS y(y), generate_series(0, 12) AS x(x),
+           generate_series(0, 2) AS c(c)
+      WHERE y.y < m.h AND x.x < m.w)
+    SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+           CAST(sum(CASE WHEN c = 0 THEN v END) AS BIGINT) AS r_sum,
+           CAST(sum(CASE WHEN c = 1 THEN v END) AS BIGINT) AS g_sum,
+           CAST(sum(CASE WHEN c = 2 THEN v END) AS BIGINT) AS b_sum,
+           CAST(sum(v) AS BIGINT) AS px_sum,
+           CAST(media_id*31 % 256 AS INT) AS top_left_r
+    FROM px GROUP BY media_id, w, h
+    """,
+    "CHUNKY RGB TIFF decode (PhotometricInterpretation 2, SamplesPerPixel "
+    "3 — the color-scan corpus shape): the count-3 BitsPerSample SHORT "
+    "array no longer fits the IFD value slot and lives OUT-OF-LINE, a tag "
+    "path grayscale-only parsers never exercise; compression cycles "
+    "none/PackBits/LZW and byte order II/MM by doc_id so all six "
+    "transports decode the same formula pixels (llmdata/multimodal.py "
+    "make_tiff_rgb/decode_tiff_rgb/tiff_rgb_features)",
+)
+def multimodal_tiff_rgb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(
+            ids,
+            lambda i: MM.make_tiff_rgb(
+                i,
+                9 + i % 4,
+                8 + i % 3,
+                compression=(1, 32773, 5)[i % 3],
+                byte_order="II" if i % 2 == 0 else "MM",
+            ),
+        ),
+        media_type="image/tiff",
+    )
+    return MM.tiff_rgb_features(media)
+
+
+# ---------------------------------------------------------------------------
+# RLE8-compressed BMP: the compressed half of the Windows bitmap spec
+
+
+@_register(
+    "multimodal_bmp_rle8",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 17 + doc_id % 5 AS width, 11 + doc_id % 4 AS height
+      FROM documents WHERE doc_id < 64),
+    px AS (
+      SELECT m.media_id, m.width, m.height,
+             (m.media_id*31 + y.y*7 + (x.x // 4)*5) % 256 AS idx
+      FROM m, generate_series(0, 14) AS y(y), generate_series(0, 21) AS x(x)
+      WHERE y.y < m.height AND x.x < m.width)
+    SELECT media_id, CAST(width AS INT) AS width, CAST(height AS INT) AS height,
+           CAST(sum(idx) AS BIGINT) AS idx_sum,
+           CAST(sum((idx*31) % 256 + (idx*7) % 256 + (idx*3) % 256) AS BIGINT) AS rgb_sum,
+           CAST(media_id*31 % 256 AS INT) AS top_left_idx
+    FROM px GROUP BY media_id, width, height
+    """,
+    "RLE8-COMPRESSED palette BMP decode (biCompression 1, BI_RLE8 — the "
+    "compressed half of the Windows bitmap spec, previously a documented "
+    "boundary): encoded runs, absolute mode with word-alignment pads, "
+    "EOL/EOD markers, bottom-up lines — the SAME `_rle8_decode_frame` "
+    "state machine AVI MRLE streams use, now reached from the BMP "
+    "container; the run-of-4 index formula makes the run encoder do real "
+    "work (llmdata/multimodal.py make_bmp_rle8/decode_bmp_rle8)",
+)
+def multimodal_bmp_rle8(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import pandas as pd
+    from typing import Iterator
+
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_bmp_rle8(i, 17 + i % 5, 11 + i % 4)),
+        media_type="image/bmp",
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
+                w, h, isum, rsum, tl = MM.decode_bmp_rle8(bytes(blob))
+                rows.append({
+                    "media_id": mid, "width": w, "height": h,
+                    "idx_sum": isum, "rgb_sum": rsum, "top_left_idx": tl,
+                })
+            yield pd.DataFrame(rows, columns=[
+                "media_id", "width", "height", "idx_sum", "rgb_sum", "top_left_idx",
+            ])
+
+    return media.select("media_id", "payload").mapInPandas(
+        run,
+        "media_id long, width int, height int, idx_sum long, rgb_sum long, top_left_idx int",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Packed sub-byte PNG: favicon / fax / screenshot depths
+
+
+@_register(
+    "multimodal_png_packed",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 11 + doc_id % 5 AS w, 7 + doc_id % 4 AS h,
+             CASE doc_id % 3 WHEN 0 THEN 2 WHEN 1 THEN 4 ELSE 16 END AS nv,
+             doc_id % 2 = 0 AS pal
+      FROM documents WHERE doc_id < 64),
+    px AS (
+      SELECT m.media_id, m.w, m.h, m.pal, m.nv,
+             (m.media_id*31 + y.y*7 + x.x*3) % m.nv AS v
+      FROM m, generate_series(0, 10) AS y(y), generate_series(0, 15) AS x(x)
+      WHERE y.y < m.h AND x.x < m.w)
+    SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+           -- palette rows fold to RGB (i, i*3, i*7): v <= 15 keeps every
+           -- channel under 256, so the folded byte sum is exactly 11*v
+           CAST(sum(CASE WHEN pal THEN 11*v ELSE v END) AS BIGINT) AS px_sum,
+           CAST(media_id*31 % nv AS INT) AS top_left
+    FROM px GROUP BY media_id, w, h, nv, pal
+    """,
+    "PACKED SUB-BYTE PNG decode (bit depths 1/2/4 — the favicon/fax/"
+    "screenshot shapes, previously a documented boundary): MSB-first "
+    "bit-packed scanlines padded to byte boundaries, filters operating "
+    "on bytes with bpp floored to 1 (spec §9.2), grayscale and "
+    "2^depth-entry palette layouts, a fifth of the corpus "
+    "ADAM7-interlaced (per-pass pad bits — the sub-byte detail a "
+    "byte-slicing de-interlacer gets wrong); depth/color/interlace cycle "
+    "by doc_id (llmdata/multimodal.py make_png_packed/decode_png_pixels)",
+)
+def multimodal_png_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(
+            ids,
+            lambda i: MM.make_png_packed(
+                i,
+                11 + i % 5,
+                7 + i % 4,
+                depth=(1, 2, 4)[i % 3],
+                color_type=3 if i % 2 == 0 else 0,
+                interlace=bool(i % 5 == 0),
+            ),
+        ),
+        media_type="image/png",
+    )
+    return MM.png_features(media)
+
+
+# ---------------------------------------------------------------------------
+# Multi-channel WAV: past the stereo boundary
+
+
+@_register(
+    "multimodal_audio_multichannel",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id,
+             CASE WHEN doc_id % 2 = 0 THEN 4 ELSE 6 END AS ch,
+             8000 + (doc_id % 3) * 8000 AS rate,
+             200 + (doc_id % 5) * 53 AS nf
+      FROM documents WHERE doc_id < 64),
+    s AS (
+      SELECT m.media_id, m.ch, m.rate, m.nf, i.i,
+             ((m.media_id*131 + i.i*17) % 65536) - 32768 AS v
+      FROM m, generate_series(0, 2471) AS i(i)
+      WHERE i.i < m.ch * m.nf)
+    SELECT media_id, CAST(rate AS INT) AS sample_rate,
+           CAST(ch AS INT) AS n_channels, CAST(nf AS BIGINT) AS n_frames,
+           CAST(sum(abs(v)) AS BIGINT) AS amp_sum,
+           CAST(max(v) AS INT) AS peak,
+           CAST(((media_id*131) % 65536) - 32768 AS INT) AS first_sample,
+           CAST(sum(CASE WHEN i % ch = 0 THEN abs(v) END) AS BIGINT) AS ch0_amp_sum
+    FROM s GROUP BY media_id, rate, ch, nf
+    """,
+    "MULTI-CHANNEL (4ch/6ch) 16-bit PCM WAV decode — the field-recorder/"
+    "conference-array shape past the stereo boundary: block_align "
+    "2·channels consistency, frame-count division check, and a channel-0 "
+    "|sample| sum that pins the de-interleave stride (a wrong channel "
+    "count keeps the whole-stream sums but shifts ch0_amp_sum) "
+    "(llmdata/multimodal.py make_wav_multich/decode_wav_multich/"
+    "wav_multich_features)",
+)
+def multimodal_audio_multichannel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(
+            ids,
+            lambda i: MM.make_wav_multich(
+                i,
+                200 + (i % 5) * 53,
+                channels=4 if i % 2 == 0 else 6,
+                sample_rate=8000 + (i % 3) * 8000,
+            ),
+        ),
+        media_type="audio/wav",
+    )
+    return MM.wav_multich_features(media)
+
+
+# ---------------------------------------------------------------------------
+# 24-bit FLAC: the studio-master depth
+
+
+@_register(
+    "multimodal_audio_flac24",
+    # same fixture formula and geometry as multimodal_audio_pcm24 — the
+    # compressed stream must reconstruct identical samples, so the 24-bit
+    # WAV oracle covers it verbatim (the "one SQL form per PCM family"
+    # device of the audio containers above, extended to the lossless codec)
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id,
+             8000 + (doc_id % 3) * 8000 AS rate,
+             500 + (doc_id % 5) * 111 AS n
+      FROM documents WHERE doc_id < 64
+    )
+    SELECT m.media_id,
+           CAST(m.rate AS INT) AS sample_rate,
+           CAST(m.n AS BIGINT) AS n_samples,
+           CAST(SUM(abs(((m.media_id*521 + i.i*73) % 16777216) - 8388608)) AS BIGINT) AS amp_sum,
+           CAST(MAX(((m.media_id*521 + i.i*73) % 16777216) - 8388608) AS INT) AS peak,
+           CAST(((m.media_id*521) % 16777216) - 8388608 AS INT) AS first_sample
+    FROM m, generate_series(0, 943) AS i(i)
+    WHERE i.i < m.n
+    GROUP BY m.media_id, m.rate, m.n
+    """,
+    "24-BIT FLAC decode (the studio-master depth, previously a documented "
+    "boundary): sample-size code 0b110, 25-bit side subframes, wider "
+    "warmups/residuals through the same FIXED/rice machinery, and the "
+    "3-byte little-endian MD5 layout — shared `_flac_pack_pcm` so a "
+    "packing bug cannot self-cancel between encoder and verifier; the "
+    "fixture is `make_wav24`'s formula, so the 24-bit WAV oracle covers "
+    "the compressed stream verbatim (llmdata/multimodal.py "
+    "make_flac24/encode_flac/decode_flac)",
+)
+def multimodal_audio_flac24(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(
+            ids,
+            lambda i: MM.make_flac24(i, 500 + (i % 5) * 111, 8000 + (i % 3) * 8000),
+        ),
+        media_type="audio/flac",
+    )
+    return MM.flac_features(media)
+
+
+# ---------------------------------------------------------------------------
+# WAVE_FORMAT_EXTENSIBLE: the modern multichannel WAV container
+
+
+@_register(
+    "multimodal_audio_wav_extensible",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id,
+             CASE doc_id % 3 WHEN 0 THEN 4 WHEN 1 THEN 6 ELSE 8 END AS ch,
+             180 + (doc_id % 4) * 61 AS nf
+      FROM documents WHERE doc_id < 64),
+    s AS (
+      SELECT m.media_id, m.ch, m.nf, i.i,
+             ((m.media_id*131 + i.i*17) % 65536) - 32768 AS v
+      FROM m, generate_series(0, 2903) AS i(i)
+      WHERE i.i < m.ch * m.nf)
+    SELECT media_id, CAST(16000 AS INT) AS sample_rate,
+           CAST(ch AS INT) AS n_channels, CAST(nf AS BIGINT) AS n_frames,
+           CAST(sum(abs(v)) AS BIGINT) AS amp_sum,
+           CAST(max(v) AS INT) AS peak,
+           CAST(((media_id*131) % 65536) - 32768 AS INT) AS first_sample,
+           CAST(sum(CASE WHEN i % ch = 0 THEN abs(v) END) AS BIGINT) AS ch0_amp_sum
+    FROM s GROUP BY media_id, ch, nf
+    """,
+    "WAVE_FORMAT_EXTENSIBLE decode (tag 0xFFFE — how real recorders ship "
+    ">2-channel audio): the 40-byte fmt chunk's cbSize/validBits/"
+    "channel-mask fields and the KSDATAFORMAT_SUBTYPE_PCM GUID gate the "
+    "decode (a non-PCM GUID or padded validBits raises); samples are the "
+    "multichannel formula stream at 4/6/8 channels, so the same "
+    "stride-pinning surface verifies both containers "
+    "(llmdata/multimodal.py make_wav_extensible/decode_wav_multich)",
+)
+def multimodal_audio_wav_extensible(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(
+            ids,
+            lambda i: MM.make_wav_extensible(
+                i, 180 + (i % 4) * 61, channels=(4, 6, 8)[i % 3]
+            ),
+        ),
+        media_type="audio/wav",
+    )
+    return MM.wav_multich_features(media)
+
+
+# ---------------------------------------------------------------------------
+# Top-down BMP: negative biHeight, the screenshot/capture shape
+
+
+@_register(
+    "multimodal_bmp_topdown",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 4 + doc_id % 5 AS width, 3 + doc_id % 4 AS height
+      FROM documents WHERE doc_id < 64
+    )
+    SELECT m.media_id, CAST(m.width AS INT) AS width, CAST(m.height AS INT) AS height,
+           24 AS bpp,
+           CAST(SUM((m.media_id*31 + y.y*7 + x.x*3 + c.c) % 256) AS BIGINT) AS px_sum,
+           CAST(m.media_id*31 % 256 AS INT) AS top_left
+    FROM m, generate_series(0, 5) AS y(y), generate_series(0, 7) AS x(x),
+         generate_series(0, 2) AS c(c)
+    WHERE y.y < m.height AND x.x < m.width
+    GROUP BY m.media_id, m.width, m.height
+    """,
+    "TOP-DOWN BMP decode (NEGATIVE biHeight — the screenshot/capture "
+    "shape): even docs store rows top-down, odd docs bottom-up, one "
+    "corpus exercising both row orders through the same parser; the "
+    "y-dependent pixel formula means a decoder that ignores the height "
+    "sign reads an inverted top_left byte and fails the hash "
+    "(llmdata/multimodal.py make_bmp_topdown/_parse_bmp_header; the "
+    "resize and dHash kernels share the row-order flag)",
+)
+def multimodal_bmp_topdown(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(
+            ids,
+            lambda i: (
+                MM.make_bmp_topdown(i, 4 + i % 5, 3 + i % 4)
+                if i % 2 == 0
+                else MM.make_bmp(i, 4 + i % 5, 3 + i % 4)
+            ),
+        ),
+        media_type="image/bmp",
+    )
+    return MM.bmp_features(media)
+
+
+# ---------------------------------------------------------------------------
+# tRNS transparency: the transparent-favicon/logo shape
+
+
+@_register(
+    "multimodal_png_trns",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 9 + doc_id % 4 AS w, 7 + doc_id % 3 AS h,
+             CASE doc_id % 3 WHEN 0 THEN 4 WHEN 1 THEN 16 ELSE 256 END AS nv
+      FROM documents WHERE doc_id < 64),
+    px AS (
+      SELECT m.media_id, m.w, m.h, m.nv, m.nv // 2 + 1 AS t,
+             (m.media_id*31 + y.y*7 + x.x*3) % m.nv AS v
+      FROM m, generate_series(0, 8) AS y(y), generate_series(0, 12) AS x(x)
+      WHERE y.y < m.h AND x.x < m.w),
+    a AS (
+      SELECT media_id, w, h, nv, t, v,
+             v + (v*3) % 256 + (v*7) % 256 AS rgb,
+             CASE WHEN v < t THEN (v*29) % 256 ELSE 255 END AS alpha
+      FROM px)
+    SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+           CAST(sum(rgb) AS BIGINT) AS rgb_sum,
+           CAST(sum(alpha) AS BIGINT) AS alpha_sum,
+           CAST(sum(CASE WHEN alpha = 0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS transparent_count,
+           CAST(max(CASE WHEN media_id*31 % nv < t
+                         THEN (media_id*31 % nv)*29 % 256 ELSE 255 END) AS INT)
+             AS top_left_alpha
+    FROM a GROUP BY media_id, w, h
+    """,
+    "PALETTE tRNS TRANSPARENCY decode (the transparent-favicon/logo "
+    "shape): the per-index alpha table covers only the first nv/2+1 "
+    "palette entries, so the spec's entries-past-the-table-are-opaque "
+    "rule (§11.3.2) is exercised on every payload; depths 2/4/8 cycle "
+    "so packed indices key the alpha table too. decode_png_pixels now "
+    "REFUSES tRNS streams instead of silently decoding them opaque — "
+    "decode_png_rgba is the alpha-aware surface "
+    "(llmdata/multimodal.py png_insert_trns/decode_png_rgba/"
+    "png_rgba_features)",
+)
+def multimodal_png_trns(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+
+    def maker(i: int) -> bytes:
+        d = (2, 4, 8)[i % 3]
+        nv = 1 << d
+        base = (
+            MM.make_png(i, 9 + i % 4, 7 + i % 3, color_type=3)
+            if d == 8
+            else MM.make_png_packed(i, 9 + i % 4, 7 + i % 3, depth=d, color_type=3)
+        )
+        table = bytes((k * 29) % 256 for k in range(nv // 2 + 1))
+        return MM.png_insert_trns(base, table)
+
+    media = MM.attach_media_meta(_pack_media(ids, maker), media_type="image/png")
+    return MM.png_rgba_features(media)
+
+
+# ---------------------------------------------------------------------------
+# EXIF metadata + orientation: the camera-photo crawl shapes
+
+
+@_register(
+    "multimodal_exif_metadata",
+    """
+    SELECT doc_id AS media_id,
+           CASE WHEN doc_id % 5 = 4 THEN NULL
+                ELSE 'Cam' || CAST(doc_id % 5 AS VARCHAR) END AS make,
+           CASE WHEN doc_id % 5 = 4 THEN NULL
+                ELSE 'Model-' || CAST(doc_id % 7 AS VARCHAR)
+                     || repeat('X', CAST(doc_id % 3 AS INT)) END AS model,
+           CAST(CASE WHEN doc_id % 5 = 4 THEN NULL
+                     ELSE 1 + doc_id % 8 END AS INT) AS orientation,
+           CASE WHEN doc_id % 5 = 4 THEN NULL
+                ELSE '2023:' || lpad(CAST(1 + doc_id % 12 AS VARCHAR), 2, '0')
+                     || ':' || lpad(CAST(1 + doc_id % 28 AS VARCHAR), 2, '0')
+                     || ' ' || lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0')
+                     || ':' || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0')
+                     || ':00' END AS taken_at,
+           CAST(CASE WHEN doc_id % 5 = 4 THEN NULL
+                     ELSE (2 + doc_id % 2) * 8 END AS INT) AS pixel_x,
+           CAST(CASE WHEN doc_id % 5 = 4 THEN NULL
+                     ELSE (2 + (doc_id // 2) % 2) * 8 END AS INT) AS pixel_y,
+           CAST(CASE WHEN doc_id % 5 = 4 OR doc_id % 3 != 0 THEN NULL
+                     ELSE (CASE WHEN (doc_id // 2) % 2 = 0 THEN 1 ELSE -1 END)
+                          * ((doc_id % 90) * 36000000
+                             + ((doc_id * 7) % 60) * 600000
+                             + ((doc_id * 13) % 6000) * 100)
+                END AS BIGINT) AS gps_lat_arcsec_e4,
+           CAST(CASE WHEN doc_id % 5 = 4 OR doc_id % 3 != 0 THEN NULL
+                     ELSE (CASE WHEN (doc_id // 4) % 2 = 0 THEN 1 ELSE -1 END)
+                          * ((doc_id % 180) * 36000000
+                             + ((doc_id * 11) % 60) * 600000
+                             + ((doc_id * 17) % 6000) * 100)
+                END AS BIGINT) AS gps_lon_arcsec_e4
+    FROM documents WHERE doc_id < 64
+    """,
+    "EXIF METADATA EXTRACTION without pixel decode (the metadata-only "
+    "crawl pass real photo pipelines run first): a real TIFF-IFD parser "
+    "over JPEG APP1 — both byte orders (fixtures alternate II/MM), "
+    "inline vs out-of-line values (Make fits 4 bytes at Cam0..4; Model "
+    "and the datetime overflow), the 0x8769 Exif sub-IFD pointer, the "
+    "0x8825 GPS sub-IFD with RATIONAL (deg,min,sec) triplets reduced to "
+    "EXACT e4-arcsecond integers (den!=1 degree rationals on every sixth "
+    "geotagged stream; inexact rationals refuse rather than round — "
+    "geo-dedup must not mis-bucket), hemisphere sign from the N/S-E/W "
+    "refs, and ASCII NUL stripping; every fifth stream has NO APP1 and "
+    "must yield NULLs, non-geotagged streams NULL coordinates (EXIF 2.3 "
+    "/ TIFF 6.0; llmdata/multimodal.py "
+    "build_exif_app1/parse_exif/_exif_gps_arcsec_e4/exif_metadata)",
+)
+def multimodal_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_jpeg_exif(i, 2 + i % 2, 2 + (i // 2) % 2)),
+        media_type="image/jpeg",
+    )
+    return MM.exif_metadata(media)
+
+
+def _jpeg_oriented_oracle() -> str:
+    """The grayscale-JPEG decoded-pixel oracle (dezigzag + dequant + the
+    literal fixed-point IDCT basis table with explicit floor division)
+    EXTENDED through the EXIF orientation coordinate map: every pixel is
+    re-addressed to its upright (ox, oy) and the positional checksum
+    sum(p * (oy*W' + ox)) is computed on the uprighted geometry — so a
+    flipped axis or missed transpose fails the hash even though the plain
+    px_sum is permutation-invariant."""
+    from query_engine_spark.llmdata.multimodal import (
+        _JPEG_IDCT_A,
+        _JPEG_QTAB,
+        _JPEG_ZIGZAG,
+    )
+
+    a_rows = ", ".join(
+        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
+    )
+    used = [0, 1, 3, 8, 20, 40, 55]  # jpeg_qcoefs' nonzero zigzag indices
+    cmap = ", ".join(
+        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, {_JPEG_QTAB[i]})"
+        for i in used
+    )
+    half, full = 1 << 25, 1 << 26
+    fd = (
+        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
+        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
+    )
+    return f"""
+    WITH m AS (
+      SELECT doc_id AS media_id, 2 + doc_id % 2 AS bw, 2 + (doc_id // 2) % 2 AS bh,
+             CASE WHEN doc_id % 5 = 4 THEN 1 ELSE 1 + doc_id % 8 END AS o
+      FROM documents WHERE doc_id < 48),
+    blocks AS (
+      SELECT media_id, bw, bh, o, b.b AS bi
+      FROM m, generate_series(0, 8) AS b(b) WHERE b.b < bw * bh),
+    cm(zi, cu, cv, q) AS (VALUES {cmap}),
+    coefs AS (
+      SELECT media_id, bw, bh, o, bi, cm.cu, cm.cv,
+             (CASE WHEN cm.zi = 0 THEN ((media_id*7 + bi*5) % 13) - 6
+                   ELSE ((media_id*11 + bi*3 + cm.zi) % 9) - 4 END) * cm.q AS cq
+      FROM blocks, cm),
+    a(au, ax, aval) AS (VALUES {a_rows}),
+    terms AS (
+      SELECT c.media_id, c.bw, c.bh, c.o, c.bi, px.x AS x, py.y AS y,
+             CAST(sum(c.cq * aa.aval * ab.aval) AS BIGINT) AS t
+      FROM coefs c, generate_series(0, 7) AS px(x), generate_series(0, 7) AS py(y)
+      JOIN a aa ON aa.au = c.cu AND aa.ax = px.x
+      JOIN a ab ON ab.au = c.cv AND ab.ax = py.y
+      GROUP BY 1, 2, 3, 4, 5, 6, 7),
+    gpix AS (
+      SELECT media_id, bw * 8 AS w, bh * 8 AS h, o,
+             (bi % bw) * 8 + x AS gx, (bi // bw) * 8 + y AS gy,
+             greatest(0, least(255, 128 + {fd})) AS p
+      FROM terms),
+    opix AS (
+      SELECT media_id, p,
+             CASE WHEN o <= 4 THEN w ELSE h END AS ow,
+             CASE WHEN o <= 4 THEN h ELSE w END AS oh,
+             CASE o WHEN 1 THEN gx WHEN 2 THEN w-1-gx WHEN 3 THEN w-1-gx
+                    WHEN 4 THEN gx WHEN 5 THEN gy WHEN 6 THEN h-1-gy
+                    WHEN 7 THEN h-1-gy ELSE gy END AS ox,
+             CASE o WHEN 1 THEN gy WHEN 2 THEN gy WHEN 3 THEN h-1-gy
+                    WHEN 4 THEN h-1-gy WHEN 5 THEN gx WHEN 6 THEN gx
+                    WHEN 7 THEN w-1-gx ELSE w-1-gx END AS oy
+      FROM gpix)
+    SELECT media_id, CAST(max(ow) AS INT) AS width, CAST(max(oh) AS INT) AS height,
+           CAST(sum(p) AS BIGINT) AS px_sum,
+           CAST(sum(p * (oy * ow + ox)) AS BIGINT) AS pos_sum,
+           CAST(max(CASE WHEN ox = 0 AND oy = 0 THEN p END) AS INT) AS top_left
+    FROM opix GROUP BY media_id
+    """
+
+
+@_register(
+    "multimodal_jpeg_oriented",
+    _jpeg_oriented_oracle(),
+    "ORIENTATION-AWARE JPEG decode (what a crawl thumbnailer must do "
+    "before any visual dedup — phone photos are stored rotated): EXIF "
+    "APP1 parse + baseline decode + the full 1-8 flip/rotate matrix as "
+    "an exact integer pixel permutation; the oracle re-addresses every "
+    "IDCT-reconstructed pixel through the same coordinate map and a "
+    "positional checksum catches any wrong axis; streams without EXIF "
+    "(every fifth) decode as orientation 1 "
+    "(llmdata/multimodal.py apply_exif_orientation/decode_jpeg_oriented/"
+    "jpeg_oriented_features)",
+)
+def multimodal_jpeg_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 48).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_jpeg_exif(i, 2 + i % 2, 2 + (i // 2) % 2)),
+        media_type="image/jpeg",
+    )
+    return MM.jpeg_oriented_features(media)
+
+
+# ---------------------------------------------------------------------------
+# Adobe CMYK/YCCK JPEG: the scanned-document corpus shape
+
+
+def _jpeg_cmyk_oracle() -> str:
+    """Four IDCT plane chains (C/K on the luma quant table, M/Y on
+    chroma — libjpeg's CMYK table convention) + the APP14 transform
+    branch: inverted-CMYK for even patterns, YCCK (the same 2^16
+    fixed-point YCbCr matrix, then ink inversion) for odd — the
+    4-component half of the deterministic-decoder contract."""
+    from query_engine_spark.llmdata.multimodal import (
+        _JPEG_IDCT_A,
+        _JPEG_QTAB,
+        _JPEG_QTAB_C,
+        _JPEG_ZIGZAG,
+    )
+
+    a_rows = ", ".join(
+        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
+    )
+    used = [0, 1, 3, 8, 20, 40, 55]
+    cmap = ", ".join(
+        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, "
+        f"{_JPEG_QTAB[i]}, {_JPEG_QTAB_C[i]})"
+        for i in used
+    )
+    half, full = 1 << 25, 1 << 26
+    fd = (
+        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
+        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
+    )
+
+    def fd16(v: str) -> str:
+        return (
+            f"(({v} + 32768) // 65536) - (CASE WHEN ({v} + 32768) % 65536 != 0 "
+            f"AND {v} + 32768 < 0 THEN 1 ELSE 0 END)"
+        )
+
+    return f"""
+    WITH m AS (
+      SELECT doc_id AS media_id, 2 + doc_id % 2 AS bw, 2 + (doc_id // 2) % 2 AS bh
+      FROM documents WHERE doc_id < 48),
+    blocks AS (
+      SELECT media_id, bw, bh, b.b AS bi
+      FROM m, generate_series(0, 8) AS b(b) WHERE b.b < bw * bh),
+    cm(zi, cu, cv, q0, q1) AS (VALUES {cmap}),
+    coefs AS (
+      SELECT media_id, bw, bh, bi, comp.c AS c, cm.cu, cm.cv,
+             (CASE WHEN cm.zi = 0 THEN ((media_id*7 + bi*5 + comp.c*17) % 13) - 6
+                   ELSE ((media_id*11 + bi*3 + comp.c*29 + cm.zi) % 9) - 4 END)
+             * (CASE WHEN comp.c IN (0, 3) THEN cm.q0 ELSE cm.q1 END) AS cq
+      FROM blocks, cm, generate_series(0, 3) AS comp(c)),
+    a(au, ax, aval) AS (VALUES {a_rows}),
+    terms AS (
+      SELECT co.media_id, co.bw, co.bh, co.bi, co.c, px.x AS x, py.y AS y,
+             CAST(sum(co.cq * aa.aval * ab.aval) AS BIGINT) AS t
+      FROM coefs co, generate_series(0, 7) AS px(x), generate_series(0, 7) AS py(y)
+      JOIN a aa ON aa.au = co.cu AND aa.ax = px.x
+      JOIN a ab ON ab.au = co.cv AND ab.ax = py.y
+      GROUP BY 1, 2, 3, 4, 5, 6, 7),
+    plane AS (
+      SELECT media_id, bw, bh, bi, c, x, y,
+             greatest(0, least(255, 128 + {fd})) AS p
+      FROM terms),
+    quad AS (
+      SELECT media_id, bw, bh, bi, x, y,
+             max(CASE WHEN c = 0 THEN p END) AS p0,
+             max(CASE WHEN c = 1 THEN p END) AS p1,
+             max(CASE WHEN c = 2 THEN p END) AS p2,
+             max(CASE WHEN c = 3 THEN p END) AS p3
+      FROM plane GROUP BY 1, 2, 3, 4, 5, 6),
+    ink AS (
+      SELECT media_id, bw, bh, bi, x, y,
+             CASE WHEN media_id % 2 = 0 THEN 255 - p0
+                  ELSE 255 - greatest(0, least(255,
+                       p0 + ({fd16("91881 * (p2 - 128)")}))) END AS c_,
+             CASE WHEN media_id % 2 = 0 THEN 255 - p1
+                  ELSE 255 - greatest(0, least(255,
+                       p0 - ({fd16("22554 * (p1 - 128) + 46802 * (p2 - 128)")}))) END AS m_,
+             CASE WHEN media_id % 2 = 0 THEN 255 - p2
+                  ELSE 255 - greatest(0, least(255,
+                       p0 + ({fd16("116130 * (p1 - 128)")}))) END AS y_,
+             255 - p3 AS k_
+      FROM quad)
+    SELECT media_id, CAST(bw * 8 AS INT) AS width, CAST(bh * 8 AS INT) AS height,
+           CAST(sum(c_) AS BIGINT) AS c_sum,
+           CAST(sum(m_) AS BIGINT) AS m_sum,
+           CAST(sum(y_) AS BIGINT) AS y_sum,
+           CAST(sum(k_) AS BIGINT) AS k_sum,
+           CAST(max(CASE WHEN bi = 0 AND x = 0 AND y = 0 THEN k_ END) AS INT)
+             AS top_left_k
+    FROM ink GROUP BY 1, 2, 3
+    """
+
+
+@_register(
+    "multimodal_jpeg_cmyk",
+    _jpeg_cmyk_oracle(),
+    "ADOBE CMYK/YCCK JPEG decode (the scanned-document corpus shape — "
+    "print-press PDFs and office scans crawl in as 4-component JPEGs): "
+    "four interleaved 4:4:4 planes per MCU with libjpeg's [luma, chroma, "
+    "chroma, luma] table convention, an APP14 'Adobe' segment whose "
+    "transform byte selects inverted-CMYK (0) vs YCCK (2), and a REFUSAL "
+    "on 4-component streams without APP14 (interpretation undefined per "
+    "Adobe TN5116); the oracle replays all four IDCT chains plus both "
+    "transform branches, so a swapped K-channel table or a missed "
+    "inversion fails the hash (llmdata/multimodal.py "
+    "make_jpeg_cmyk/_jpeg_cmyk_np/jpeg_cmyk_features)",
+)
+def multimodal_jpeg_cmyk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 48).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_jpeg_cmyk(i, 2 + i % 2, 2 + (i // 2) % 2)),
+        media_type="image/jpeg",
+    )
+    return MM.jpeg_cmyk_features(media)
+
+
+# ---------------------------------------------------------------------------
+# Archive-corpus ingestion: ZIP and gzipped ustar TAR
+
+
+@_register(
+    "llm_zip_ingest",
+    """
+    SELECT doc_id, CAST(length(text) AS BIGINT) AS chars, md5(text) AS fp
+    FROM documents WHERE doc_id < 256
+    """,
+    "ZIP-corpus ingestion roundtrip, hash-verified: documents are packed "
+    "distributed into bounded multi-member ZIP archives (one shuffle on "
+    "archive_id, 8 docs each; raw-DEFLATE or STORED per member by "
+    "compressibility, real local headers + central directory + EOCD per "
+    "PKWARE APPNOTE), then a map-only pass extracts every member via the "
+    "central directory with CRC-32 verification — the recovered text's "
+    "length + md5 must hash-match the oracle computed on the ORIGINAL "
+    "column, pinning losslessness of the whole pack->store->extract path "
+    "(llmdata/archives.py build_zip/read_zip/pack_archives/"
+    "archive_members)",
+)
+def llm_zip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import archives as AR
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 256)
+    packed = AR.pack_archives(docs, fmt="zip", group_size=8)
+    return AR.archive_members(packed, fmt="zip")
+
+
+@_register(
+    "llm_zip64_ingest",
+    """
+    SELECT doc_id, CAST(length(text) AS BIGINT) AS chars, md5(text) AS fp
+    FROM documents WHERE doc_id >= 256 AND doc_id < 512
+    """,
+    "ZIP64-corpus ingestion roundtrip, hash-verified: the APPNOTE "
+    "4.3.14/4.5.3 large-archive format big-data dumps actually ship "
+    "(forced ZIP64 structures, as tools writing past 4 GiB do for every "
+    "archive) — sentinel 0xFFFFFFFF size/offset fields resolved through "
+    "0x0001 extended-information extras, the ZIP64 end-of-central-"
+    "directory record and its locator chained before the classic EOCD, "
+    "junk-prefix shift recovered from the locator's self-offset. The "
+    "reader also auto-handles >65535-member archives (tested at 65535 "
+    "and 70000 members); a hand-authored one-member ZIP64 golden pins "
+    "the layout outside the co-developed pair. Same one-shuffle pack / "
+    "map-only extract plan and the same losslessness oracle as the "
+    "classic path (llmdata/archives.py build_zip(zip64=True)/read_zip)",
+)
+def llm_zip64_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import archives as AR
+
+    docs = load_table(spark, sf_dir, "documents").filter(
+        (F.col("doc_id") >= 256) & (F.col("doc_id") < 512)
+    )
+    packed = AR.pack_archives(docs, fmt="zip64", group_size=8)
+    return AR.archive_members(packed, fmt="zip64")
+
+
+@_register(
+    "llm_tar_ingest",
+    """
+    SELECT doc_id, CAST(length(text) AS BIGINT) AS chars, md5(text) AS fp
+    FROM documents WHERE doc_id < 256
+    """,
+    "TAR.GZ-corpus ingestion roundtrip, hash-verified: documents are "
+    "packed distributed into gzip-compressed POSIX ustar archives (512-"
+    "byte headers with octal sizes and the space-normalized checksum, "
+    "RFC 1952 gzip wrap), then a map-only pass gunzips + walks headers "
+    "with checksum verification and recovers every member byte-exact "
+    "against the oracle on the ORIGINAL column — the academic-corpus "
+    "release shape (llmdata/archives.py build_tar/read_tar/gzip_bytes/"
+    "gunzip_bytes)",
+)
+def llm_tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import archives as AR
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 256)
+    packed = AR.pack_archives(docs, fmt="tar.gz", group_size=8)
+    return AR.archive_members(packed, fmt="tar.gz")
+
+
+# ---------------------------------------------------------------------------
+# ID3v2 metadata: the crawl-audio tagging shape
+
+
+@_register(
+    "multimodal_id3_metadata",
+    """
+    SELECT doc_id AS media_id,
+           CASE WHEN doc_id % 6 = 5 THEN NULL
+                ELSE (CASE WHEN doc_id % 3 != 0 THEN '♪' ELSE '' END)
+                     || 'Track-' || CAST(doc_id % 100 AS VARCHAR) END AS title,
+           CASE WHEN doc_id % 6 = 5 THEN NULL
+                ELSE 'Artist ' || CAST(doc_id % 11 AS VARCHAR) END AS artist,
+           CASE WHEN doc_id % 6 = 5 THEN NULL
+                ELSE 'Album ' || CAST(doc_id % 13 AS VARCHAR) END AS album,
+           CAST(CASE WHEN doc_id % 6 = 5 THEN NULL
+                     ELSE 1990 + doc_id % 30 END AS INT) AS year
+    FROM documents WHERE doc_id < 128
+    """,
+    "ID3v2 METADATA EXTRACTION without audio decode (the crawl-audio "
+    "tagging pass — group by artist/album/year, dedup by title): parses "
+    "BOTH ID3v2.3 and v2.4, whose frame-size fields differ (plain 32-bit "
+    "vs syncsafe 28-bit — the classic cross-version parser bug), text "
+    "encodings latin-1 / UTF-16-BOM / UTF-16BE / UTF-8 with a non-latin "
+    "character planted on the wide-encoding rows so silent latin-1 "
+    "misdecoding fails the hash, TYER vs TDRC year fields, padding, and "
+    "bare MPEG streams yielding NULLs; the MPEG frames themselves stay "
+    "an honest boundary (llmdata/multimodal.py "
+    "build_id3/parse_id3/make_mp3_id3/id3_metadata)",
+)
+def multimodal_id3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 128).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, MM.make_mp3_id3), media_type="audio/mpeg"
+    )
+    return MM.id3_metadata(media)
+
+
+# ---------------------------------------------------------------------------
+# MPEG audio frame walk: duration/bitrate metadata without decoding
+
+
+@_register(
+    "multimodal_mp3_frames",
+    """
+    WITH m AS (
+      SELECT doc_id AS i,
+             doc_id % 3 AS vsel,
+             CASE WHEN doc_id % 7 = 3 THEN 1
+                  WHEN doc_id % 7 = 5 THEN 2 ELSE 3 END AS layer,
+             (doc_id // 3) % 3 AS sr_idx,
+             6 + doc_id % 5 AS nframes,
+             doc_id % 4 = 0 AS vbr
+      FROM documents WHERE doc_id < 96),
+    g AS (
+      SELECT m.*,
+             (CASE m.sr_idx WHEN 0 THEN 44100 WHEN 1 THEN 48000
+                            ELSE 32000 END)
+             // (CASE m.vsel WHEN 0 THEN 1 WHEN 1 THEN 2 ELSE 4 END) AS sr,
+             CASE WHEN m.layer = 1 THEN 384
+                  WHEN m.layer = 2 THEN 1152
+                  WHEN m.vsel = 0 THEN 1152 ELSE 576 END AS spf
+      FROM m),
+    fr AS (
+      SELECT g.i, g.sr, g.spf, g.nframes, g.vbr, f.f,
+             1 + (g.i + CASE WHEN g.vbr THEN f.f ELSE 0 END) % 8 AS br_idx,
+             (g.i + f.f) % 2 AS pad, g.layer, g.vsel
+      FROM g, generate_series(0, 10) AS f(f) WHERE f.f < g.nframes),
+    kb AS (
+      SELECT fr.*,
+             CASE
+               WHEN fr.vsel = 0 AND fr.layer = 1 THEN 32 * fr.br_idx
+               WHEN (fr.vsel = 0 AND fr.layer = 2)
+                 OR (fr.vsel <> 0 AND fr.layer = 1) THEN
+                 CASE fr.br_idx WHEN 1 THEN 32 WHEN 2 THEN 48 WHEN 3 THEN 56
+                   WHEN 4 THEN 64 WHEN 5 THEN 80 WHEN 6 THEN 96
+                   WHEN 7 THEN 112 ELSE 128 END
+               WHEN fr.vsel = 0 AND fr.layer = 3 THEN
+                 CASE fr.br_idx WHEN 1 THEN 32 WHEN 2 THEN 40 WHEN 3 THEN 48
+                   WHEN 4 THEN 56 WHEN 5 THEN 64 WHEN 6 THEN 80
+                   WHEN 7 THEN 96 ELSE 112 END
+               ELSE 8 * fr.br_idx
+             END AS kbps
+      FROM fr),
+    fl AS (
+      SELECT kb.*,
+             CASE WHEN kb.layer = 1
+                    THEN ((12000 * kb.kbps) // kb.sr + kb.pad) * 4
+                  WHEN kb.layer = 2 OR kb.vsel = 0
+                    THEN (144000 * kb.kbps) // kb.sr + kb.pad
+                  ELSE (72000 * kb.kbps) // kb.sr + kb.pad
+             END AS flen
+      FROM kb)
+    SELECT i AS media_id,
+           CAST(max(nframes) AS INT) AS frames,
+           CAST(max(sr) AS INT) AS sample_rate,
+           CAST(CASE WHEN max(i) % 2 = 1 THEN 1 ELSE 2 END AS INT) AS channels,
+           CAST(max(nframes) * max(spf) AS BIGINT) AS total_samples,
+           CAST((max(nframes) * max(spf) * 1000) // max(sr) AS BIGINT) AS dur_ms,
+           bool_or(vbr) AS vbr,
+           CAST(sum(flen) AS BIGINT) AS payload_bytes
+    FROM fl GROUP BY i
+    """,
+    "MPEG AUDIO (MP3) FRAME WALK, hash-verified — the duration/bitrate "
+    "metadata pass a crawl runs over every audio file BEFORE deciding "
+    "what to transcode, and it needs NO audio decode: version cycles "
+    "MPEG1/2/2.5, layers I/II/III by residue class (exercising Layer "
+    "I's 4-byte-slot length rule and MPEG2 Layer III's 576-sample "
+    "granule), per-frame bitrate cycling on VBR rows, per-frame padding "
+    "bits, leading ID3v2 tags and trailing ID3v1 blocks skipped "
+    "exactly. The oracle restates every per-frame integer length "
+    "formula and bitrate table in SQL, so a one-byte slip in the frame "
+    "walk desyncs and fails loudly. The frame payloads (actual MP3 "
+    "audio) remain the honest decode boundary "
+    "(llmdata/multimodal.py parse_mpeg_frames/make_mpeg_audio/"
+    "mpeg_audio_meta)",
+)
+def multimodal_mp3_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 96).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, MM.make_mpeg_audio), media_type="audio/mpeg"
+    )
+    return MM.mpeg_audio_meta(media)
+
+
+# ---------------------------------------------------------------------------
+# Unicode NFC normalization: the first text-cleaning stage
+
+
+@_register(
+    "text_nfc_normalize",
+    """
+    WITH t AS (
+      SELECT doc_id,
+             CASE WHEN doc_id % 4 = 3 THEN text
+                  ELSE 'Cafe' || chr(769) || ' Noe' || chr(776) || 'l '
+                       || chr(8203) || text END AS raw
+      FROM documents WHERE doc_id < 512)
+    SELECT doc_id,
+           CAST(length(raw) AS BIGINT) AS chars_raw,
+           CAST(length(nfc_normalize(raw)) AS BIGINT) AS chars_nfc,
+           CAST(CASE WHEN nfc_normalize(raw) = raw THEN 0 ELSE 1 END AS INT)
+             AS changed,
+           md5(nfc_normalize(raw)) AS fp
+    FROM t
+    """,
+    "UNICODE NFC NORMALIZATION (the first stage of every serious "
+    "text-cleaning pipeline — crawled HTML mixes precomposed and "
+    "combining sequences, splitting dedup hashes and tokenizer merges "
+    "for visually identical strings): combining acute/diaeresis "
+    "sequences are planted on 3/4 of the corpus (plus a ZERO WIDTH "
+    "SPACE that NFC must PRESERVE — normalization is not cleaning), the "
+    "remaining quarter is already-NFC and must report changed=0; Spark "
+    "runs stdlib unicodedata in one map-only Arrow pass (the documented "
+    "exception to the pure-Column rule — Spark SQL has no normalization "
+    "builtin), DuckDB replays with nfc_normalize(), both UAX #15 "
+    "(llmdata/textstats.py nfc_normalize_features)",
+)
+def text_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import textstats as TS
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 512)
+    # explicit escapes: DECOMPOSED combining marks (U+0301 acute, U+0308
+    # diaeresis) + a zero-width space — identical to the oracle's
+    # chr(769)/chr(776)/chr(8203) construction; a composed-form source
+    # literal here would silently test nothing
+    prefix = "Cafe\u0301 Noe\u0308l \u200b"
+    raw = docs.select(
+        "doc_id",
+        F.when(F.col("doc_id") % 4 == 3, F.col("text"))
+        .otherwise(F.concat(F.lit(prefix), F.col("text")))
+        .alias("text"),
+    )
+    return TS.nfc_normalize_features(raw)
+
+
+@_register(
+    "llm_tar_mixed_ingest",
+    """
+    SELECT doc_id, CAST(length(text) AS BIGINT) AS chars, md5(text) AS fp
+    FROM documents WHERE doc_id < 256
+    """,
+    "MIXED-CODEC tarball ingestion, hash-verified: the same ustar "
+    "archives wrapped in gzip, bzip2 AND xz cycling by archive_id — the "
+    "heterogeneous-release corpus shape (one dataset, many eras of "
+    "tooling) — extracted through ONE reader that auto-detects the "
+    "codec by magic bytes (1F8B / BZh / FD'7zXZ'); unknown magic "
+    "refuses. Same one-shuffle pack / map-only extract plan as the "
+    "gzip-only path (llmdata/archives.py compress_stream/"
+    "decompress_auto)",
+)
+def llm_tar_mixed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import archives as AR
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 256)
+    packed = AR.pack_archives(docs, fmt="tar.mixed", group_size=8)
+    return AR.archive_members(packed, fmt="tar.mixed")
+
+
+# ---------------------------------------------------------------------------
+# JSONL corpus interchange: serialize -> parse roundtrip, all JVM-side
+
+
+@_register(
+    "llm_jsonl_roundtrip",
+    """
+    WITH t AS (
+      SELECT doc_id, source,
+             '"' || chr(9) || chr(92) || ' e' || chr(769) || ' ' || text AS text
+      FROM documents WHERE doc_id < 512)
+    SELECT doc_id, source,
+           CAST(length(text) AS BIGINT) AS chars, md5(text) AS fp
+    FROM t
+    """,
+    "JSONL INTERCHANGE roundtrip, hash-verified: documents serialize to "
+    "newline-delimited JSON records (to_json over a struct — the "
+    "dominant LLM corpus exchange format) and parse back with an "
+    "EXPLICIT schema (from_json; schema-first because inference is a "
+    "full extra scan at 100 TB), entirely JVM-side builtin expressions "
+    "— zero Python, whole-stage codegen. The text is prefixed with the "
+    "characters JSON escaping actually mangles when buggy (quote, tab, "
+    "backslash, a combining mark) so an escaping divergence fails the "
+    "md5; the oracle computes on the pre-serialization column, pinning "
+    "serialize->parse losslessness",
+)
+def llm_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 512)
+    # quote, tab, backslash, combining acute: the JSON-escaping stress set
+    prefix = '"\t\\ é '
+    staged = docs.select(
+        "doc_id", "source", F.concat(F.lit(prefix), F.col("text")).alias("text")
+    )
+    schema = "doc_id long, source string, text string"
+    lines = staged.select(
+        F.to_json(F.struct("doc_id", "source", "text")).alias("line")
+    )
+    parsed = lines.select(F.from_json("line", schema).alias("r")).select(
+        "r.doc_id", "r.source", "r.text"
+    )
+    return parsed.select(
+        "doc_id",
+        "source",
+        F.length("text").cast("long").alias("chars"),
+        F.md5(F.encode("text", "utf-8")).alias("fp"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# PDF text extraction: the document-corpus shape
+
+
+@_register(
+    "multimodal_pdf_text",
+    """
+    WITH m AS (
+      SELECT doc_id, text, 1 + doc_id % 3 AS npages
+      FROM documents WHERE doc_id < 64),
+    pg AS (
+      SELECT m.doc_id, m.npages, k.k,
+             'Doc ' || CAST(m.doc_id AS VARCHAR) || ' page '
+               || CAST(k.k AS VARCHAR) || ': (quote) ' || chr(92) || ' test'
+             || chr(10) || substr(m.text, 1 + k.k * 7, 35)
+             || chr(10) || chr(9834) || ' unicode ' || CAST(m.doc_id AS VARCHAR)
+               AS pagetext
+      FROM m, generate_series(0, 2) AS k(k) WHERE k.k < m.npages),
+    joined AS (
+      SELECT doc_id, max(npages) AS npages,
+             string_agg(pagetext, chr(12) ORDER BY k) AS full_text
+      FROM pg GROUP BY doc_id)
+    SELECT doc_id AS media_id, CAST(npages AS INT) AS pages,
+           CAST(length(full_text) AS BIGINT) AS chars,
+           md5(full_text) AS fp
+    FROM joined
+    """,
+    "PDF TEXT EXTRACTION, hash-verified (the document half of a training "
+    "corpus — papers, reports, text-layer scans): real PDF 1.4 documents "
+    "are BUILT distributed (catalog/pages tree/FlateDecode content "
+    "streams/classic xref with correct byte offsets) and then EXTRACTED "
+    "distributed by a real parser — startxref/trailer discovery, xref "
+    "table, object fetch, pages-tree walk, Flate inflation, and a "
+    "content-stream tokenizer covering Tj, kerned TJ arrays (kern "
+    "numbers must not leak into text), literal strings with the full "
+    "escape grammar incl. balanced nested parens, and UTF-16BE hex "
+    "strings; every third line rides each transport. The oracle "
+    "reconstructs the page texts from the same formulas over the "
+    "ORIGINAL text column, so any parser slip changes the md5. "
+    "Encrypted PDFs / hybrid-reference files / non-Flate filters refuse "
+    "loudly (llmdata/pdftext.py build_pdf/extract_pdf_text/"
+    "pdf_text_features)",
+)
+def multimodal_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+
+    from query_engine_spark.llmdata import pdftext as P
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = []
+            for i, t in zip(pdf["doc_id"], pdf["text"]):
+                i, t = int(i), str(t)
+                pages = [
+                    [
+                        f"Doc {i} page {k}: (quote) \\ test",
+                        t[k * 7 : k * 7 + 35],
+                        f"♪ unicode {i}",
+                    ]
+                    for k in range(1 + i % 3)
+                ]
+                payloads.append(P.build_pdf(pages, compress=i % 2 == 0))
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+
+    media = docs.select("doc_id", "text").mapInPandas(
+        pack, "media_id long, payload binary"
+    )
+    return P.pdf_text_features(media)
+
+
+# ---------------------------------------------------------------------------
+# PDF 1.5+: cross-reference streams + object streams — the format most
+# real-world PDFs use today
+
+
+@_register(
+    "multimodal_pdf_xrefstream",
+    """
+    WITH m AS (
+      SELECT doc_id, text, 1 + doc_id % 4 AS npages
+      FROM documents WHERE doc_id < 64),
+    pg AS (
+      SELECT m.doc_id, m.npages, k.k,
+             'PDF15 doc ' || CAST(m.doc_id AS VARCHAR) || ' pg '
+               || CAST(k.k AS VARCHAR)
+             || chr(10) || substr(m.text, 1 + k.k * 11, 29)
+             || chr(10) || 'fin (' || CAST(k.k AS VARCHAR) || ') '
+               || chr(9834) AS pagetext
+      FROM m, generate_series(0, 3) AS k(k) WHERE k.k < m.npages),
+    joined AS (
+      SELECT doc_id, max(npages) AS npages,
+             string_agg(pagetext, chr(12) ORDER BY k) AS full_text
+      FROM pg GROUP BY doc_id)
+    SELECT doc_id AS media_id, CAST(npages AS INT) AS pages,
+           CAST(length(full_text) AS BIGINT) AS chars,
+           md5(full_text) AS fp
+    FROM joined
+    """,
+    "PDF 1.5 XREF/OBJECT STREAMS, hash-verified — the container shape "
+    "MOST real-world PDFs use today (classic tables are the legacy "
+    "path): documents are built distributed as real PDF 1.5 files — "
+    "catalog/page dicts packed in reverse order inside a compressed "
+    "OBJECT STREAM (only header-pair-driven readers extract them), a "
+    "CROSS-REFERENCE STREAM with /W field widths, a split /Index, and "
+    "the PNG Up row predictor on even doc_ids (odd ids unpredicted, so "
+    "both decode paths are load-bearing) — then extracted by the same "
+    "parser as multimodal_pdf_text through the new xref-stream / ObjStm "
+    "/ predictor machinery; the oracle reconstructs the page text "
+    "formulas over the ORIGINAL text column. The 1.5 container is "
+    "transport: a correct reader extracts identical text "
+    "(llmdata/pdftext.py build_pdf_15/_parse_xref_stream/_objstm)",
+)
+def multimodal_pdf_xrefstream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+
+    from query_engine_spark.llmdata import pdftext as P
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = []
+            for i, t in zip(pdf["doc_id"], pdf["text"]):
+                i, t = int(i), str(t)
+                pages = [
+                    [
+                        f"PDF15 doc {i} pg {k}",
+                        t[k * 11 : k * 11 + 29],
+                        f"fin ({k}) ♪",
+                    ]
+                    for k in range(1 + i % 4)
+                ]
+                payloads.append(P.build_pdf_15(pages, predictor=i % 2 == 0))
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+
+    media = docs.select("doc_id", "text").mapInPandas(
+        pack, "media_id long, payload binary"
+    )
+    return P.pdf_text_features(media)
+
+
+# ---------------------------------------------------------------------------
+# ICO favicon containers
+
+
+@_register(
+    "multimodal_ico",
+    """
+    WITH m AS (
+      SELECT doc_id AS i, 1 + doc_id % 3 AS n FROM documents WHERE doc_id < 48),
+    mem AS (
+      SELECT m.i, j.j, m.i + j.j AS pat,
+             CASE WHEN j.j = 2 THEN 256 ELSE 4 + (m.i + j.j) % 5 END AS w,
+             CASE WHEN j.j = 2 THEN 2 ELSE 3 + (m.i + j.j) % 4 END AS h,
+             CASE WHEN j.j = 2 THEN 1
+                  WHEN (m.i + j.j) % 2 = 0 THEN 0 ELSE 1 END AS is_dib
+      FROM m, generate_series(0, 2) AS j(j) WHERE j.j < m.n),
+    rgb AS (
+      SELECT mem.i, mem.j,
+             CAST(sum((mem.pat*31 + y.y*7 + x.x*3 + c.c) % 256) AS BIGINT) AS rgb_sum
+      FROM mem, generate_series(0, 255) AS x(x), generate_series(0, 5) AS y(y),
+           generate_series(0, 2) AS c(c)
+      WHERE x.x < mem.w AND y.y < mem.h
+      GROUP BY 1, 2),
+    al AS (
+      SELECT mem.i, mem.j,
+             CAST(sum(CASE WHEN mem.is_dib = 1
+                           THEN (mem.pat*13 + x.x + y.y) % 256 ELSE 0 END) AS BIGINT)
+               AS a_sum
+      FROM mem, generate_series(0, 255) AS x(x), generate_series(0, 5) AS y(y)
+      WHERE x.x < mem.w AND y.y < mem.h
+      GROUP BY 1, 2)
+    SELECT mem.i AS media_id,
+           CAST(count(*) AS INT) AS n_images,
+           CAST(sum(CASE WHEN mem.is_dib = 0 THEN 1 ELSE 0 END) AS INT) AS png_members,
+           CAST(sum(mem.is_dib) AS INT) AS dib_members,
+           CAST(max(mem.w) AS INT) AS max_w,
+           CAST(max(mem.h) AS INT) AS max_h,
+           CAST(sum(rgb.rgb_sum) AS BIGINT) AS rgb_sum,
+           CAST(sum(al.a_sum) AS BIGINT) AS dib_alpha_sum
+    FROM mem
+    JOIN rgb ON rgb.i = mem.i AND rgb.j = mem.j
+    JOIN al ON al.i = mem.i AND al.j = mem.j
+    GROUP BY mem.i
+    """,
+    "ICO FAVICON CONTAINERS (the highest-frequency icon shape in any web "
+    "crawl): multi-member files mixing full PNG streams with HEADERLESS "
+    "32-bpp DIB members whose BITMAPINFOHEADER declares DOUBLE height "
+    "(XOR pixels + legacy AND mask) — the two quirks that break naive "
+    "parsers — plus the width-byte-0-means-256 entry rule, exercised by "
+    "every third member being 256 px wide; entry dims are cross-checked "
+    "against member headers and disagreements raise. PNG members ride "
+    "the verified PNG decoder; the oracle recomputes every member's "
+    "pixel sums from the shared formula "
+    "(llmdata/multimodal.py make_ico/decode_ico/ico_features)",
+)
+def multimodal_ico(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 48).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, MM.make_ico), media_type="image/x-icon"
+    )
+    return MM.ico_features(media)
+
+
+# ---------------------------------------------------------------------------
+# Crawl-frontier XML: sitemap expansion
+
+
+@_register(
+    "llm_sitemap_frontier",
+    """
+    WITH m AS (
+      SELECT doc_id AS i, 3 + doc_id % 4 AS n FROM documents WHERE doc_id < 96),
+    e AS (
+      SELECT m.i, k.k, m.i % 4 = 3 AS is_index
+      FROM m, generate_series(0, 6) AS k(k) WHERE k.k < m.n)
+    SELECT i AS site_id,
+           CASE WHEN is_index THEN 'sitemap' ELSE 'url' END AS kind,
+           CASE WHEN is_index
+                THEN 'https://s' || CAST(i AS VARCHAR) || '.example/maps/'
+                     || CAST(k AS VARCHAR) || '.xml'
+                ELSE 'https://s' || CAST(i AS VARCHAR) || '.example/p/'
+                     || CAST(k AS VARCHAR) END AS loc,
+           CASE WHEN k % 2 = 0
+                THEN '2024-0' || CAST(1 + k % 9 AS VARCHAR)
+                     || (CASE WHEN is_index THEN '-15' ELSE '-01' END)
+           END AS lastmod,
+           CASE WHEN NOT is_index AND k % 3 != 2
+                THEN (['daily', 'weekly', 'monthly'])[1 + k % 3]
+           END AS changefreq,
+           CASE WHEN NOT is_index AND k % 5 = 0
+                THEN '0.' || CAST(1 + k % 9 AS VARCHAR)
+           END AS priority
+    FROM e
+    """,
+    "CRAWL-FRONTIER SITEMAP EXPANSION (the seeding stage of a crawl: a "
+    "site's published URL inventory becomes fetch tasks): real "
+    "namespace-qualified sitemap.org XML parsed distributed with stdlib "
+    "ElementTree — urlsets AND sitemapindex documents (every fourth "
+    "site publishes an index, the recursive-frontier shape), optional "
+    "lastmod/changefreq/priority fields absent on modular schedules "
+    "exactly as real sitemaps omit them; malformed XML and unknown "
+    "roots refuse (llmdata/warc.py "
+    "make_sitemap/parse_sitemap/sitemap_entries)",
+)
+def llm_sitemap_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+
+    from query_engine_spark.llmdata import warc as W
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 96)
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "site_id": pdf["doc_id"],
+                    "payload": [
+                        W.make_sitemap(int(i), 3 + int(i) % 4) for i in pdf["doc_id"]
+                    ],
+                }
+            )
+
+    media = docs.select("doc_id").mapInPandas(pack, "site_id long, payload binary")
+    return W.sitemap_entries(media)
+
+
+# ---------------------------------------------------------------------------
+# EPUB ingestion: the book-corpus shape
+
+
+@_register(
+    "llm_epub_ingest",
+    """
+    WITH m AS (
+      SELECT doc_id AS i, text, 2 + doc_id % 3 AS n
+      FROM documents WHERE doc_id < 64),
+    ch AS (
+      SELECT m.i, m.n, k.k,
+             'Chapter ' || CAST(k.k AS VARCHAR) || chr(10)
+             || 'Book ' || CAST(m.i AS VARCHAR) || ' chapter '
+             || CAST(k.k AS VARCHAR) || ' begins.' || chr(10)
+             || substr(m.text, 1 + k.k * 9, 40) AS chtext
+      FROM m, generate_series(0, 4) AS k(k) WHERE k.k < m.n),
+    joined AS (
+      SELECT i, max(n) AS n, string_agg(chtext, chr(12) ORDER BY k) AS full_text
+      FROM ch GROUP BY i)
+    SELECT i AS book_id, CAST(n AS INT) AS chapters,
+           CAST(length(full_text) AS BIGINT) AS chars,
+           md5(full_text) AS fp
+    FROM joined
+    """,
+    "EPUB INGESTION, hash-verified (books are core training data): real "
+    "EPUBs — STORED mimetype member, container.xml -> OPF rootfile, "
+    "manifest id->href, SPINE reading order — built distributed with "
+    "chapters stored in the zip REVERSED and the manifest listed "
+    "reversed too, so only a spine-driven reader reconstructs the book "
+    "(the md5 is over spine-ordered chapter texts; zip-order reading "
+    "fails the hash). Chapter XHTML text extraction is exact "
+    "ElementTree over body h1/p elements; the whole chain rides the "
+    "CRC-verified ZIP reader (llmdata/ebooks.py "
+    "make_epub/epub_chapters/epub_features)",
+)
+def llm_epub_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+
+    from query_engine_spark.llmdata import ebooks as E
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = []
+            for i, t in zip(pdf["doc_id"], pdf["text"]):
+                i, t = int(i), str(t)
+                chapters = [
+                    (
+                        f"Chapter {k}",
+                        [
+                            f"Book {i} chapter {k} begins.",
+                            t[k * 9 : k * 9 + 40],
+                        ],
+                    )
+                    for k in range(2 + i % 3)
+                ]
+                payloads.append(E.make_epub(i, chapters))
+            yield pd.DataFrame({"book_id": pdf["doc_id"], "payload": payloads})
+
+    media = docs.select("doc_id", "text").mapInPandas(
+        pack, "book_id long, payload binary"
+    )
+    return E.epub_features(media)
+
+
+# ---------------------------------------------------------------------------
+# robots.txt: the crawl admission gate
+
+
+@_register(
+    "llm_robots_rules",
+    """
+    WITH m AS (SELECT doc_id AS i FROM documents WHERE doc_id < 96),
+    probes AS (
+      SELECT i, p.p AS probe_kind FROM m, generate_series(0, 5) AS p(p)),
+    rows_ AS (
+      SELECT i, a.a AS agent_kind, probe_kind,
+             CASE probe_kind
+               WHEN 0 THEN '/data/x'
+               WHEN 1 THEN '/data/public/x'
+               WHEN 2 THEN '/data/public/secret' || CAST(i % 3 AS VARCHAR) || '/x'
+               WHEN 3 THEN '/data/public/secret' || CAST((i + 1) % 3 AS VARCHAR) || '/x'
+               WHEN 4 THEN '/tie/a'
+               ELSE '/private/x' END AS path
+      FROM probes, generate_series(0, 1) AS a(a))
+    SELECT i AS site_id,
+           CASE agent_kind WHEN 0 THEN 'trainbot' ELSE 'randombot' END AS agent,
+           path,
+           CAST(CASE
+             WHEN agent_kind = 0 THEN  -- trainbot group selected
+               CASE probe_kind
+                 WHEN 0 THEN 0   -- /data/ disallowed
+                 WHEN 1 THEN 1   -- /data/public/ allow outranks /data/
+                 WHEN 2 THEN 0   -- its own secret subtree: longest match
+                 WHEN 3 THEN 1   -- other site's secret prefix: no match
+                 WHEN 4 THEN 1   -- equal-length tie: Allow wins
+                 ELSE 1          -- /private/ only in the '*' group
+               END
+             ELSE               -- randombot falls back to '*'
+               CASE probe_kind WHEN 5 THEN 0 ELSE 1 END
+           END AS INT) AS allowed
+    FROM rows_
+    """,
+    "ROBOTS.TXT CRAWL GATE (RFC 9309 — the admission decision every "
+    "fetch passes first): grouped user-agent parsing with stacked agent "
+    "lines, comments, empty Disallow, crawl-delay and sitemap "
+    "directives tolerated per spec; the DECISION semantics are the "
+    "oracle-pinned part — longest-path-prefix wins over rule order, "
+    "Allow beats Disallow on equal-length ties, exact-agent groups "
+    "OVERRIDE '*' entirely (trainbot may fetch /private/ because its "
+    "group never mentions it), unknown agents fall back to '*' "
+    "(llmdata/warc.py parse_robots/robots_allowed/robots_decisions)",
+)
+def llm_robots_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+
+    from query_engine_spark.llmdata import warc as W
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 96)
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "site_id": pdf["doc_id"],
+                    "payload": [
+                        W.make_robots(int(i)).encode("utf-8") for i in pdf["doc_id"]
+                    ],
+                }
+            )
+
+    media = docs.select("doc_id").mapInPandas(pack, "site_id long, payload binary")
+    return W.robots_decisions(media)
+
+
+# ---------------------------------------------------------------------------
+# MBOX email ingestion: the mailing-list corpus shape
+
+
+@_register(
+    "llm_mbox_ingest",
+    """
+    WITH m AS (
+      SELECT doc_id AS i, text, 2 + doc_id % 3 AS n
+      FROM documents WHERE doc_id < 64),
+    msg AS (
+      SELECT m.i, k.k,
+             'Msg ' || CAST(k.k AS VARCHAR) || ' of box ' || CAST(m.i AS VARCHAR)
+             || CASE WHEN k.k % 2 = 1 THEN ' ' || chr(233) ELSE '' END AS subject,
+             'dom' || CAST((m.i + k.k) % 7 AS VARCHAR) || '.example' AS from_domain,
+             'Body ' || CAST(k.k AS VARCHAR) || ' box ' || CAST(m.i AS VARCHAR)
+             || ' ' || chr(233) || '.' || chr(10)
+             || 'From the start line.' || chr(10)
+             || substr(m.text, 1 + k.k * 11, 30) || chr(10) AS body
+      FROM m, generate_series(0, 4) AS k(k) WHERE k.k < m.n)
+    SELECT i AS box_id, CAST(k AS INT) AS msg_idx, subject, from_domain,
+           CAST(length(body) AS BIGINT) AS chars, md5(body) AS fp
+    FROM msg
+    """,
+    "MBOX EMAIL INGESTION (mailing-list archives are a classic text "
+    "corpus): mboxrd framing with the '>From' quote dance — every body "
+    "deliberately contains a line starting 'From ' so a splitter "
+    "without the unquoting truncates messages mid-body and fails the "
+    "hash — plus MIME text-part selection (multipart/alternative "
+    "messages on odd indices carry an HTML part that must NOT be "
+    "picked), quoted-printable AND base64 transfer decoding (non-ASCII "
+    "planted in every body), and RFC 2047 encoded-word subjects "
+    "(llmdata/mail.py build_mbox/split_mbox/extract_message/"
+    "mbox_messages)",
+)
+def llm_mbox_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+
+    from query_engine_spark.llmdata import mail as M
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = []
+            for i, t in zip(pdf["doc_id"], pdf["text"]):
+                i, t = int(i), str(t)
+                msgs = []
+                for k in range(2 + i % 3):
+                    subject = f"Msg {k} of box {i}" + (" é" if k % 2 == 1 else "")
+                    body = (
+                        f"Body {k} box {i} é.\n"
+                        "From the start line.\n"
+                        + t[k * 11 : k * 11 + 30] + "\n"
+                    )
+                    msgs.append(
+                        M.build_message(
+                            from_addr=f"user{(i + k) % 5}@dom{(i + k) % 7}.example",
+                            subject=subject,
+                            body=body,
+                            html="the html twin" if k % 2 == 1 else None,
+                            cte="base64" if k % 3 == 0 else "quoted-printable",
+                        )
+                    )
+                payloads.append(M.build_mbox(msgs))
+            yield pd.DataFrame({"box_id": pdf["doc_id"], "payload": payloads})
+
+    media = docs.select("doc_id", "text").mapInPandas(
+        pack, "box_id long, payload binary"
+    )
+    return M.mbox_messages(media)
+
+
+# ---------------------------------------------------------------------------
+# Training-export shard manifest
+
+
+@_register(
+    "llm_export_manifest",
+    """
+    WITH t AS (
+      SELECT doc_id, text,
+             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 16
+               AS shard
+      FROM documents)
+    SELECT CAST(shard AS INT) AS shard,
+           CAST(count(*) AS BIGINT) AS docs,
+           CAST(sum(length(text)) AS BIGINT) AS chars,
+           CAST(min(doc_id) AS BIGINT) AS min_doc,
+           CAST(max(doc_id) AS BIGINT) AS max_doc,
+           CAST(sum(('0x' || substr(md5(text), 1, 10))::BIGINT) AS BIGINT)
+             AS content_sig
+    FROM t GROUP BY shard
+    """,
+    "TRAINING-EXPORT SHARD MANIFEST: the integrity record written next "
+    "to every sharded corpus export so downstream training can verify "
+    "it read every shard completely. Shard assignment is the md5-bucket "
+    "idiom (deterministic across engines/retries — rand() and Spark's "
+    "hash() are neither); per shard the manifest carries doc count, "
+    "char volume, id range, and an ORDER-INDEPENDENT content signature "
+    "(sum of 40-bit md5-prefix integers — commutative, so shard-internal "
+    "ordering is free to vary at write time; 40 bits keeps the int64 "
+    "sum overflow-free past 10M docs/shard). Pure codegen: one shuffle "
+    "on the 16 shard keys",
+)
+def llm_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata.textstats import hash_bucket
+
+    docs = load_table(spark, sf_dir, "documents")
+    t = docs.select(
+        "doc_id", "text", hash_bucket(F.col("doc_id"), 16).alias("shard")
+    )
+    return t.groupBy(F.col("shard").cast("int").alias("shard")).agg(
+        F.count(F.lit(1)).alias("docs"),
+        F.sum(F.length("text")).cast("long").alias("chars"),
+        F.min("doc_id").alias("min_doc"),
+        F.max("doc_id").alias("max_doc"),
+        F.sum(
+            F.conv(F.substring(F.md5(F.encode("text", "utf-8")), 1, 10), 16, 10)
+            .cast("long")
+        ).cast("long").alias("content_sig"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# CSV interchange roundtrip
+
+
+@_register(
+    "llm_csv_roundtrip",
+    """
+    WITH t AS (
+      SELECT doc_id, source,
+             'quote "q" comma, ' || chr(10) || 'newline ' || text AS text
+      FROM documents WHERE doc_id < 512)
+    SELECT doc_id, source,
+           CAST(length(text) AS BIGINT) AS chars, md5(text) AS fp
+    FROM t
+    """,
+    "CSV INTERCHANGE roundtrip, hash-verified: rows serialize to RFC "
+    "4180 CSV records (to_csv over a struct) and parse back with an "
+    "explicit schema (from_csv), entirely JVM builtin expressions. The "
+    "text is prefixed with the characters CSV quoting actually mangles "
+    "when buggy — double quotes, the delimiter, an EMBEDDED NEWLINE — "
+    "so an escaping/quoting divergence fails the md5 against the "
+    "oracle computed on the pre-serialization column",
+)
+def llm_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 512)
+    prefix = 'quote "q" comma, \n' + "newline "
+    staged = docs.select(
+        "doc_id", "source", F.concat(F.lit(prefix), F.col("text")).alias("text")
+    )
+    schema = "doc_id long, source string, text string"
+    lines = staged.select(
+        F.to_csv(F.struct("doc_id", "source", "text")).alias("line")
+    )
+    parsed = lines.select(
+        F.from_csv(
+            "line", schema, {"multiLine": "true"}
+        ).alias("r")
+    ).select("r.doc_id", "r.source", "r.text")
+    return parsed.select(
+        "doc_id",
+        "source",
+        F.length("text").cast("long").alias("chars"),
+        F.md5(F.encode("text", "utf-8")).alias("fp"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Common-Crawl-style CDX index selection
+
+
+@_register(
+    "llm_cdx_select",
+    """
+    WITH d AS (
+      SELECT doc_id AS i,
+             'dom' || CAST(doc_id % 7 AS VARCHAR) AS dom,
+             20240000000000 + doc_id * 37 AS ts,
+             'sha1:' || md5(CAST(doc_id // 2 AS VARCHAR)) AS digest,
+             CASE WHEN doc_id % 5 = 4 THEN '404' ELSE '200' END AS status,
+             CASE WHEN doc_id % 7 = 6 THEN 'image/png' ELSE 'text/html' END AS mime
+      FROM documents WHERE doc_id < 512),
+    kept AS (SELECT * FROM d WHERE status = '200' AND mime = 'text/html')
+    SELECT digest,
+           CAST(min(ts) AS BIGINT) AS first_ts,
+           arg_min('example,' || dom || ')/p/' || CAST(i AS VARCHAR), ts) AS first_surt,
+           arg_min('https://' || dom || '.example/p/' || CAST(i AS VARCHAR), ts)
+             AS first_url,
+           CAST(count(*) AS BIGINT) AS n_copies
+    FROM kept GROUP BY digest
+    """,
+    "CDX INDEX SELECTION (the lookup sidecar every WARC corpus ships — "
+    "selection happens on the index BEFORE any WARC byte range is "
+    "fetched): CDX-J lines (SURT key, 14-digit timestamp, JSON payload) "
+    "are built and then parsed back entirely with JVM expressions "
+    "(regexp split + from_json with an explicit schema), filtered to "
+    "status-200 text/html captures, and deduplicated BY CONTENT DIGEST "
+    "keeping the EARLIEST capture (min_by/arg_min cross-engine) — "
+    "consecutive docs share digests so the keep-earliest rule does real "
+    "work. Pure codegen + one shuffle on digest",
+)
+def llm_cdx_select(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 512)
+    d = docs.select(
+        F.col("doc_id").alias("i"),
+        F.concat(F.lit("dom"), (F.col("doc_id") % 7).cast("string")).alias("dom"),
+        (F.lit(20240000000000) + F.col("doc_id") * 37).alias("ts"),
+        F.concat(
+            F.lit("sha1:"), F.md5((F.col("doc_id") / 2).cast("long").cast("string"))
+        ).alias("digest"),
+        F.when(F.col("doc_id") % 5 == 4, F.lit("404")).otherwise("200").alias("status"),
+        F.when(F.col("doc_id") % 7 == 6, F.lit("image/png"))
+        .otherwise("text/html")
+        .alias("mime"),
+    )
+    # serialize to real CDX-J lines...
+    lines = d.select(
+        F.concat(
+            F.lit("example,"), F.col("dom"), F.lit(")/p/"), F.col("i").cast("string"),
+            F.lit(" "), F.col("ts").cast("string"), F.lit(" "),
+            F.to_json(
+                F.struct(
+                    F.concat(
+                        F.lit("https://"), F.col("dom"), F.lit(".example/p/"),
+                        F.col("i").cast("string"),
+                    ).alias("url"),
+                    "mime", "status", "digest",
+                )
+            ),
+        ).alias("line")
+    )
+    # ...and parse them back: SURT key, timestamp, JSON payload
+    parsed = lines.select(
+        F.regexp_extract("line", r"^(\S+) (\d{14}) (.*)$", 1).alias("surt"),
+        F.regexp_extract("line", r"^(\S+) (\d{14}) (.*)$", 2).cast("long").alias("ts"),
+        F.from_json(
+            F.regexp_extract("line", r"^(\S+) (\d{14}) (.*)$", 3),
+            "url string, mime string, status string, digest string",
+        ).alias("r"),
+    ).select("surt", "ts", "r.url", "r.mime", "r.status", "r.digest")
+    kept = parsed.filter((F.col("status") == "200") & (F.col("mime") == "text/html"))
+    return kept.groupBy("digest").agg(
+        F.min("ts").alias("first_ts"),
+        F.min_by("surt", "ts").alias("first_surt"),
+        F.min_by("url", "ts").alias("first_url"),
+        F.count(F.lit(1)).alias("n_copies"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# HTML page metadata: the page-curation grouping fields
+
+
+@_register(
+    "llm_html_metadata",
+    """
+    SELECT doc_id,
+           'Doc ' || CAST(doc_id AS VARCHAR) || ' &amp; title' AS title,
+           CASE WHEN doc_id % 5 = 4 THEN NULL
+                ELSE 'https://dom' || CAST(doc_id % 7 AS VARCHAR)
+                     || '.example/p/' || CAST(doc_id AS VARCHAR) END AS canonical,
+           CASE WHEN doc_id % 6 = 5 THEN NULL
+                ELSE 'Summary ' || CAST(doc_id AS VARCHAR) || ' of page'
+           END AS description,
+           'OG Doc ' || CAST(doc_id AS VARCHAR) AS og_title,
+           (['en', 'de', 'fr'])[1 + doc_id % 3] AS lang
+    FROM documents WHERE doc_id < 512
+    """,
+    "HTML PAGE METADATA extraction (title / canonical link / meta "
+    "description / og:title / lang — the fields a page-curation pass "
+    "groups and filters on) as pure column expressions at scan speed, "
+    "same contract as html_to_text: fixtures alternate ATTRIBUTE ORDER "
+    "on the link and meta tags (rel-then-href vs href-then-rel etc. — "
+    "real HTML varies freely) and omit canonical/description on modular "
+    "schedules; the oracle computes expected values from the "
+    "construction formulas, independent of the regexes, so an "
+    "extraction bug cannot cancel (llmdata/warc.py html_metadata)",
+)
+def llm_html_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata.warc import html_metadata
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 512)
+    i = F.col("doc_id")
+    url = F.concat(
+        F.lit("https://dom"), (i % 7).cast("string"),
+        F.lit(".example/p/"), i.cast("string"),
+    )
+    canonical_tag = F.when(
+        i % 5 == 4, F.lit("")
+    ).when(
+        i % 2 == 0,
+        F.concat(F.lit('<link href="'), url, F.lit('" rel="canonical"/>')),
+    ).otherwise(
+        F.concat(F.lit('<link rel="canonical" href="'), url, F.lit('"/>')),
+    )
+    summary = F.concat(F.lit("Summary "), i.cast("string"), F.lit(" of page"))
+    desc_tag = F.when(
+        i % 6 == 5, F.lit("")
+    ).when(
+        i % 3 == 0,
+        F.concat(F.lit('<meta name="description" content="'), summary, F.lit('"/>')),
+    ).otherwise(
+        F.concat(F.lit('<meta content="'), summary, F.lit('" name="description"/>')),
+    )
+    lang = F.element_at(F.array(F.lit("en"), F.lit("de"), F.lit("fr")), (i % 3 + 1).cast("int"))
+    page = F.concat(
+        F.lit('<html lang="'), lang, F.lit('"><head><title>Doc '),
+        i.cast("string"), F.lit(" &amp; title</title>"),
+        canonical_tag, desc_tag,
+        F.lit('<meta property="og:title" content="OG Doc '),
+        i.cast("string"), F.lit('"/></head><body><p>'),
+        F.col("text"), F.lit("</p></body></html>"),
+    )
+    meta = html_metadata(page)
+    return docs.select(
+        "doc_id",
+        meta["title"].alias("title"),
+        F.nullif(meta["canonical"], F.lit("")).alias("canonical"),
+        F.nullif(meta["description"], F.lit("")).alias("description"),
+        meta["og_title"].alias("og_title"),
+        meta["lang"].alias("lang"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# HTML outlink graph: the WAT-style link-extraction product
+
+
+@_register(
+    "llm_html_outlinks",
+    """
+    WITH m AS (
+      SELECT doc_id AS i,
+             'dom' || CAST(doc_id % 7 AS VARCHAR) || '.example' AS src
+      FROM documents WHERE doc_id < 512),
+    e AS (
+      SELECT src, 'dom' || CAST((i + 1) % 7 AS VARCHAR) || '.example' AS dst,
+             CASE WHEN i % 3 = 0 THEN 2 ELSE 1 END AS n
+      FROM m
+      UNION ALL
+      SELECT src, src AS dst, 2 AS n FROM m
+      UNION ALL
+      SELECT src, 'dom' || CAST((i + 2) % 7 AS VARCHAR) || '.example' AS dst,
+             1 AS n
+      FROM m)
+    SELECT src AS src_host, dst AS dst_host, CAST(sum(n) AS BIGINT) AS links
+    FROM e GROUP BY src, dst
+    """,
+    "HTML OUTLINK GRAPH (the WAT-style link product Common Crawl ships "
+    "separately because it drives crawl scheduling, host reputation, "
+    "and PageRank priors): hrefs extracted at scan speed with "
+    "regexp_extract_all, resolved to HOST-level edges by pure column "
+    "expressions — absolute links keep their host (an UPPERCASE "
+    "scheme/host dup on every third page pins the lowercasing), "
+    "protocol-relative take the page scheme, root- AND path-relative "
+    "stay on the page host (host-exact without RFC 3986 dot-segment "
+    "merging, which can never change a host), mailto:/javascript:/"
+    "fragment-only links drop — then ONE groupBy shuffle counts edge "
+    "multiplicity. The oracle rebuilds the edge list from the "
+    "construction formulas, independent of the regexes. Quote styles, "
+    "attribute order, and whitespace around = all vary in the fixtures "
+    "(llmdata/warc.py outlink_edges)",
+)
+def llm_html_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata.warc import outlink_edges
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 512)
+    i = F.col("doc_id")
+    s = lambda x: x.cast("string")  # noqa: E731
+    url = F.concat(
+        F.lit("https://dom"), s(i % 7), F.lit(".example/p/"), s(i)
+    )
+    dup_abs = F.when(
+        i % 3 == 0,
+        F.concat(
+            F.lit('<a href="HTTPS://DOM'), s((i + 1) % 7),
+            F.lit('.EXAMPLE/x2">dup</a>'),
+        ),
+    ).otherwise(F.lit(""))
+    page = F.concat(
+        F.lit("<html><body><p>intro</p>"),
+        # absolute, extra attributes before href
+        F.lit('<a class="nav" href="https://dom'), s((i + 1) % 7),
+        F.lit('.example/x/'), s(i), F.lit('">a</a>'),
+        dup_abs,
+        # root-relative, single quotes, whitespace around =
+        F.lit("<a href = '/local/"), s(i), F.lit("'>b</a>"),
+        # protocol-relative
+        F.lit('<a href="//dom'), s((i + 2) % 7), F.lit('.example/y">c</a>'),
+        # path-relative: counts toward the page host
+        F.lit('<a href="rel/path">r</a>'),
+        # dropped: non-fetch schemes and fragment-only
+        F.lit('<a href="mailto:x@y.example">m</a>'),
+        F.lit('<a href="javascript:void(0)">j</a>'),
+        F.lit('<a href="#frag">f</a>'),
+        F.lit("</body></html>"),
+    )
+    pages = docs.select(url.alias("url"), page.alias("html"))
+    return outlink_edges(pages)
+
+
+# ---------------------------------------------------------------------------
+# WebP lossless (VP8L): the dominant modern-web image format
+
+
+@_register(
+    "multimodal_webp",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 9 + doc_id % 4 AS w, 8 + doc_id % 3 AS h
+      FROM documents WHERE doc_id < 64),
+    px AS (
+      SELECT m.media_id, m.w, m.h, c.c,
+             (m.media_id*31 + y.y*7 + x.x*3 + c.c*11) % 256 AS v
+      FROM m, generate_series(0, 12) AS y(y), generate_series(0, 12) AS x(x),
+           generate_series(0, 2) AS c(c)
+      WHERE y.y < m.h AND x.x < m.w)
+    SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+           CAST(sum(CASE WHEN c = 0 THEN v END) AS BIGINT) AS r_sum,
+           CAST(sum(CASE WHEN c = 1 THEN v END) AS BIGINT) AS g_sum,
+           CAST(sum(CASE WHEN c = 2 THEN v END) AS BIGINT) AS b_sum,
+           CAST(sum(v) AS BIGINT) AS px_sum,
+           CAST(media_id*31 % 256 AS INT) AS top_left_r
+    FROM px GROUP BY media_id, w, h
+    """,
+    "WebP LOSSLESS (VP8L) decode, hash-verified — the dominant "
+    "modern-web image format, previously the largest user-frequent "
+    "codec gap: a REAL decoder over the public RFC 9649 bitstream "
+    "(LSB-first reader, canonical prefix codes incl. the full "
+    "code-length-coded form with 17/18 runs, LZ77 with the 2D "
+    "plane-code distance map, the 0x1e35a7bd color cache, meta prefix "
+    "codes, and the SUBTRACT_GREEN / PREDICTOR (14 modes) / cross-COLOR "
+    "transforms applied in reverse stream order). Fixtures cycle the "
+    "transform/entropy variant by media_id so every decode path carries "
+    "formula pixels; three hand-authored golden bitstreams anchor the "
+    "wire format outside the co-developed pair, and the distance map is "
+    "pinned to the spec's published hex table. Lossy VP8 and extended "
+    "VP8X refuse loudly (llmdata/webp.py decode_webp/make_webp/"
+    "webp_features)",
+)
+def multimodal_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+
+    from query_engine_spark.llmdata import webp as WB
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = [
+                WB.make_webp(int(i), 9 + int(i) % 4, 8 + int(i) % 3)
+                for i in pdf["doc_id"]
+            ]
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+
+    media = docs.select("doc_id").mapInPandas(pack, "media_id long, payload binary")
+    return WB.webp_features(media)
+
+
+@_register(
+    "multimodal_webp_palette",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 2 + doc_id % 30 AS k
+      FROM documents WHERE doc_id < 64),
+    px AS (
+      SELECT m.media_id, m.k, c.c,
+             CASE c.c
+               WHEN 0 THEN (((x.x*3 + y.y) % m.k)*37 + m.media_id) % 256
+               WHEN 1 THEN (((x.x*3 + y.y) % m.k)*11) % 256
+               ELSE (((x.x*3 + y.y) % m.k)*5 + 3) % 256
+             END AS v
+      FROM m, generate_series(0, 7) AS y(y), generate_series(0, 9) AS x(x),
+           generate_series(0, 2) AS c(c))
+    SELECT media_id, CAST(10 AS INT) AS width, CAST(8 AS INT) AS height,
+           CAST(sum(CASE WHEN c = 0 THEN v END) AS BIGINT) AS r_sum,
+           CAST(sum(CASE WHEN c = 1 THEN v END) AS BIGINT) AS g_sum,
+           CAST(sum(CASE WHEN c = 2 THEN v END) AS BIGINT) AS b_sum,
+           CAST(sum(v) AS BIGINT) AS px_sum,
+           CAST(media_id % 256 AS INT) AS top_left_r
+    FROM px GROUP BY media_id, k
+    """,
+    "WebP COLOR-INDEXING (palette) decode, hash-verified: the icon/logo "
+    "shape of the web's favorite lossless format — palette sizes cycle "
+    "2..31 so every sub-byte pixel-bundling width decodes (8, 4, and 2 "
+    "pixels per packed byte at <=2/<=4/<=16 colors, plain indices "
+    "above), with the delta-coded palette read through its own "
+    "sub-image entropy coder; indices out of palette range refuse. The "
+    "oracle recomputes every pixel from the index formula "
+    "(llmdata/webp.py make_webp_palette/decode_webp)",
+)
+def multimodal_webp_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+
+    from query_engine_spark.llmdata import webp as WB
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = [
+                WB.make_webp_palette(int(i), 10, 8, 2 + int(i) % 30)
+                for i in pdf["doc_id"]
+            ]
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+
+    media = docs.select("doc_id").mapInPandas(pack, "media_id long, payload binary")
+    return WB.webp_features(media)
+
+
+# ---------------------------------------------------------------------------
+# Bloom-filter crawl-frontier dedup
+
+
+@_register(
+    "crawl_frontier_bloom",
+    """
+    WITH u AS (
+      SELECT doc_id,
+             'https://site' || CAST(doc_id % 31 AS VARCHAR)
+               || '.example/p/' || CAST(doc_id AS VARCHAR) AS url
+      FROM documents),
+    pos AS (
+      SELECT ('0x' || substr(md5(u.url), 1 + 8*i.i, 8))::BIGINT % 16384 AS p
+      FROM u, generate_series(0, 2) AS i(i) WHERE u.doc_id < 256),
+    words AS (
+      SELECT p // 32 AS word,
+             bit_or(1::BIGINT << CAST(p % 32 AS INT)) AS mask
+      FROM pos GROUP BY 1),
+    cpos AS (
+      SELECT u.doc_id, u.url,
+             ('0x' || substr(md5(u.url), 1 + 8*i.i, 8))::BIGINT % 16384 AS p
+      FROM u, generate_series(0, 2) AS i(i)),
+    hits AS (
+      SELECT doc_id, url,
+             count(*) FILTER (
+               WHERE w.mask IS NOT NULL
+                 AND (w.mask & (1::BIGINT << CAST(cpos.p % 32 AS INT))) <> 0
+             ) AS nhit
+      FROM cpos LEFT JOIN words w ON cpos.p // 32 = w.word
+      GROUP BY doc_id, url)
+    SELECT doc_id, url FROM hits WHERE nhit < 3
+    """,
+    "BLOOM-FILTER CRAWL-FRONTIER DEDUP, hash-verified: 'have we already "
+    "fetched this URL' against an arbitrarily large history WITHOUT "
+    "joining the frontier to it — the history folds ONCE into a "
+    "(word, bit_or mask) bitmap bounded by m_bits/32 rows (the only "
+    "shuffle), and each of the k=3 deterministic md5-window bit "
+    "positions probes that broadcast table map-side, so the frontier "
+    "itself never shuffles. A candidate drops only when ALL k bits are "
+    "set; false negatives are impossible (nothing is fetched twice), "
+    "false positives are the documented Bloom trade and the oracle "
+    "replays the EXACT same hash family — the same 8-hex-digit md5 "
+    "windows — so the decision, FPs included, is bit-identical across "
+    "engines (llmdata/warc.py build_bloom/frontier_not_seen)",
+)
+def crawl_frontier_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata.warc import build_bloom, frontier_not_seen
+
+    docs = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    url = F.concat(
+        F.lit("https://site"), (i % 31).cast("string"),
+        F.lit(".example/p/"), i.cast("string"),
+    )
+    all_urls = docs.select("doc_id", url.alias("url"))
+    hist = all_urls.filter(F.col("doc_id") < 256).select("url")
+    bloom = build_bloom(hist, m_bits=16384, k=3)
+    return frontier_not_seen(all_urls, bloom, m_bits=16384, k=3)
+
+
+# ---------------------------------------------------------------------------
+# crawl-schedule composition: frontier -> robots gate -> Bloom dedup
+
+
+@_register(
+    "crawl_schedule",
+    """
+    WITH s AS (SELECT doc_id AS sid FROM documents WHERE doc_id < 48),
+    f AS (
+      SELECT s.sid, k.k,
+        CASE k.k % 4
+          WHEN 0 THEN '/data/public/pg' || k.k
+          WHEN 1 THEN '/data/pg' || k.k
+          WHEN 2 THEN '/data/public/secret'
+                      || CAST((s.sid + k.k) % 3 AS VARCHAR) || '/pg' || k.k
+          ELSE '/private/pg' || k.k
+        END AS path
+      FROM s, generate_series(0, 7) AS k(k)),
+    fr AS (
+      SELECT sid, k,
+             'https://s' || CAST(sid AS VARCHAR) || '.example' || path AS loc,
+             CASE k % 4
+               WHEN 0 THEN 1
+               WHEN 1 THEN 0
+               WHEN 2 THEN CASE WHEN k % 3 = 0 THEN 0 ELSE 1 END
+               ELSE 1
+             END AS allowed
+      FROM f),
+    hist AS (SELECT loc FROM fr WHERE k < 3),
+    pos AS (
+      SELECT ('0x' || substr(md5(loc), 1 + 8*i.i, 8))::BIGINT % 16384 AS p
+      FROM hist, generate_series(0, 2) AS i(i)),
+    words AS (
+      SELECT p // 32 AS word,
+             bit_or(1::BIGINT << CAST(p % 32 AS INT)) AS mask
+      FROM pos GROUP BY 1),
+    cpos AS (
+      SELECT fr.sid, fr.loc, fr.allowed,
+             ('0x' || substr(md5(fr.loc), 1 + 8*i.i, 8))::BIGINT % 16384 AS p
+      FROM fr, generate_series(0, 2) AS i(i)),
+    hits AS (
+      SELECT sid, loc, allowed,
+             count(*) FILTER (
+               WHERE w.mask IS NOT NULL
+                 AND (w.mask & (1::BIGINT << CAST(cpos.p % 32 AS INT))) <> 0
+             ) AS nhit
+      FROM cpos LEFT JOIN words w ON cpos.p // 32 = w.word
+      GROUP BY sid, loc, allowed)
+    SELECT sid AS site_id, loc FROM hits WHERE allowed = 1 AND nhit < 3
+    """,
+    "CRAWL-SCHEDULE COMPOSITION, hash-verified end-to-end: the three "
+    "crawl-suite stages in ONE lazy plan — sitemap frontier expansion "
+    "(real XML parse over gated-path urlsets whose entries intersect "
+    "the robots rule set), the RFC 9309 robots gate evaluated on "
+    "ARBITRARY frontier paths (per-site rules broadcast onto the pages, "
+    "longest-match per row with per-site memoized parsing — the "
+    "/private/ rows pin the group-override rule: blocked for '*' but "
+    "allowed for an agent with its own group), and Bloom-filter history "
+    "dedup (already-crawled URLs fold into the broadcast bitmap; the "
+    "frontier never shuffles). The oracle reconstructs the frontier and "
+    "every gate decision from the construction formulas and replays the "
+    "exact Bloom hash family (llmdata/warc.py make_sitemap_gated/"
+    "robots_gate/build_bloom/frontier_not_seen)",
+)
+def crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+
+    from query_engine_spark.llmdata import warc as WC
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 48)
+    sites = docs.select(F.col("doc_id").alias("site_id"))
+
+    def pack_maps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "site_id": pdf["site_id"],
+                    "payload": [
+                        WC.make_sitemap_gated(int(s), 8) for s in pdf["site_id"]
+                    ],
+                }
+            )
+
+    def pack_robots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "site_id": pdf["site_id"],
+                    "payload": [
+                        WC.make_robots(int(s)).encode("utf-8")
+                        for s in pdf["site_id"]
+                    ],
+                }
+            )
+
+    maps = sites.mapInPandas(pack_maps, "site_id long, payload binary")
+    frontier = (
+        WC.sitemap_entries(maps)
+        .filter(F.col("kind") == "url")
+        .select(
+            "site_id",
+            "loc",
+            F.regexp_extract("loc", r"^https://[^/]+(/.*)$", 1).alias("path"),
+        )
+    )
+    robots = sites.mapInPandas(pack_robots, "site_id long, payload binary")
+    gated = WC.robots_gate(frontier, robots, "trainbot").filter(
+        F.col("allowed") == 1
+    )
+    hist = frontier.filter(
+        F.regexp_extract("loc", r"pg(\d+)$", 1).cast("int") < 3
+    ).select(F.col("loc").alias("url"))
+    bloom = WC.build_bloom(hist, m_bits=16384, k=3)
+    fresh = WC.frontier_not_seen(
+        gated, bloom, url_col="loc", m_bits=16384, k=3
+    )
+    return fresh.select("site_id", "loc")
+
+
+@_register(
+    "multimodal_webp_animated",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 14 + doc_id % 4 AS cw, 10 + doc_id % 3 AS ch
+      FROM documents WHERE doc_id < 48),
+    rect AS (
+      SELECT m.media_id, m.cw, m.ch, f.f,
+             CASE WHEN f.f = 0 THEN m.cw ELSE m.cw // 2 END AS fw,
+             CASE WHEN f.f = 0 THEN m.ch ELSE m.ch // 2 END AS fh,
+             CASE WHEN f.f = 0 THEN 0
+                  ELSE 2 * (f.f % ((m.cw - m.cw // 2) // 2 + 1)) END AS fx,
+             CASE WHEN f.f = 0 THEN 0
+                  ELSE 2 * (f.f % ((m.ch - m.ch // 2) // 2 + 1)) END AS fy
+      FROM m, generate_series(0, 3) AS f(f)),
+    ev AS (
+      -- frame f's opaque pixels paint at seq 2f; transparent holes
+      -- ((x+y+f) % 5 = 0 on f >= 1) emit NO event, so the canvas shows
+      SELECT r.media_id, 2*r.f AS seq, x.x AS x, y.y AS y,
+             (r.media_id*31 + r.f*97 + y.y*7 + x.x*3) % 256 AS rv,
+             (r.media_id*31 + r.f*97 + y.y*7 + x.x*3 + 11) % 256 AS gv,
+             (r.media_id*31 + r.f*97 + y.y*7 + x.x*3 + 22) % 256 AS bv
+      FROM rect r, generate_series(0, 17) AS x(x), generate_series(0, 12) AS y(y)
+      WHERE x.x >= r.fx AND x.x < r.fx + r.fw
+        AND y.y >= r.fy AND y.y < r.fy + r.fh
+        AND (r.f = 0 OR (x.x + y.y + r.f) % 5 != 0)
+      UNION ALL
+      -- dispose-to-background (even f >= 2) fills the rect with the
+      -- ANIM background color at seq 2f+1, before the next display
+      SELECT r.media_id, 2*r.f + 1, x.x, y.y, 9, 13, 17
+      FROM rect r, generate_series(0, 17) AS x(x), generate_series(0, 12) AS y(y)
+      WHERE r.f >= 2 AND r.f % 2 = 0
+        AND x.x >= r.fx AND x.x < r.fx + r.fw
+        AND y.y >= r.fy AND y.y < r.fy + r.fh),
+    state AS (
+      SELECT g.media_id, g.f AS fi, g.cw, g.ch, e.x, e.y,
+             max_by(e.rv, e.seq) AS rv, max_by(e.gv, e.seq) AS gv,
+             max_by(e.bv, e.seq) AS bv
+      FROM rect g JOIN ev e ON e.media_id = g.media_id AND e.seq <= 2*g.f
+      GROUP BY g.media_id, g.f, g.cw, g.ch, e.x, e.y)
+    SELECT media_id, CAST(fi AS INT) AS frame_idx,
+           CAST(cw AS INT) AS width, CAST(ch AS INT) AS height,
+           CAST(40 + 10*fi AS INT) AS dur_ms,
+           CAST(sum(rv) AS BIGINT) AS r_sum,
+           CAST(sum(gv) AS BIGINT) AS g_sum,
+           CAST(sum(bv) AS BIGINT) AS b_sum,
+           CAST(255 * count(*) AS BIGINT) AS a_sum
+    FROM state GROUP BY media_id, fi, cw, ch
+    """,
+    "ANIMATED WebP COMPOSITING, hash-verified — the sticker/short-loop "
+    "shape of the modern web (VP8X + ANIM/ANMF with lossless frames): "
+    "a full-canvas no-blend base, then alpha-blended partial rects at "
+    "even (stored-halved) offsets whose per-pixel TRANSPARENT holes "
+    "must let the canvas show through, with even frames disposing "
+    "their rect to the opaque ANIM background AFTER display; per-frame "
+    "VP8L entropy variants cycle. The oracle replays the exact "
+    "paint-event sequence in SQL (paint at seq 2f, disposal at 2f+1, "
+    "displayed frame g = per-pixel max_by(v, seq <= 2g)) — a wrong "
+    "overlay order, a filled transparent hole, or a disposal leak "
+    "shifts the full-canvas channel sums. Fractional-alpha blending "
+    "and lossy VP8 frames refuse loudly (llmdata/webp.py "
+    "encode_webp_anim/decode_webp_frames/make_webp_animated)",
+)
+def multimodal_webp_animated(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+
+    from query_engine_spark.llmdata import webp as WB
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 48)
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = [WB.make_webp_animated(int(i)) for i in pdf["doc_id"]]
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+
+    media = docs.select("doc_id").mapInPandas(pack, "media_id long, payload binary")
+    return WB.webp_anim_features(media)
+
+
+@_register(
+    "crawl_politeness_schedule",
+    """
+    WITH s AS (SELECT doc_id AS sid FROM documents WHERE doc_id < 48),
+    f AS (
+      SELECT s.sid, 1 + s.sid % 5 AS delay_s,
+             'https://s' || CAST(s.sid AS VARCHAR) || '.example/p/'
+               || CAST(k.k AS VARCHAR) AS url
+      FROM s, generate_series(0, 9) AS k(k)),
+    r AS (
+      SELECT sid, url, delay_s,
+             row_number() OVER (PARTITION BY sid ORDER BY url) AS rn
+      FROM f)
+    SELECT sid AS site_id, url, CAST(rn - 1 AS INT) AS slot,
+           CAST((rn - 1) * delay_s * 1000 AS BIGINT) AS offset_ms
+    FROM r
+    """,
+    "CRAWL POLITENESS SCHEDULING, hash-verified: each host's frontier "
+    "URLs are assigned deterministic fetch slots spaced by the host's "
+    "robots.txt Crawl-delay — the delay is REALLY parsed from each "
+    "site's robots payload (parse_robots delays, '*' group; a tiny "
+    "map-only pass whose output broadcasts onto the frontier), then ONE "
+    "window shuffle partitioned by host orders the URLs and "
+    "offset_ms = slot * delay * 1000. At 100 TB the shuffle keys on "
+    "host (the natural crawl unit) and the per-host state is a row "
+    "number — no driver-side scheduling loop (llmdata/warc.py "
+    "parse_robots; Window.partitionBy(site_id))",
+)
+def crawl_politeness_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+    from pyspark.sql import Window
+    from pyspark.sql.functions import broadcast
+
+    from query_engine_spark.llmdata import warc as WC
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 48)
+    sites = docs.select(F.col("doc_id").alias("site_id"))
+
+    def delays(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ds = []
+            for s in pdf["site_id"]:
+                rules = WC.parse_robots(WC.make_robots(int(s)))
+                ds.append(int(rules["delays"].get("*", 1)))
+            yield pd.DataFrame({"site_id": pdf["site_id"], "delay_s": ds})
+
+    delay_df = sites.mapInPandas(delays, "site_id long, delay_s int")
+    ks = sites.select(
+        "site_id", F.explode(F.sequence(F.lit(0), F.lit(9))).alias("k")
+    )
+    frontier = ks.select(
+        "site_id",
+        F.concat(
+            F.lit("https://s"), F.col("site_id").cast("string"),
+            F.lit(".example/p/"), F.col("k").cast("string"),
+        ).alias("url"),
+    )
+    joined = frontier.join(broadcast(delay_df), "site_id")
+    rn = F.row_number().over(Window.partitionBy("site_id").orderBy("url"))
+    return joined.select(
+        "site_id",
+        "url",
+        (rn - 1).cast("int").alias("slot"),
+        ((rn - 1).cast("long") * F.col("delay_s") * 1000).alias("offset_ms"),
+    )
+
+
+def _host_rank_oracle(iters: int = 3, scale: int = 10**12) -> str:
+    """The registry's unrolled fixed-point PageRank oracle
+    (_pagerank_oracle), parameterized over the outlink-fixture
+    edge set: hosts dom0..dom96, each page i linking (i*3+1)%97,
+    (i*7+2)%97 and itself (the root-relative link)."""
+    parts = [
+        f"""
+    WITH raw AS (
+      SELECT 'dom' || CAST(doc_id % 97 AS VARCHAR) || '.example' AS u,
+             'dom' || CAST((doc_id * 3 + 1) % 97 AS VARCHAR) || '.example' AS v
+      FROM documents WHERE doc_id < 512
+      UNION ALL
+      SELECT 'dom' || CAST(doc_id % 97 AS VARCHAR) || '.example',
+             'dom' || CAST((doc_id * 7 + 2) % 97 AS VARCHAR) || '.example'
+      FROM documents WHERE doc_id < 512
+      UNION ALL
+      SELECT 'dom' || CAST(doc_id % 97 AS VARCHAR) || '.example',
+             'dom' || CAST(doc_id % 97 AS VARCHAR) || '.example'
+      FROM documents WHERE doc_id < 512),
+    e AS (SELECT DISTINCT u, v FROM raw),
+    nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
+    nn AS (SELECT count(*) AS n FROM nodes),
+    od AS (SELECT u AS node, count(*) AS outdeg FROM e GROUP BY u),
+    r0 AS (SELECT node, {scale} // n AS r FROM nodes CROSS JOIN nn)"""
+    ]
+    for i in range(1, iters + 1):
+        p = f"r{i - 1}"
+        parts.append(
+            f""",
+    c{i} AS (SELECT {p}.node, {p}.r // od.outdeg AS c FROM {p} JOIN od USING (node)),
+    i{i} AS (SELECT e.v AS node, CAST(sum(c.c) AS BIGINT) AS inm
+             FROM e JOIN c{i} c ON c.node = e.u GROUP BY e.v),
+    d{i} AS (SELECT CAST(coalesce(sum({p}.r), 0) AS BIGINT) AS dang
+             FROM {p} LEFT JOIN od USING (node) WHERE od.outdeg IS NULL),
+    r{i} AS (SELECT nodes.node,
+               CAST((15 * {scale}) // (100 * nn.n)
+               + (85 * (coalesce(i{i}.inm, 0) + d{i}.dang // nn.n)) // 100
+               AS BIGINT) AS r
+             FROM nodes LEFT JOIN i{i} USING (node) CROSS JOIN nn CROSS JOIN d{i})"""
+        )
+    parts.append(f"\n    SELECT node, r AS rank_q FROM r{iters}")
+    return "".join(parts)
+
+
+@_register(
+    "crawl_host_rank",
+    _host_rank_oracle(iters=3),
+    "HOST RANK over the crawl graph, hash-verified end-to-end: raw HTML "
+    "pages -> scan-speed outlink extraction (the WAT-style operator) -> "
+    "DISTINCT host edges (incl. the self-edges root-relative links "
+    "produce) -> 3 unrolled iterations of fixed-point integer PageRank "
+    "(d=0.85, dangling mass redistributed, bigint ranks + integer div — "
+    "bit-identical across engines). This is the crawl-quality prior a "
+    "scheduler feeds back into frontier ordering; the oracle rebuilds "
+    "the edge set from the page-construction formulas and replays the "
+    "same unrolled iteration (llmdata/warc.py outlink_edges; "
+    "operators/behavior.py pagerank)",
+)
+def crawl_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata.warc import outlink_edges
+    from query_engine_spark.operators import behavior as B
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 512)
+    i = F.col("doc_id")
+    s = lambda x: x.cast("string")  # noqa: E731
+    url = F.concat(
+        F.lit("https://dom"), s(i % 97), F.lit(".example/p/"), s(i)
+    )
+    page = F.concat(
+        F.lit('<html><body><a href="https://dom'), s((i * 3 + 1) % 97),
+        F.lit('.example/x">a</a><a href="https://dom'), s((i * 7 + 2) % 97),
+        F.lit('.example/y">b</a>'),
+        F.lit("<a href='/self/"), s(i), F.lit("'>c</a></body></html>"),
+    )
+    pages = docs.select(url.alias("url"), page.alias("html"))
+    edges = (
+        outlink_edges(pages)
+        .select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"))
+        .distinct()
+    )
+    return B.pagerank(edges, iters=3)
+
+
+@_register(
+    "llm_robots_wildcards",
+    """
+    WITH s AS (SELECT doc_id AS sid FROM documents WHERE doc_id < 64),
+    f AS (
+      SELECT s.sid, k.k,
+        CASE k.k % 5
+          WHEN 0 THEN '/pub/x' || k.k || '.html'
+          WHEN 1 THEN '/pub/private' || k.k
+          WHEN 2 THEN '/doc' || k.k || '.pdf'
+          WHEN 3 THEN '/doc' || k.k || '.pdfx'
+          ELSE '/page' || k.k || '?session=' || k.k
+        END AS path
+      FROM s, generate_series(0, 9) AS k(k))
+    SELECT sid AS site_id, path,
+           CASE k % 5 WHEN 0 THEN 1 WHEN 3 THEN 1 ELSE 0 END AS allowed
+    FROM f
+    """,
+    "robots.txt WILDCARD PATTERNS (RFC 9309 §2.2.3), hash-verified — "
+    "the patterns real robots files lean on, previously a hard refusal: "
+    "'$'-anchored extension blocks (/*.pdf$ blocks /doc.pdf but NOT "
+    "/doc.pdfx — the anchor is load-bearing), a broad /pub* allow "
+    "overridden by the LONGER /pub/private* disallow (specificity is "
+    "pattern octet length, wildcards included), and the /*?session= "
+    "query-tracking block. The matcher is differential-fuzzed against a "
+    "regex restatement (20k cases) and evaluated here through the "
+    "robots_gate broadcast pass; the oracle computes every decision "
+    "from the probe-construction formulas (llmdata/warc.py "
+    "_robots_match/make_robots_wild/robots_gate)",
+)
+def llm_robots_wildcards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+
+    from query_engine_spark.llmdata import warc as WC
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
+    sites = docs.select(F.col("doc_id").alias("site_id"))
+
+    def pack_robots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "site_id": pdf["site_id"],
+                    "payload": [
+                        WC.make_robots_wild(int(s)).encode("utf-8")
+                        for s in pdf["site_id"]
+                    ],
+                }
+            )
+
+    robots = sites.mapInPandas(pack_robots, "site_id long, payload binary")
+    ks = sites.select(
+        "site_id", F.explode(F.sequence(F.lit(0), F.lit(9))).alias("k")
+    )
+    kk = F.col("k").cast("string")
+    path = (
+        F.when(F.col("k") % 5 == 0, F.concat(F.lit("/pub/x"), kk, F.lit(".html")))
+        .when(F.col("k") % 5 == 1, F.concat(F.lit("/pub/private"), kk))
+        .when(F.col("k") % 5 == 2, F.concat(F.lit("/doc"), kk, F.lit(".pdf")))
+        .when(F.col("k") % 5 == 3, F.concat(F.lit("/doc"), kk, F.lit(".pdfx")))
+        .otherwise(F.concat(F.lit("/page"), kk, F.lit("?session="), kk))
+    )
+    pages = ks.select("site_id", path.alias("path"))
+    gated = WC.robots_gate(pages, robots, "trainbot")
+    return gated.select("site_id", "path", "allowed")
+
+
+# ---------------------------------------------------------------------------
+# JSON-LD (schema.org) extraction: the structured-metadata curation signal
+
+
+@_register(
+    "llm_html_jsonld",
+    """
+    SELECT doc_id,
+           CASE WHEN doc_id % 6 = 5 THEN NULL
+                WHEN doc_id % 2 = 0 THEN 'Article' ELSE 'NewsArticle'
+           END AS ld_type,
+           CASE WHEN doc_id % 6 = 5 THEN NULL
+                ELSE 'Doc ' || chr(34) || CAST(doc_id AS VARCHAR) || chr(34)
+                     || ' news' END AS headline,
+           CASE WHEN doc_id % 6 = 5 THEN NULL
+                ELSE '2024-0' || CAST(1 + doc_id % 9 AS VARCHAR) || '-15'
+           END AS date_published,
+           CASE WHEN doc_id % 6 = 5 THEN NULL
+                ELSE CAST(100 + doc_id % 900 AS INT) END AS word_count
+    FROM documents WHERE doc_id < 512
+    """,
+    "JSON-LD (schema.org) EXTRACTION, hash-verified — the structured "
+    "metadata block modern pages embed and curation pipelines group on "
+    "(article type, headline, publish date, word count): the "
+    "<script type=application/ld+json> payload is pulled at scan speed "
+    "by regexp_extract and parsed with from_json under an EXPLICIT "
+    "schema — pure codegen end to end, zero Python. The fixture builds "
+    "the embedded JSON with to_json (so quotes in headlines are "
+    "escaped exactly as real emitters do, and the extractor must "
+    "unescape them back — the headline carries literal double quotes); "
+    "every sixth page has no block and yields NULLs "
+    "(pattern mirrors llm_html_metadata; from_json is the "
+    "llm_jsonl_roundtrip machinery)",
+)
+def llm_html_jsonld(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 512)
+    i = F.col("doc_id")
+    s = lambda x: x.cast("string")  # noqa: E731
+    ld_json = F.to_json(
+        F.struct(
+            F.when(i % 2 == 0, F.lit("Article"))
+            .otherwise(F.lit("NewsArticle"))
+            .alias("@type"),
+            F.concat(F.lit('Doc "'), s(i), F.lit('" news')).alias("headline"),
+            F.concat(F.lit("2024-0"), s(1 + i % 9), F.lit("-15")).alias(
+                "datePublished"
+            ),
+            (100 + i % 900).cast("int").alias("wordCount"),
+        )
+    )
+    block = F.when(i % 6 == 5, F.lit("")).otherwise(
+        F.concat(
+            F.lit('<script type="application/ld+json">'), ld_json,
+            F.lit("</script>"),
+        )
+    )
+    page = F.concat(
+        F.lit("<html><head><title>t</title>"), block,
+        F.lit("</head><body><p>"), F.col("text"), F.lit("</p></body></html>"),
+    )
+    # [^<>] attr segments + the 64 KB body bound are the r12 CPU-bomb
+    # guards (warc.py html_metadata has the measurements): an unclosed
+    # typed opener inside untrusted document text otherwise retries a
+    # to-end scan at every later opener, O(N²); real JSON-LD blocks sit
+    # far under 64 KB, so the bound is a capacity line, not behavior.
+    # quoted-angle protection (ADVICE r12): a script tag whose OTHER
+    # attributes carry '<'/'>' in quoted values must still match the
+    # linear [^<>] interiors; the captured JSON restores the sentinels
+    from query_engine_spark.llmdata.warc import (
+        _bind_once,
+        protect_quoted_angles,
+        protect_quoted_block_openers,
+        restore_angles,
+    )
+
+    # opener pre-pass (r16): every restore_angles consumer runs it
+    # upstream so the \x04/\x05 sentinels can never fabricate angles
+    # from raw crawl bytes (it scrubs the literals first); here it is
+    # value-neutral for the fixtures and keeps the restore contract
+    # uniform. No strip stage (the script payload IS the target), so
+    # protected_html does not apply; the two stages bind once each.
+    raw = restore_angles(F.regexp_extract(
+        _bind_once(protect_quoted_block_openers(page),
+                   lambda p: protect_quoted_angles(p)),
+        # [\s"'/] before 'type': html.parser's attribute-name separator
+        # class — a data-type="application/ld+json" attribute must not
+        # satisfy the discriminator (r16 review find #2's class)
+        r"""(?is)<script[^<>]*[\s"'/]type\s*=\s*["']application/ld\+json["'][^<>]*>(.{0,65536}?)</script>""",
+        1,
+    ))
+    schema = (
+        "`@type` string, headline string, datePublished string,"
+        " wordCount int"
+    )
+    parsed = F.from_json(F.nullif(raw, F.lit("")), schema)
+    return docs.select(
+        "doc_id",
+        parsed["@type"].alias("ld_type"),
+        parsed["headline"].alias("headline"),
+        parsed["datePublished"].alias("date_published"),
+        parsed["wordCount"].alias("word_count"),
+    )
+
+
+@_register(
+    "llm_tar_longnames",
+    """
+    SELECT doc_id, CAST(length(text) AS BIGINT) AS chars, md5(text) AS fp
+    FROM documents WHERE doc_id >= 64 AND doc_id < 320
+    """,
+    "LONG-NAME TARBALL ingestion, hash-verified: member paths past "
+    "ustar's 100-byte name field — routine in real corpus releases — "
+    "carried by GNU '@LongLink' typeflag-L records on even archives and "
+    "PAX 'x' extended headers (path= records with the self-counting "
+    "length prefix) on odd ones, so BOTH real-world mechanisms decode "
+    "through one reader. Conformance is anchored EXTERNALLY: stdlib "
+    "tarfile reads our output and we read tarfile's, in both formats "
+    "(tests/test_archives.py). Same one-shuffle pack / map-only extract "
+    "plan and losslessness oracle as the other archive paths "
+    "(llmdata/archives.py build_tar(longname_style)/read_tar)",
+)
+def llm_tar_longnames(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import archives as AR
+
+    docs = load_table(spark, sf_dir, "documents").filter(
+        (F.col("doc_id") >= 64) & (F.col("doc_id") < 320)
+    )
+    packed = AR.pack_archives(docs, fmt="tar.gz", group_size=8, deep_names=True)
+    return AR.archive_members(packed, fmt="tar.gz")
+
+
+# ---------------------------------------------------------------------------
+# media-type sniffing: the triage stage before any decoder runs
+
+
+@_register(
+    "media_type_sniff",
+    """
+    SELECT doc_id AS media_id,
+           CASE doc_id % 10
+             WHEN 0 THEN 'image/jpeg'    WHEN 1 THEN 'image/png'
+             WHEN 2 THEN 'image/gif'     WHEN 3 THEN 'image/webp'
+             WHEN 4 THEN 'audio/wav'     WHEN 5 THEN 'application/pdf'
+             WHEN 6 THEN 'application/zip' WHEN 7 THEN 'audio/mpeg'
+             WHEN 8 THEN 'image/tiff'    ELSE 'unknown'
+           END AS mtype
+    FROM documents WHERE doc_id < 512
+    """,
+    "MEDIA-TYPE SNIFFING, hash-verified — the triage stage every crawl "
+    "media pipeline runs before any decoder: magic-byte classification "
+    "as a PURE COLUMN EXPRESSION over the first 16 bytes (codegen, scan "
+    "speed, zero Python, nothing decoded), distinguishing the RIFF "
+    "family (WAV/WebP/AVI) and ISO-BMFF by inner tags, with unknown "
+    "magic classified honestly rather than guessed. The corpus mixes "
+    "REAL fixture payloads from nine other codec families plus a "
+    "deterministic junk class; the oracle knows each row's type from "
+    "the construction residue (llmdata/multimodal.py sniff_media_type)",
+)
+def media_type_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+
+    from query_engine_spark.llmdata import archives as AR
+    from query_engine_spark.llmdata import multimodal as MM
+    from query_engine_spark.llmdata import pdftext as PD
+    from query_engine_spark.llmdata import webp as WB
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 512)
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = []
+            for i in pdf["doc_id"]:
+                i = int(i)
+                sel = i % 10
+                if sel == 0:
+                    b = MM.make_jpeg(i, 1, 1)
+                elif sel == 1:
+                    b = MM.make_png(i, 4, 3)
+                elif sel == 2:
+                    b = MM.make_gif(i, 4, 3)
+                elif sel == 3:
+                    b = WB.make_webp(i, 4, 3)
+                elif sel == 4:
+                    b = MM.make_wav(i, 32)
+                elif sel == 5:
+                    b = PD.build_pdf([["x"]])
+                elif sel == 6:
+                    b = AR.build_zip([("a.txt", b"x")])
+                elif sel == 7:
+                    b = MM.make_mpeg_audio(i)
+                elif sel == 8:
+                    b = MM.make_tiff(i, 4, 3)
+                else:
+                    b = bytes((i * 7 + k) % 251 + 1 for k in range(24))
+                payloads.append(b)
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+
+    media = docs.select("doc_id").mapInPandas(pack, "media_id long, payload binary")
+    return media.select(
+        "media_id", MM.sniff_media_type(F.col("payload")).alias("mtype")
+    )
+
+
+# ---------------------------------------------------------------------------
+# image-text pair mining: the CLIP-style multimodal dataset seed
+
+
+@_register(
+    "llm_html_image_pairs",
+    """
+    WITH m AS (
+      SELECT doc_id AS i,
+             'https://dom' || CAST(doc_id % 7 AS VARCHAR)
+               || '.example/a/page' || CAST(doc_id AS VARCHAR) || '.html'
+               AS page_url
+      FROM documents WHERE doc_id < 512),
+    e AS (
+      SELECT page_url,
+             'https://img' || CAST((i + 1) % 9 AS VARCHAR)
+               || '.example/pic/' || CAST(i AS VARCHAR) || '.webp' AS img_url,
+             'photo ' || CAST(i AS VARCHAR) || ' of a scene' AS alt
+      FROM m
+      UNION ALL
+      SELECT page_url,
+             'https://dom' || CAST(i % 7 AS VARCHAR) || '.example/thumb/'
+               || CAST(i AS VARCHAR) || '.jpg',
+             'thumb ' || CAST(i AS VARCHAR)
+      FROM m
+      UNION ALL
+      SELECT page_url,
+             'https://dom' || CAST(i % 7 AS VARCHAR) || '.example/a/p/'
+               || CAST(i AS VARCHAR) || '.png',
+             ''
+      FROM m WHERE i % 2 = 0)
+    SELECT page_url, img_url, alt FROM e
+    """,
+    "IMAGE-TEXT PAIR MINING, hash-verified — the seeding stage of a "
+    "CLIP-style multimodal dataset: every <img> with its alt text, "
+    "extracted at scan speed (regexp_extract_all over the tags, src/alt "
+    "pulled in EITHER attribute order and quote style), srcs resolved "
+    "like outlinks PLUS the path-relative case against the page "
+    "DIRECTORY (/a/p/... — outlink host-granularity is not enough when "
+    "the fetch needs the full URL); data: URIs and srcless tags drop, "
+    "captionless images keep an empty alt for downstream filters to "
+    "judge. The oracle rebuilds every (page, img, alt) row from the "
+    "construction formulas (llmdata/warc.py image_refs)",
+)
+def llm_html_image_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata.warc import image_refs
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 512)
+    i = F.col("doc_id")
+    s = lambda x: x.cast("string")  # noqa: E731
+    url = F.concat(
+        F.lit("https://dom"), s(i % 7), F.lit(".example/a/page"), s(i),
+        F.lit(".html"),
+    )
+    third = F.when(
+        i % 2 == 0,
+        F.concat(F.lit('<img src="p/'), s(i), F.lit('.png">')),
+    ).otherwise(F.lit(""))
+    page = F.concat(
+        F.lit("<html><body>"),
+        F.lit('<img src="https://img'), s((i + 1) % 9),
+        F.lit(".example/pic/"), s(i),
+        F.lit('.webp" alt="photo '), s(i), F.lit(' of a scene"/>'),
+        F.lit("<img alt='thumb "), s(i), F.lit("' src='/thumb/"), s(i),
+        F.lit(".jpg'>"),
+        third,
+        F.lit('<img src="data:image/png;base64,AAAA" alt="inline">'),
+        F.lit('<img class="lazy">'),
+        F.lit("</body></html>"),
+    )
+    pages = docs.select(url.alias("url"), page.alias("html"))
+    return image_refs(pages)
+
+
+@_register(
+    "multimodal_image_text_pairs",
+    """
+    WITH m AS (
+      SELECT doc_id AS i, 9 + doc_id % 4 AS w, 8 + doc_id % 3 AS h
+      FROM documents WHERE doc_id < 64),
+    px AS (
+      SELECT m.i, m.w, m.h,
+             (m.i*31 + y.y*7 + x.x*3 + c.c*11) % 256 AS v
+      FROM m, generate_series(0, 12) AS y(y), generate_series(0, 12) AS x(x),
+           generate_series(0, 2) AS c(c)
+      WHERE y.y < m.h AND x.x < m.w)
+    SELECT 'https://img' || CAST((i + 1) % 9 AS VARCHAR) || '.example/pic/'
+             || CAST(i AS VARCHAR) || '.webp' AS img_url,
+           'photo ' || CAST(i AS VARCHAR) || ' of a scene' AS alt,
+           CAST(max(w) AS INT) AS width, CAST(max(h) AS INT) AS height,
+           CAST(sum(v) AS BIGINT) AS px_sum
+    FROM px GROUP BY i
+    """,
+    "IMAGE-TEXT PAIR ASSEMBLY, hash-verified end-to-end — the "
+    "multimodal-dataset capstone: pages yield (img_url, alt) captions "
+    "at scan speed (image_refs), a media table of REAL WebP payloads "
+    "keyed by the same URLs decodes through the full VP8L path, and "
+    "ONE broadcast join assembles the training pair record (caption + "
+    "decoded pixel features) — the caption side never shuffles. The "
+    "oracle recomputes both sides from the construction formulas, so a "
+    "slip in extraction, resolution, decode, or the join key fails the "
+    "hash (llmdata/warc.py image_refs + llmdata/webp.py webp_features)",
+)
+def multimodal_image_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+    from pyspark.sql.functions import broadcast
+
+    from query_engine_spark.llmdata import webp as WB
+    from query_engine_spark.llmdata.warc import image_refs
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
+    i = F.col("doc_id")
+    s = lambda x: x.cast("string")  # noqa: E731
+    page_url = F.concat(
+        F.lit("https://dom"), s(i % 7), F.lit(".example/a/page"), s(i),
+        F.lit(".html"),
+    )
+    img_url = F.concat(
+        F.lit("https://img"), s((i + 1) % 9), F.lit(".example/pic/"), s(i),
+        F.lit(".webp"),
+    )
+    page = F.concat(
+        F.lit('<html><body><img src="https://img'), s((i + 1) % 9),
+        F.lit(".example/pic/"), s(i),
+        F.lit('.webp" alt="photo '), s(i), F.lit(' of a scene"/>'),
+        F.lit("</body></html>"),
+    )
+    pages = docs.select(page_url.alias("url"), page.alias("html"))
+    refs = image_refs(pages)
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = [int(x) for x in pdf["doc_id"]]
+            yield pd.DataFrame(
+                {
+                    "media_id": ids,
+                    "payload": [
+                        WB.make_webp(x, 9 + x % 4, 8 + x % 3) for x in ids
+                    ],
+                }
+            )
+
+    media = docs.select("doc_id").mapInPandas(
+        pack, "media_id long, payload binary"
+    )
+    feats = WB.webp_features(media)
+    # the url is a pure formula of media_id: rebuild it as a column
+    # expression instead of referencing the (expensive) pack twice
+    mid = F.col("media_id")
+    feat_url = F.concat(
+        F.lit("https://img"), ((mid + 1) % 9).cast("string"),
+        F.lit(".example/pic/"), mid.cast("string"), F.lit(".webp"),
+    )
+    keyed = feats.select(
+        feat_url.alias("img_url"), "width", "height", "px_sum"
+    )
+    return refs.join(broadcast(keyed), "img_url").select(
+        "img_url", "alt", "width", "height", "px_sum"
+    )
+
+
+
+# ---------------------------------------------------------------------------
+# QOI: the exact-roundtrip image format modern ML tooling interchanges
+
+
+@_register(
+    "multimodal_qoi",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, 9 + doc_id % 4 AS w, 8 + doc_id % 3 AS h
+      FROM documents WHERE doc_id < 96),
+    px AS (
+      SELECT m.media_id, m.w, m.h,
+             CASE WHEN ((x.x // 3) + y.y) % 4 = 0
+                  THEN (m.media_id * 31) % 256
+                  ELSE (m.media_id * 31 + y.y * 7 + x.x * 3) % 256
+             END AS base,
+             CASE WHEN ((x.x // 3) + y.y) % 4 = 0 THEN 255
+                  WHEN m.media_id % 4 = 0 THEN (m.media_id + x.x) % 256
+                  ELSE 255
+             END AS a
+      FROM m, generate_series(0, 12) AS x(x), generate_series(0, 10) AS y(y)
+      WHERE x.x < m.w AND y.y < m.h)
+    SELECT media_id, CAST(max(w) AS INT) AS width, CAST(max(h) AS INT) AS height,
+           CAST(CASE WHEN media_id % 4 = 0 THEN 4 ELSE 3 END AS INT) AS channels,
+           CAST(sum(base) AS BIGINT) AS r_sum,
+           CAST(sum((base + 11) % 256) AS BIGINT) AS g_sum,
+           CAST(sum((base + 22) % 256) AS BIGINT) AS b_sum,
+           CAST(sum(a) AS BIGINT) AS a_sum
+    FROM px GROUP BY media_id
+    """,
+    "QOI DECODE, hash-verified — the 'Quite OK Image' exact-roundtrip "
+    "format modern ML tooling interchanges: all five op kinds (RUN / "
+    "64-slot hash INDEX / wraparound DIFF / LUMA / RGB(A)) over running "
+    "previous-pixel state, with flat patches forcing runs, revisited "
+    "colors forcing index hits, small gradients forcing DIFF/LUMA, and "
+    "alpha-varying streams on every fourth id; the end marker is "
+    "verified and truncation raises. The oracle recomputes every "
+    "channel sum from the fixture formulas "
+    "(llmdata/multimodal.py encode_qoi/decode_qoi/qoi_features)",
+)
+def multimodal_qoi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 96).select(F.col("doc_id").alias("media_id"))
+    media = _pack_media(ids, lambda i: MM.make_qoi(i, 9 + i % 4, 8 + i % 3))
+    return MM.qoi_features(media)
+
+
+# ---------------------------------------------------------------------------
+# FITS: the astronomy-corpus raster
+
+
+@_register(
+    "multimodal_fits",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id,
+             ([8, 16, 32])[1 + doc_id % 3] AS bp,
+             11 + doc_id % 5 AS w, 9 + doc_id % 4 AS h
+      FROM documents WHERE doc_id < 96),
+    px AS (
+      SELECT m.media_id, m.w, m.h, m.bp,
+             (m.media_id * 131 + y.y * 17 + x.x * 5)
+               % (1::BIGINT << m.bp)
+               - CASE WHEN m.bp > 8 THEN (1::BIGINT << (m.bp - 1)) ELSE 0 END
+               AS v
+      FROM m, generate_series(0, 15) AS x(x), generate_series(0, 12) AS y(y)
+      WHERE x.x < m.w AND y.y < m.h)
+    SELECT media_id, CAST(max(w) AS INT) AS width, CAST(max(h) AS INT) AS height,
+           CAST(max(bp) AS INT) AS bitpix,
+           CAST(sum(v) AS BIGINT) AS px_sum,
+           CAST(min(v) AS BIGINT) AS px_min,
+           CAST(max(v) AS BIGINT) AS px_max
+    FROM px GROUP BY media_id
+    """,
+    "FITS DECODE, hash-verified — the astronomy-corpus raster (NASA "
+    "FITS 4.0, public): 80-char header cards in 2880-byte blocks, "
+    "big-endian signed pixel data at BITPIX 8/16/32 cycling by id, "
+    "2880-padding walked exactly. Floating BITPIX refuses (cross-engine "
+    "float hashing is the repo's no-go), as do extensions and "
+    "NAXIS != 2. The oracle recomputes every signed pixel from the "
+    "construction formula (llmdata/multimodal.py "
+    "make_fits/decode_fits/fits_features)",
+)
+def multimodal_fits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 96).select(F.col("doc_id").alias("media_id"))
+    media = _pack_media(
+        ids,
+        lambda i: MM.make_fits(
+            i, 11 + i % 5, 9 + i % 4, bitpix=(8, 16, 32)[i % 3]
+        ),
+    )
+    return MM.fits_features(media)
+
+
+
+# ---------------------------------------------------------------------------
+# Subtitles (SRT / WebVTT): the ASR-pair text shape
+
+
+@_register(
+    "multimodal_subtitles",
+    """
+    WITH m AS (
+      SELECT doc_id AS i, 3 + doc_id % 4 AS n FROM documents WHERE doc_id < 96),
+    cue AS (
+      SELECT m.i, m.n, k.k,
+             800 + (k.k * 97) % 1200 AS dur,
+             'Cue ' || CAST(k.k AS VARCHAR) || ' of media ' || CAST(m.i AS VARCHAR)
+             || CASE WHEN k.k % 2 = 0
+                     THEN chr(10) || 'subtitle text ' || CAST(k.k % 5 AS VARCHAR)
+                     ELSE '' END AS cuetext
+      FROM m, generate_series(0, 6) AS k(k) WHERE k.k < m.n),
+    j AS (
+      SELECT i, max(n) AS n, CAST(sum(dur) AS BIGINT) AS total_ms,
+             string_agg(cuetext, chr(12) ORDER BY k) AS full_text
+      FROM cue GROUP BY i)
+    SELECT i AS media_id, CAST(n AS INT) AS cues, total_ms,
+           CAST(length(full_text) AS BIGINT) AS chars, md5(full_text) AS fp
+    FROM j
+    """,
+    "SUBTITLE PARSING (SRT + WebVTT — the text half of every captioned "
+    "video / ASR training pair): format auto-detected by the WEBVTT "
+    "header, comma- vs dot-millisecond timestamps, BOMs, VTT NOTE "
+    "blocks, cue ids, and cue settings after the arrow all exercised "
+    "(odd media are full-hazard VTT, even are SRT); cue durations sum "
+    "exactly and the md5 is over the cue texts with internal newlines "
+    "preserved; backwards cues and malformed timestamps refuse "
+    "(llmdata/multimodal.py make_subtitles/parse_subtitles/"
+    "subtitle_stats)",
+)
+def multimodal_subtitles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 96).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_subtitles(i, 3 + i % 4).encode("utf-8")),
+        media_type="text/vtt",
+    )
+    return MM.subtitle_stats(media)
+
+
+# ---------------------------------------------------------------------------
+# Netpbm (PNM): the dataset-interchange image family
+
+
+@_register(
+    "multimodal_pnm",
+    """
+    WITH m AS (
+      SELECT doc_id AS media_id, doc_id % 6 AS v,
+             7 + doc_id % 4 AS w, 5 + doc_id % 3 AS h
+      FROM documents WHERE doc_id < 96),
+    g AS (
+      SELECT m.*,
+             CASE WHEN m.v IN (0, 3) THEN 1
+                  WHEN m.v IN (1, 4) AND m.media_id % 3 = 0 THEN 1000
+                  ELSE 255 END AS maxval,
+             CASE WHEN m.v IN (2, 5) THEN 3 ELSE 1 END AS chans
+      FROM m),
+    px AS (
+      SELECT g.media_id, g.w, g.h, g.maxval, g.chans,
+             CASE WHEN g.v IN (0, 3)
+                  THEN (g.media_id*31 + y.y*7 + x.x*3) % 2
+                  ELSE (g.media_id*31 + y.y*7 + x.x*3 + c.c*11) % (g.maxval + 1)
+             END AS s,
+             x.x, y.y, c.c
+      FROM g, generate_series(0, 10) AS x(x), generate_series(0, 7) AS y(y),
+           generate_series(0, 2) AS c(c)
+      WHERE x.x < g.w AND y.y < g.h AND c.c < g.chans)
+    SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+           CAST(chans AS INT) AS channels, CAST(maxval AS INT) AS maxval,
+           CAST(sum(s) AS BIGINT) AS sample_sum,
+           CAST(max(CASE WHEN x = 0 AND y = 0 AND c = 0 THEN s END) AS INT)
+             AS top_left
+    FROM px GROUP BY media_id, w, h, chans, maxval
+    """,
+    "Netpbm (PNM) DECODE, hash-verified — the dataset-interchange image "
+    "family ML pipelines pass around: all six formats cycle by "
+    "media_id (P1 separator-free ASCII bitmaps, P2/P3 ASCII gray/RGB, "
+    "P4 MSB-first row-padded packed bits, P5/P6 binary — with a 1000 "
+    "maxval on every third gray stream forcing 2-byte BIG-ENDIAN "
+    "samples, the classic PNM reader mistake), '#' comments planted "
+    "between header tokens. The oracle recomputes every sample from "
+    "the construction formulas (llmdata/multimodal.py "
+    "make_pnm/decode_pnm/pnm_features)",
+)
+def multimodal_pnm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 96).select(F.col("doc_id").alias("media_id"))
+    media = _pack_media(
+        ids, lambda i: MM.make_pnm(i, 7 + i % 4, 5 + i % 3)
+    )
+    return MM.pnm_features(media)
+
+
+# ---------------------------------------------------------------------------
+# SVG structural metadata
+
+
+@_register(
+    "multimodal_svg",
+    """
+    WITH m AS (SELECT doc_id AS media_id FROM documents WHERE doc_id < 256)
+    SELECT media_id,
+           CAST(100 + media_id % 40 AS INT) AS width,
+           CAST(80 + media_id % 30 AS INT) AS height,
+           CAST(1 + media_id % 4 AS INT) AS n_paths,
+           CAST(media_id % 3 AS INT) AS n_rects,
+           CAST(1 + media_id % 2 AS INT) AS n_texts,
+           CAST((1 + media_id % 2)
+                * (8 + length(CAST(media_id AS VARCHAR)))
+                + (media_id % 2) AS BIGINT) AS text_chars,
+           'Icon ' || CAST(media_id AS VARCHAR) AS title
+    FROM m
+    """,
+    "SVG STRUCTURAL METADATA, hash-verified — the web's vector-image "
+    "format, parsed not rasterized (the curation signals are in the "
+    "structure: px dimensions with viewBox fallback, an element census "
+    "of paths/rects/texts, embedded text length, the <title>): "
+    "namespaced ElementTree over deterministic fixtures with comments "
+    "and nested <g> groups; non-pixel units (em/%/pt) refuse — "
+    "resolving them honestly needs a renderer context. text_chars = "
+    "n_texts * len('label {id}-k') + newline joins, recomputed by the "
+    "oracle from the construction formulas (llmdata/multimodal.py "
+    "make_svg/parse_svg/svg_features)",
+)
+def multimodal_svg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 256).select(F.col("doc_id").alias("media_id"))
+    media = _pack_media(ids, MM.make_svg)
+    return MM.svg_features(media)
+
+
+# ---------------------------------------------------------------------------
+# Sun/NeXT AU audio: the legacy speech-corpus container
+
+
+@_register(
+    "multimodal_audio_au",
+    """
+    WITH m AS (SELECT doc_id AS media_id, 400 + doc_id % 5 * 60 AS n,
+                      8000 + doc_id % 3 * 4000 AS rate
+               FROM documents WHERE doc_id < 64),
+    s AS (
+      SELECT m.media_id, m.rate, m.n,
+             ((m.media_id*131 + i.i*17) % 65536) - 32768 AS v
+      FROM m, generate_series(0, 699) AS i(i) WHERE i.i < m.n)
+    SELECT media_id, CAST(max(rate) AS INT) AS sample_rate,
+           CAST(max(n) AS BIGINT) AS n_samples,
+           CAST(sum(abs(v)) AS BIGINT) AS amp_sum,
+           CAST(max(v) AS INT) AS peak,
+           CAST(((media_id*131) % 65536) - 32768 AS INT) AS first_sample
+    FROM s GROUP BY media_id
+    """,
+    "Sun/NeXT AU decode, hash-verified — the legacy speech-corpus "
+    "container (completes the PCM matrix alongside WAV/AIFF/SPHERE/"
+    "FLAC): big-endian header with annotation-aware data offsets and "
+    "the 0xFFFFFFFF unknown-size sentinel pipe-written files carry "
+    "(every third fixture), 16-bit linear PCM BE; mu-law AU expands "
+    "through the same G.711 table as the WAV path (unit-tested); other "
+    "encodings refuse. Same shared PCM-container fold and oracle "
+    "arithmetic as the sibling formats (llmdata/multimodal.py "
+    "make_au/decode_au/au_features)",
+)
+def multimodal_audio_au(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 64).select(F.col("doc_id").alias("media_id"))
+    media = MM.attach_media_meta(
+        _pack_media(ids, lambda i: MM.make_au(i, 400 + i % 5 * 60, 8000 + i % 3 * 4000)),
+        media_type="audio/basic",
+    )
+    return MM.au_features(media)
+
+
+# ---------------------------------------------------------------------------
+# WOFF web fonts: the font asset class of every page crawl
+
+
+@_register(
+    "multimodal_woff",
+    """
+    SELECT doc_id AS media_id,
+           'truetype' AS kind,
+           CAST(3 AS INT) AS n_tables,
+           CAST(10 + doc_id % 90 AS INT) AS num_glyphs,
+           CAST(1000 + (doc_id % 4) * 24 AS INT) AS units_per_em,
+           'Fixture' || chr(8201) || 'Sans ' || CAST(doc_id % 13 AS VARCHAR)
+             AS family
+    FROM documents WHERE doc_id < 256
+    """,
+    "WOFF 1.0 WEB FONTS, hash-verified — the font asset class of every "
+    "page crawl, parsed for curation metadata without rendering: the "
+    "W3C container header, the table directory with per-table zlib "
+    "inflation (compLength < origLength means deflated), maxp's glyph "
+    "count, head's magic-checked units-per-em, and the name table's "
+    "family (UTF-16BE on platform 3 — the fixture family carries a "
+    "THIN SPACE U+2009, written as an explicit escape on both engines "
+    "per the repo's NFC-hazard convention, so a latin-1-everything "
+    "parser fails the hash). WOFF2 refuses (brotli absent here) "
+    "(llmdata/multimodal.py make_woff/parse_woff/woff_features)",
+)
+def multimodal_woff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from query_engine_spark.llmdata import multimodal as MM
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter(F.col("doc_id") < 256).select(F.col("doc_id").alias("media_id"))
+    media = _pack_media(ids, MM.make_woff)
+    return MM.woff_features(media)
+
+
+def _jpeg_sql_parts() -> tuple[str, str, str]:
+    """The dispatch oracle's JPEG fragment built from the SAME Python
+    literals the decoder uses (_JPEG_IDCT_A/_JPEG_QTAB/_JPEG_ZIGZAG),
+    exactly as _jpeg_oracle() does — hand-copied constants
+    would silently diverge if the shared literals or the rounding
+    contract ever changed (review pass-2 finding)."""
+    from query_engine_spark.llmdata.multimodal import (
+        _JPEG_IDCT_A,
+        _JPEG_QTAB,
+        _JPEG_ZIGZAG,
+    )
+
+    a_rows = ", ".join(
+        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
+    )
+    used = [0, 1, 3, 8, 20, 40, 55]  # jpeg_qcoefs' nonzero zigzag indices
+    cm_rows = ", ".join(
+        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, {_JPEG_QTAB[i]})"
+        for i in used
+    )
+    half, full = 1 << 25, 1 << 26
+    fdiv = (
+        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
+        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
+    )
+    return a_rows, cm_rows, fdiv
+
+
+_JPEG_A_ROWS, _JPEG_CM_ROWS, _JPEG_FDIV = _jpeg_sql_parts()
+
+
+# ---------------------------------------------------------------------------
+# sniff -> decoder dispatch: the composed triage + decode stage
+
+
+@_register(
+    "media_decode_dispatch",
+    """
+    WITH ids AS (SELECT doc_id AS media_id, doc_id % 10 AS sel
+                 FROM documents WHERE doc_id < 320),
+    -- JPEG rows (sel 0): the verified coefficient-formula IDCT replay
+    jm AS (
+      SELECT media_id, 2 + media_id % 2 AS bw, 2 + (media_id // 2) % 2 AS bh
+      FROM ids WHERE sel = 0),
+    jblocks AS (
+      SELECT media_id, bw, bh, b.b AS bi
+      FROM jm, generate_series(0, 8) AS b(b) WHERE b.b < bw * bh),
+    cm(zi, cu, cv, q) AS (VALUES """ + _JPEG_CM_ROWS + """),
+    jcoefs AS (
+      SELECT media_id, bw, bh, bi, cm.cu, cm.cv,
+             (CASE WHEN cm.zi = 0 THEN ((media_id*7 + bi*5) % 13) - 6
+                   ELSE ((media_id*11 + bi*3 + cm.zi) % 9) - 4 END) * cm.q AS cq
+      FROM jblocks, cm),
+    a(au, ax, aval) AS (VALUES """ + _JPEG_A_ROWS + """),
+    jterms AS (
+      SELECT c.media_id, c.bw, c.bh, c.bi, px.x AS x, py.y AS y,
+             CAST(sum(c.cq * aa.aval * ab.aval) AS BIGINT) AS t
+      FROM jcoefs c, generate_series(0, 7) AS px(x), generate_series(0, 7) AS py(y)
+      JOIN a aa ON aa.au = c.cu AND aa.ax = px.x
+      JOIN a ab ON ab.au = c.cv AND ab.ax = py.y
+      GROUP BY 1, 2, 3, 4, 5, 6),
+    jpix AS (
+      SELECT media_id, bw, bh,
+             greatest(0, least(255, 128 + """ + _JPEG_FDIV + """)) AS p
+      FROM jterms),
+    jpeg_rows AS (
+      SELECT media_id, 'image/jpeg' AS mtype, CAST(bw * 8 AS INT) AS width,
+             CAST(bh * 8 AS INT) AS height, CAST(NULL AS BIGINT) AS n_samples,
+             CAST(sum(p) AS BIGINT) AS content_sum
+      FROM jpix GROUP BY 1, 2, 3, 4),
+    -- PNG rows (sel 1): formula pixels, 3 channels
+    png_rows AS (
+      SELECT i.media_id, 'image/png' AS mtype,
+             CAST(4 + i.media_id % 5 AS INT) AS width,
+             CAST(3 + i.media_id % 4 AS INT) AS height,
+             CAST(NULL AS BIGINT) AS n_samples,
+             CAST(SUM((i.media_id*31 + y.y*7 + x.x*3 + c.c) % 256) AS BIGINT)
+               AS content_sum
+      FROM ids i, generate_series(0, 6) AS y(y), generate_series(0, 8) AS x(x),
+           generate_series(0, 2) AS c(c)
+      WHERE i.sel = 1 AND y.y < 3 + i.media_id % 4 AND x.x < 4 + i.media_id % 5
+      GROUP BY 1, 2, 3, 4),
+    -- GIF rows (sel 2): palette-resolved rgb sum
+    gif_rows AS (
+      SELECT media_id, 'image/gif' AS mtype, CAST(w AS INT) AS width,
+             CAST(h AS INT) AS height, CAST(NULL AS BIGINT) AS n_samples,
+             CAST(SUM(idx + (idx*3) % 256 + (idx*7) % 256) AS BIGINT)
+               AS content_sum
+      FROM (
+        SELECT i.media_id, 28 + i.media_id % 5 AS w, 18 + i.media_id % 4 AS h,
+               (i.media_id*31 + y.y*7 + x.x*3) % 256 AS idx
+        FROM ids i, generate_series(0, 21) AS y(y), generate_series(0, 32) AS x(x)
+        WHERE i.sel = 2 AND y.y < 18 + i.media_id % 4 AND x.x < 28 + i.media_id % 5)
+      GROUP BY 1, 2, 3, 4),
+    -- WebP lossless rows (sel 3): ARGB formula, R+G+B summed
+    webp_rows AS (
+      SELECT i.media_id, 'image/webp' AS mtype,
+             CAST(9 + i.media_id % 4 AS INT) AS width,
+             CAST(8 + i.media_id % 3 AS INT) AS height,
+             CAST(NULL AS BIGINT) AS n_samples,
+             CAST(SUM((i.media_id*31 + y.y*7 + x.x*3 + c.c*11) % 256) AS BIGINT)
+               AS content_sum
+      FROM ids i, generate_series(0, 12) AS y(y), generate_series(0, 12) AS x(x),
+           generate_series(0, 2) AS c(c)
+      WHERE i.sel = 3 AND y.y < 8 + i.media_id % 3 AND x.x < 9 + i.media_id % 4
+      GROUP BY 1, 2, 3, 4),
+    -- WAV rows (sel 4): PCM16 amplitude sum
+    wav_rows AS (
+      SELECT i.media_id, 'audio/wav' AS mtype, CAST(NULL AS INT) AS width,
+             CAST(NULL AS INT) AS height,
+             CAST(600 + (i.media_id % 7) * 100 AS BIGINT) AS n_samples,
+             CAST(SUM(((i.media_id*131 + k.k*17) % 65536) - 32768) AS BIGINT)
+               AS content_sum
+      FROM ids i, generate_series(0, 1199) AS k(k)
+      WHERE i.sel = 4 AND k.k < 600 + (i.media_id % 7) * 100
+      GROUP BY 1, 2, 3, 4, 5),
+    -- TIFF rows (sel 5): grayscale formula
+    tiff_rows AS (
+      SELECT i.media_id, 'image/tiff' AS mtype,
+             CAST(9 + i.media_id % 4 AS INT) AS width,
+             CAST(8 + i.media_id % 3 AS INT) AS height,
+             CAST(NULL AS BIGINT) AS n_samples,
+             CAST(SUM((i.media_id*31 + y.y*7 + x.x*3) % 256) AS BIGINT)
+               AS content_sum
+      FROM ids i, generate_series(0, 12) AS y(y), generate_series(0, 12) AS x(x)
+      WHERE i.sel = 5 AND y.y < 8 + i.media_id % 3 AND x.x < 9 + i.media_id % 4
+      GROUP BY 1, 2, 3, 4),
+    -- BMP rows (sel 6): 24-bpp formula
+    bmp_rows AS (
+      SELECT i.media_id, 'image/bmp' AS mtype,
+             CAST(4 + i.media_id % 5 AS INT) AS width,
+             CAST(3 + i.media_id % 4 AS INT) AS height,
+             CAST(NULL AS BIGINT) AS n_samples,
+             CAST(SUM((i.media_id*31 + y.y*7 + x.x*3 + c.c) % 256) AS BIGINT)
+               AS content_sum
+      FROM ids i, generate_series(0, 6) AS y(y), generate_series(0, 8) AS x(x),
+           generate_series(0, 2) AS c(c)
+      WHERE i.sel = 6 AND y.y < 3 + i.media_id % 4 AND x.x < 4 + i.media_id % 5
+      GROUP BY 1, 2, 3, 4),
+    -- lossy VP8 (sel 7) and animated VP8X (sel 8): sniff as
+    -- image/webp, pixel decode is the documented boundary -> header
+    -- dims with honest NULL content
+    webp_nodecode_rows AS (
+      SELECT media_id, 'image/webp' AS mtype,
+             CAST(CASE WHEN sel = 7 THEN 16 + media_id % 13
+                       ELSE 14 + media_id % 4 END AS INT) AS width,
+             CAST(CASE WHEN sel = 7 THEN 16 + media_id % 9
+                       ELSE 10 + media_id % 3 END AS INT) AS height,
+             CAST(NULL AS BIGINT) AS n_samples,
+             CAST(NULL AS BIGINT) AS content_sum
+      FROM ids WHERE sel IN (7, 8)),
+    -- junk rows (sel 9): sniffed unknown, everything NULL
+    junk_rows AS (
+      SELECT media_id, 'unknown' AS mtype, CAST(NULL AS INT) AS width,
+             CAST(NULL AS INT) AS height, CAST(NULL AS BIGINT) AS n_samples,
+             CAST(NULL AS BIGINT) AS content_sum
+      FROM ids WHERE sel = 9)
+    SELECT * FROM jpeg_rows UNION ALL SELECT * FROM png_rows
+    UNION ALL SELECT * FROM gif_rows UNION ALL SELECT * FROM webp_rows
+    UNION ALL SELECT media_id, mtype, width, height, n_samples, content_sum
+      FROM wav_rows
+    UNION ALL SELECT * FROM tiff_rows UNION ALL SELECT * FROM bmp_rows
+    UNION ALL SELECT * FROM webp_nodecode_rows
+    UNION ALL SELECT * FROM junk_rows
+    """,
+    "SNIFF -> DECODER DISPATCH, hash-verified — the composed ingest "
+    "stage a crawl media pipeline actually runs: sniff_media_type "
+    "classifies every payload as a PURE COLUMN EXPRESSION (codegen, "
+    "scan speed), then ONE map-only Arrow pass routes each payload to "
+    "its family decoder BY THE SNIFFED TYPE — JPEG (entropy decode + "
+    "integer IDCT), PNG (inflate + unfilter), GIF (LZW + palette), "
+    "lossless WebP (VP8L), WAV (PCM16), TIFF (strips), BMP — into one "
+    "unified census schema (dims + content sum / sample count + "
+    "amplitude sum), with honest NULLs for unknown payloads. A "
+    "misrouted payload fails inside the family decoder instead of "
+    "producing numbers from garbage. The oracle recomputes every "
+    "family's content from its construction formulas, incl. the JPEG "
+    "coefficient->IDCT replay (llmdata/multimodal.py sniff_media_type/"
+    "decode_dispatch_features)",
+)
+def media_decode_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from typing import Iterator
+
+    import pandas as pd
+
+    from query_engine_spark.llmdata import multimodal as MM
+    from query_engine_spark.llmdata import webp as WB
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 320)
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = []
+            for i in pdf["doc_id"]:
+                i = int(i)
+                sel = i % 10
+                if sel == 0:
+                    b = MM.make_jpeg(i, 2 + i % 2, 2 + (i // 2) % 2)
+                elif sel == 1:
+                    b = MM.make_png(i, 4 + i % 5, 3 + i % 4)
+                elif sel == 2:
+                    b = MM.make_gif(i, 28 + i % 5, 18 + i % 4)
+                elif sel == 3:
+                    b = WB.make_webp(i, 9 + i % 4, 8 + i % 3)
+                elif sel == 4:
+                    b = MM.make_wav(i, 600 + (i % 7) * 100)
+                elif sel == 5:
+                    b = MM.make_tiff(i, 9 + i % 4, 8 + i % 3)
+                elif sel == 6:
+                    b = MM.make_bmp(i, 4 + i % 5, 3 + i % 4)
+                elif sel == 7:
+                    b = WB.make_webp_lossy(i, 16 + i % 13, 16 + i % 9)
+                elif sel == 8:
+                    b = WB.make_webp_animated(i)
+                else:
+                    b = bytes((i * 7 + k) % 251 + 1 for k in range(24))
+                payloads.append(b)
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+
+    media = docs.select("doc_id").mapInPandas(pack, "media_id long, payload binary")
+    sniffed = media.withColumn("mtype", MM.sniff_media_type(F.col("payload")))
+    return MM.decode_dispatch_features(sniffed)
+
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: REGISTRY[name].fn for name in _driver_order()}
+    return {name: spec.fn for name, spec in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: REGISTRY[name].oracle for name in _driver_order() if REGISTRY[name].oracle is not None
-    }
-
-
-def _absorb_r8_candidates(candidates) -> None:
-    """Round-8 registration of the registry_r8 candidates (built and
-    oracle-validated in round 7, held out of the r7 driver window by the
-    rotation budget). Called by registry_r8 at the END of its own module
-    body — a callback rather than a plain loop here so that the
-    registration sees the COMPLETE candidate dict regardless of which
-    module is imported first (registry_r8's decorators call back into this
-    module at its own import time, so an import-time loop here would see a
-    partially initialized CANDIDATES when registry_r8 leads the import)."""
-    for name, spec in candidates.items():
-        if name in REGISTRY:  # pragma: no cover - absorb runs once
-            raise ValueError(f"duplicate registration: {name}")
-        REGISTRY[name] = QuerySpec(fn=spec.fn, oracle=spec.oracle, doc=spec.doc)
-
-
-# Trigger registration when this module is the entry point; registry_r8's
-# module body ends with the _absorb_r8_candidates callback. (Import only —
-# no attribute access — so the partial-module case is harmless.)
-from query_engine_spark import registry_r8 as _r8  # noqa: E402,F401
-
-
-def _absorb_r9_candidates(candidates) -> None:
-    """Round-9 registration of the registry_r9 candidates (built and
-    oracle-validated across round 8's windows, held out of the r8 driver
-    window by the rotation budget; the five least-user-frequent moved to
-    the registry_r10 pool to buy the window's re-verification slots —
-    see COVERAGE.md round-9 delta). Same end-of-module callback shape as
-    _absorb_r8_candidates so registration sees the COMPLETE candidate
-    dict regardless of import order."""
-    for name, spec in candidates.items():
-        if name in REGISTRY:  # pragma: no cover - absorb runs once
-            raise ValueError(f"duplicate registration: {name}")
-        REGISTRY[name] = QuerySpec(fn=spec.fn, oracle=spec.oracle, doc=spec.doc)
-
-
-from query_engine_spark import registry_r9 as _r9  # noqa: E402,F401
-
-
-def _absorb_r10_candidates(candidates) -> None:
-    """Round-10 registration of the registry_r10 candidates (QOI and FITS
-    built in round 8's continuation windows, the five least-user-frequent
-    r9 candidates moved to the pool in round 9 to buy re-verification
-    slots, and the round-9-built sniff->decoder dispatch stage). Same
-    end-of-module callback shape as _absorb_r8/_r9_candidates so the
-    registration sees the COMPLETE candidate dict regardless of import
-    order."""
-    for name, spec in candidates.items():
-        if name in REGISTRY:  # pragma: no cover - absorb runs once
-            raise ValueError(f"duplicate registration: {name}")
-        REGISTRY[name] = QuerySpec(fn=spec.fn, oracle=spec.oracle, doc=spec.doc)
-
-
-from query_engine_spark import registry_r10 as _r10  # noqa: E402,F401
+    return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None}

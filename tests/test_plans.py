@@ -367,15 +367,42 @@ def test_jpeg_color_stage_map_only(spark):
     assert "Join" not in p
 
 
-def test_r9_candidate_decode_chains_map_only(spark):
-    """Every round-9 candidate holds its 100 TB plan shape, asserted
-    before shipping into the registry: decode/metadata chains are
-    pack -> feature fold in chained Arrow stages with ZERO exchanges;
-    the two archive-ingest roundtrips carry exactly ONE exchange (the
-    groupBy(archive_id) pack shuffle) and stay map-only below it. No
-    candidate ever joins or goes cartesian."""
-    from query_engine_spark.registry_r9 import CANDIDATES
+# codec, container/interchange and crawl-suite queries whose plan shapes
+# are pinned by category below
+DECODE_CHAIN_QUERIES = (
+    "multimodal_tiff_rgb", "multimodal_bmp_rle8", "multimodal_png_packed",
+    "multimodal_audio_multichannel", "multimodal_audio_flac24",
+    "multimodal_audio_wav_extensible", "multimodal_bmp_topdown",
+    "multimodal_png_trns", "multimodal_exif_metadata",
+    "multimodal_jpeg_oriented", "multimodal_jpeg_cmyk", "llm_zip_ingest",
+    "llm_zip64_ingest", "llm_tar_ingest", "multimodal_id3_metadata",
+    "multimodal_mp3_frames", "text_nfc_normalize", "llm_tar_mixed_ingest",
+    "llm_jsonl_roundtrip", "multimodal_pdf_text", "multimodal_pdf_xrefstream",
+    "multimodal_ico", "llm_sitemap_frontier", "llm_epub_ingest",
+    "llm_robots_rules", "llm_mbox_ingest", "llm_export_manifest",
+    "llm_csv_roundtrip", "llm_cdx_select", "llm_html_metadata",
+    "llm_html_outlinks", "multimodal_webp", "multimodal_webp_palette",
+    "crawl_frontier_bloom", "crawl_schedule", "multimodal_webp_animated",
+    "crawl_politeness_schedule", "crawl_host_rank", "llm_robots_wildcards",
+    "llm_html_jsonld", "llm_tar_longnames", "media_type_sniff",
+    "llm_html_image_pairs", "multimodal_image_text_pairs",
+)
 
+# QOI, FITS, subtitles, PNM, SVG, AU, WOFF and the sniff -> decoder
+# dispatch stage: pure pack -> decode chains
+MAP_ONLY_CODEC_QUERIES = (
+    "multimodal_qoi", "multimodal_fits", "multimodal_subtitles",
+    "multimodal_pnm", "multimodal_svg", "multimodal_audio_au",
+    "multimodal_woff", "media_decode_dispatch",
+)
+
+
+def test_r9_candidate_decode_chains_map_only(spark):
+    """Every decode-chain query holds its 100 TB plan shape:
+    decode/metadata chains are pack -> feature fold in chained Arrow
+    stages with ZERO exchanges; the archive-ingest roundtrips carry
+    exactly ONE exchange (the groupBy(archive_id) pack shuffle) and stay
+    map-only below it. None ever joins or goes cartesian."""
     # pack_archives groups documents into bounded archives: one shuffle
     # by design, the extraction below it map-only
     ONE_SHUFFLE = {
@@ -405,8 +432,8 @@ def test_r9_candidate_decode_chains_map_only(spark):
     # pure broadcast-join gates/assemblies: ZERO data shuffles, BHJ only
     BROADCAST_ONLY = {"llm_robots_wildcards", "multimodal_image_text_pairs"}
 
-    for name, spec in CANDIDATES.items():
-        df = spec.fn(spark, SF)
+    for name in DECODE_CHAIN_QUERIES:
+        df = registry.REGISTRY[name].fn(spark, SF)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
@@ -440,6 +467,14 @@ def test_r9_candidate_decode_chains_map_only(spark):
         else:
             assert "Exchange" not in p, name
             assert "Join" not in p, name
+        assert "CartesianProduct" not in p, name
+
+
+def test_r10_candidate_plans_map_only(spark):
+    for name in MAP_ONLY_CODEC_QUERIES:
+        p = plan_of(spark, name)
+        assert "Exchange" not in p, name
+        assert "Join" not in p, name
         assert "CartesianProduct" not in p, name
 
 

@@ -1,63 +1,26 @@
-"""Round-10 queries (registry_r10.py): validated against their DuckDB
-oracles at TWO scales through the selfcheck compare, and — as of round
-10 — REGISTERED into the main registry via the end-of-module callback
-(the same import-order-safe device as registry_r8/_r9), leading the
-round-10 driver window as never-verified."""
+"""The QOI, FITS, subtitle, PNM, SVG, AU and WOFF decoders and the
+sniff -> decoder dispatch against their DuckDB oracles at two scales,
+through test_oracles.check_against_oracle."""
 
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
-
 from query_engine_spark.registry import REGISTRY
-from query_engine_spark.registry_r9 import CANDIDATES as R9
-from query_engine_spark.registry_r10 import CANDIDATES
-
-SF_DIRS = [
-    os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001"),
-    os.environ.get("SPARK_GRAFT_SF_DIR_MID", "/root/testdata/sf0.01"),
-]
+from test_oracles import SF_DIRS, check_against_oracle
+from test_plans import DECODE_CHAIN_QUERIES, MAP_ONLY_CODEC_QUERIES
 
 
 def test_r10_candidates_registered():
-    missing = [n for n in CANDIDATES if n not in REGISTRY]
-    assert not missing, f"r10 candidates must be registered in r10: {missing}"
-    overlap = [n for n in CANDIDATES if n in R9]
-    assert not overlap, f"r10 candidates must not shadow r9 names: {overlap}"
+    missing = [n for n in MAP_ONLY_CODEC_QUERIES if n not in REGISTRY]
+    assert not missing, f"queries not in REGISTRY: {missing}"
+    overlap = [n for n in MAP_ONLY_CODEC_QUERIES if n in DECODE_CHAIN_QUERIES]
+    assert not overlap, f"listed in both pools: {overlap}"
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS, ids=[os.path.basename(d) for d in SF_DIRS])
-@pytest.mark.parametrize("name", sorted(CANDIDATES))
+@pytest.mark.parametrize("name", sorted(MAP_ONLY_CODEC_QUERIES))
 def test_r10_candidate_matches_oracle(spark, name, sf_dir):
-    from tools.selfcheck import compare, load_duck
-
-    spec = CANDIDATES[name]
-    spark_pdf = spec.fn(spark, sf_dir).toPandas()
-    con = load_duck(sf_dir)
-    try:
-        duck_pdf = con.execute(spec.oracle).fetchdf()
-    finally:
-        con.close()
-    problems = compare(spark_pdf, duck_pdf)
-    assert not problems, (name, problems)
-    assert len(spark_pdf) > 0, name
-
-
-def test_r10_candidate_plans_map_only(spark):
-    import contextlib
-    import io
-
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
-    for name, spec in CANDIDATES.items():
-        df = spec.fn(spark, sf)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        p = buf.getvalue()
-        assert "Exchange" not in p, name
-        assert "Join" not in p, name
-        assert "CartesianProduct" not in p, name
+    check_against_oracle(spark, name, sf_dir)

@@ -1,50 +1,22 @@
-"""Round-8 registered cohort validated against their DuckDB oracles at TWO
-scales — the same compare as tools/selfcheck.py (sorted columns/rows,
-dtype checks, exact values). The r7 verdict flagged that the candidate
-test pinned a single scale unless an env var was set, the exact blind
-spot the three-scale ritual exists to avoid (the r5 sweep caught two real
-bugs that way); this parametrizes sf0.001 AND sf0.01 in CI. One test per
-(candidate, scale) for attributable failures.
-
-The candidates are now registered in the main registry (round 8), so the
-names are read from registry_r8.CANDIDATES but executed through REGISTRY
-— pinning both the specs and the registration plumbing."""
+"""The media-codec and curation-pipeline queries against their DuckDB
+oracles at two scales, through test_oracles.check_against_oracle."""
 
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
-
 from query_engine_spark.registry import REGISTRY
-from query_engine_spark.registry_r8 import CANDIDATES
-
-SF_DIRS = [
-    os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001"),
-    os.environ.get("SPARK_GRAFT_SF_DIR_MID", "/root/testdata/sf0.01"),
-]
+from test_oracles import MEDIA_CODEC_QUERIES, SF_DIRS, check_against_oracle
 
 
 def test_candidates_registered():
-    missing = [n for n in CANDIDATES if n not in REGISTRY]
-    assert not missing, f"candidates not absorbed into REGISTRY: {missing}"
+    missing = [n for n in MEDIA_CODEC_QUERIES if n not in REGISTRY]
+    assert not missing, f"queries not in REGISTRY: {missing}"
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS, ids=[os.path.basename(d) for d in SF_DIRS])
-@pytest.mark.parametrize("name", sorted(CANDIDATES))
+@pytest.mark.parametrize("name", sorted(MEDIA_CODEC_QUERIES))
 def test_r8_candidate_matches_oracle(spark, name, sf_dir):
-    from tools.selfcheck import compare, load_duck
-
-    spec = REGISTRY[name]
-    spark_pdf = spec.fn(spark, sf_dir).toPandas()
-    con = load_duck(sf_dir)
-    try:
-        duck_pdf = con.execute(spec.oracle).fetchdf()
-    finally:
-        con.close()
-    problems = compare(spark_pdf, duck_pdf)
-    assert not problems, (name, problems)
-    assert len(spark_pdf) > 0, name
+    check_against_oracle(spark, name, sf_dir)

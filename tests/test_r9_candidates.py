@@ -1,68 +1,29 @@
-"""Round-9 registered cohort validated against their DuckDB oracles at
-TWO scales — the same compare as tools/selfcheck.py (sorted columns/rows,
-dtype checks, exact values), parametrized over sf0.001 AND sf0.01. The
-candidates were built and held out through round 8 and are now absorbed
-into registry.REGISTRY (round 9), so the names are read from
-registry_r9.CANDIDATES but executed through REGISTRY — pinning both the
-specs and the registration plumbing (the same shape as test_r8_oracles).
-The five least-user-frequent candidates moved to the registry_r10 pool
-to free driver-window slots (COVERAGE.md round-9 delta)."""
+"""The decode-chain, archive-ingest and crawl queries, and the WebP
+metadata census, against their DuckDB oracles at two scales, through
+test_oracles.check_against_oracle."""
 
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
-
 from query_engine_spark.registry import REGISTRY
-from query_engine_spark.registry_r9 import CANDIDATES
-
-SF_DIRS = [
-    os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001"),
-    os.environ.get("SPARK_GRAFT_SF_DIR_MID", "/root/testdata/sf0.01"),
-]
+from test_oracles import SF_DIRS, WEBP_LOSSY_META, check_against_oracle
+from test_plans import DECODE_CHAIN_QUERIES
 
 
 def test_candidates_registered():
-    missing = [n for n in CANDIDATES if n not in REGISTRY]
-    assert not missing, f"candidates not absorbed into REGISTRY: {missing}"
+    missing = [n for n in DECODE_CHAIN_QUERIES if n not in REGISTRY]
+    assert not missing, f"queries not in REGISTRY: {missing}"
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS, ids=[os.path.basename(d) for d in SF_DIRS])
-@pytest.mark.parametrize("name", sorted(CANDIDATES))
+@pytest.mark.parametrize("name", sorted(DECODE_CHAIN_QUERIES))
 def test_r9_candidate_matches_oracle(spark, name, sf_dir):
-    from tools.selfcheck import compare, load_duck
-
-    spec = REGISTRY[name]
-    spark_pdf = spec.fn(spark, sf_dir).toPandas()
-    con = load_duck(sf_dir)
-    try:
-        duck_pdf = con.execute(spec.oracle).fetchdf()
-    finally:
-        con.close()
-    problems = compare(spark_pdf, duck_pdf)
-    assert not problems, (name, problems)
-    assert len(spark_pdf) > 0, name
+    check_against_oracle(spark, name, sf_dir)
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS, ids=[os.path.basename(d) for d in SF_DIRS])
 def test_webp_lossy_meta_matches_oracle(spark, sf_dir):
-    """`multimodal_webp_lossy_meta` was registered directly (not via a
-    candidate module), so it needs its own two-scale oracle pin — review
-    pass-2 finding: without this, a census regression would surface only
-    at the driver window."""
-    from tools.selfcheck import compare, load_duck
-
-    spec = REGISTRY["multimodal_webp_lossy_meta"]
-    spark_pdf = spec.fn(spark, sf_dir).toPandas()
-    con = load_duck(sf_dir)
-    try:
-        duck_pdf = con.execute(spec.oracle).fetchdf()
-    finally:
-        con.close()
-    problems = compare(spark_pdf, duck_pdf)
-    assert not problems, problems
-    assert len(spark_pdf) > 0
+    check_against_oracle(spark, WEBP_LOSSY_META, sf_dir)

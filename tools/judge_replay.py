@@ -1,11 +1,10 @@
-"""One-command judge replay of the driver's correctness protocol
-(r12 verdict ask #8): register DuckDB views over a sf dir, run any
-registry query on BOTH engines, and emit a CORRECTNESS-style record per
-query — rows_match / schema_match / hash_match / spark_rows /
-oracle_rows / err — using the driver's canonicalization (columns sorted
-BY NAME, rows sorted, values hashed), so an independent audit needs no
-code of its own and its artifact diffs directly against
-CORRECTNESS_r{N}.json rows.
+"""One-command replay of the driver's correctness protocol: register
+DuckDB views over a sf dir, run any registry query on BOTH engines, and
+emit a CORRECTNESS-style record per query — rows_match / schema_match /
+hash_match / spark_rows / oracle_rows / err — using the driver's
+canonicalization (columns sorted BY NAME, rows sorted, values hashed),
+so an independent audit needs no code of its own and its artifact diffs
+directly against CORRECTNESS_r{N}.json rows.
 
 This intentionally duplicates none of tools/selfcheck.py's
 field-by-field diagnostics: selfcheck explains WHY a query diverges;
@@ -14,10 +13,9 @@ judge_replay reproduces WHAT the driver records.
 Usage:
     PYTHONPATH=/root/repo python tools/judge_replay.py [sf_dir] [query ...]
 
-With no query names, replays the driver's exact window —
-`registry._driver_order()[:50]`. Pass `--all` to replay the full
-registry. Output: one JSON object keyed by query name (stdout), driver
-artifact shape.
+With no query names, replays the whole registry in registration order.
+Output: one JSON object keyed by query name (stdout), driver artifact
+shape.
 """
 
 from __future__ import annotations
@@ -109,9 +107,7 @@ def replay(name: str, spec, spark, con, sf_dir: str) -> dict:
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:]]
-    run_all = "--all" in args
-    args = [a for a in args if a != "--all"]
+    args = sys.argv[1:]
     sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
     names = [a for a in args if not os.path.isdir(a)]
 
@@ -122,9 +118,7 @@ def main() -> int:
     spark = get_spark("judge_replay")
     con = load_duck(sf_dir)
 
-    if not names:
-        order = registry._driver_order()
-        names = list(registry.REGISTRY) if run_all else order[:50]
+    names = names or list(registry.REGISTRY)
 
     out: dict[str, dict] = {}
     t0 = time.time()

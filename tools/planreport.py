@@ -27,10 +27,7 @@ def main() -> int:
     spark = get_spark("planreport")
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, dict] = {}
-    # the full registry — as of round 10 the registry_r10 pool is
-    # registered, so no held-out candidate prefix remains
-    inventory = dict(registry.REGISTRY)
-    for name, spec in inventory.items():
+    for name, spec in registry.REGISTRY.items():
         try:
             df = spec.fn(spark, sf_dir)
             buf = io.StringIO()

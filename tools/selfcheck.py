@@ -97,9 +97,10 @@ def main() -> int:
             n_fail += 1
             continue
         if spec.oracle is None:
-            status = "ROWS" if len(sdf) >= 0 else "FAIL"
-            print(f"{status} {name}: rows={len(sdf)} ({time.time()-t0:.1f}s, no oracle)")
-            n_pass += 1
+            ok = len(sdf) > 0
+            print(f"{'ROWS' if ok else 'FAIL'} {name}: rows={len(sdf)} ({time.time()-t0:.1f}s, no oracle)")
+            n_pass += ok
+            n_fail += not ok
             continue
         try:
             ddf = con.execute(spec.oracle).df()
