@@ -7,7 +7,7 @@ Prints the full JSON record:
 followed by ONE summary JSON line as the FINAL stdout line
 (metric/value/queries/first_pass/calibration_sec/best_ever_total/sf) —
 the driver keeps only the output tail, which truncated inside the full
-record's THREE per-query dicts and left BENCH_r{5..9}.json with
+record's THREE per-query dicts and left the r5-r9 bench records with
 "parsed": null; the final line carries only the this-run per-query
 minima (~1.5 KB) so it parses whole within the tail capture while
 giving the driver's PERF comparison its per-query map back (r16

@@ -66,7 +66,7 @@ def curation_flags(
     # cached, both read the narrow (id, fp, quality, lang) rows once and
     # the join form is bench-neutral vs the window (interleaved min-of-4:
     # 2.381 vs 2.352 s, every run pair within noise —
-    # tools/r17_ab_curation.py).
+    # OPTIMIZATION_r17.md changes table, llm_curation_flags).
     base = tracked_persist(df.select(
         did.alias("doc_id"),
         D.fingerprint(F.col(text_col)).alias("__fp"),

@@ -335,7 +335,7 @@ def minhash_dedup_pairs(
     table, and the two verify-join shingle sides) sit directly above it —
     ReuseExchange dedups the scan at runtime and the persist was pure
     block-store overhead. Interleaved min-of-4 on dedup_minhash_lsh at
-    sf0.1 (tools/r17_ab_lsh.py): banded-persist-only 0.993 s vs
+    sf0.1 (OPTIMIZATION_r17.md changes table): banded-persist-only 0.993 s vs
     banded+df 1.105 s vs neither 1.044 s vs df-only 1.222 s — the banded
     persist stays (its self-join sides share no exchange above it)."""
     df = df.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))

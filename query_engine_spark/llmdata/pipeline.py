@@ -199,13 +199,13 @@ def translate_curation_pipeline(
                 # per-(doc, bucket) pre-agg exchange barely collapses (docs
                 # spread over 4096 buckets) and shuffles ~one row per token
                 # — unfused 1.99 s vs fused 2.41 s
-                # (tools/r16_ab_classifier.py); (r17, verdict item 3) a
+                # (OPTIMIZATION_r16.md REVERTED table); (r17, verdict item 3) a
                 # PERSISTED un-aggregated (doc_id, __pos, bkt) per-token
                 # table feeding both groupBys — the block-store
                 # materialization of one row per token costs more than the
                 # duplicate explode+md5 it saves: full neardup pipeline
                 # interleaved min-of-4, 2.94 s unfused vs 3.38 s shared
-                # (tools/r17_ab_neardup.py). The two groupBys'
+                # (OPTIMIZATION_r17.md REVERTED table). The two groupBys'
                 # map-side partial aggregation (≤n_buckets / per-doc rows
                 # shuffled) keeps winning; guide §2.3.
                 model = Tx.train_hashed_classifier(df, label, n_buckets=n_buckets)

@@ -227,8 +227,8 @@ def srp_near_dup_pairs(
     # dot/(na*nb) is the same IEEE ops in the same order as
     # dot/(l2(a)*l2(b)), so round(...,6) cannot drift (parity-verified;
     # neutral at sf0.1's 581 output pairs — 0.972 vs 0.967 s interleaved —
-    # and structural where candidates ≫ vectors; tools/r17_ab_srp.py,
-    # which also re-checked both persists under the AQE-reuse lens:
+    # and structural where candidates ≫ vectors; OPTIMIZATION_r17.md
+    # changes table — the same A/B re-checked both persists under the AQE-reuse lens:
     # UNLIKE simhash, dropping the signature persist here regresses
     # 0.97 -> 1.87 s, so both persists stay).
     va = embeddings.select(
@@ -285,7 +285,7 @@ def assign_cells(
     r17 re-check: with semdedup's assignment output now persisted (the
     re-evaluation that sank variant (a) in r16 is gone), the fold was
     re-measured on all four real consumers' full queries
-    (tools/r17_ab_assign.py, interleaved min-of-3, parity-verified) and
+    (interleaved min-of-3, parity-verified; OPTIMIZATION_r17.md REVERTED table) and
     still LOST everywhere: semdedup 2.53 window vs 3.00 fold, kmeans 1.75
     vs 2.50, ivf_topk 0.88 vs 1.64, ivfpq_topk 4.88 vs 6.28 — the
     per-element struct-building aggregate fold is simply slower than the
@@ -1214,7 +1214,7 @@ def semdedup(
     # the window, re-running the sort/rank/dot products per branch).
     # Measured NEUTRAL at sf0.1 (full-query min-of-4 incl. construction:
     # 2.81 s persisted vs 2.92 s not, overlapping bands —
-    # tools/r17_ab_semdedup.py; the 2000-row table persists for free);
+    # OPTIMIZATION_r17.md changes table; the 2000-row table persists for free);
     # kept for scale, where the replayed branch is a second full pass over
     # the embedding corpus vs caching two integer columns per vector
     # (r16 verdict item 7).

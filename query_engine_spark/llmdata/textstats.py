@@ -754,7 +754,7 @@ def lm_score_docs(
         # reusing that exchange) was RE-MEASURED UNPERSISTED in r17 per the
         # r16 verdict item 6 and still lost: 0.90 s direct vs 1.25 s shared
         # (backoff 1.56 vs 1.73 s), interleaved same-session min-of-3,
-        # tools/r17_ab_lm.py. Mechanism: the rollup's reused exchange
+        # OPTIMIZATION_r17.md REVERTED table. Mechanism: the rollup's reused exchange
         # carries one row per (doc, gram) — the direct explode→groupBy(g)
         # map-side-combines to ≤|vocab| rows per task before shuffling
         # (guide §2.3 "aggregate before you shuffle"), the same reason the
@@ -833,7 +833,7 @@ def stupid_backoff_score(
     # Both LM tables keep their own corpus explode: deriving the trigram
     # LM from dg's rollup (shared (doc_id, g) exchange, AQE-reused) was
     # re-measured UNPERSISTED in r17 and lost, 1.56 s direct vs 1.73 s
-    # shared (tools/r17_ab_lm.py, interleaved min-of-3) — the reused
+    # shared (interleaved min-of-3, OPTIMIZATION_r17.md REVERTED table) — the reused
     # exchange ships per-(doc, gram) rows while the direct explode's
     # groupBy(g) map-side-combines to ≤|vocab| rows per task first
     # (guide §2.3); see lm_score_docs for the full note.

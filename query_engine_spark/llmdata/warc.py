@@ -257,7 +257,7 @@ def warc_documents(df: DataFrame) -> DataFrame:
 # (r14 pinned divergence, now fixed). The prefix crosses earlier
 # quoted attributes (quotes are not in its class) but never a '>', so
 # body text can't reach in-tag anchors. The two naive alternatives
-# were probed and rejected in tools/r15_html_candidate.py: a
+# were probed and rejected (`git show c14cfb8:tools/r15_html_candidate.py`): a
 # first-attribute-only prefix fails multi-attribute tags, and an
 # attr-hop marking design scans values that protection hasn't reached
 # yet. Each pass still handles one '<' and one '>' per TAG in any
@@ -289,7 +289,7 @@ def warc_documents(df: DataFrame) -> DataFrame:
 # depend on their terminators, never on opener literals inside, and
 # terminator literals in script text keep ending blocks exactly where
 # a browser would. Incidence measured before the fix
-# (tools/r16_capacity_incidence.py): ~56% of pages whose handler
+# (`git show c14cfb8:tools/r16_capacity_incidence.py`): ~56% of pages whose handler
 # attribute carries a block-opener literal lost content. Remaining
 # capacity line: an opener PRECEDED in the same value by a raw
 # non-opener '<' stays unprotected (the linear value scan stops at the
@@ -513,7 +513,7 @@ def protected_html(col: Column) -> Column:
     re-evaluates. Binding each stage's output to a lambda variable
     makes the repeats O(1) references, so per-row work is exactly one
     pre-pass + one strip + one protect regardless of evaluation mode
-    (tools/r16_extractor_ab.py is the measurement)."""
+    (`git show c14cfb8:tools/r16_extractor_ab.py` is the measurement)."""
     return _bind_once(
         protect_quoted_block_openers(col),
         lambda p1: _bind_once(
@@ -1185,7 +1185,7 @@ def html_metadata(col: Column) -> dict[str, Column]:
     # chain instances across five fields), and the HOF-bearing fields
     # are CodegenFallback, where no subexpression elimination reaches —
     # ungated, the r16 A/B measured the five-field projection paying
-    # the chain per field (tools/r16_extractor_ab.py).
+    # the chain per field (`git show c14cfb8:tools/r16_extractor_ab.py`).
     prot = protected_html(col)
 
     def _fields(col: Column) -> Column:
@@ -1300,7 +1300,7 @@ def outlink_edges(df: DataFrame, *, html_col: str = "html",
         # textually repeat their input subtrees; binding the pipeline
         # to a lambda variable guarantees ONE evaluation per row even
         # where subexpression elimination cannot reach (CodegenFallback
-        # contexts) — see tools/r16_extractor_ab.py
+        # contexts) — see `git show c14cfb8:tools/r16_extractor_ab.py`
         _bind_once(
             protected_html(F.col(html_col)),
             lambda p: F.regexp_extract_all(p, F.lit(_A_TAG_RE), F.lit(0)),
@@ -1480,7 +1480,7 @@ def image_refs(df: DataFrame, *, html_col: str = "html",
         # quoted-angle protection (ADVICE r12): alt text like "a<b" would
         # otherwise hide the whole tag from the linear _IMG_RE
         # bind_once (r16): one evaluation of the gated pipeline per row
-        # (see outlink_edges / tools/r16_extractor_ab.py)
+        # (see outlink_edges / `git show c14cfb8:tools/r16_extractor_ab.py`)
         _bind_once(
             protected_html(F.col(html_col)),
             lambda p: F.regexp_extract_all(p, F.lit(_IMG_RE), F.lit(0)),

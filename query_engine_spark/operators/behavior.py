@@ -162,7 +162,7 @@ def pagerank(
     many-iteration runs. Off by default: at the declared queries' iters=3
     AQE's runtime exchange reuse already dedups the re-embedded edge
     subtrees and a checkpoint is overhead (r16 cadence table, sf0.1,
-    tools/r16_ab_pagerank.py: iters=3 uncut 1.35 s vs 1.54/1.62 s at
+    OPTIMIZATION_r16.md graph_pagerank: iters=3 uncut 1.35 s vs 1.54/1.62 s at
     k=2/4; r8 measured a persist regressing 2.56 -> 4.35 s the same way).
     Past a handful of iterations the uncut lineage's plan-compile/AQE
     re-planning cost explodes and then kills the driver: iters=8 uncut

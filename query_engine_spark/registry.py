@@ -3771,15 +3771,19 @@ def multimodal_gif_local_palettes(spark: SparkSession, sf_dir: str) -> DataFrame
     return MM.gif_composited_rgb_features(media)
 
 
-def _jpeg_oracle() -> str:
-    """DuckDB SQL reproducing decode_jpeg's output from the coefficient
-    formula: dezigzag + dequant + the SAME fixed-point integer IDCT
-    (literal basis table, explicit floor division — DuckDB's // truncates)
-    — a lossy codec verified by hash because the decoder's arithmetic is
-    exactly specified."""
+def _jpeg_sql_parts() -> tuple[str, str, str, str]:
+    """The JPEG oracles' shared SQL pieces, built from the SAME Python
+    literals the decoder uses (_JPEG_IDCT_A/_JPEG_QTAB/_JPEG_QTAB_C/
+    _JPEG_ZIGZAG) — hand-copied constants would silently diverge if the
+    shared literals or the rounding contract ever changed. Returns the
+    IDCT basis `VALUES` rows (au, ax, aval), the coefficient map rows
+    (zi, cu, cv, q) for luma-only oracles and (zi, cu, cv, q0, q1) for
+    luma+chroma ones, and the IDCT output's floor division of `t` by
+    2^26 with rounding (DuckDB's // truncates)."""
     from query_engine_spark.llmdata.multimodal import (
         _JPEG_IDCT_A,
         _JPEG_QTAB,
+        _JPEG_QTAB_C,
         _JPEG_ZIGZAG,
     )
 
@@ -3787,15 +3791,41 @@ def _jpeg_oracle() -> str:
         f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
     )
     used = [0, 1, 3, 8, 20, 40, 55]  # jpeg_qcoefs' nonzero zigzag indices
-    cmap = ", ".join(
+    cm_rows = ", ".join(
         f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, {_JPEG_QTAB[i]})"
         for i in used
     )
+    cmc_rows = ", ".join(
+        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, "
+        f"{_JPEG_QTAB[i]}, {_JPEG_QTAB_C[i]})"
+        for i in used
+    )
     half, full = 1 << 25, 1 << 26
-    fd = (
+    fdiv = (
         f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
         f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
     )
+    return a_rows, cm_rows, cmc_rows, fdiv
+
+
+_JPEG_A_ROWS, _JPEG_CM_ROWS, _JPEG_CMC_ROWS, _JPEG_FDIV = _jpeg_sql_parts()
+
+
+def _fd16(v: str) -> str:
+    """Floor division of the SQL expression `v` by 2^16 with rounding: the
+    fixed-point YCbCr→RGB step of the color JPEG oracles."""
+    return (
+        f"(({v} + 32768) // 65536) - (CASE WHEN ({v} + 32768) % 65536 != 0 "
+        f"AND {v} + 32768 < 0 THEN 1 ELSE 0 END)"
+    )
+
+
+def _jpeg_oracle() -> str:
+    """DuckDB SQL reproducing decode_jpeg's output from the coefficient
+    formula: dezigzag + dequant + the SAME fixed-point integer IDCT
+    (literal basis table, explicit floor division — DuckDB's // truncates)
+    — a lossy codec verified by hash because the decoder's arithmetic is
+    exactly specified."""
     return f"""
     WITH m AS (
       SELECT doc_id AS media_id, 2 + doc_id % 2 AS bw, 2 + (doc_id // 2) % 2 AS bh
@@ -3803,13 +3833,13 @@ def _jpeg_oracle() -> str:
     blocks AS (
       SELECT media_id, bw, bh, b.b AS bi
       FROM m, generate_series(0, 8) AS b(b) WHERE b.b < bw * bh),
-    cm(zi, cu, cv, q) AS (VALUES {cmap}),
+    cm(zi, cu, cv, q) AS (VALUES {_JPEG_CM_ROWS}),
     coefs AS (
       SELECT media_id, bw, bh, bi, cm.cu, cm.cv,
              (CASE WHEN cm.zi = 0 THEN ((media_id*7 + bi*5) % 13) - 6
                    ELSE ((media_id*11 + bi*3 + cm.zi) % 9) - 4 END) * cm.q AS cq
       FROM blocks, cm),
-    a(au, ax, aval) AS (VALUES {a_rows}),
+    a(au, ax, aval) AS (VALUES {_JPEG_A_ROWS}),
     terms AS (
       SELECT c.media_id, c.bw, c.bh, c.bi, px.x AS x, py.y AS y,
              CAST(sum(c.cq * aa.aval * ab.aval) AS BIGINT) AS t
@@ -3819,7 +3849,7 @@ def _jpeg_oracle() -> str:
       GROUP BY 1, 2, 3, 4, 5, 6),
     pix AS (
       SELECT media_id, bw, bh, bi, x, y,
-             greatest(0, least(255, 128 + {fd})) AS p
+             greatest(0, least(255, 128 + {_JPEG_FDIV})) AS p
       FROM terms)
     SELECT media_id, CAST(bw * 8 AS INT) AS width, CAST(bh * 8 AS INT) AS height,
            CAST(sum(p) AS BIGINT) AS px_sum,
@@ -3861,34 +3891,6 @@ def _jpeg_color_oracle() -> str:
     """Three IDCT plane chains (per-component quant tables and coefficient
     formulas) + the fixed-point YCbCr→RGB conversion with explicit floor
     shifts — the color half of the deterministic-decoder contract."""
-    from query_engine_spark.llmdata.multimodal import (
-        _JPEG_IDCT_A,
-        _JPEG_QTAB,
-        _JPEG_QTAB_C,
-        _JPEG_ZIGZAG,
-    )
-
-    a_rows = ", ".join(
-        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
-    )
-    used = [0, 1, 3, 8, 20, 40, 55]
-    cmap = ", ".join(
-        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, "
-        f"{_JPEG_QTAB[i]}, {_JPEG_QTAB_C[i]})"
-        for i in used
-    )
-    half, full = 1 << 25, 1 << 26
-    fd = (
-        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
-        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
-    )
-
-    def fd16(v: str) -> str:
-        return (
-            f"(({v} + 32768) // 65536) - (CASE WHEN ({v} + 32768) % 65536 != 0 "
-            f"AND {v} + 32768 < 0 THEN 1 ELSE 0 END)"
-        )
-
     return f"""
     WITH m AS (
       SELECT doc_id AS media_id, 2 + doc_id % 2 AS bw, 2 + (doc_id // 2) % 2 AS bh
@@ -3896,14 +3898,14 @@ def _jpeg_color_oracle() -> str:
     blocks AS (
       SELECT media_id, bw, bh, b.b AS bi
       FROM m, generate_series(0, 8) AS b(b) WHERE b.b < bw * bh),
-    cm(zi, cu, cv, q0, q1) AS (VALUES {cmap}),
+    cm(zi, cu, cv, q0, q1) AS (VALUES {_JPEG_CMC_ROWS}),
     coefs AS (
       SELECT media_id, bw, bh, bi, comp.c AS c, cm.cu, cm.cv,
              (CASE WHEN cm.zi = 0 THEN ((media_id*7 + bi*5 + comp.c*17) % 13) - 6
                    ELSE ((media_id*11 + bi*3 + comp.c*29 + cm.zi) % 9) - 4 END)
              * (CASE WHEN comp.c = 0 THEN cm.q0 ELSE cm.q1 END) AS cq
       FROM blocks, cm, generate_series(0, 2) AS comp(c)),
-    a(au, ax, aval) AS (VALUES {a_rows}),
+    a(au, ax, aval) AS (VALUES {_JPEG_A_ROWS}),
     terms AS (
       SELECT co.media_id, co.bw, co.bh, co.bi, co.c, px.x AS x, py.y AS y,
              CAST(sum(co.cq * aa.aval * ab.aval) AS BIGINT) AS t
@@ -3913,7 +3915,7 @@ def _jpeg_color_oracle() -> str:
       GROUP BY 1, 2, 3, 4, 5, 6, 7),
     plane AS (
       SELECT media_id, bw, bh, bi, c, x, y,
-             greatest(0, least(255, 128 + {fd})) AS p
+             greatest(0, least(255, 128 + {_JPEG_FDIV})) AS p
       FROM terms),
     ycc AS (
       SELECT media_id, bw, bh, bi, x, y,
@@ -3923,9 +3925,9 @@ def _jpeg_color_oracle() -> str:
       FROM plane GROUP BY 1, 2, 3, 4, 5, 6),
     rgb AS (
       SELECT media_id, bw, bh, bi, x, y,
-             greatest(0, least(255, yy + ({fd16("91881 * (cr - 128)")}))) AS r,
-             greatest(0, least(255, yy - ({fd16("22554 * (cb - 128) + 46802 * (cr - 128)")}))) AS g,
-             greatest(0, least(255, yy + ({fd16("116130 * (cb - 128)")}))) AS b
+             greatest(0, least(255, yy + ({_fd16("91881 * (cr - 128)")}))) AS r,
+             greatest(0, least(255, yy - ({_fd16("22554 * (cb - 128) + 46802 * (cr - 128)")}))) AS g,
+             greatest(0, least(255, yy + ({_fd16("116130 * (cb - 128)")}))) AS b
       FROM ycc)
     SELECT media_id, CAST(bw * 8 AS INT) AS width, CAST(bh * 8 AS INT) AS height,
            CAST(sum(r) AS BIGINT) AS r_sum,
@@ -3972,40 +3974,12 @@ def _jpeg_420_oracle() -> str:
     sample-replication upsampling map. Position errors can't cancel: a
     mis-ordered MCU interleave or wrong upsample map shifts which chroma
     value each luma pixel pairs with, changing r/g/b sums and top_left_r."""
-    from query_engine_spark.llmdata.multimodal import (
-        _JPEG_IDCT_A,
-        _JPEG_QTAB,
-        _JPEG_QTAB_C,
-        _JPEG_ZIGZAG,
-    )
-
-    a_rows = ", ".join(
-        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
-    )
-    used = [0, 1, 3, 8, 20, 40, 55]
-    cmap = ", ".join(
-        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, "
-        f"{_JPEG_QTAB[i]}, {_JPEG_QTAB_C[i]})"
-        for i in used
-    )
-    half, full = 1 << 25, 1 << 26
-    fd = (
-        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
-        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
-    )
-
-    def fd16(v: str) -> str:
-        return (
-            f"(({v} + 32768) // 65536) - (CASE WHEN ({v} + 32768) % 65536 != 0 "
-            f"AND {v} + 32768 < 0 THEN 1 ELSE 0 END)"
-        )
-
     return f"""
     WITH m AS (
       SELECT doc_id AS media_id, 1 + doc_id % 2 AS mw, 1 + (doc_id // 2) % 2 AS mh
       FROM documents WHERE doc_id < 48),
-    cm(zi, cu, cv, q0, q1) AS (VALUES {cmap}),
-    a(au, ax, aval) AS (VALUES {a_rows}),
+    cm(zi, cu, cv, q0, q1) AS (VALUES {_JPEG_CMC_ROWS}),
+    a(au, ax, aval) AS (VALUES {_JPEG_A_ROWS}),
     yb AS (
       SELECT media_id, mw, mh, b.b AS bi
       FROM m, generate_series(0, 15) AS b(b) WHERE b.b < 4 * mw * mh),
@@ -4024,7 +3998,7 @@ def _jpeg_420_oracle() -> str:
     yplane AS (
       SELECT media_id, mw, mh,
              (bi % (2*mw)) * 8 + x AS gx, (bi // (2*mw)) * 8 + y AS gy,
-             greatest(0, least(255, 128 + {fd})) AS yy
+             greatest(0, least(255, 128 + {_JPEG_FDIV})) AS yy
       FROM yterms),
     cb AS (
       SELECT media_id, mw, mh, b.b AS mi
@@ -4047,14 +4021,14 @@ def _jpeg_420_oracle() -> str:
              max(CASE WHEN c = 1 THEN p END) AS cbv,
              max(CASE WHEN c = 2 THEN p END) AS crv
       FROM (SELECT media_id, mw, mi, c, x, y,
-                   greatest(0, least(255, 128 + {fd})) AS p
+                   greatest(0, least(255, 128 + {_JPEG_FDIV})) AS p
             FROM cterms)
       GROUP BY 1, 2, 3),
     rgb AS (
       SELECT yp.media_id, yp.mw, yp.mh, yp.gx, yp.gy,
-             greatest(0, least(255, yy + ({fd16("91881 * (crv - 128)")}))) AS r,
-             greatest(0, least(255, yy - ({fd16("22554 * (cbv - 128) + 46802 * (crv - 128)")}))) AS g,
-             greatest(0, least(255, yy + ({fd16("116130 * (cbv - 128)")}))) AS b
+             greatest(0, least(255, yy + ({_fd16("91881 * (crv - 128)")}))) AS r,
+             greatest(0, least(255, yy - ({_fd16("22554 * (cbv - 128) + 46802 * (crv - 128)")}))) AS g,
+             greatest(0, least(255, yy + ({_fd16("116130 * (cbv - 128)")}))) AS b
       FROM yplane yp JOIN cplane cp
         ON cp.media_id = yp.media_id AND cp.cx = yp.gx // 2 AND cp.cy = yp.gy // 2)
     SELECT media_id, CAST(mw * 16 AS INT) AS width, CAST(mh * 16 AS INT) AS height,
@@ -4102,25 +4076,6 @@ def _jpeg_dhash_oracle() -> str:
     exact duplicates of patterns 0-15), dHash the grayscale output (gray =
     the pixel itself), then the band-pigeonhole candidate join + exact
     hamming — perceptual dedup over a LOSSY format, verified end to end."""
-    from query_engine_spark.llmdata.multimodal import (
-        _JPEG_IDCT_A,
-        _JPEG_QTAB,
-        _JPEG_ZIGZAG,
-    )
-
-    a_rows = ", ".join(
-        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
-    )
-    used = [0, 1, 3, 8, 20, 40, 55]
-    cmap = ", ".join(
-        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, {_JPEG_QTAB[i]})"
-        for i in used
-    )
-    half, full = 1 << 25, 1 << 26
-    fd = (
-        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
-        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
-    )
     return f"""
     WITH m AS (
       SELECT doc_id AS media_id, doc_id % 48 AS pat,
@@ -4129,13 +4084,13 @@ def _jpeg_dhash_oracle() -> str:
     blocks AS (
       SELECT media_id, pat, bw, bh, b.b AS bi
       FROM m, generate_series(0, 8) AS b(b) WHERE b.b < bw * bh),
-    cm(zi, cu, cv, q) AS (VALUES {cmap}),
+    cm(zi, cu, cv, q) AS (VALUES {_JPEG_CM_ROWS}),
     coefs AS (
       SELECT media_id, bw, bh, bi, cm.cu, cm.cv,
              (CASE WHEN cm.zi = 0 THEN ((pat*7 + bi*5) % 13) - 6
                    ELSE ((pat*11 + bi*3 + cm.zi) % 9) - 4 END) * cm.q AS cq
       FROM blocks, cm),
-    a(au, ax, aval) AS (VALUES {a_rows}),
+    a(au, ax, aval) AS (VALUES {_JPEG_A_ROWS}),
     terms AS (
       SELECT c.media_id, c.bw, c.bh, c.bi, px.x AS x, py.y AS y,
              CAST(sum(c.cq * aa.aval * ab.aval) AS BIGINT) AS t
@@ -4146,7 +4101,7 @@ def _jpeg_dhash_oracle() -> str:
     pix AS (
       SELECT media_id, bw, bh,
              (bi % bw) * 8 + x AS px_x, (bi // bw) * 8 + y AS px_y,
-             greatest(0, least(255, 128 + {fd})) AS p
+             greatest(0, least(255, 128 + {_JPEG_FDIV})) AS p
       FROM terms),
     g AS (
       SELECT p.media_id, gy.gy AS gy, gx.gx AS gx, p.p AS gray
@@ -7461,40 +7416,12 @@ def multimodal_jpeg_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _jpeg_422_oracle() -> str:
     """The 4:2:0 oracle's geometry adapted to 2×1 luma: Y-block grid
     2·mw × mh, chroma at (gx div 2, gy), image mw·16 × mh·8."""
-    from query_engine_spark.llmdata.multimodal import (
-        _JPEG_IDCT_A,
-        _JPEG_QTAB,
-        _JPEG_QTAB_C,
-        _JPEG_ZIGZAG,
-    )
-
-    a_rows = ", ".join(
-        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
-    )
-    used = [0, 1, 3, 8, 20, 40, 55]
-    cmap = ", ".join(
-        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, "
-        f"{_JPEG_QTAB[i]}, {_JPEG_QTAB_C[i]})"
-        for i in used
-    )
-    half, full = 1 << 25, 1 << 26
-    fd = (
-        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
-        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
-    )
-
-    def fd16(v: str) -> str:
-        return (
-            f"(({v} + 32768) // 65536) - (CASE WHEN ({v} + 32768) % 65536 != 0 "
-            f"AND {v} + 32768 < 0 THEN 1 ELSE 0 END)"
-        )
-
     return f"""
     WITH m AS (
       SELECT doc_id AS media_id, 1 + doc_id % 2 AS mw, 1 + (doc_id // 2) % 2 AS mh
       FROM documents WHERE doc_id < 48),
-    cm(zi, cu, cv, q0, q1) AS (VALUES {cmap}),
-    a(au, ax, aval) AS (VALUES {a_rows}),
+    cm(zi, cu, cv, q0, q1) AS (VALUES {_JPEG_CMC_ROWS}),
+    a(au, ax, aval) AS (VALUES {_JPEG_A_ROWS}),
     yb AS (
       SELECT media_id, mw, mh, b.b AS bi
       FROM m, generate_series(0, 7) AS b(b) WHERE b.b < 2 * mw * mh),
@@ -7513,7 +7440,7 @@ def _jpeg_422_oracle() -> str:
     yplane AS (
       SELECT media_id, mw, mh,
              (bi % (2*mw)) * 8 + x AS gx, (bi // (2*mw)) * 8 + y AS gy,
-             greatest(0, least(255, 128 + {fd})) AS yy
+             greatest(0, least(255, 128 + {_JPEG_FDIV})) AS yy
       FROM yterms),
     cb AS (
       SELECT media_id, mw, mh, b.b AS mi
@@ -7536,14 +7463,14 @@ def _jpeg_422_oracle() -> str:
              max(CASE WHEN c = 1 THEN p END) AS cbv,
              max(CASE WHEN c = 2 THEN p END) AS crv
       FROM (SELECT media_id, mw, mi, c, x, y,
-                   greatest(0, least(255, 128 + {fd})) AS p
+                   greatest(0, least(255, 128 + {_JPEG_FDIV})) AS p
             FROM cterms)
       GROUP BY 1, 2, 3),
     rgb AS (
       SELECT yp.media_id, yp.mw, yp.mh, yp.gx, yp.gy,
-             greatest(0, least(255, yy + ({fd16("91881 * (crv - 128)")}))) AS r,
-             greatest(0, least(255, yy - ({fd16("22554 * (cbv - 128) + 46802 * (crv - 128)")}))) AS g,
-             greatest(0, least(255, yy + ({fd16("116130 * (cbv - 128)")}))) AS b
+             greatest(0, least(255, yy + ({_fd16("91881 * (crv - 128)")}))) AS r,
+             greatest(0, least(255, yy - ({_fd16("22554 * (cbv - 128) + 46802 * (crv - 128)")}))) AS g,
+             greatest(0, least(255, yy + ({_fd16("116130 * (cbv - 128)")}))) AS b
       FROM yplane yp JOIN cplane cp
         ON cp.media_id = yp.media_id AND cp.cx = yp.gx // 2 AND cp.cy = yp.gy)
     SELECT media_id, CAST(mw * 16 AS INT) AS width, CAST(mh * 8 AS INT) AS height,
@@ -8062,25 +7989,6 @@ def _mp4_mjpeg_oracle() -> str:
     derived key k = m*131 + fi*17, through the same literal IDCT basis
     table and floor rounding. Sampling mirrors multimodal_video_frames:
     every 2nd frame of 6, capped at 3 (fi in 0, 2, 4)."""
-    from query_engine_spark.llmdata.multimodal import (
-        _JPEG_IDCT_A,
-        _JPEG_QTAB,
-        _JPEG_ZIGZAG,
-    )
-
-    a_rows = ", ".join(
-        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
-    )
-    used = [0, 1, 3, 8, 20, 40, 55]  # jpeg_qcoefs' nonzero zigzag indices
-    cmap = ", ".join(
-        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, {_JPEG_QTAB[i]})"
-        for i in used
-    )
-    half, full = 1 << 25, 1 << 26
-    fd = (
-        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
-        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
-    )
     return f"""
     WITH m AS (
       SELECT doc_id AS media_id, 2 + doc_id % 2 AS bw, 2 + (doc_id // 2) % 2 AS bh
@@ -8091,13 +7999,13 @@ def _mp4_mjpeg_oracle() -> str:
     blocks AS (
       SELECT media_id, bw, bh, fi, k, b.b AS bi
       FROM mf, generate_series(0, 8) AS b(b) WHERE b.b < bw * bh),
-    cm(zi, cu, cv, q) AS (VALUES {cmap}),
+    cm(zi, cu, cv, q) AS (VALUES {_JPEG_CM_ROWS}),
     coefs AS (
       SELECT media_id, bw, bh, fi, bi, cm.cu, cm.cv,
              (CASE WHEN cm.zi = 0 THEN ((k*7 + bi*5) % 13) - 6
                    ELSE ((k*11 + bi*3 + cm.zi) % 9) - 4 END) * cm.q AS cq
       FROM blocks, cm),
-    a(au, ax, aval) AS (VALUES {a_rows}),
+    a(au, ax, aval) AS (VALUES {_JPEG_A_ROWS}),
     terms AS (
       SELECT c.media_id, c.bw, c.bh, c.fi, c.bi, px.x AS x, py.y AS y,
              CAST(sum(c.cq * aa.aval * ab.aval) AS BIGINT) AS t
@@ -8107,7 +8015,7 @@ def _mp4_mjpeg_oracle() -> str:
       GROUP BY 1, 2, 3, 4, 5, 6, 7),
     pix AS (
       SELECT media_id, bw, bh, fi, bi, x, y,
-             greatest(0, least(255, 128 + {fd})) AS p
+             greatest(0, least(255, 128 + {_JPEG_FDIV})) AS p
       FROM terms)
     SELECT media_id, CAST(fi AS INT) AS frame_idx,
            CAST(bw * 8 AS INT) AS width, CAST(bh * 8 AS INT) AS height,
@@ -8186,25 +8094,6 @@ def _mp4_video_dedup_oracle() -> str:
     `media_video_dedup` shape over a LOSSY compressed corpus. Ids 24-35
     are planted copies of patterns 0-11 with DIFFERENT frame counts
     (clipped copies) and different container layouts."""
-    from query_engine_spark.llmdata.multimodal import (
-        _JPEG_IDCT_A,
-        _JPEG_QTAB,
-        _JPEG_ZIGZAG,
-    )
-
-    a_rows = ", ".join(
-        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
-    )
-    used = [0, 1, 3, 8, 20, 40, 55]
-    cmap = ", ".join(
-        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, {_JPEG_QTAB[i]})"
-        for i in used
-    )
-    half, full = 1 << 25, 1 << 26
-    fd = (
-        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
-        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
-    )
     return f"""
     WITH m AS (
       SELECT doc_id AS media_id, doc_id % 24 AS pat,
@@ -8217,13 +8106,13 @@ def _mp4_video_dedup_oracle() -> str:
     blocks AS (
       SELECT media_id, bw, bh, fi, k, b.b AS bi
       FROM mf, generate_series(0, 8) AS b(b) WHERE b.b < bw * bh),
-    cm(zi, cu, cv, q) AS (VALUES {cmap}),
+    cm(zi, cu, cv, q) AS (VALUES {_JPEG_CM_ROWS}),
     coefs AS (
       SELECT media_id, bw, bh, fi, bi, cm.cu, cm.cv,
              (CASE WHEN cm.zi = 0 THEN ((k*7 + bi*5) % 13) - 6
                    ELSE ((k*11 + bi*3 + cm.zi) % 9) - 4 END) * cm.q AS cq
       FROM blocks, cm),
-    a(au, ax, aval) AS (VALUES {a_rows}),
+    a(au, ax, aval) AS (VALUES {_JPEG_A_ROWS}),
     terms AS (
       SELECT c.media_id, c.bw, c.bh, c.fi, c.bi, px.x AS x, py.y AS y,
              CAST(sum(c.cq * aa.aval * ab.aval) AS BIGINT) AS t
@@ -8234,7 +8123,7 @@ def _mp4_video_dedup_oracle() -> str:
     pix AS (
       SELECT media_id, bw, bh, fi,
              (bi % bw) * 8 + x AS px_x, (bi // bw) * 8 + y AS px_y,
-             greatest(0, least(255, 128 + {fd})) AS p
+             greatest(0, least(255, 128 + {_JPEG_FDIV})) AS p
       FROM terms),
     g AS (
       SELECT p.media_id, p.fi, gy.gy AS gy, gx.gx AS gx, p.p AS gray
@@ -9022,25 +8911,6 @@ def _jpeg_oriented_oracle() -> str:
     sum(p * (oy*W' + ox)) is computed on the uprighted geometry — so a
     flipped axis or missed transpose fails the hash even though the plain
     px_sum is permutation-invariant."""
-    from query_engine_spark.llmdata.multimodal import (
-        _JPEG_IDCT_A,
-        _JPEG_QTAB,
-        _JPEG_ZIGZAG,
-    )
-
-    a_rows = ", ".join(
-        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
-    )
-    used = [0, 1, 3, 8, 20, 40, 55]  # jpeg_qcoefs' nonzero zigzag indices
-    cmap = ", ".join(
-        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, {_JPEG_QTAB[i]})"
-        for i in used
-    )
-    half, full = 1 << 25, 1 << 26
-    fd = (
-        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
-        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
-    )
     return f"""
     WITH m AS (
       SELECT doc_id AS media_id, 2 + doc_id % 2 AS bw, 2 + (doc_id // 2) % 2 AS bh,
@@ -9049,13 +8919,13 @@ def _jpeg_oriented_oracle() -> str:
     blocks AS (
       SELECT media_id, bw, bh, o, b.b AS bi
       FROM m, generate_series(0, 8) AS b(b) WHERE b.b < bw * bh),
-    cm(zi, cu, cv, q) AS (VALUES {cmap}),
+    cm(zi, cu, cv, q) AS (VALUES {_JPEG_CM_ROWS}),
     coefs AS (
       SELECT media_id, bw, bh, o, bi, cm.cu, cm.cv,
              (CASE WHEN cm.zi = 0 THEN ((media_id*7 + bi*5) % 13) - 6
                    ELSE ((media_id*11 + bi*3 + cm.zi) % 9) - 4 END) * cm.q AS cq
       FROM blocks, cm),
-    a(au, ax, aval) AS (VALUES {a_rows}),
+    a(au, ax, aval) AS (VALUES {_JPEG_A_ROWS}),
     terms AS (
       SELECT c.media_id, c.bw, c.bh, c.o, c.bi, px.x AS x, py.y AS y,
              CAST(sum(c.cq * aa.aval * ab.aval) AS BIGINT) AS t
@@ -9066,7 +8936,7 @@ def _jpeg_oriented_oracle() -> str:
     gpix AS (
       SELECT media_id, bw * 8 AS w, bh * 8 AS h, o,
              (bi % bw) * 8 + x AS gx, (bi // bw) * 8 + y AS gy,
-             greatest(0, least(255, 128 + {fd})) AS p
+             greatest(0, least(255, 128 + {_JPEG_FDIV})) AS p
       FROM terms),
     opix AS (
       SELECT media_id, p,
@@ -9122,34 +8992,6 @@ def _jpeg_cmyk_oracle() -> str:
     branch: inverted-CMYK for even patterns, YCCK (the same 2^16
     fixed-point YCbCr matrix, then ink inversion) for odd — the
     4-component half of the deterministic-decoder contract."""
-    from query_engine_spark.llmdata.multimodal import (
-        _JPEG_IDCT_A,
-        _JPEG_QTAB,
-        _JPEG_QTAB_C,
-        _JPEG_ZIGZAG,
-    )
-
-    a_rows = ", ".join(
-        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
-    )
-    used = [0, 1, 3, 8, 20, 40, 55]
-    cmap = ", ".join(
-        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, "
-        f"{_JPEG_QTAB[i]}, {_JPEG_QTAB_C[i]})"
-        for i in used
-    )
-    half, full = 1 << 25, 1 << 26
-    fd = (
-        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
-        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
-    )
-
-    def fd16(v: str) -> str:
-        return (
-            f"(({v} + 32768) // 65536) - (CASE WHEN ({v} + 32768) % 65536 != 0 "
-            f"AND {v} + 32768 < 0 THEN 1 ELSE 0 END)"
-        )
-
     return f"""
     WITH m AS (
       SELECT doc_id AS media_id, 2 + doc_id % 2 AS bw, 2 + (doc_id // 2) % 2 AS bh
@@ -9157,14 +8999,14 @@ def _jpeg_cmyk_oracle() -> str:
     blocks AS (
       SELECT media_id, bw, bh, b.b AS bi
       FROM m, generate_series(0, 8) AS b(b) WHERE b.b < bw * bh),
-    cm(zi, cu, cv, q0, q1) AS (VALUES {cmap}),
+    cm(zi, cu, cv, q0, q1) AS (VALUES {_JPEG_CMC_ROWS}),
     coefs AS (
       SELECT media_id, bw, bh, bi, comp.c AS c, cm.cu, cm.cv,
              (CASE WHEN cm.zi = 0 THEN ((media_id*7 + bi*5 + comp.c*17) % 13) - 6
                    ELSE ((media_id*11 + bi*3 + comp.c*29 + cm.zi) % 9) - 4 END)
              * (CASE WHEN comp.c IN (0, 3) THEN cm.q0 ELSE cm.q1 END) AS cq
       FROM blocks, cm, generate_series(0, 3) AS comp(c)),
-    a(au, ax, aval) AS (VALUES {a_rows}),
+    a(au, ax, aval) AS (VALUES {_JPEG_A_ROWS}),
     terms AS (
       SELECT co.media_id, co.bw, co.bh, co.bi, co.c, px.x AS x, py.y AS y,
              CAST(sum(co.cq * aa.aval * ab.aval) AS BIGINT) AS t
@@ -9174,7 +9016,7 @@ def _jpeg_cmyk_oracle() -> str:
       GROUP BY 1, 2, 3, 4, 5, 6, 7),
     plane AS (
       SELECT media_id, bw, bh, bi, c, x, y,
-             greatest(0, least(255, 128 + {fd})) AS p
+             greatest(0, least(255, 128 + {_JPEG_FDIV})) AS p
       FROM terms),
     quad AS (
       SELECT media_id, bw, bh, bi, x, y,
@@ -9187,13 +9029,13 @@ def _jpeg_cmyk_oracle() -> str:
       SELECT media_id, bw, bh, bi, x, y,
              CASE WHEN media_id % 2 = 0 THEN 255 - p0
                   ELSE 255 - greatest(0, least(255,
-                       p0 + ({fd16("91881 * (p2 - 128)")}))) END AS c_,
+                       p0 + ({_fd16("91881 * (p2 - 128)")}))) END AS c_,
              CASE WHEN media_id % 2 = 0 THEN 255 - p1
                   ELSE 255 - greatest(0, least(255,
-                       p0 - ({fd16("22554 * (p1 - 128) + 46802 * (p2 - 128)")}))) END AS m_,
+                       p0 - ({_fd16("22554 * (p1 - 128) + 46802 * (p2 - 128)")}))) END AS m_,
              CASE WHEN media_id % 2 = 0 THEN 255 - p2
                   ELSE 255 - greatest(0, least(255,
-                       p0 + ({fd16("116130 * (p1 - 128)")}))) END AS y_,
+                       p0 + ({_fd16("116130 * (p1 - 128)")}))) END AS y_,
              255 - p3 AS k_
       FROM quad)
     SELECT media_id, CAST(bw * 8 AS INT) AS width, CAST(bh * 8 AS INT) AS height,
@@ -11678,37 +11520,6 @@ def multimodal_woff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = docs.filter(F.col("doc_id") < 256).select(F.col("doc_id").alias("media_id"))
     media = _pack_media(ids, MM.make_woff)
     return MM.woff_features(media)
-
-
-def _jpeg_sql_parts() -> tuple[str, str, str]:
-    """The dispatch oracle's JPEG fragment built from the SAME Python
-    literals the decoder uses (_JPEG_IDCT_A/_JPEG_QTAB/_JPEG_ZIGZAG),
-    exactly as _jpeg_oracle() does — hand-copied constants
-    would silently diverge if the shared literals or the rounding
-    contract ever changed (review pass-2 finding)."""
-    from query_engine_spark.llmdata.multimodal import (
-        _JPEG_IDCT_A,
-        _JPEG_QTAB,
-        _JPEG_ZIGZAG,
-    )
-
-    a_rows = ", ".join(
-        f"({u}, {x}, {_JPEG_IDCT_A[u][x]})" for u in range(8) for x in range(8)
-    )
-    used = [0, 1, 3, 8, 20, 40, 55]  # jpeg_qcoefs' nonzero zigzag indices
-    cm_rows = ", ".join(
-        f"({i}, {_JPEG_ZIGZAG[i] % 8}, {_JPEG_ZIGZAG[i] // 8}, {_JPEG_QTAB[i]})"
-        for i in used
-    )
-    half, full = 1 << 25, 1 << 26
-    fdiv = (
-        f"((t + {half}) // {full}) - (CASE WHEN (t + {half}) % {full} != 0 "
-        f"AND t + {half} < 0 THEN 1 ELSE 0 END)"
-    )
-    return a_rows, cm_rows, fdiv
-
-
-_JPEG_A_ROWS, _JPEG_CM_ROWS, _JPEG_FDIV = _jpeg_sql_parts()
 
 
 # ---------------------------------------------------------------------------

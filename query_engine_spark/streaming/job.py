@@ -70,12 +70,21 @@ class PostStore:
             merged = merge_incremental(existing, batch, self.id_col)
         else:
             merged = batch.dropDuplicates([self.id_col])
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # sort within partitions by id: parquet row-group min/max stats then
         # prune id-range scans (the TID range-scan analog, SURVEY §4) — the
         # reference's "time-ordered ids → B-tree range" property, re-created
         # as a storage layout instead of an index
-        merged.sortWithinPartitions(self.id_col).write.mode("overwrite").partitionBy("dt").parquet(self.path)
+        self._overwrite_days(merged.sortWithinPartitions(self.id_col))
+
+    def _overwrite_days(self, df: DataFrame) -> None:
+        """Rewrite exactly the day partitions present in `df`. The overwrite
+        mode is a per-write option, so the session's setting is untouched."""
+        (
+            df.write.option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .partitionBy("dt")
+            .parquet(self.path)
+        )
 
     def window(self, now: _dt.datetime, days: int = 7) -> DataFrame:
         """The last `days` days before `now` as a lazy read: the dt predicate
@@ -140,34 +149,20 @@ class PostStore:
             now = now or _dt.datetime.now(_dt.timezone.utc)
             cutoff = (now - _dt.timedelta(days=older_than_days)).strftime("%Y-%m-%d")
         rewritten: dict[str, int] = {}
-        prev_mode = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            for entry in sorted(os.listdir(self.path)):
-                if not entry.startswith("dt="):
-                    continue
-                if cutoff is not None and entry[3:] >= cutoff:
-                    continue
-                pdir = os.path.join(self.path, entry)
-                files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-                total = sum(os.path.getsize(os.path.join(pdir, f)) for f in files)
-                want = max(1, -(-total // target_bytes))  # ceil
-                if len(files) <= want:
-                    continue
-                part = self.spark.read.parquet(pdir).withColumn("dt", F.lit(entry[3:]))
-                (
-                    part.repartition(want)
-                    .sortWithinPartitions(self.id_col)
-                    .write.mode("overwrite")
-                    .partitionBy("dt")
-                    .parquet(self.path)
-                )
-                rewritten[entry] = len(files)
-        finally:
-            if prev_mode is not None:
-                self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-            else:
-                self.spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        for entry in sorted(os.listdir(self.path)):
+            if not entry.startswith("dt="):
+                continue
+            if cutoff is not None and entry[3:] >= cutoff:
+                continue
+            pdir = os.path.join(self.path, entry)
+            files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
+            total = sum(os.path.getsize(os.path.join(pdir, f)) for f in files)
+            want = max(1, -(-total // target_bytes))  # ceil
+            if len(files) <= want:
+                continue
+            part = self.spark.read.parquet(pdir).withColumn("dt", F.lit(entry[3:]))
+            self._overwrite_days(part.repartition(want).sortWithinPartitions(self.id_col))
+            rewritten[entry] = len(files)
         return rewritten
 
     def archive_view(self, archive_path: str) -> DataFrame:

@@ -844,7 +844,7 @@ def test_quoted_angle_protection_valid_html5(spark):
     # values on the SAME tag — the first value's unsentinelable '>'
     # (slash-preceded, the strip-terminator guard) blocks the second
     # anchor, so the second opener still swallows. Measured solo
-    # incidence ~0 outside crafted pages (r16_capacity_incidence.py:
+    # incidence ~0 outside crafted pages (`git show c14cfb8:tools/r16_capacity_incidence.py`:
     # the realistic single-handler shape is 0/1215-diverged).
     links3 = outlink_edges(
         spark.createDataFrame(

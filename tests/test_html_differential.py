@@ -28,7 +28,7 @@ cases below:
      order-independent; linearity still bounds every scan at the next
      quote.
 
-Round-15 fix bundle (staged in r14 as tools/r15_html_candidate.py,
+Round-15 fix bundle (staged in r14 as `git show c14cfb8:tools/r15_html_candidate.py`,
 landed this round) — the generator grammar EXTENDED to cover all
 three fixed classes as standing coverage:
   3. protect v3b: the angle-protection anchors gained a lazy tag-open
@@ -805,7 +805,7 @@ def test_img_url_resolution_matrix(spark):
 
 def test_html_known_divergences_pinned(spark):
     """The r14-era pinned metadata divergences are FIXED by the r16
-    bundle (tools/r16_capacity_incidence.py measured all three pinned
+    bundle (`git show c14cfb8:tools/r16_capacity_incidence.py` measured all three pinned
     shapes at nonzero real-crawl-shaped incidence, so the r15 verdict's
     fix-or-accept decision came out FIX):
 

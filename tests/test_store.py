@@ -142,6 +142,38 @@ def test_store_compaction(spark, tmp_path):
     assert store.compact(target_bytes=64 * 1024 * 1024, older_than_days=1, now=NOW) == {}
 
 
+def test_store_writes_leave_the_session_overwrite_mode_alone(spark, tmp_path):
+    """ingest and compact rewrite only their own day partitions, per write:
+    the session stays in static overwrite mode, so a later partitioned
+    overwrite in the same session still replaces the whole table."""
+    from query_engine_spark.sources.connectors import write_partitioned
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        store = PostStore(spark, str(tmp_path / "store"))
+        store.ingest(_batch(spark, [(1, 0.1, "a"), (2, 1.2, "b")]))
+        # a second file in one day, so compact() rewrites that day only
+        (
+            _batch(spark, [(3, 0.1, "c")])
+            .withColumn("dt", F.date_format(F.col("ts"), "yyyy-MM-dd"))
+            .write.mode("append")
+            .partitionBy("dt")
+            .parquet(store.path)
+        )
+        assert len(store.compact(older_than_days=None)) == 1
+        assert {r["id"]: r["v"] for r in store.read().collect()} == {1: "a", 2: "b", 3: "c"}
+        assert spark.conf.get(key) == "static"
+
+        table = str(tmp_path / "table")
+        write_partitioned(spark.createDataFrame([(1, "a"), (2, "b")], "v long, dt string"), table)
+        write_partitioned(spark.createDataFrame([(3, "a")], "v long, dt string"), table)
+        assert [r["v"] for r in spark.read.parquet(table).collect()] == [3]
+    finally:
+        spark.conf.set(key, prior)
+
+
 # --- serving snapshots ------------------------------------------------------
 
 

@@ -1,0 +1,66 @@
+"""The kept tools still match the package they drive.
+
+The tools, bench.py and __spark_entry__.py import the engine lazily,
+inside their functions, so a rename in the package breaks them only when
+they next run. These checks resolve every such import, and every query
+name the benchmarks pin, without starting Spark.
+"""
+
+from __future__ import annotations
+
+import ast
+import glob
+import importlib
+import importlib.util
+import os
+import sys
+
+import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+SCRIPTS = sorted(glob.glob(os.path.join(ROOT, "tools", "*.py"))) + [
+    os.path.join(ROOT, "bench.py"),
+    os.path.join(ROOT, "__spark_entry__.py"),
+]
+PACKAGES = ("query_engine_spark", "tools")
+
+
+def _package_imports(path: str) -> list[tuple[int, str, str | None]]:
+    """(line, module, name) for every import of PACKAGES in the file, at any
+    depth; name is None for a plain `import module`."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module and node.module.split(".")[0] in PACKAGES:
+            found += [(node.lineno, node.module, a.name) for a in node.names]
+        elif isinstance(node, ast.Import):
+            found += [(node.lineno, a.name, None) for a in node.names if a.name.split(".")[0] in PACKAGES]
+    return found
+
+
+@pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: os.path.relpath(p, ROOT))
+def test_package_imports_resolve(path):
+    unresolved = []
+    for line, module, name in _package_imports(path):
+        try:
+            mod = importlib.import_module(module)
+        except ImportError as e:
+            unresolved.append(f"{line}: {module} ({e})")
+            continue
+        if name is None or hasattr(mod, name):
+            continue
+        if not (hasattr(mod, "__path__") and importlib.util.find_spec(f"{module}.{name}")):
+            unresolved.append(f"{line}: {module}.{name}")
+    assert not unresolved
+
+
+def test_pinned_bench_queries_are_registered():
+    import bench
+    from query_engine_spark.registry import REGISTRY
+    from tools import bench_sfx
+
+    pinned = bench.HEADLINE + bench_sfx.HEAVY10
+    assert [n for n in pinned if n not in REGISTRY] == []

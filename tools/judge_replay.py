@@ -4,7 +4,7 @@ emit a CORRECTNESS-style record per query — rows_match / schema_match /
 hash_match / spark_rows / oracle_rows / err — using the driver's
 canonicalization (columns sorted BY NAME, rows sorted, values hashed),
 so an independent audit needs no code of its own and its artifact diffs
-directly against CORRECTNESS_r{N}.json rows.
+directly against the records that protocol keeps.
 
 This intentionally duplicates none of tools/selfcheck.py's
 field-by-field diagnostics: selfcheck explains WHY a query diverges;

@@ -1,8 +1,7 @@
 """Plan-feature inventory over EVERY registry query: counts of exchanges /
 join strategies / cartesians / window nodes and pushed-filter presence from
 `explain("formatted")` at sf0.001 — the automated form of the per-query
-plan audits (SURVEY §4). One JSON line per run; the round report
-(PLAN_REPORT_r05.md) summarizes it.
+plan audits (SURVEY §4). One JSON line per run.
 
 Usage: PYTHONPATH=/root/repo python tools/planreport.py [sf_dir]
 """
