@@ -17,6 +17,7 @@ serving path.
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as _dt
 import json
 import threading
@@ -82,6 +83,10 @@ def generate_feed_skeleton(
     """FeedBuilderResponse (main.rs:2999-3016): {debug{time,timing,counts,
     scores}, feed: [{post: <uri-or-id>}]}."""
     t0 = time.monotonic()
+    # translate against a per-request copy: FeedServer hands one ctx to every
+    # handler thread, and each translation refills the script-tier log that
+    # this request reads back after its collect
+    ctx = dataclasses.replace(ctx, script_tiers={})
     out = translate_pipeline(blocks, ctx)
     id_col = post_id_to_uri_col(F.col("id")) if convert_uris else F.col("id").cast("string")
     sel = [id_col.alias("post")]

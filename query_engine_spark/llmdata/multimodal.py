@@ -36,15 +36,16 @@ numpy-vectorized with bit-parity pins against the scalar forms.
 
 Scale notes: media rows are large (MBs) — `media_repartition` sizes
 partitions by *bytes*, not rows, so an executor never materializes more
-than `target_mb` of media per Arrow batch (`maxRecordsPerBatch` should
-be set low for these frames in a real deployment).
+than the session's advisory partition size of media per Arrow batch
+(`maxRecordsPerBatch` should be set low for these frames in a real
+deployment).
 """
 
 from __future__ import annotations
 
 import struct as _struct
 import zlib as _zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -177,8 +178,10 @@ def attach_media_meta(df: DataFrame, payload_col: str = "payload", media_type: s
     )
 
 
-def media_repartition(df: DataFrame, target_mb: int = 128, payload_col: str = "payload") -> DataFrame:
-    """Repartition so each partition holds ≈ target_mb of payload bytes.
+def media_repartition(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """Repartition so each partition holds ≈ the session's advisory
+    partition size (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) of
+    payload bytes.
 
     Media skew (one 4K video next to thumbnails) breaks row-count-based
     partitioning; byte-based sizing keeps Arrow batches bounded.
@@ -187,58 +190,72 @@ def media_repartition(df: DataFrame, target_mb: int = 128, payload_col: str = "p
     hint sizes shuffle partitions by BYTES at runtime — merging small
     partitions and splitting oversized ones toward the advisory size — which
     is exactly byte-based repartitioning, decided from the actual shuffle
-    statistics instead of a pre-pass aggregate. Note: the advisory size is a
-    session-level AQE knob; it is set here and applies to subsequent adaptive
-    coalescing in the session.
+    statistics instead of a pre-pass aggregate. Spark has no per-plan
+    advisory size, and this function does not change the session's: a
+    media job that wants a different size sets it on its own session.
     """
-    spark = df.sparkSession
-    spark.conf.set(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(target_mb * 1024 * 1024)
-    )
     return df.hint("rebalance")
+
+
+def _map_media(
+    df: DataFrame, schema: str, rows: Callable[[bytes | None], Iterable[Sequence]]
+) -> DataFrame:
+    """The one Arrow pass every media mapper runs: select (media_id,
+    payload), call `rows(blob)` per payload and emit its rows. Each row is a
+    tuple (or other sequence) of the values after media_id, in `schema`
+    order; `blob` is the payload's bytes, or None for a NULL payload. The
+    column names come from `schema`, parsed once when the plan is built, and
+    integer columns come out nullable, so a row may leave any of them None."""
+    fields = T.DataType.fromDDL(schema).fields
+    names = [f.name for f in fields]
+    ints = {
+        f.name: "Int32" if isinstance(f.dataType, T.IntegerType) else "Int64"
+        for f in fields
+        if isinstance(f.dataType, (T.IntegerType, T.LongType))
+    }
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [
+                (mid, *row)
+                for mid, blob in zip(pdf["media_id"], pdf["payload"])
+                for row in rows(None if blob is None else bytes(blob))
+            ]
+            yield pd.DataFrame.from_records(out, columns=names).astype(ints)
+
+    return df.select("media_id", "payload").mapInPandas(run, schema)
+
+
+def _sampled_frames(every_n: int, max_frames: int) -> Callable[[int], range]:
+    """The frame mappers' sampling contract: frames 0, every_n, 2·every_n,
+    …, at most max_frames of them. A bad setting raises here, when the
+    mapper is called and before any task runs; the returned function gives
+    the sampled frame indices of a payload with n frames."""
+    if every_n <= 0 or max_frames <= 0:
+        raise ValueError(f"invalid sampling every_n={every_n} max_frames={max_frames}")
+    return lambda n: range(0, min(n, every_n * max_frames), every_n)
 
 
 _FEATURE_SCHEMA = "media_id long, n_bytes long, byte_mean double, byte_hist array<int>"
 
 
-def image_features(df: DataFrame, *, fake: bool = True) -> DataFrame:
+def image_features(df: DataFrame) -> DataFrame:
     """Decode + feature-extract via Arrow-batched mapInPandas.
 
-    fake=True computes deterministic byte-level features (length, mean byte,
-    16-bin byte histogram) standing in for a real decode; fake=False is where
-    a real codec (Pillow etc.) plugs in — not available in this container.
+    Computes deterministic byte-level features (length, mean byte, 16-bin
+    byte histogram) standing in for a real decode; a NULL payload reads as
+    empty. The real pure-Python decoders are per format (`bmp_features`,
+    `png_features`, `jpeg_features`, `wav_features`, ...).
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "generic compressed-format decode needs a codec library "
-                    "(not in this container); real pure-Python decoders "
-                    "exist for BMP (bmp_features), PNG (png_features), GIF "
-                    "(gif_features), baseline JPEG (jpeg_features), WAV "
-                    "(wav_features) and AVI demux (avi_frame_features) — "
-                    "the remaining boundaries are MP3/AAC and compressed "
-                    "video codecs"
-                )
-            payloads = pdf["payload"]
-            rows = []
-            for mid, blob in zip(pdf["media_id"], payloads):
-                b = bytes(blob) if blob is not None else b""
-                hist = [0] * 16
-                for byte in b:
-                    hist[byte >> 4] += 1
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "n_bytes": len(b),
-                        "byte_mean": (sum(b) / len(b)) if b else 0.0,
-                        "byte_hist": hist,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "n_bytes", "byte_mean", "byte_hist"])
+    def rows(blob):
+        b = blob or b""
+        hist = [0] * 16
+        for byte in b:
+            hist[byte >> 4] += 1
+        return [(len(b), (sum(b) / len(b)) if b else 0.0, hist)]
 
-    return df.select("media_id", "payload").mapInPandas(run, _FEATURE_SCHEMA)
+    return _map_media(df, _FEATURE_SCHEMA, rows)
 
 
 # --- real BMP decode (no codec library needed: the format is just headers
@@ -537,26 +554,7 @@ def bmp_features(df: DataFrame) -> DataFrame:
     against a DuckDB oracle in the registry (`multimodal_features`).
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, bpp, px_sum, top_left = decode_bmp(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "bpp": bpp,
-                        "px_sum": px_sum,
-                        "top_left": top_left,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "bpp", "px_sum", "top_left"]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(run, _BMP_SCHEMA)
+    return _map_media(df, _BMP_SCHEMA, lambda b: [decode_bmp(b)])
 
 
 def bmp_resize(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -568,18 +566,9 @@ def bmp_resize(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     against integer arithmetic in DuckDB.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": [
-                        resize_bmp(bytes(blob), out_w, out_h) for blob in pdf["payload"]
-                    ],
-                }
-            )
-
-    return df.select("media_id", "payload").mapInPandas(run, "media_id long, payload binary")
+    return _map_media(
+        df, "media_id long, payload binary", lambda b: [(resize_bmp(b, out_w, out_h),)]
+    )
 
 
 # --- real WAV/PCM decode (same no-codec-needed reasoning as BMP: RIFF is
@@ -684,30 +673,11 @@ def mulaw_features(df: DataFrame) -> DataFrame:
     """Distributed G.711 decode: expand every mu-law payload in one Arrow
     mapInPandas pass (map-only); hash-verified by `multimodal_audio_mulaw`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                rate, n, samples = decode_wav_mulaw(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "sample_rate": rate,
-                        "n_samples": n,
-                        "amp_sum": sum(samples),
-                        "peak": max(samples),
-                        "first_sample": samples[0] if samples else 0,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_samples",
-                    "amp_sum", "peak", "first_sample",
-                ],
-            )
+    def rows(blob):
+        rate, n, samples = decode_wav_mulaw(blob)
+        return [(rate, n, sum(samples), max(samples), samples[0] if samples else 0)]
 
-    return df.select("media_id", "payload").mapInPandas(run, _MULAW_SCHEMA)
+    return _map_media(df, _MULAW_SCHEMA, rows)
 
 
 def alaw_decode_byte(b: int) -> int:
@@ -799,30 +769,11 @@ def alaw_features(df: DataFrame) -> DataFrame:
     mapInPandas pass (map-only) — the same feature shape as
     `mulaw_features` so the two telephony codecs share one oracle form."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                rate, n, samples = decode_wav_alaw(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "sample_rate": rate,
-                        "n_samples": n,
-                        "amp_sum": sum(samples),
-                        "peak": max(samples),
-                        "first_sample": samples[0] if samples else 0,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_samples",
-                    "amp_sum", "peak", "first_sample",
-                ],
-            )
+    def rows(blob):
+        rate, n, samples = decode_wav_alaw(blob)
+        return [(rate, n, sum(samples), max(samples), samples[0] if samples else 0)]
 
-    return df.select("media_id", "payload").mapInPandas(run, _MULAW_SCHEMA)
+    return _map_media(df, _MULAW_SCHEMA, rows)
 
 
 # IMA ADPCM step-size and index-adjust tables (public spec data — the
@@ -976,31 +927,18 @@ def adpcm_features(df: DataFrame) -> DataFrame:
     wrong clamp, wrong index adjust — fails the hash even if sums
     accidentally cancel."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                rate, samples = decode_wav_adpcm(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "sample_rate": rate,
-                        "n_samples": len(samples),
-                        "amp_sum": sum(samples),
-                        "peak": max(samples),
-                        "first_sample": samples[0] if samples else 0,
-                        "last_sample": samples[-1] if samples else 0,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_samples", "amp_sum",
-                    "peak", "first_sample", "last_sample",
-                ],
-            )
+    def rows(blob):
+        rate, samples = decode_wav_adpcm(blob)
+        return [(
+            rate,
+            len(samples),
+            sum(samples),
+            max(samples),
+            samples[0] if samples else 0,
+            samples[-1] if samples else 0,
+        )]
 
-    return df.select("media_id", "payload").mapInPandas(run, _ADPCM_SCHEMA)
+    return _map_media(df, _ADPCM_SCHEMA, rows)
 
 
 def _pack_wav_pcm(data: bytes, sample_rate: int) -> bytes:
@@ -1344,32 +1282,19 @@ def wav_multich_features(df: DataFrame) -> DataFrame:
     channel count keeps the whole-stream sums but shifts the per-channel
     one and fails the oracle hash."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                rate, ch, n_frames, samples = decode_wav_multich(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "sample_rate": rate,
-                        "n_channels": ch,
-                        "n_frames": n_frames,
-                        "amp_sum": sum(abs(s) for s in samples),
-                        "peak": max(samples, default=0),
-                        "first_sample": samples[0] if samples else 0,
-                        "ch0_amp_sum": sum(abs(s) for s in samples[::ch]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_channels", "n_frames",
-                    "amp_sum", "peak", "first_sample", "ch0_amp_sum",
-                ],
-            )
+    def rows(blob):
+        rate, ch, n_frames, samples = decode_wav_multich(blob)
+        return [(
+            rate,
+            ch,
+            n_frames,
+            sum(abs(s) for s in samples),
+            max(samples, default=0),
+            samples[0] if samples else 0,
+            sum(abs(s) for s in samples[::ch]),
+        )]
 
-    return df.select("media_id", "payload").mapInPandas(run, _WAV_MULTICH_SCHEMA)
+    return _map_media(df, _WAV_MULTICH_SCHEMA, rows)
 
 
 def make_wav24(media_id: int, n_samples: int, sample_rate: int = 8000) -> bytes:
@@ -1688,25 +1613,11 @@ _WOFF_SCHEMA = (
 def woff_features(df: DataFrame) -> DataFrame:
     """Distributed WOFF metadata (Arrow mapInPandas, map-only)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                m = parse_woff(bytes(blob))
-                m["media_id"] = mid
-                rows.append(m)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "n_tables", "num_glyphs",
-                    "units_per_em", "family",
-                ],
-            ).astype(
-                {"n_tables": "int32", "num_glyphs": "int32",
-                 "units_per_em": "int32"}
-            )
+    def rows(blob):
+        m = parse_woff(blob)
+        return [(m["kind"], m["n_tables"], m["num_glyphs"], m["units_per_em"], m["family"])]
 
-    return df.select("media_id", "payload").mapInPandas(run, _WOFF_SCHEMA)
+    return _map_media(df, _WOFF_SCHEMA, rows)
 
 
 def make_fits(media_id: int, w: int, h: int, *, bitpix: int = 16) -> bytes:
@@ -1831,27 +1742,11 @@ _FITS_SCHEMA = (
 def fits_features(df: DataFrame) -> DataFrame:
     """Distributed FITS decode (Arrow mapInPandas, map-only)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, bp, px = decode_fits(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid, "width": w, "height": h,
-                        "bitpix": bp, "px_sum": sum(px),
-                        "px_min": min(px), "px_max": max(px),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "bitpix",
-                    "px_sum", "px_min", "px_max",
-                ],
-            ).astype({"width": "int32", "height": "int32", "bitpix": "int32"})
+    def rows(blob):
+        w, h, bp, px = decode_fits(blob)
+        return [(w, h, bp, sum(px), min(px), max(px))]
 
-    return df.select("media_id", "payload").mapInPandas(run, _FITS_SCHEMA)
+    return _map_media(df, _FITS_SCHEMA, rows)
 
 
 def encode_qoi(w: int, h: int, pixels: list[tuple[int, int, int, int]],
@@ -2014,31 +1909,15 @@ def qoi_features(df: DataFrame) -> DataFrame:
     """Distributed QOI decode (Arrow mapInPandas, map-only): per-channel
     sums over the decoded RGBA pixels."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, chans, px = decode_qoi(bytes(blob))
-                rs = sum(p[0] for p in px)
-                gs = sum(p[1] for p in px)
-                bs = sum(p[2] for p in px)
-                as_ = sum(p[3] for p in px)
-                rows.append(
-                    {
-                        "media_id": mid, "width": w, "height": h,
-                        "channels": chans, "r_sum": rs, "g_sum": gs,
-                        "b_sum": bs, "a_sum": as_,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "channels",
-                    "r_sum", "g_sum", "b_sum", "a_sum",
-                ],
-            ).astype({"width": "int32", "height": "int32", "channels": "int32"})
+    def rows(blob):
+        w, h, chans, px = decode_qoi(blob)
+        rs = sum(p[0] for p in px)
+        gs = sum(p[1] for p in px)
+        bs = sum(p[2] for p in px)
+        as_ = sum(p[3] for p in px)
+        return [(w, h, chans, rs, gs, bs, as_)]
 
-    return df.select("media_id", "payload").mapInPandas(run, _QOI_SCHEMA)
+    return _map_media(df, _QOI_SCHEMA, rows)
 
 
 def sniff_media_type(payload: "Column") -> "Column":
@@ -2245,30 +2124,17 @@ def _pcm_container_features(df: DataFrame, decode) -> DataFrame:
     (AIFF/SPHERE/FLAC all expose (rate, n, samples)): the wav_features
     integer surface, so one oracle form covers every container."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                rate, n, samples = decode(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "sample_rate": rate,
-                        "n_samples": n,
-                        "amp_sum": sum(abs(s) for s in samples),
-                        "peak": max(samples, default=0),
-                        "first_sample": samples[0] if samples else 0,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_samples",
-                    "amp_sum", "peak", "first_sample",
-                ],
-            )
+    def rows(blob):
+        rate, n, samples = decode(blob)
+        return [(
+            rate,
+            n,
+            sum(abs(s) for s in samples),
+            max(samples, default=0),
+            samples[0] if samples else 0,
+        )]
 
-    return df.select("media_id", "payload").mapInPandas(run, _PCM_CONTAINER_SCHEMA)
+    return _map_media(df, _PCM_CONTAINER_SCHEMA, rows)
 
 
 def aiff_features(df: DataFrame) -> DataFrame:
@@ -2846,31 +2712,7 @@ def wav_features(df: DataFrame) -> DataFrame:
     an env-boundary stub: it needs a codec library this container lacks.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                rate, n, dur, amp_sum, peak, first = decode_wav(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "sample_rate": rate,
-                        "n_samples": n,
-                        "duration_ms": dur,
-                        "amp_sum": amp_sum,
-                        "peak": peak,
-                        "first_sample": first,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_samples", "duration_ms",
-                    "amp_sum", "peak", "first_sample",
-                ],
-            )
-
-    return df.select("media_id", "payload").mapInPandas(run, _WAV_SCHEMA)
+    return _map_media(df, _WAV_SCHEMA, lambda b: [decode_wav(b)])
 
 
 def wav_resample(df: DataFrame, out_rate: int) -> DataFrame:
@@ -2880,18 +2722,9 @@ def wav_resample(df: DataFrame, out_rate: int) -> DataFrame:
     `multimodal_audio_resample` hash-verifies the decode→resample→decode
     chain against integer arithmetic in DuckDB."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": [
-                        resample_wav(bytes(blob), out_rate) for blob in pdf["payload"]
-                    ],
-                }
-            )
-
-    return df.select("media_id", "payload").mapInPandas(run, "media_id long, payload binary")
+    return _map_media(
+        df, "media_id long, payload binary", lambda b: [(resample_wav(b, out_rate),)]
+    )
 
 
 # --- real AVI demux (RIFF container + raw uncompressed DIB frames: same
@@ -3048,37 +2881,19 @@ def avi_frame_features(df: DataFrame, every_n: int = 1, max_frames: int = 8) -> 
     hash-verified end-to-end by the registry's `multimodal_video_frames`.
     """
 
-    if every_n <= 0 or max_frames <= 0:
-        raise ValueError(f"invalid sampling every_n={every_n} max_frames={max_frames}")
+    sample = _sampled_frames(every_n, max_frames)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames = demux_avi(bytes(blob))
-                stride = (w * 3 + 3) & ~3
-                for j in range(min(max_frames, (len(frames) + every_n - 1) // every_n)):
-                    fi = j * every_n
-                    fr = frames[fi]
-                    px_sum = sum(
-                        sum(fr[r * stride : r * stride + w * 3]) for r in range(h)
-                    )
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": fi,
-                            "width": w,
-                            "height": h,
-                            "px_sum": px_sum,
-                            "top_left": fr[(h - 1) * stride],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "width", "height", "px_sum", "top_left"],
+    def rows(blob):
+        w, h, frames = demux_avi(blob)
+        stride = (w * 3 + 3) & ~3
+        for fi in sample(len(frames)):
+            fr = frames[fi]
+            px_sum = sum(
+                sum(fr[r * stride : r * stride + w * 3]) for r in range(h)
             )
+            yield fi, w, h, px_sum, fr[(h - 1) * stride]
 
-    return df.select("media_id", "payload").mapInPandas(run, _AVI_SCHEMA)
+    return _map_media(df, _AVI_SCHEMA, rows)
 
 
 # --- real COMPRESSED-video-frame decode: BI_RLE8 (Windows RLE8 bitmap
@@ -3271,40 +3086,18 @@ def avi_rle8_features(df: DataFrame, every_n: int = 1, max_frames: int = 8) -> D
     pixels never leave the executor). Same sampling contract as
     `avi_frame_features`; hash-verified by `multimodal_video_rle`."""
 
-    if every_n <= 0 or max_frames <= 0:
-        raise ValueError(f"invalid sampling every_n={every_n} max_frames={max_frames}")
+    sample = _sampled_frames(every_n, max_frames)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames, pal = decode_avi_rle8(bytes(blob))
-                rgb = [sum(pal[i]) for i in range(256)]
-                for j in range(min(max_frames, (len(frames) + every_n - 1) // every_n)):
-                    fi = j * every_n
-                    fr = frames[fi]
-                    idx_sum = sum(map(sum, fr))
-                    rgb_sum = sum(rgb[v] for row in fr for v in row)
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": fi,
-                            "width": w,
-                            "height": h,
-                            "idx_sum": idx_sum,
-                            "rgb_sum": rgb_sum,
-                            "top_left_idx": fr[0][0],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "idx_sum", "rgb_sum", "top_left_idx",
-                ],
-            )
+    def rows(blob):
+        w, h, frames, pal = decode_avi_rle8(blob)
+        rgb = [sum(pal[i]) for i in range(256)]
+        for fi in sample(len(frames)):
+            fr = frames[fi]
+            idx_sum = sum(map(sum, fr))
+            rgb_sum = sum(rgb[v] for row in fr for v in row)
+            yield fi, w, h, idx_sum, rgb_sum, fr[0][0]
 
-    return df.select("media_id", "payload").mapInPandas(run, _RLE8_SCHEMA)
+    return _map_media(df, _RLE8_SCHEMA, rows)
 
 
 def make_avi_mjpeg(media_id: int, n_frames: int, fps: int = 10) -> bytes:
@@ -3382,37 +3175,19 @@ def avi_mjpeg_frame_features(df: DataFrame, every_n: int = 1, max_frames: int = 
     sampled frame in one Arrow mapInPandas pass (map-only). Same sampling
     contract and dimension cross-check as `mp4_frame_features`."""
 
-    if every_n <= 0 or max_frames <= 0:
-        raise ValueError(f"invalid sampling every_n={every_n} max_frames={max_frames}")
+    sample = _sampled_frames(every_n, max_frames)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames = demux_avi_mjpeg(bytes(blob))
-                for j in range(min(max_frames, (len(frames) + every_n - 1) // every_n)):
-                    fi = j * every_n
-                    fw, fh, px = decode_jpeg_np(frames[fi])
-                    if (fw, fh) != (w, h):
-                        raise ValueError(
-                            f"frame {fi} decodes to {fw}x{fh}, strf declares {w}x{h}"
-                        )
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": fi,
-                            "width": fw,
-                            "height": fh,
-                            "px_sum": int(px.sum()),
-                            "top_left": int(px[0, 0]),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "width", "height", "px_sum", "top_left"],
-            )
+    def rows(blob):
+        w, h, frames = demux_avi_mjpeg(blob)
+        for fi in sample(len(frames)):
+            fw, fh, px = decode_jpeg_np(frames[fi])
+            if (fw, fh) != (w, h):
+                raise ValueError(
+                    f"frame {fi} decodes to {fw}x{fh}, strf declares {w}x{h}"
+                )
+            yield fi, fw, fh, int(px.sum()), int(px[0, 0])
 
-    return df.select("media_id", "payload").mapInPandas(run, _AVI_SCHEMA)
+    return _map_media(df, _AVI_SCHEMA, rows)
 
 
 # --- real MP4/MOV demux (ISO BMFF, ISO/IEC 14496-12): the box grammar and
@@ -3723,37 +3498,19 @@ def mp4_frame_features(df: DataFrame, every_n: int = 1, max_frames: int = 8) -> 
     decoded frame's dimensions are cross-checked against the stsd entry,
     so a container/stream mismatch raises instead of mis-reporting."""
 
-    if every_n <= 0 or max_frames <= 0:
-        raise ValueError(f"invalid sampling every_n={every_n} max_frames={max_frames}")
+    sample = _sampled_frames(every_n, max_frames)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames = demux_mp4(bytes(blob))
-                for j in range(min(max_frames, (len(frames) + every_n - 1) // every_n)):
-                    fi = j * every_n
-                    fw, fh, px = decode_jpeg_np(frames[fi])
-                    if (fw, fh) != (w, h):
-                        raise ValueError(
-                            f"frame {fi} decodes to {fw}x{fh}, stsd declares {w}x{h}"
-                        )
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": fi,
-                            "width": fw,
-                            "height": fh,
-                            "px_sum": int(px.sum()),
-                            "top_left": int(px[0, 0]),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "width", "height", "px_sum", "top_left"],
-            )
+    def rows(blob):
+        w, h, frames = demux_mp4(blob)
+        for fi in sample(len(frames)):
+            fw, fh, px = decode_jpeg_np(frames[fi])
+            if (fw, fh) != (w, h):
+                raise ValueError(
+                    f"frame {fi} decodes to {fw}x{fh}, stsd declares {w}x{h}"
+                )
+            yield fi, fw, fh, int(px.sum()), int(px[0, 0])
 
-    return df.select("media_id", "payload").mapInPandas(run, _AVI_SCHEMA)
+    return _map_media(df, _AVI_SCHEMA, rows)
 
 
 # --- real PNG decode: DEFLATE is in the Python STANDARD LIBRARY (zlib), so
@@ -4386,34 +4143,21 @@ def png_rgba_features(df: DataFrame) -> DataFrame:
     decode (the silent-wrong failure `decode_png_pixels` now refuses)
     shifts alpha_sum/transparent_count and fails the oracle hash."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode_png_rgba(bytes(blob))
-                arr = np.frombuffer(
-                    b"".join(bytes(r) for r in px), dtype=np.uint8
-                ).reshape(h, w, 4).astype(np.int64)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "rgb_sum": int(arr[:, :, :3].sum()),
-                        "alpha_sum": int(arr[:, :, 3].sum()),
-                        "transparent_count": int((arr[:, :, 3] == 0).sum()),
-                        "top_left_alpha": int(arr[0, 0, 3]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "rgb_sum", "alpha_sum",
-                    "transparent_count", "top_left_alpha",
-                ],
-            )
+    def rows(blob):
+        w, h, px = decode_png_rgba(blob)
+        arr = np.frombuffer(
+            b"".join(bytes(r) for r in px), dtype=np.uint8
+        ).reshape(h, w, 4).astype(np.int64)
+        return [(
+            w,
+            h,
+            int(arr[:, :, :3].sum()),
+            int(arr[:, :, 3].sum()),
+            int((arr[:, :, 3] == 0).sum()),
+            int(arr[0, 0, 3]),
+        )]
 
-    return df.select("media_id", "payload").mapInPandas(run, _PNG_RGBA_SCHEMA)
+    return _map_media(df, _PNG_RGBA_SCHEMA, rows)
 
 
 _PNG_SCHEMA = "media_id long, width int, height int, px_sum long, top_left int"
@@ -4424,25 +4168,7 @@ def png_features(df: DataFrame) -> DataFrame:
     unfilter via Arrow mapInPandas — same plan shape as `bmp_features`
     (map-only); hash-verified by the registry's `multimodal_png`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px_sum, top_left = decode_png(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "px_sum": px_sum,
-                        "top_left": top_left,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "px_sum", "top_left"]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(run, _PNG_SCHEMA)
+    return _map_media(df, _PNG_SCHEMA, lambda b: [decode_png(b)])
 
 
 def png16_features(df: DataFrame) -> DataFrame:
@@ -4451,25 +4177,7 @@ def png16_features(df: DataFrame) -> DataFrame:
     mapInPandas pass — map-only like `png_features`; hash-verified by
     the registry's `multimodal_png16`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px_sum, top_left = decode_png16(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "px_sum": px_sum,
-                        "top_left": top_left,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "px_sum", "top_left"]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(run, _PNG_SCHEMA)
+    return _map_media(df, _PNG_SCHEMA, lambda b: [decode_png16(b)])
 
 
 # --- GIF (LZW is pure arithmetic — no library needed at all) --------------
@@ -5221,40 +4929,20 @@ def gif_composited_features(
     DISPLAYED frame with palette-folded features; hash-verified by the
     registry's `multimodal_gif_composited`."""
 
-    if every_n <= 0 or max_frames <= 0:
-        raise ValueError(f"invalid sampling every_n={every_n} max_frames={max_frames}")
+    sample = _sampled_frames(every_n, max_frames)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, pal, frames = decode_gif_frames_composited(bytes(blob))
-                rgb = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 3).sum(
-                    axis=1, dtype=np.int64
-                )
-                for j in range(min(max_frames, (len(frames) + every_n - 1) // every_n)):
-                    fi = j * every_n
-                    fr = np.frombuffer(frames[fi], dtype=np.uint8)
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": fi,
-                            "width": w,
-                            "height": h,
-                            "idx_sum": int(fr.sum(dtype=np.int64)),
-                            "rgb_sum": int(rgb[fr].sum(dtype=np.int64)),
-                            "top_left_idx": int(fr[0]),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "idx_sum", "rgb_sum", "top_left_idx",
-                ],
-            )
+    def rows(blob):
+        w, h, pal, frames = decode_gif_frames_composited(blob)
+        rgb = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 3).sum(
+            axis=1, dtype=np.int64
+        )
+        for fi in sample(len(frames)):
+            fr = np.frombuffer(frames[fi], dtype=np.uint8)
+            idx_sum = int(fr.sum(dtype=np.int64))
+            rgb_sum = int(rgb[fr].sum(dtype=np.int64))
+            yield fi, w, h, idx_sum, rgb_sum, int(fr[0])
 
-    return df.select("media_id", "payload").mapInPandas(run, _GIF_FRAME_SCHEMA)
+    return _map_media(df, _GIF_FRAME_SCHEMA, rows)
 
 
 _GIF_RGB_FRAME_SCHEMA = (
@@ -5271,38 +4959,16 @@ def gif_composited_rgb_features(
     channel sum and the packed top-left pixel (r·65536 + g·256 + b);
     hash-verified by the registry's `multimodal_gif_local_palettes`."""
 
-    if every_n <= 0 or max_frames <= 0:
-        raise ValueError(f"invalid sampling every_n={every_n} max_frames={max_frames}")
+    sample = _sampled_frames(every_n, max_frames)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames = decode_gif_frames_composited_rgb(bytes(blob))
-                for j in range(min(max_frames, (len(frames) + every_n - 1) // every_n)):
-                    fi = j * every_n
-                    fr = np.frombuffer(frames[fi], dtype=np.uint8)
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": fi,
-                            "width": w,
-                            "height": h,
-                            "rgb_sum": int(fr.sum(dtype=np.int64)),
-                            "top_left_rgb": int(fr[0]) * 65536
-                            + int(fr[1]) * 256
-                            + int(fr[2]),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "rgb_sum", "top_left_rgb",
-                ],
-            )
+    def rows(blob):
+        w, h, frames = decode_gif_frames_composited_rgb(blob)
+        for fi in sample(len(frames)):
+            fr = np.frombuffer(frames[fi], dtype=np.uint8)
+            top_left_rgb = int(fr[0]) * 65536 + int(fr[1]) * 256 + int(fr[2])
+            yield fi, w, h, int(fr.sum(dtype=np.int64)), top_left_rgb
 
-    return df.select("media_id", "payload").mapInPandas(run, _GIF_RGB_FRAME_SCHEMA)
+    return _map_media(df, _GIF_RGB_FRAME_SCHEMA, rows)
 
 
 _GIF_FRAME_SCHEMA = (
@@ -5316,38 +4982,16 @@ def gif_frame_features(df: DataFrame, every_n: int = 1, max_frames: int = 8) -> 
     every payload in one Arrow mapInPandas pass (map-only) — the RLE8
     feature shape (index sum, palette-folded RGB sum, top-left index)."""
 
-    if every_n <= 0 or max_frames <= 0:
-        raise ValueError(f"invalid sampling every_n={every_n} max_frames={max_frames}")
+    sample = _sampled_frames(every_n, max_frames)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, pal, frames = decode_gif_frames(bytes(blob))
-                rgb = [pal[3 * i] + pal[3 * i + 1] + pal[3 * i + 2] for i in range(len(pal) // 3)]
-                for j in range(min(max_frames, (len(frames) + every_n - 1) // every_n)):
-                    fi = j * every_n
-                    fr = frames[fi]
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": fi,
-                            "width": w,
-                            "height": h,
-                            "idx_sum": sum(fr),
-                            "rgb_sum": sum(rgb[v] for v in fr),
-                            "top_left_idx": fr[0],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "idx_sum", "rgb_sum", "top_left_idx",
-                ],
-            )
+    def rows(blob):
+        w, h, pal, frames = decode_gif_frames(blob)
+        rgb = [pal[3 * i] + pal[3 * i + 1] + pal[3 * i + 2] for i in range(len(pal) // 3)]
+        for fi in sample(len(frames)):
+            fr = frames[fi]
+            yield fi, w, h, sum(fr), sum(rgb[v] for v in fr), fr[0]
 
-    return df.select("media_id", "payload").mapInPandas(run, _GIF_FRAME_SCHEMA)
+    return _map_media(df, _GIF_FRAME_SCHEMA, rows)
 
 
 def decode_gif_indices(blob: bytes) -> tuple[int, int, bytes, bytes]:
@@ -5456,29 +5100,7 @@ def gif_features(df: DataFrame) -> DataFrame:
     Arrow mapInPandas — same map-only plan shape as `png_features`;
     hash-verified by the registry's `multimodal_gif`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, idx_sum, rgb_sum, top_left = decode_gif(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "idx_sum": idx_sum,
-                        "rgb_sum": rgb_sum,
-                        "top_left_idx": top_left,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "idx_sum", "rgb_sum", "top_left_idx",
-                ],
-            )
-
-    return df.select("media_id", "payload").mapInPandas(run, _GIF_SCHEMA)
+    return _map_media(df, _GIF_SCHEMA, lambda b: [decode_gif(b)])
 
 
 def _tiff_lzw_compress(data: bytes) -> bytes:
@@ -5925,28 +5547,14 @@ def tiff_page_features(df: DataFrame) -> DataFrame:
     in one Arrow mapInPandas pass (map-only) — one media row in, one row
     per PAGE out, the `avi_frame_features` shape for documents."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                for p, (w, h, px) in enumerate(decode_tiff_pages(bytes(blob))):
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "page_idx": p,
-                            "width": w,
-                            "height": h,
-                            "px_sum": sum(map(sum, px)),
-                            "top_left": px[0][0],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "page_idx", "width", "height", "px_sum", "top_left"],
-            )
+    def rows(blob):
+        for p, (w, h, px) in enumerate(decode_tiff_pages(blob)):
+            yield p, w, h, sum(map(sum, px)), px[0][0]
 
-    return df.select("media_id", "payload").mapInPandas(
-        run, "media_id long, page_idx int, width int, height int, px_sum long, top_left int"
+    return _map_media(
+        df,
+        "media_id long, page_idx int, width int, height int, px_sum long, top_left int",
+        rows,
     )
 
 
@@ -6153,34 +5761,21 @@ def tiff_rgb_features(df: DataFrame) -> DataFrame:
     grayscale-stride walk shifts r_sum/g_sum/b_sum and fails the oracle
     hash."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode_tiff_rgb(bytes(blob))
-                arr = np.asarray(px, dtype=np.int64).reshape(h, w, 3)
-                ch = arr.sum(axis=(0, 1))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "r_sum": int(ch[0]),
-                        "g_sum": int(ch[1]),
-                        "b_sum": int(ch[2]),
-                        "px_sum": int(ch.sum()),
-                        "top_left_r": int(arr[0, 0, 0]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "r_sum", "g_sum",
-                    "b_sum", "px_sum", "top_left_r",
-                ],
-            )
+    def rows(blob):
+        w, h, px = decode_tiff_rgb(blob)
+        arr = np.asarray(px, dtype=np.int64).reshape(h, w, 3)
+        ch = arr.sum(axis=(0, 1))
+        return [(
+            w,
+            h,
+            int(ch[0]),
+            int(ch[1]),
+            int(ch[2]),
+            int(ch.sum()),
+            int(arr[0, 0, 0]),
+        )]
 
-    return df.select("media_id", "payload").mapInPandas(run, _TIFF_RGB_SCHEMA)
+    return _map_media(df, _TIFF_RGB_SCHEMA, rows)
 
 
 _TIFF_SCHEMA = "media_id long, width int, height int, px_sum long, top_left int"
@@ -6191,25 +5786,11 @@ def tiff_features(df: DataFrame) -> DataFrame:
     in one Arrow mapInPandas pass — map-only, the scanned-document mirror
     of `bmp_features`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode_tiff(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "px_sum": sum(v for row in px for v in row),
-                        "top_left": px[0][0] if px else 0,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "px_sum", "top_left"]
-            )
+    def rows(blob):
+        w, h, px = decode_tiff(blob)
+        return [(w, h, sum(v for row in px for v in row), px[0][0] if px else 0)]
 
-    return df.select("media_id", "payload").mapInPandas(run, _TIFF_SCHEMA)
+    return _map_media(df, _TIFF_SCHEMA, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -7748,32 +7329,12 @@ def jpeg_color_features(df: DataFrame) -> DataFrame:
     Arrow mapInPandas pass (map-only); hash-verified by
     `multimodal_jpeg_color`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode_jpeg_np(bytes(blob))
-                sums = px.sum(axis=(0, 1))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "r_sum": int(sums[0]),
-                        "g_sum": int(sums[1]),
-                        "b_sum": int(sums[2]),
-                        "top_left_r": int(px[0, 0, 0]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height",
-                    "r_sum", "g_sum", "b_sum", "top_left_r",
-                ],
-            )
+    def rows(blob):
+        w, h, px = decode_jpeg_np(blob)
+        sums = px.sum(axis=(0, 1))
+        return [(w, h, int(sums[0]), int(sums[1]), int(sums[2]), int(px[0, 0, 0]))]
 
-    return df.select("media_id", "payload").mapInPandas(run, _JPEG_COLOR_SCHEMA)
+    return _map_media(df, _JPEG_COLOR_SCHEMA, rows)
 
 
 _JPEG_CMYK_SCHEMA = (
@@ -7789,33 +7350,20 @@ def jpeg_cmyk_features(df: DataFrame) -> DataFrame:
     mapInPandas pass (map-only); hash-verified by the
     `multimodal_jpeg_cmyk` candidate."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode_jpeg_np(bytes(blob))
-                sums = px.sum(axis=(0, 1))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "c_sum": int(sums[0]),
-                        "m_sum": int(sums[1]),
-                        "y_sum": int(sums[2]),
-                        "k_sum": int(sums[3]),
-                        "top_left_k": int(px[0, 0, 3]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height",
-                    "c_sum", "m_sum", "y_sum", "k_sum", "top_left_k",
-                ],
-            )
+    def rows(blob):
+        w, h, px = decode_jpeg_np(blob)
+        sums = px.sum(axis=(0, 1))
+        return [(
+            w,
+            h,
+            int(sums[0]),
+            int(sums[1]),
+            int(sums[2]),
+            int(sums[3]),
+            int(px[0, 0, 3]),
+        )]
 
-    return df.select("media_id", "payload").mapInPandas(run, _JPEG_CMYK_SCHEMA)
+    return _map_media(df, _JPEG_CMYK_SCHEMA, rows)
 
 
 def jpeg_features(df: DataFrame) -> DataFrame:
@@ -7824,25 +7372,11 @@ def jpeg_features(df: DataFrame) -> DataFrame:
     shape as `png_features`; hash-verified by the registry's
     `multimodal_jpeg`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode_jpeg_np(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "px_sum": int(px.sum()),
-                        "top_left": int(px[0, 0]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "px_sum", "top_left"]
-            )
+    def rows(blob):
+        w, h, px = decode_jpeg_np(blob)
+        return [(w, h, int(px.sum()), int(px[0, 0]))]
 
-    return df.select("media_id", "payload").mapInPandas(run, _JPEG_SCHEMA)
+    return _map_media(df, _JPEG_SCHEMA, rows)
 
 
 # --- EXIF (APP1) metadata: the camera-photo crawl shape. A real TIFF-IFD
@@ -8139,39 +7673,14 @@ def exif_metadata(df: DataFrame) -> DataFrame:
     no Exif APP1. The metadata-only crawl pass — groups photos by
     camera/orientation/capture time WITHOUT decoding any pixels."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                meta = parse_exif(bytes(blob)) or {}
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "make": meta.get("make"),
-                        "model": meta.get("model"),
-                        "orientation": meta.get("orientation"),
-                        "taken_at": meta.get("taken_at"),
-                        "pixel_x": meta.get("pixel_x"),
-                        "pixel_y": meta.get("pixel_y"),
-                        "gps_lat_arcsec_e4": meta.get("gps_lat_arcsec_e4"),
-                        "gps_lon_arcsec_e4": meta.get("gps_lon_arcsec_e4"),
-                    }
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "make", "model", "orientation",
-                    "taken_at", "pixel_x", "pixel_y",
-                    "gps_lat_arcsec_e4", "gps_lon_arcsec_e4",
-                ],
-            )
-            for c in ("orientation", "pixel_x", "pixel_y"):
-                out[c] = out[c].astype("Int32")
-            for c in ("gps_lat_arcsec_e4", "gps_lon_arcsec_e4"):
-                out[c] = out[c].astype("Int64")
-            yield out
+    def rows(blob):
+        meta = parse_exif(blob) or {}
+        return [tuple(meta.get(k) for k in (
+            "make", "model", "orientation", "taken_at", "pixel_x", "pixel_y",
+            "gps_lat_arcsec_e4", "gps_lon_arcsec_e4",
+        ))]
 
-    return df.select("media_id", "payload").mapInPandas(run, _EXIF_SCHEMA)
+    return _map_media(df, _EXIF_SCHEMA, rows)
 
 
 def apply_exif_orientation(px: "np.ndarray", orientation: int) -> "np.ndarray":
@@ -8224,31 +7733,12 @@ def jpeg_oriented_features(df: DataFrame) -> DataFrame:
     so a flipped axis, missed transpose or dimension swap fails the hash
     even though the plain px_sum is permutation-invariant."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode_jpeg_oriented(bytes(blob))
-                pos = np.arange(h * w, dtype=np.int64).reshape(h, w)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "px_sum": int(px.sum()),
-                        "pos_sum": int((px * pos).sum()),
-                        "top_left": int(px[0, 0]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "px_sum", "pos_sum",
-                    "top_left",
-                ],
-            )
+    def rows(blob):
+        w, h, px = decode_jpeg_oriented(blob)
+        pos = np.arange(h * w, dtype=np.int64).reshape(h, w)
+        return [(w, h, int(px.sum()), int((px * pos).sum()), int(px[0, 0]))]
 
-    return df.select("media_id", "payload").mapInPandas(run, _JPEG_ORIENTED_SCHEMA)
+    return _map_media(df, _JPEG_ORIENTED_SCHEMA, rows)
 
 
 # --- compressed TEXT ingestion (zlib is stdlib): web-scale corpora arrive
@@ -8287,31 +7777,21 @@ def text_decompress(df: DataFrame) -> DataFrame:
     MAX_INFLATE_BYTES (r12: a ~1000:1 zlib bomb row must not OOM the
     executor mid-partition)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from query_engine_spark.llmdata.bounds import bounded_inflate
+    from query_engine_spark.llmdata.bounds import bounded_inflate
 
-        def one(b) -> str | None:
-            if b is None:
-                return None
-            return bounded_inflate(
-                bytes(b), what="compressed text payload"
-            ).decode("utf-8")
+    def rows(blob):
+        if blob is None:
+            return [(None,)]
+        text = bounded_inflate(blob, what="compressed text payload").decode("utf-8")
+        return [(text,)]
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "text": [one(b) for b in pdf["payload"]],
-                }
-            )
-
-    return df.select("media_id", "payload").mapInPandas(run, "media_id long, text string")
+    return _map_media(df, "media_id long, text string", rows)
 
 
 _FRAME_SCHEMA = "media_id long, frame_idx int, frame_bytes binary"
 
 
-def frame_sample(df: DataFrame, every_n_bytes: int = 1024, max_frames: int = 8, *, fake: bool = True) -> DataFrame:
+def frame_sample(df: DataFrame, every_n_bytes: int = 1024, max_frames: int = 8) -> DataFrame:
     """Sample "frames" from an OPAQUE video payload (fixed-stride byte
     slices) — the format-agnostic fallback. For uncompressed AVI the REAL
     path is `avi_frame_features` (an actual RIFF demuxer); compressed
@@ -8319,18 +7799,12 @@ def frame_sample(df: DataFrame, every_n_bytes: int = 1024, max_frames: int = 8, 
     plumbing (one row in → N frame rows out via mapInPandas) is shared.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError("real frame extraction needs a demuxer (not in this container)")
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(blob) if blob is not None else b""
-                for i in range(min(max_frames, max(1, len(b) // every_n_bytes))):
-                    out.append({"media_id": mid, "frame_idx": i, "frame_bytes": b[i * every_n_bytes : (i + 1) * every_n_bytes]})
-            yield pd.DataFrame(out, columns=["media_id", "frame_idx", "frame_bytes"])
+    def rows(blob):
+        b = blob or b""
+        for i in range(min(max_frames, max(1, len(b) // every_n_bytes))):
+            yield i, b[i * every_n_bytes : (i + 1) * every_n_bytes]
 
-    return df.select("media_id", "payload").mapInPandas(run, _FRAME_SCHEMA)
+    return _map_media(df, _FRAME_SCHEMA, rows)
 
 
 def dhash_bmp_bands(blob: bytes, *, grid_w: int = 9, grid_h: int = 8) -> list[int]:
@@ -8409,20 +7883,11 @@ def jpeg_dhash_bands(df: DataFrame) -> DataFrame:
     `dhash_bands`, so `perceptual_dedup_pairs`/`perceptual_probe_pairs`
     run unchanged on the output."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                _, _, px = decode_jpeg_np(bytes(blob))
-                b0, b1, b2, b3 = _dhash_bands_of_gray(px)
-                rows.append(
-                    {"media_id": mid, "b0": b0, "b1": b1, "b2": b2, "b3": b3}
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "b0", "b1", "b2", "b3"]
-            )
+    def rows(blob):
+        _, _, px = decode_jpeg_np(blob)
+        return [_dhash_bands_of_gray(px)]
 
-    return df.select("media_id", "payload").mapInPandas(run, _DHASH_SCHEMA)
+    return _map_media(df, _DHASH_SCHEMA, rows)
 
 
 def dhash_bands(df: DataFrame) -> DataFrame:
@@ -8431,19 +7896,7 @@ def dhash_bands(df: DataFrame) -> DataFrame:
     never leaves the executor; only the 4x16-bit fingerprint does, which
     is what makes perceptual dedup tractable at 100 TB of media)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                b0, b1, b2, b3 = dhash_bmp_bands(bytes(blob))
-                rows.append(
-                    {"media_id": mid, "b0": b0, "b1": b1, "b2": b2, "b3": b3}
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "b0", "b1", "b2", "b3"]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(run, _DHASH_SCHEMA)
+    return _map_media(df, _DHASH_SCHEMA, lambda b: [dhash_bmp_bands(b)])
 
 
 def _subband_splits(max_hamming: int) -> int:
@@ -8613,15 +8066,7 @@ def audio_fingerprints(df: DataFrame) -> DataFrame:
     payload in one Arrow mapInPandas pass (map-only; only the 4-byte
     fingerprint leaves the executor, never the PCM)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                lo, hi = audio_envelope_bands(bytes(blob))
-                rows.append({"media_id": mid, "fp_lo": lo, "fp_hi": hi})
-            yield pd.DataFrame(rows, columns=["media_id", "fp_lo", "fp_hi"])
-
-    return df.select("media_id", "payload").mapInPandas(run, _AUDIO_FP_SCHEMA)
+    return _map_media(df, _AUDIO_FP_SCHEMA, lambda b: [audio_envelope_bands(b)])
 
 
 def audio_dedup(fps: DataFrame) -> DataFrame:
@@ -8711,27 +8156,15 @@ def video_frame_hashes(df: DataFrame, *, every_n: int = 1, max_frames: int = 8) 
     (frames never leave the executor; only 8-byte hashes do). The set of
     frame hashes IS the video's perceptual signature."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                width, height, frames = demux_avi(bytes(blob))
-                stride = (width * 3 + 3) & ~3
-                for fi in range(0, len(frames), every_n):
-                    if fi // every_n >= max_frames:
-                        break
-                    b0, b1, b2, b3 = _dhash_bands_of_pixels(
-                        frames[fi], 0, width, height, stride
-                    )
-                    rows.append(
-                        {"media_id": mid, "frame_idx": fi,
-                         "b0": b0, "b1": b1, "b2": b2, "b3": b3}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "b0", "b1", "b2", "b3"]
-            )
+    def rows(blob):
+        width, height, frames = demux_avi(blob)
+        stride = (width * 3 + 3) & ~3
+        for fi in range(0, len(frames), every_n):
+            if fi // every_n >= max_frames:
+                break
+            yield (fi, *_dhash_bands_of_pixels(frames[fi], 0, width, height, stride))
 
-    return df.select("media_id", "payload").mapInPandas(run, _VIDEO_HASH_SCHEMA)
+    return _map_media(df, _VIDEO_HASH_SCHEMA, rows)
 
 
 def mp4_video_frame_hashes(
@@ -8745,25 +8178,15 @@ def mp4_video_frame_hashes(
     (media_id, frame_idx, b0..b3) schema as `video_frame_hashes`, so
     `video_dedup_pairs` runs unchanged on the output."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                _, _, frames = demux_mp4(bytes(blob))
-                for fi in range(0, len(frames), every_n):
-                    if fi // every_n >= max_frames:
-                        break
-                    _, _, px = decode_jpeg_np(frames[fi])
-                    b0, b1, b2, b3 = _dhash_bands_of_gray(px)
-                    rows.append(
-                        {"media_id": mid, "frame_idx": fi,
-                         "b0": b0, "b1": b1, "b2": b2, "b3": b3}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "b0", "b1", "b2", "b3"]
-            )
+    def rows(blob):
+        _, _, frames = demux_mp4(blob)
+        for fi in range(0, len(frames), every_n):
+            if fi // every_n >= max_frames:
+                break
+            _, _, px = decode_jpeg_np(frames[fi])
+            yield (fi, *_dhash_bands_of_gray(px))
 
-    return df.select("media_id", "payload").mapInPandas(run, _VIDEO_HASH_SCHEMA)
+    return _map_media(df, _VIDEO_HASH_SCHEMA, rows)
 
 
 def video_dedup_pairs(
@@ -8967,28 +8390,17 @@ def id3_metadata(df: DataFrame) -> DataFrame:
     streams. Year comes from TYER (v2.3) or the TDRC timestamp prefix
     (v2.4) — the cross-version field rename real corpora mix freely."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                frames = parse_id3(bytes(blob)) or {}
-                y = frames.get("TYER") or frames.get("TDRC")
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "title": frames.get("TIT2"),
-                        "artist": frames.get("TPE1"),
-                        "album": frames.get("TALB"),
-                        "year": int(y[:4]) if y else None,
-                    }
-                )
-            out = pd.DataFrame(
-                rows, columns=["media_id", "title", "artist", "album", "year"]
-            )
-            out["year"] = out["year"].astype("Int32")
-            yield out
+    def rows(blob):
+        frames = parse_id3(blob) or {}
+        y = frames.get("TYER") or frames.get("TDRC")
+        return [(
+            frames.get("TIT2"),
+            frames.get("TPE1"),
+            frames.get("TALB"),
+            int(y[:4]) if y else None,
+        )]
 
-    return df.select("media_id", "payload").mapInPandas(run, _ID3_SCHEMA)
+    return _map_media(df, _ID3_SCHEMA, rows)
 
 
 # --- MPEG audio (MP3) frame walk: the duration/bitrate metadata pass a
@@ -9174,22 +8586,14 @@ def mpeg_audio_meta(df: DataFrame) -> DataFrame:
     """Distributed MPEG-audio metadata (Arrow mapInPandas, map-only):
     one row per stream with the exact-integer frame-walk statistics."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                m = parse_mpeg_frames(bytes(blob))
-                m["media_id"] = mid
-                rows.append(m)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frames", "sample_rate", "channels",
-                    "total_samples", "dur_ms", "vbr", "payload_bytes",
-                ],
-            ).astype({"frames": "int32", "sample_rate": "int32", "channels": "int32"})
+    def rows(blob):
+        m = parse_mpeg_frames(blob)
+        return [(
+            m["frames"], m["sample_rate"], m["channels"], m["total_samples"],
+            m["dur_ms"], m["vbr"], m["payload_bytes"],
+        )]
 
-    return df.select("media_id", "payload").mapInPandas(run, _MPEG_SCHEMA)
+    return _map_media(df, _MPEG_SCHEMA, rows)
 
 
 # --- Netpbm (PNM): the dataset-interchange image family ML pipelines
@@ -9381,34 +8785,11 @@ def pnm_features(df: DataFrame) -> DataFrame:
     """Distributed PNM decode (Arrow mapInPandas, map-only): dims,
     channel count, maxval, total sample sum and the top-left sample."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, chans, maxval, samples = decode_pnm(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid, "width": w, "height": h,
-                        "channels": chans, "maxval": maxval,
-                        "sample_sum": sum(samples),
-                        "top_left": samples[0],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "channels", "maxval",
-                    "sample_sum", "top_left",
-                ],
-            ).astype(
-                {
-                    "width": "int32", "height": "int32",
-                    "channels": "int32", "maxval": "int32",
-                    "top_left": "int32",
-                }
-            )
+    def rows(blob):
+        w, h, chans, maxval, samples = decode_pnm(blob)
+        return [(w, h, chans, maxval, sum(samples), samples[0])]
 
-    return df.select("media_id", "payload").mapInPandas(run, _PNM_SCHEMA)
+    return _map_media(df, _PNM_SCHEMA, rows)
 
 
 # --- SVG (structural metadata): the web's vector-image format. A crawl
@@ -9516,34 +8897,14 @@ _SVG_SCHEMA = (
 def svg_features(df: DataFrame) -> DataFrame:
     """Distributed SVG metadata (Arrow mapInPandas, map-only)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                m = parse_svg(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid, "width": m["width"],
-                        "height": m["height"], "n_paths": m["n_paths"],
-                        "n_rects": m["n_rects"], "n_texts": m["n_texts"],
-                        "text_chars": len(m["text"]),
-                        "title": m["title"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_paths", "n_rects",
-                    "n_texts", "text_chars", "title",
-                ],
-            ).astype(
-                {
-                    "width": "int32", "height": "int32", "n_paths": "int32",
-                    "n_rects": "int32", "n_texts": "int32",
-                }
-            )
+    def rows(blob):
+        m = parse_svg(blob)
+        return [(
+            m["width"], m["height"], m["n_paths"], m["n_rects"], m["n_texts"],
+            len(m["text"]), m["title"],
+        )]
 
-    return df.select("media_id", "payload").mapInPandas(run, _SVG_SCHEMA)
+    return _map_media(df, _SVG_SCHEMA, rows)
 
 
 # --- ICO containers (favicons): the highest-frequency icon shape in any
@@ -9688,34 +9049,19 @@ def ico_features(df: DataFrame) -> DataFrame:
     member census + pixel sums — what a favicon-dedup pass actually
     aggregates."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                members = decode_ico(bytes(blob))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "n_images": len(members),
-                        "png_members": sum(1 for m in members if m["kind"] == "png"),
-                        "dib_members": sum(1 for m in members if m["kind"] == "dib"),
-                        "max_w": max(m["width"] for m in members),
-                        "max_h": max(m["height"] for m in members),
-                        "rgb_sum": sum(m["rgb_sum"] for m in members),
-                        "dib_alpha_sum": sum(
-                            m["alpha_sum"] or 0 for m in members
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_images", "png_members", "dib_members",
-                    "max_w", "max_h", "rgb_sum", "dib_alpha_sum",
-                ],
-            )
+    def rows(blob):
+        members = decode_ico(blob)
+        return [(
+            len(members),
+            sum(1 for m in members if m["kind"] == "png"),
+            sum(1 for m in members if m["kind"] == "dib"),
+            max(m["width"] for m in members),
+            max(m["height"] for m in members),
+            sum(m["rgb_sum"] for m in members),
+            sum(m["alpha_sum"] or 0 for m in members),
+        )]
 
-    return df.select("media_id", "payload").mapInPandas(run, _ICO_SCHEMA)
+    return _map_media(df, _ICO_SCHEMA, rows)
 
 
 # --- subtitle files (SRT / WebVTT): the text half of ASR and video
@@ -9845,28 +9191,20 @@ def subtitle_stats(df: DataFrame) -> DataFrame:
     file the cue count, summed cue duration, character count and md5 of
     the form-feed-joined cue texts — what an ASR-pair curation pass
     aggregates before aligning captions to audio."""
+
     import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                cues = parse_subtitles(bytes(payload).decode("utf-8"))
-                joined = "\f".join(c[2] for c in cues)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "cues": len(cues),
-                        "total_ms": sum(e - s for s, e, _ in cues),
-                        "chars": len(joined),
-                        "fp": hashlib.md5(joined.encode("utf-8")).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "cues", "total_ms", "chars", "fp"]
-            )
+    def rows(blob):
+        cues = parse_subtitles(blob.decode("utf-8"))
+        joined = "\f".join(c[2] for c in cues)
+        return [(
+            len(cues),
+            sum(e - s for s, e, _ in cues),
+            len(joined),
+            hashlib.md5(joined.encode("utf-8")).hexdigest(),
+        )]
 
-    return df.select("media_id", "payload").mapInPandas(run, _SUBTITLE_SCHEMA)
+    return _map_media(df, _SUBTITLE_SCHEMA, rows)
 
 
 # ---------------------------------------------------------------------------

@@ -35,10 +35,10 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from query_engine_spark.llmdata.multimodal import _map_media
 
 # --------------------------------------------------------------------------
 # writer: deterministic single-font PDFs for fixtures
@@ -927,22 +927,12 @@ def pdf_text_features(df: DataFrame) -> DataFrame:
     one row per document with page count, total extracted characters,
     and the md5 of the page texts joined by form-feed — the
     corpus-ingest fingerprint the registry oracle hash-checks."""
+
     import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = []
-            for mid, blob in zip(pdf_batch["media_id"], pdf_batch["payload"]):
-                pages = extract_pdf_text(bytes(blob))
-                joined = "\f".join(pages)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "pages": len(pages),
-                        "chars": len(joined),
-                        "fp": hashlib.md5(joined.encode("utf-8")).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "pages", "chars", "fp"])
+    def rows(blob):
+        pages = extract_pdf_text(blob)
+        joined = "\f".join(pages)
+        return [(len(pages), len(joined), hashlib.md5(joined.encode("utf-8")).hexdigest())]
 
-    return df.select("media_id", "payload").mapInPandas(run, _PDF_SCHEMA)
+    return _map_media(df, _PDF_SCHEMA, rows)

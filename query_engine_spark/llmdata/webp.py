@@ -40,10 +40,9 @@ reference's ingest surface); the bitstream layout from the public RFC
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from query_engine_spark.llmdata.multimodal import _map_media
 
 # --------------------------------------------------------------------------
 # bit I/O — VP8L is LSB-first within little-endian bytes, like DEFLATE
@@ -1182,37 +1181,17 @@ def webp_features(df: DataFrame) -> DataFrame:
     per-channel sums + the top-left red byte — the same integer feature
     fold the other image codecs hash-verify with."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode_webp(bytes(blob))
-                r_sum = g_sum = b_sum = 0
-                for p in px:
-                    r_sum += (p >> 16) & 255
-                    g_sum += (p >> 8) & 255
-                    b_sum += p & 255
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "r_sum": r_sum,
-                        "g_sum": g_sum,
-                        "b_sum": b_sum,
-                        "px_sum": r_sum + g_sum + b_sum,
-                        "top_left_r": (px[0] >> 16) & 255 if px else 0,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "r_sum", "g_sum",
-                    "b_sum", "px_sum", "top_left_r",
-                ],
-            ).astype({"width": "int32", "height": "int32", "top_left_r": "int32"})
+    def rows(blob):
+        w, h, px = decode_webp(blob)
+        r_sum = g_sum = b_sum = 0
+        for p in px:
+            r_sum += (p >> 16) & 255
+            g_sum += (p >> 8) & 255
+            b_sum += p & 255
+        top_left_r = (px[0] >> 16) & 255 if px else 0
+        return [(w, h, r_sum, g_sum, b_sum, r_sum + g_sum + b_sum, top_left_r)]
 
-    return df.select("media_id", "payload").mapInPandas(run, _WEBP_SCHEMA)
+    return _map_media(df, _WEBP_SCHEMA, rows)
 
 
 # --------------------------------------------------------------------------
@@ -1445,41 +1424,18 @@ def webp_anim_features(df: DataFrame) -> DataFrame:
     — a wrong overlay, a transparent hole filled, or a disposal leak
     shifts the sums and fails the hash."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                cw, ch, frames = decode_webp_frames(bytes(blob))
-                for fi, fr in enumerate(frames):
-                    r_sum = g_sum = b_sum = a_sum = 0
-                    for p in fr["canvas"]:
-                        a_sum += (p >> 24) & 255
-                        r_sum += (p >> 16) & 255
-                        g_sum += (p >> 8) & 255
-                        b_sum += p & 255
-                    rows.append(
-                        {
-                            "media_id": mid, "frame_idx": fi,
-                            "width": cw, "height": ch,
-                            "dur_ms": fr["dur_ms"],
-                            "r_sum": r_sum, "g_sum": g_sum,
-                            "b_sum": b_sum, "a_sum": a_sum,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height", "dur_ms",
-                    "r_sum", "g_sum", "b_sum", "a_sum",
-                ],
-            ).astype(
-                {
-                    "frame_idx": "int32", "width": "int32",
-                    "height": "int32", "dur_ms": "int32",
-                }
-            )
+    def rows(blob):
+        cw, ch, frames = decode_webp_frames(blob)
+        for fi, fr in enumerate(frames):
+            r_sum = g_sum = b_sum = a_sum = 0
+            for p in fr["canvas"]:
+                a_sum += (p >> 24) & 255
+                r_sum += (p >> 16) & 255
+                g_sum += (p >> 8) & 255
+                b_sum += p & 255
+            yield fi, cw, ch, fr["dur_ms"], r_sum, g_sum, b_sum, a_sum
 
-    return df.select("media_id", "payload").mapInPandas(run, _WEBP_ANIM_SCHEMA)
+    return _map_media(df, _WEBP_ANIM_SCHEMA, rows)
 
 
 # --------------------------------------------------------------------------
@@ -1632,23 +1588,8 @@ def webp_meta_features(df: DataFrame) -> DataFrame:
     one row per file with kind/dims/frame-count — the scan-speed census
     over a mixed lossy/lossless/animated crawl corpus."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                m = webp_meta(bytes(blob))
-                rows.append({"media_id": mid, **m})
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "width", "height", "n_frames",
-                    "lossy_version",
-                ],
-            ).astype(
-                {
-                    "width": "int32", "height": "int32",
-                    "n_frames": "int32", "lossy_version": "int32",
-                }
-            )
+    def rows(blob):
+        m = webp_meta(blob)
+        return [(m["kind"], m["width"], m["height"], m["n_frames"], m["lossy_version"])]
 
-    return df.select("media_id", "payload").mapInPandas(run, _WEBP_META_SCHEMA)
+    return _map_media(df, _WEBP_META_SCHEMA, rows)

@@ -7569,9 +7569,6 @@ def multimodal_png_adam7(spark: SparkSession, sf_dir: str) -> DataFrame:
     "integer arithmetic like the GIF form",
 )
 def multimodal_bmp8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from typing import Iterator
-
     from query_engine_spark.llmdata import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7581,22 +7578,10 @@ def multimodal_bmp8(spark: SparkSession, sf_dir: str) -> DataFrame:
         media_type="image/bmp",
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, isum, rsum, tl = MM.decode_bmp8(bytes(blob))
-                rows.append({
-                    "media_id": mid, "width": w, "height": h,
-                    "idx_sum": isum, "rgb_sum": rsum, "top_left_idx": tl,
-                })
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "idx_sum", "rgb_sum", "top_left_idx",
-            ])
-
-    return media.select("media_id", "payload").mapInPandas(
-        run,
+    return MM._map_media(
+        media,
         "media_id long, width int, height int, idx_sum long, rgb_sum long, top_left_idx int",
+        lambda b: [MM.decode_bmp8(b)],
     )
 
 
@@ -8488,9 +8473,6 @@ def multimodal_tiff_rgb(spark: SparkSession, sf_dir: str) -> DataFrame:
     "work (llmdata/multimodal.py make_bmp_rle8/decode_bmp_rle8)",
 )
 def multimodal_bmp_rle8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from typing import Iterator
-
     from query_engine_spark.llmdata import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents")
@@ -8500,22 +8482,10 @@ def multimodal_bmp_rle8(spark: SparkSession, sf_dir: str) -> DataFrame:
         media_type="image/bmp",
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["payload"]):
-                w, h, isum, rsum, tl = MM.decode_bmp_rle8(bytes(blob))
-                rows.append({
-                    "media_id": mid, "width": w, "height": h,
-                    "idx_sum": isum, "rgb_sum": rsum, "top_left_idx": tl,
-                })
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "idx_sum", "rgb_sum", "top_left_idx",
-            ])
-
-    return media.select("media_id", "payload").mapInPandas(
-        run,
+    return MM._map_media(
+        media,
         "media_id long, width int, height int, idx_sum long, rgb_sum long, top_left_idx int",
+        lambda b: [MM.decode_bmp_rle8(b)],
     )
 
 

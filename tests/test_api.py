@@ -71,6 +71,49 @@ def test_feed_skeleton_script_tier_visibility(spark, posts):
     assert set(resp3["debug"]["script_tiers"]) == {"where#0"}
 
 
+def test_feed_skeleton_script_tiers_per_request(spark, posts, monkeypatch):
+    """FeedServer hands one PipelineContext to every handler thread. A
+    request held in its collect while another request translates must
+    still report its own script tiers, not the other request's."""
+    import threading
+
+    from query_engine_spark import api
+
+    ctx = PipelineContext(spark=spark, posts=posts, now=NOW)
+    firehose = {"type": "input", "inputType": "firehose"}
+    a_blocks = [firehose, {"type": "keep", "subject": "where", "value": "likeCount >= 0", "id": "a_where"}]
+    b_blocks = [firehose, {"type": "score", "scoreType": "add", "value": "likeCount * 2", "id": "b_score"}]
+    a_collecting, b_done = threading.Event(), threading.Event()
+    collect = api._collect_with_timeout
+
+    def held(spark_, df, timeout_s):
+        if threading.current_thread().name == "request-a":
+            a_collecting.set()
+            b_done.wait(120)
+        return collect(spark_, df, timeout_s)
+
+    monkeypatch.setattr(api, "_collect_with_timeout", held)
+    out = {}
+
+    def request_a():
+        try:
+            out["a"] = generate_feed_skeleton(ctx, a_blocks)
+        except Exception as e:  # surfaced by the asserts below
+            out["a_error"] = e
+
+    t = threading.Thread(target=request_a, name="request-a")
+    t.start()
+    assert a_collecting.wait(120)
+    try:
+        resp_b = generate_feed_skeleton(ctx, b_blocks)
+    finally:
+        b_done.set()
+        t.join(120)
+    assert "a_error" not in out, out.get("a_error")
+    assert out["a"]["debug"]["script_tiers"] == {"a_where": {"kind": "where", "tier": "sql"}}
+    assert resp_b["debug"]["script_tiers"] == {"b_score": {"kind": "score", "tier": "sql"}}
+
+
 def test_feed_skeleton_uri_conversion(spark, posts):
     # ids shaped like the reference's "post:<rkey>_<didkey>" convert to at://
     shaped = posts.withColumn("id", F.concat(F.lit("post:3k"), F.col("key").cast("string"), F.lit("_plc_u1")))

@@ -258,7 +258,7 @@ def test_multimodal_plumbing(spark):
     metas = {r["media_id"]: r["meta"] for r in media.collect()}
     assert metas[1]["size_bytes"] == 1100 and metas[1]["media_type"] == "application/test"
 
-    feats = {r["media_id"]: r for r in MM.image_features(media, fake=True).collect()}
+    feats = {r["media_id"]: r for r in MM.image_features(media).collect()}
     assert feats[1]["n_bytes"] == 1100
     assert len(feats[1]["byte_hist"]) == 16
     assert feats[2]["n_bytes"] == 0
@@ -674,9 +674,13 @@ def test_media_repartition_is_in_plan(spark):
     media = spark.createDataFrame(
         [(i, bytearray(b"x" * 100)) for i in range(10)], "media_id long, payload binary"
     )
-    out = MM.media_repartition(media, target_mb=1)
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(advisory)
+    out = MM.media_repartition(media)
     assert "RebalancePartitions" in out._jdf.queryExecution().optimizedPlan().toString()
-    assert spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes") == str(1024 * 1024)
+    # the hint sizes from the session's own advisory setting and must not
+    # change it for every later query in the session
+    assert spark.conf.get(advisory) == before
     assert out.count() == 10
 
 
