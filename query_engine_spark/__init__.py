@@ -20,9 +20,10 @@ Layout:
     datamodel.py          fixed StructType schemas (PostV1, Profile, edges)
     sources/              parquet loaders for the driver test tables + views
     functions/            scalar helpers: TID/DID/URI codecs, script translator
-    operators/            block semantics: inputs, filters, scoring, sorts,
-                          set-ops, joins, aggregates
-    plans/                JSON block-pipeline → DataFrame translator
+    operators/            block semantics: inputs, filters, score
+                          expressions, top-N helpers, joins, aggregates
+    plans/                JSON block-pipeline → DataFrame translator (also
+                          the score, sort, limit and stash blocks)
     streaming/            ingest lifecycle (batch incremental + streaming)
     llmdata/              dedup / similarity / text analysis / multimodal
 """

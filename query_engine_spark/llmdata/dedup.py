@@ -33,7 +33,6 @@ __all__ = [
     "fingerprint",
     "exact_dedup",
     "word_shingles",
-    "minhash_signature",
     "minhash_signature_table",
     "lsh_candidate_pairs",
     "minhash_dedup_pairs",
@@ -117,20 +116,6 @@ def word_shingles(col: Column, k: int = 3) -> Column:
     )
 
 
-def minhash_signature(col: Column, n_hashes: int = 16, k: int = 3) -> Column:
-    """MinHash signature as array<string>: element i = min(md5(i || '|' ||
-    shingle)). Pure per-row array expressions — no explode, no shuffle."""
-
-    def mk(sh: Column) -> Column:
-        return F.array(*[
-            F.array_min(F.transform(sh, lambda s, i=i: F.md5(F.concat(F.lit(f"{i}|"), s))))
-            for i in range(n_hashes)
-        ])
-
-    # bind the shingle array once: inlining it would build it n_hashes times
-    return bind_once(word_shingles(col, k), mk)
-
-
 MINHASH_P = 2147483647  # 2^31 - 1 (Mersenne prime)
 
 
@@ -173,10 +158,6 @@ def minhash_signature_table(
         for i, (a, b) in enumerate(minhash_params(n_hashes))
     ]
     return tok.groupBy("id").agg(*aggs)
-
-
-def _band_hash(sig: Column, band: int, rows_per_band: int) -> Column:
-    return F.md5(F.concat_ws("|", F.slice(sig, band * rows_per_band + 1, rows_per_band)))
 
 
 def _banded(sigs: DataFrame, bands: int, r: int) -> DataFrame:

@@ -178,10 +178,10 @@ def attach_media_meta(df: DataFrame, payload_col: str = "payload", media_type: s
     )
 
 
-def media_repartition(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def media_repartition(df: DataFrame) -> DataFrame:
     """Repartition so each partition holds ≈ the session's advisory
     partition size (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) of
-    payload bytes.
+    row bytes, the payload included.
 
     Media skew (one 4K video next to thumbnails) breaks row-count-based
     partitioning; byte-based sizing keeps Arrow batches bounded.
@@ -6763,14 +6763,6 @@ def _jpeg_idct_natural_np(C: "np.ndarray") -> "np.ndarray":
     return np.clip(px, 0, 255)
 
 
-def _jpeg_idct_block(coef: list[int]) -> list[list[int]]:
-    """Scalar-shaped wrapper of `_jpeg_idct_natural_np` (one dequantized
-    natural-order block → 8×8 clamped pixel rows) — kept as the contract
-    surface the conformance/property tests pin."""
-    C = np.asarray(coef, dtype=np.int64).reshape(1, 8, 8)
-    return _jpeg_idct_natural_np(C)[0].tolist()
-
-
 def _jpeg_plane_np(zz_blocks, q: list[int], gw: int, gh: int) -> "np.ndarray":
     """Dequant + dezigzag + IDCT a component's whole block grid in one
     vectorized pass: `zz_blocks` is gh·gw zigzag-order QUANTIZED
@@ -8156,12 +8148,12 @@ def video_frame_hashes(df: DataFrame, *, every_n: int = 1, max_frames: int = 8) 
     (frames never leave the executor; only 8-byte hashes do). The set of
     frame hashes IS the video's perceptual signature."""
 
+    sample = _sampled_frames(every_n, max_frames)
+
     def rows(blob):
         width, height, frames = demux_avi(blob)
         stride = (width * 3 + 3) & ~3
-        for fi in range(0, len(frames), every_n):
-            if fi // every_n >= max_frames:
-                break
+        for fi in sample(len(frames)):
             yield (fi, *_dhash_bands_of_pixels(frames[fi], 0, width, height, stride))
 
     return _map_media(df, _VIDEO_HASH_SCHEMA, rows)
@@ -8178,11 +8170,11 @@ def mp4_video_frame_hashes(
     (media_id, frame_idx, b0..b3) schema as `video_frame_hashes`, so
     `video_dedup_pairs` runs unchanged on the output."""
 
+    sample = _sampled_frames(every_n, max_frames)
+
     def rows(blob):
         _, _, frames = demux_mp4(blob)
-        for fi in range(0, len(frames), every_n):
-            if fi // every_n >= max_frames:
-                break
+        for fi in sample(len(frames)):
             _, _, px = decode_jpeg_np(frames[fi])
             yield (fi, *_dhash_bands_of_gray(px))
 

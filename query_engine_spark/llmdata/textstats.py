@@ -115,20 +115,6 @@ CHAR_TRIGRAM_PROFILES: dict[str, tuple[str, ...]] = {
 }
 
 
-def char_trigrams(col: Column) -> Column:
-    """All character trigrams of the normalized text (array<string>)."""
-    from query_engine_spark.llmdata.dedup import bind_once
-
-    def mk(t: Column) -> Column:
-        n = F.length(t)
-        idx = F.sequence(F.lit(1), F.greatest(n - F.lit(2), F.lit(0)))
-        return F.when(
-            n >= 3, F.transform(idx, lambda i: t.substr(i, F.lit(3)))
-        ).otherwise(F.array().cast("array<string>"))
-
-    return bind_once(normalize_text(col), mk)
-
-
 def langid_ngram_table(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", default: str = "und"
 ) -> DataFrame:
@@ -175,30 +161,6 @@ def langid_ngram_table(
         F.col(id_col),
         F.when(anyhit, best["lang"]).otherwise(F.lit(default)).alias("lang_pred"),
     )
-
-
-def langid_ngram(col: Column, default: str = "und") -> Column:
-    """Character-n-gram language ID: per language, the fraction of the doc's
-    trigrams that appear in the language's profile; argmax with alphabetical
-    tie-break, all-zero → `default`.
-
-    NOTE: per-row HOF form — fine for a handful of rows; use
-    ``langid_ngram_table`` for corpus-scale scoring (see its docstring)."""
-    tri = char_trigrams(col)
-    n = F.greatest(F.size(tri), F.lit(1))
-
-    def member_of(grams: tuple[str, ...]):
-        return lambda g: g.isin(list(grams))
-
-    scores = {
-        lang: F.size(F.filter(tri, member_of(grams))) / n
-        for lang, grams in CHAR_TRIGRAM_PROFILES.items()
-    }
-    best = F.greatest(*scores.values())
-    pred: Column = F.lit(default)
-    for lang in sorted(scores, reverse=True):
-        pred = F.when(scores[lang] == best, F.lit(lang)).otherwise(pred)
-    return F.when(best > 0, pred).otherwise(F.lit(default))
 
 
 def quality_col(t: Column) -> Column:

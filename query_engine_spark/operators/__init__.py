@@ -1,3 +1,3 @@
-from query_engine_spark.operators.ordering import ORD, stamp_ord, next_block_ord
+from query_engine_spark.operators.ordering import ORD, stamp_ord
 
-__all__ = ["ORD", "stamp_ord", "next_block_ord"]
+__all__ = ["ORD", "stamp_ord"]

@@ -17,7 +17,6 @@ from query_engine_spark.operators.inputs import NOW_COL, with_now
 __all__ = [
     "trending_tags",
     "tag_variations",
-    "count_views",
     "degree_counts",
     "user_like_totals",
     "salted_agg",
@@ -82,12 +81,6 @@ def tag_variations(posts: DataFrame, *, tags_col: str = "tags") -> DataFrame:
         .groupBy(F.lower(F.col("name")).alias("tag"), "name")
         .agg(F.count("*").alias("n"))
     )
-
-
-def count_views(edges: DataFrame, key: str, *, out: str = "cnt") -> DataFrame:
-    """A3/A5 — per-key edge counts (like/reply/repost count views,
-    main.rs:3811-3923). Join the result onto posts to refresh counts."""
-    return edges.groupBy(key).agg(F.count("*").alias(out))
 
 
 def degree_counts(follows: DataFrame) -> DataFrame:

@@ -1,11 +1,12 @@
 """Input/scan blocks (SURVEY §2.1, S1–S11).
 
 Each input block appends rows to the working set (bag union, order-
-preserving). Builders here return DataFrames stamped with ``__ord`` by the
-caller (plans/blocks.py). Every "history window" in the reference is a TID
-string range scan (/root/reference/src/main.rs:1424); we keep a native
-timestamp column instead, so the same predicate is a parquet partition-prune +
-row-group min/max skip — the correct 100 TB scan shape.
+preserving). Builders here return unordered DataFrames; the caller
+(plans/blocks.py) records each block's order as pending sort keys. Every
+"history window" in the reference is a TID string range scan
+(main.rs:1424); we keep a native timestamp column instead, so the same
+predicate is a parquet partition-prune + row-group min/max skip — the
+correct 100 TB scan shape.
 
 `now` is passed explicitly everywhere (the reference uses Utc::now()); tests
 and oracle queries pin it to a deterministic value (e.g. max(ts)).
@@ -213,36 +214,20 @@ def input_liked_weighted(
     user_col: str = "user_key",
     post_col: str = "post_key",
     key_col: str = "key",
-    edges_distinct: bool = False,
-    cache: bool = False,
 ) -> DataFrame:
     """S9 — posts liked by list members, scored Σ 1/(baseLikeCount +
-    user_total_likes) (main.rs:1453-1514). Returns posts + `__batch_score`,
-    sorted desc by it (caller normalizes into `score` via scoring.add_score).
+    user_total_likes) (main.rs:1453-1514). Returns posts + `__batch_score`
+    (the feed translator normalizes it into the score map and sorts by it).
 
     Shape: likes ⋈ list (broadcast semi) → per-user like totals (agg) →
     per-post weight sum (agg) → join posts. Two shuffles on likes, both
-    keyed — the minimum for this computation.
-
-    `edges_distinct=True` skips the dedup shuffle when the edge table is
-    already unique per (user, post) — make that an INGEST invariant at scale
-    (the reference's bitmaps are deduped at ingest, main.rs:3335-3362), not a
-    per-query full shuffle of the 100 TB edge table.
-
-    `cache=True` persists the member-filtered edge set, which BOTH the
-    user-totals aggregate and the weight sum consume — without it each branch
-    re-scans and re-dedups the edge table. Opt-in because the cached blocks
-    live until `cache.clear_tracked_cache()`; batch/bench paths clear between
-    queries, a serving driver must do its own housekeeping.
+    keyed — the minimum for this computation. Both aggregates consume the
+    member-filtered edges; AQE reuses their dedup exchange at runtime, so
+    nothing is persisted.
     """
-    if not edges_distinct:
-        likes = likes.select(user_col, post_col).distinct()  # bitmap edges are distinct
+    likes = likes.select(user_col, post_col).distinct()  # bitmap edges are distinct
     members = list_df.select(F.col(list_df.columns[0]).alias(user_col)).distinct()
     member_likes = likes.join(F.broadcast(members), user_col, "left_semi")
-    if cache:
-        from query_engine_spark.cache import tracked_persist
-
-        member_likes = tracked_persist(member_likes)
     user_totals = member_likes.groupBy(user_col).agg(F.count("*").alias("__user_likes"))
     scored = (
         member_likes.join(user_totals, user_col)
@@ -263,8 +248,6 @@ def input_liked_by_likers(
     user_col: str = "user_key",
     post_col: str = "post_key",
     key_col: str = "key",
-    edges_distinct: bool = False,
-    cache: bool = False,
 ) -> DataFrame:
     """S10 — 2-hop collaborative filtering (main.rs:1515-1605).
 
@@ -280,19 +263,11 @@ def input_liked_by_likers(
     curators⋈likes → posts), each a keyed agg. The seed set is small
     (a feed working set) → broadcast. The per-seed-post liker totals are
     computed from the seed-filtered edges (identical: seed_likes holds ALL
-    likers of each seed post), never a full-table aggregate. `cache=True`
-    persists the deduped edge table shared by both hops (see S9 docstring
-    for the cleanup contract).
+    likers of each seed post), never a full-table aggregate.
     """
     # the reference's like edges are Roaring bitmaps → (user, post) pairs are
     # implicitly distinct (main.rs:61-62); dedupe the edge table to match
-    # unless the caller guarantees it at ingest (edges_distinct)
-    if not edges_distinct:
-        likes = likes.select(user_col, post_col).distinct()
-    if cache:
-        from query_engine_spark.cache import tracked_persist
-
-        likes = tracked_persist(likes)
+    likes = likes.select(user_col, post_col).distinct()
     seed_keys = seed_posts.select(F.col(key_col).alias(post_col)).distinct()
     seed_likes = likes.join(F.broadcast(seed_keys), post_col, "left_semi")
     post_totals = seed_likes.groupBy(post_col).agg(F.count("*").alias("__post_likers"))

@@ -5,14 +5,16 @@ The reference's working set is an ordered ``Vec<&PostV1>``
 main.rs:1424-1426), ``input.post`` prepends (main.rs:1782), `duplicates` keeps
 the first occurrence (main.rs:1916-1918), and `limit.posts_per_user` keeps the
 first N per author *in current order* (main.rs:2349-2373). DataFrames are
-unordered, so every order-sensitive operator threads an explicit ``__ord``
-column:
+unordered, so an order-sensitive consumer reads an explicit ``__ord`` column:
 
     __ord = block_seq * 2^50 + within_block_rank
 
-``block_seq`` increments per input/sort block; ``within_block_rank`` is a
-rank of the row inside that block (for scans: id order, matching the
-reference's BTreeMap range iteration; for sorts: the sort rank).
+``block_seq`` numbers the block that appended the rows; ``within_block_rank``
+is a rank of the row inside that block (for scans: id order, matching the
+reference's BTreeMap range iteration; for sorts: the sort rank). The feed
+translator (plans/blocks.py) keeps each block's order pending and calls
+`stamp_ord` only when a consumer reads cross-block order; registry queries
+whose result includes the rank call it directly.
 
 Scale design (the round-1 verdict's headline fix): the default stamp does NOT
 use a global (unpartitioned) window — that pulls the whole working set into a
@@ -40,10 +42,6 @@ single partition. Instead:
   The partition key is non-foldable so Catalyst never rewrites it into the
   unpartitioned WindowExec (a ``partitionBy(lit(0))`` spec is constant-folded
   away, reintroducing the single-partition warning).
-
-Sorting re-stamps ``__ord`` from the sort rank, so downstream order-sensitive
-ops (dedup-first, per-user-top-N, final limit) observe the sorted order —
-exactly the reference's in-place `sort_by` semantics.
 """
 
 from __future__ import annotations
@@ -56,7 +54,7 @@ ORD = "__ord"
 # mono ids are pid * 2^33 + offset; pid < 2^17 partitions keeps them < 2^50
 _BLOCK_SHIFT = 1 << 50
 
-__all__ = ["ORD", "stamp_ord", "next_block_ord", "restamp_from_sort", "dense_rank_over"]
+__all__ = ["ORD", "stamp_ord", "dense_rank_over"]
 
 
 def _cols(order_by: Sequence[Column | str]) -> list[Column]:
@@ -148,14 +146,3 @@ def dense_rank_over(
     if bounded:
         return _bounded_stamp(df, _cols(order_by), out_col, 0)
     return _dense_stamp(df, _cols(order_by), out_col, 0)
-
-
-def next_block_ord(block_seq: int) -> int:
-    return block_seq * _BLOCK_SHIFT
-
-
-def restamp_from_sort(
-    df: DataFrame, sort_cols: Sequence[Column], block_seq: int, *, bounded: bool = False
-) -> DataFrame:
-    """Re-stamp ``__ord`` after a sort block (reference sorts in place)."""
-    return stamp_ord(df, sort_cols, block_seq, bounded=bounded)

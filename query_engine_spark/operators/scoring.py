@@ -1,12 +1,12 @@
-"""Scoring blocks (SURVEY §2.3, SC1–SC6).
+"""Score expressions (SURVEY §2.3, SC1–SC6).
 
 The reference keeps score in a side map post_key→f64
 (/root/reference/src/main.rs:1399) that score blocks add into, optionally
 max-normalizing the batch first (`add_post_score_to_global_normalized`
-main.rs:2626-2657). Here score is a ``score`` column on the DataFrame; each
-block computes a batch column, optionally normalizes it by the batch max (a
-window-over-all aggregate — Spark executes it as a partial max + broadcast,
-no full sort), and adds it in.
+main.rs:2626-2657). The feed translator owns that map
+(``plans.blocks._ScoreState``) and the normalization
+(``plans.blocks._normalized_batch``); this module holds the per-row score
+expressions it and the registry share.
 
 The user-selectable curator weight functions f0…f5 (main.rs:1548-1556) are a
 closed family → `weight_fn` dispatch.
@@ -14,69 +14,22 @@ closed family → `weight_fn` dispatch.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, functions as F
 
-__all__ = [
-    "SCORE",
-    "ensure_score",
-    "add_score",
-    "hn_score",
-    "weight_fn",
-    "WEIGHT_FNS",
-]
-
-SCORE = "score"
-
-
-def ensure_score(df: DataFrame) -> DataFrame:
-    if SCORE not in df.columns:
-        df = df.withColumn(SCORE, F.lit(0.0))
-    return df
-
-
-def hn_score(like_count: Column, age_seconds: Column, gravity: float = 1.8) -> Column:
-    """Hacker-News decay: like_count / (age_hours + 2)^gravity.
-
-    Matches `calculate_score` (main.rs:4338-4347) exactly: the reference
-    truncates age to whole minutes (`num_minutes()`, abs) before dividing by
-    60 and adding 2 — so we floor(|age_seconds| / 60) first.
-    """
-    age_hours = F.floor(F.abs(age_seconds) / F.lit(60)).cast("double") / F.lit(60.0)
-    return like_count.cast("double") / F.pow(age_hours + F.lit(2.0), F.lit(float(gravity)))
+__all__ = ["hn_score_from_micros", "weight_fn"]
 
 
 def hn_score_from_micros(like_count: Column, age_us: Column, gravity: float = 1.8) -> Column:
-    """Same decay with the age given in epoch MICROseconds (exact integer
-    arithmetic end-to-end — the cross-engine-reproducible form)."""
+    """Hacker-News decay: like_count / (age_hours + 2)^gravity, with the age
+    given in epoch MICROseconds (exact integer arithmetic end-to-end — the
+    cross-engine-reproducible form).
+
+    Matches `calculate_score` (main.rs:4338-4347) exactly: the reference
+    truncates age to whole minutes (`num_minutes()`, abs) before dividing by
+    60 and adding 2 — so we floor(|age| / 60 s) first.
+    """
     minutes = F.floor(F.abs(age_us) / F.lit(60000000)).cast("double")
     return like_count.cast("double") / F.pow(minutes / F.lit(60.0) + F.lit(2.0), F.lit(float(gravity)))
-
-
-def add_score(
-    df: DataFrame,
-    batch: Column,
-    *,
-    normalize: bool = True,
-    multiplier: float = 1.0,
-) -> DataFrame:
-    """Add a batch score into the global score column.
-
-    normalize=True (the default, main.rs:2211-2227): divide by the batch max
-    then scale by `multiplier` before adding (main.rs:2640-2654; max==0 →
-    contribution 0).
-    """
-    df = ensure_score(df)
-    df = df.withColumn("__batch", batch.cast("double"))
-    if normalize:
-        # batch max as a broadcast scalar (agg + crossJoin) — NOT an
-        # unpartitioned window, which would funnel the batch into one
-        # partition (round-1 verdict fix #2)
-        mx_df = df.agg(F.max("__batch").alias("__qe_mx"))
-        df = df.crossJoin(F.broadcast(mx_df))
-        mx = F.col("__qe_mx")
-        contrib = F.when(mx != 0.0, F.col("__batch") / mx * F.lit(float(multiplier))).otherwise(F.lit(0.0))
-        return df.withColumn(SCORE, F.col(SCORE) + contrib).drop("__batch", "__qe_mx")
-    return df.withColumn(SCORE, F.col(SCORE) + F.col("__batch")).drop("__batch")
 
 
 def weight_fn(name: str, count: Column, score_exponent: float = 1.0) -> Column:
@@ -100,6 +53,3 @@ def weight_fn(name: str, count: Column, score_exponent: float = 1.0) -> Column:
         "f5": F.lit(1.0) / F.log(c),
     }
     return fns.get(name, F.lit(1.0))
-
-
-WEIGHT_FNS = ("f0", "f1", "f2", "f3", "f4", "f5")

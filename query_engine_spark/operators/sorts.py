@@ -1,17 +1,14 @@
-"""Sort / limit / top-k blocks (SURVEY §2.4, O1–O9).
+"""Top-N helpers shared by the feed translator and the registry (SURVEY §2.4).
 
-Reference sorts mutate the working Vec in place
-(/root/reference/src/main.rs:2238-2307); limits truncate it
-(main.rs:2349-2384). Here a "sort" re-stamps the ``__ord`` column from the
-sort rank (operators/ordering.py), so later order-sensitive blocks observe
-the new order, and a final ``.orderBy(ORD)`` materializes it.
+The feed translator (plans/blocks.py) owns the sort and limit blocks; it
+calls the two helpers here. Reference sorts mutate the working Vec in place
+(main.rs:2238-2307) and limits truncate it (main.rs:2349-2384).
 
-Scale note: a global sort is a range-partitioned shuffle. Every sort in the
-reference DSL is immediately followed by a `limit` (feeds return ≤500 rows),
-so the physical plan Catalyst picks for ``orderBy().limit(n)`` is
-TakeOrderedAndProject — a per-partition top-N + single merge, no full sort.
-That is the 100 TB-safe shape, and why `apply_limit` should be applied to the
-*sorted* DataFrame rather than after an ``__ord`` materialization.
+Scale note: a global sort is a range-partitioned shuffle. A sort that is
+immediately truncated — feeds return ≤500 rows — runs as
+``orderBy().limit(n)``, which Catalyst plans as TakeOrderedAndProject: a
+per-partition top-N + single merge, no full sort. That is the 100 TB-safe
+shape `top_n_with_ord` builds.
 """
 
 from __future__ import annotations
@@ -20,73 +17,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from query_engine_spark.operators.ordering import ORD, restamp_from_sort
-from query_engine_spark.operators.scoring import SCORE, hn_score
+from query_engine_spark.operators.ordering import ORD, stamp_ord
 
-__all__ = [
-    "sort_by",
-    "sort_created_at",
-    "sort_counts",
-    "sort_hn",
-    "sort_random",
-    "sort_score",
-    "top_n_with_ord",
-    "apply_limit",
-    "posts_per_user",
-]
-
-
-def sort_by(df: DataFrame, cols: Sequence[Column], block_seq: int, tiebreak: Sequence[str] = ("id",)) -> DataFrame:
-    """Re-stamp __ord from a sort. Rust `sort_by` is stable, so the previous
-    __ord is the tiebreaker after the explicit keys."""
-    keys = list(cols) + [F.col(c) for c in tiebreak if c in df.columns]
-    if ORD in df.columns:
-        keys.append(F.col(ORD))
-    return restamp_from_sort(df, keys, block_seq)
-
-
-def sort_created_at(df: DataFrame, block_seq: int, *, asc: bool = True, ts: str = "ts") -> DataFrame:
-    # main.rs:2238-2244 — sorts the RFC3339 string; ts order is identical.
-    c = F.col(ts).asc() if asc else F.col(ts).desc()
-    return sort_by(df, [c], block_seq)
-
-
-def sort_counts(df: DataFrame, col: str, block_seq: int, *, asc: bool = False) -> DataFrame:
-    # main.rs:2265-2282 (likes / repost_count / reply_count)
-    c = F.col(col).asc() if asc else F.col(col).desc()
-    return sort_by(df, [c], block_seq)
-
-
-def sort_hn(
-    df: DataFrame,
-    block_seq: int,
-    *,
-    gravity: float = 1.8,
-    asc: bool = False,
-    like_count: str = "like_count",
-    age_seconds: Column | None = None,
-) -> DataFrame:
-    # main.rs:2245-2264 — sort by hn score computed on the fly
-    if age_seconds is None:
-        age_seconds = F.unix_timestamp(F.current_timestamp()) - F.unix_timestamp(F.col("ts"))
-    s = hn_score(F.col(like_count), age_seconds, gravity)
-    return sort_by(df, [s.asc() if asc else s.desc()], block_seq)
-
-
-def sort_random(df: DataFrame, block_seq: int, *, seed: int | None = None) -> DataFrame:
-    # main.rs:2283-2285 — thread_rng shuffle; we take a seed for testability
-    return sort_by(df, [F.rand(seed) if seed is not None else F.rand()], block_seq, tiebreak=())
-
-
-def sort_score(df: DataFrame, block_seq: int, *, asc: bool = False, key: str = "key") -> DataFrame:
-    """main.rs:2286-2307 — sort by accumulated score; rows without a score are
-    dropped (iteration is over the score map) and duplicates by `key` are
-    removed (`active_posts` BTreeMap)."""
-    df = df.filter(F.col(SCORE).isNotNull())
-    w = Window.partitionBy(key).orderBy(F.col(ORD) if ORD in df.columns else F.col(key))
-    df = df.withColumn("__occ", F.row_number().over(w)).filter(F.col("__occ") == 1).drop("__occ")
-    c = F.col(SCORE).asc() if asc else F.col(SCORE).desc()
-    return sort_by(df, [c], block_seq, tiebreak=("key",))
+__all__ = ["top_n_with_ord", "posts_per_user"]
 
 
 def top_n_with_ord(df: DataFrame, sort_cols: Sequence[Column], n: int, block_seq: int = 0) -> DataFrame:
@@ -97,36 +30,13 @@ def top_n_with_ord(df: DataFrame, sort_cols: Sequence[Column], n: int, block_seq
     truncated (the translator fuses sort→limit blocks into this)."""
     limited = df.orderBy(*sort_cols).limit(n)
     # ≤ n survivors → a single-task dense window is the cheapest stamp
-    return restamp_from_sort(limited, list(sort_cols), block_seq, bounded=True)
+    return stamp_ord(limited, list(sort_cols), block_seq, bounded=True)
 
 
-def apply_limit(df: DataFrame, n: int = 100) -> DataFrame:
-    """Truncate to the first n rows in __ord order (main.rs:2374-2384;
-    default 100, implicit final 500 at main.rs:2510-2512). `orderBy().limit()`
-    executes as TakeOrderedAndProject — per-partition partial top-N plus a
-    single merge, never a global single-partition sort."""
-    if ORD in df.columns:
-        return df.orderBy(F.col(ORD)).limit(n)
-    return df.limit(n)
-
-
-def posts_per_user(
-    df: DataFrame,
-    n: int = 3,
-    *,
-    author: str = "author_key",
-    order_by: Sequence[Column | str] | None = None,
-) -> DataFrame:
-    """Group-wise top-N: keep the first `n` posts per author in current order
-    (main.rs:2349-2373). The window is PARTITIONED by author and Spark's
-    WindowGroupLimit rewrites the rank filter into a per-partition partial
-    top-N — no global sort. Pass `order_by` natural columns to skip the
-    global __ord stamp when order is derivable (the scalable path)."""
-    if order_by is not None:
-        keys = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    elif ORD in df.columns:
-        keys = [F.col(ORD)]
-    else:
-        keys = [F.monotonically_increasing_id()]
-    w = Window.partitionBy(author).orderBy(*keys)
+def posts_per_user(df: DataFrame, n: int = 3, *, author: str = "author_key") -> DataFrame:
+    """Group-wise top-N: keep the first `n` posts per author in ``__ord``
+    order (main.rs:2349-2373). The window is PARTITIONED by author and
+    Spark's WindowGroupLimit rewrites the rank filter into a per-partition
+    partial top-N — no global sort."""
+    w = Window.partitionBy(author).orderBy(F.col(ORD))
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= n).drop("__rn")

@@ -54,8 +54,8 @@ from query_engine_spark.operators import filters as Fi
 from query_engine_spark.operators import inputs as In
 from query_engine_spark.operators.inputs import NOW_COL
 from query_engine_spark.operators import joins as J
-from query_engine_spark.operators import scoring as Sc
 from query_engine_spark.operators import sorts as So
+from query_engine_spark.operators.scoring import hn_score_from_micros
 from query_engine_spark.operators.ordering import ORD, stamp_ord
 from query_engine_spark.functions.scripting import translate_script_with_tier
 
@@ -67,9 +67,16 @@ MAX_BLOCKS = 32  # main.rs:1240-1254
 MAX_REGEX_BLOCKS = 10  # main.rs:1256-1281
 FINAL_LIMIT = 500  # main.rs:2510-2512
 
-# a "bounded" segment is structurally ≤ this many rows (archive cap /
-# sort→limit fusion / final limit) → cheap single-task stamp
+# prefix of a pending segment's hidden order-key columns (__qe_o0, __qe_o1, …)
 _ORD_HIDDEN = "__qe_o"
+
+# count columns by sort type (main.rs:2265-2282) and by score `from` name
+_SORT_COUNTS = {"likes": "like_count", "repost_count": "repost_count", "reply_count": "reply_count"}
+_SCORE_COUNTS = {**_SORT_COUNTS, "like_count": "like_count"}
+# replace targets → (ref column, prefix length to strip); record refs are
+# "post:<id>" — strip the 5-char prefix (main.rs:2431)
+_FORWARD_REPLACE = {"parent": ("parent", 0), "root": ("root", 0), "record": ("record", 5)}
+_INVERSE_REPLACE = {"direct_replies": ("parent", 0), "all_replies": ("root", 0), "quote_posts": ("record", 5)}
 
 
 @dataclass
@@ -222,6 +229,14 @@ def _drop_hidden(df: DataFrame) -> DataFrame:
     return df.drop(*[c for c in df.columns if c.startswith(_ORD_HIDDEN)])
 
 
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    """Bag union in list order, columns matched by name (missing → null)."""
+    out = dfs[0]
+    for d in dfs[1:]:
+        out = out.unionByName(d, allowMissingColumns=True)
+    return out
+
+
 def _make_segment(
     df: DataFrame, order: list[tuple[Column, bool]], seq: int, *, bounded: bool = False
 ) -> _Segment:
@@ -254,22 +269,14 @@ class _WorkingSet:
         that don't read order (score batches, sorts, inverse replace)."""
         if not self.segments:
             return self.proto.limit(0)
-        dfs = [_drop_hidden(s.df).drop(ORD) for s in self.segments]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        return _union([_drop_hidden(s.df).drop(ORD) for s in self.segments])
 
     def materialize(self) -> DataFrame:
         """Union with ``__ord`` stamped — only for consumers that read
         cross-segment order (dedup-first, per-user top-N)."""
         if not self.segments:
             return self.proto.limit(0).withColumn(ORD, F.lit(0).cast("long"))
-        dfs = [s.stamp().df for s in self.segments]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        return _union([s.stamp().df for s in self.segments])
 
     def set_materialized(self, df: DataFrame, seq: int, *, bounded: bool = False) -> None:
         self.segments = [_Segment(df=df, seq=seq, stamped=True, bounded=bounded)]
@@ -280,11 +287,7 @@ class _WorkingSet:
         a partial top-N — no full sort at any scale."""
         if not self.segments:
             return self.proto.limit(0).withColumn(ORD, F.lit(0).cast("long"))
-        taken = [s.take(n).df for s in self.segments]
-        out = taken[0]
-        for d in taken[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out.orderBy(F.col(ORD)).limit(n)
+        return _union([s.take(n).df for s in self.segments]).orderBy(F.col(ORD)).limit(n)
 
 
 class _ScoreState:
@@ -323,14 +326,9 @@ class _ScoreState:
                     .agg(F.max("__batch_score").alias("score"))
                 )
             else:
-                tagged = [
-                    b.withColumn("__b", F.lit(i)) for i, b in enumerate(self._batches)
-                ]
-                u = tagged[0]
-                for t in tagged[1:]:
-                    u = u.unionByName(t)
+                tagged = _union([b.withColumn("__b", F.lit(i)) for i, b in enumerate(self._batches)])
                 self._resolved = (
-                    u.repartition("key")
+                    tagged.repartition("key")
                     .groupBy("key", "__b")
                     .agg(F.max("__batch_score").alias("__s"))
                     .groupBy("key")
@@ -360,7 +358,7 @@ def _normalized_batch(batch: DataFrame, block: dict[str, Any]) -> DataFrame:
         return batch
     mult = float(block.get("scoreNormalizationMultiplier", "1.0"))
     # batch max as a broadcast scalar (agg + crossJoin broadcast), not an
-    # unpartitioned window — same pattern as registry._with_max_ts
+    # unpartitioned window — same pattern as inputs.with_now
     mx_df = batch.agg(F.max("__batch_score").alias("__qe_mx"))
     mx = F.col("__qe_mx")
     return (
@@ -460,10 +458,7 @@ def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> Da
                     )
                 slot = stash[key]
                 if slot:
-                    keys = _drop_hidden(slot[0].df).drop(ORD).select("key")
-                    for s in slot[1:]:
-                        keys = keys.unionByName(_drop_hidden(s.df).drop(ORD).select("key"))
-                    keys = keys.distinct()
+                    keys = _union([s.df.select("key") for s in slot]).distinct()
                     ws.map(lambda df: df.join(keys, "key", "left_anti"))
             else:
                 raise PipelineError(f"unknown stash action {action!r}")
@@ -531,34 +526,27 @@ def _input_block(block, ctx, ws, posts, scores, seq, prepend_seq, now_arg):
         asc = not newest_first
         order = [(F.col("ts"), asc), (F.col("id"), asc)]
         bounded = True  # capped at 1000 (main.rs:1369-1371)
-    elif input_type == "custom_likedweighted":
+    elif input_type in ("custom_likedweighted", "custom_likedbylikers"):
         if ctx.likes is None:
-            raise PipelineError("custom_likedweighted needs likes edges")
-        new = In.input_liked_weighted(
-            ctx.likes, posts, ctx.resolve_list(block), base_like_count=int(block.get("baseLikeCount", 0))
-        )
+            raise PipelineError(f"{input_type} needs likes edges")
+        if input_type == "custom_likedweighted":
+            new = In.input_liked_weighted(
+                ctx.likes, posts, ctx.resolve_list(block), base_like_count=int(block.get("baseLikeCount", 0))
+            )
+        else:
+            new = In.input_liked_by_likers(
+                ctx.likes,
+                posts,
+                ws.data(),
+                user_score_function=block.get("userScoreFunction", "f1"),
+                score_exponent=float(block.get("scoreExponent", "1.3")),
+            )
         seconds = _seconds(block, "historySeconds", 604800)
         if seconds < 604800:
             new = new.filter(In.window_pred(now_arg, seconds))
         scores.add(_normalized_batch(new.select("key", "__batch_score"), block))
-        # S9 REPLACES the working set, sorted by batch score desc (main.rs:1500-1510)
-        seg = _make_segment(new, [(F.col("__batch_score"), False), (F.col("key"), False)], seq)
-        ws.replace_all(_dc_replace(seg, df=seg.df.drop("__batch_score")))
-        return seq + 1, prepend_seq
-    elif input_type == "custom_likedbylikers":
-        if ctx.likes is None:
-            raise PipelineError("custom_likedbylikers needs likes edges")
-        new = In.input_liked_by_likers(
-            ctx.likes,
-            posts,
-            ws.data(),
-            user_score_function=block.get("userScoreFunction", "f1"),
-            score_exponent=float(block.get("scoreExponent", "1.3")),
-        )
-        seconds = _seconds(block, "historySeconds", 604800)
-        if seconds < 604800:
-            new = new.filter(In.window_pred(now_arg, seconds))
-        scores.add(_normalized_batch(new.select("key", "__batch_score"), block))
+        # S9/S10 REPLACE the working set, sorted by batch score desc
+        # (main.rs:1500-1510, 1592-1599)
         seg = _make_segment(new, [(F.col("__batch_score"), False), (F.col("key"), False)], seq)
         ws.replace_all(_dc_replace(seg, df=seg.df.drop("__batch_score")))
         return seq + 1, prepend_seq
@@ -722,16 +710,12 @@ def _score_block(block, ctx, ws, scores, now_epoch_expr, now_us):
         batch = scores.join_onto(cur).withColumn("__batch_score", col.cast("double"))
     else:
         from_ = block.get("from", "likes")
-        if from_ in ("like_count", "likes"):
-            batch = cur.withColumn("__batch_score", F.col("like_count").cast("double"))
-        elif from_ == "repost_count":
-            batch = cur.withColumn("__batch_score", F.col("repost_count").cast("double"))
-        elif from_ == "reply_count":
-            batch = cur.withColumn("__batch_score", F.col("reply_count").cast("double"))
+        if from_ in _SCORE_COUNTS:
+            batch = cur.withColumn("__batch_score", F.col(_SCORE_COUNTS[from_]).cast("double"))
         elif from_ == "hn":
             gravity = float(block.get("gravity", "1.8"))
             age_us = now_us - F.unix_micros(F.col("ts"))
-            batch = cur.withColumn("__batch_score", Sc.hn_score_from_micros(F.col("like_count"), age_us, gravity))
+            batch = cur.withColumn("__batch_score", hn_score_from_micros(F.col("like_count"), age_us, gravity))
         elif from_ == "created_at":
             # main.rs:2201-2208: score = epoch millis / 1000 (integer division)
             batch = cur.withColumn("__batch_score", F.floor(F.unix_millis(F.col("ts")) / 1000).cast("double"))
@@ -750,18 +734,17 @@ def _sort_block(block, ctx, ws, scores, seq, now_us, fuse_n=None):
     sort_type = block.get("sortType", "created_at")
     asc = block.get("sortDirection", block.get("direction", "desc")) == "asc"
 
-    def finish(df, keys, extra_drop=()):
-        tie = [F.col("id")] if "id" in df.columns else []
-        keys = list(keys) + tie
+    def direction(c):
+        return F.col(c).asc() if asc else F.col(c).desc()
+
+    def finish(df, keys, drop=None):
         if fuse_n is not None:
             out = So.top_n_with_ord(df, keys, fuse_n, seq)
-            bounded = True
         else:
             out = stamp_ord(df, keys, seq)
-            bounded = False
-        if extra_drop:
-            out = out.drop(*extra_drop)
-        ws.set_materialized(out, seq, bounded=bounded)
+        if drop is not None:
+            out = out.drop(drop)
+        ws.set_materialized(out, seq, bounded=fuse_n is not None)
 
     if sort_type == "score":
         # join global scores (inner: unscored drop — main.rs:2286-2307),
@@ -769,32 +752,24 @@ def _sort_block(block, ctx, ws, scores, seq, now_us, fuse_n=None):
         # order here: same-key rows are identical clones (see docstring), so
         # any per-key representative is the observable result.
         scored = scores.inner_scored(ws.data()).dropDuplicates(["key"])
-        c = F.col("score").asc() if asc else F.col("score").desc()
         # ties keep descending key order (BTreeMap .iter().rev() + stable sort)
-        keys = [c, F.col("key").desc()]
-        if fuse_n is not None:
-            out = So.top_n_with_ord(scored, keys, fuse_n, seq).drop("score")
-            ws.set_materialized(out, seq, bounded=True)
-        else:
-            out = stamp_ord(scored, keys, seq).drop("score")
-            ws.set_materialized(out, seq)
+        finish(scored, [direction("score"), F.col("key").desc()], "score")
         return
 
     cur = ws.data()
+    tie = F.col("id")
     if sort_type == "created_at":
-        finish(cur, [F.col("ts").asc() if asc else F.col("ts").desc()])
+        finish(cur, [direction("ts"), tie])
     elif sort_type == "hn":
         gravity = float(block.get("gravity", "1.8"))
         age_us = now_us - F.unix_micros(F.col("ts"))
-        s = Sc.hn_score_from_micros(F.col("like_count"), age_us, gravity)
-        cur = cur.withColumn("__hn", s)
-        finish(cur, [F.col("__hn").asc() if asc else F.col("__hn").desc()], extra_drop=("__hn",))
-    elif sort_type in ("likes", "repost_count", "reply_count"):
-        col = {"likes": "like_count", "repost_count": "repost_count", "reply_count": "reply_count"}[sort_type]
-        finish(cur, [F.col(col).asc() if asc else F.col(col).desc()])
+        cur = cur.withColumn("__hn", hn_score_from_micros(F.col("like_count"), age_us, gravity))
+        finish(cur, [direction("__hn"), tie], "__hn")
+    elif sort_type in _SORT_COUNTS:
+        finish(cur, [direction(_SORT_COUNTS[sort_type]), tie])
     elif sort_type == "random":
         cur = cur.withColumn("__r", F.rand(ctx.random_seed) if ctx.random_seed is not None else F.rand())
-        finish(cur, [F.col("__r")], extra_drop=("__r",))
+        finish(cur, [F.col("__r"), tie], "__r")
     else:
         raise PipelineError(f"unknown sortType {sort_type!r}")
 
@@ -814,25 +789,15 @@ def _replace_block(block, ws, posts, seq):
     # forward targets replace each row IN PLACE (main.rs:2402-2440) — the
     # pending order survives because its key VALUES are pinned in hidden
     # columns that pass through the join untouched
-    if target == "parent":
-        ws.map(lambda df: J.replace_with_ref(df, posts, "parent", keep_missing_ref=keep_missing))
-        return seq
-    if target == "root":
-        ws.map(lambda df: J.replace_with_ref(df, posts, "root", keep_missing_ref=keep_missing))
-        return seq
-    if target == "record":
-        # record refs are "post:<id>" — strip the 5-char prefix (main.rs:2431)
-        ws.map(lambda df: J.replace_with_ref(df, posts, "record", keep_missing_ref=keep_missing, strip_prefix=5))
+    if target in _FORWARD_REPLACE:
+        ref, strip = _FORWARD_REPLACE[target]
+        ws.map(lambda df: J.replace_with_ref(df, posts, ref, keep_missing_ref=keep_missing, strip_prefix=strip))
         return seq
     # inverse targets REBUILD the working set from the store (main.rs:2441-2488,
     # iteration over the id-ordered map) → fresh id order
-    if target == "direct_replies":
-        new = J.replace_with_inverse(ws.data(), posts, "parent")
-    elif target == "all_replies":
-        new = J.replace_with_inverse(ws.data(), posts, "root")
-    elif target == "quote_posts":
-        new = J.replace_with_inverse(ws.data(), posts, "record", strip_prefix=5)
-    else:
+    if target not in _INVERSE_REPLACE:
         raise PipelineError(f"unknown replace target {target!r}")
+    ref, strip = _INVERSE_REPLACE[target]
+    new = J.replace_with_inverse(ws.data(), posts, ref, strip_prefix=strip)
     ws.replace_all(_make_segment(new, [(F.col("id"), True)], seq))
     return seq + 1

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from query_engine_spark.operators.ordering import ORD, stamp_ord
 from query_engine_spark.operators import filters as Fi
-from query_engine_spark.operators import sorts as So
 from query_engine_spark.plans.blocks import PipelineError
 
 __all__ = ["ProfileContext", "translate_profile_pipeline", "PROFILE_REGEX_TARGETS"]
@@ -99,7 +98,7 @@ def translate_profile_pipeline(blocks: list[dict[str, Any]], ctx: ProfileContext
         elif b_type == "sort" or b_type == "stash":
             raise PipelineError(f"{b_type} blocks are not supported in list mode (dead code in the reference, main.rs:2885-2941)")
         elif b_type == "limit":
-            cur = So.apply_limit(cur, int(block.get("count", 100)))
+            cur = cur.orderBy(F.col(ORD)).limit(int(block.get("count", 100)))
         else:
             raise PipelineError(f"unknown block type {b_type!r}")
     return cur.orderBy(ORD)

@@ -38,7 +38,6 @@ from query_engine_spark.operators import sketches as Sk
 from query_engine_spark.operators import temporal as T
 from query_engine_spark.operators.ordering import ORD, dense_rank_over, stamp_ord
 from query_engine_spark.operators.scoring import hn_score_from_micros
-from query_engine_spark.operators.setops import append_union
 from query_engine_spark.functions.scripting import translate_script
 from query_engine_spark.llmdata import dedup as D
 from query_engine_spark.llmdata import similarity as Sim
@@ -63,12 +62,6 @@ def _register(name: str, oracle: str | None, doc: str = ""):
         return fn
 
     return deco
-
-
-def _with_max_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Attach the table's max timestamp as __mx (deterministic 'now')."""
-    mx = df.agg(F.max(ts_col).alias("__mx"))
-    return df.crossJoin(F.broadcast(mx))
 
 
 _PROCESS_INDEX_ROOT: str | None = None
@@ -122,8 +115,8 @@ _US = "epoch_us(CAST(ts AS TIMESTAMP))"
 def s1_firehose(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
-        _with_max_ts(ev)
-        .filter(F.col("ts") >= F.col("__mx") - F.expr("INTERVAL 1 DAY"))
+        In.with_now(ev)
+        .filter(F.col("ts") >= F.col(In.NOW_COL) - F.expr("INTERVAL 1 DAY"))
         .select(
             "event_id",
             F.unix_micros("ts").alias("ts_us"),
@@ -190,12 +183,12 @@ def s7_input_post_prepend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # dense: the rank VALUE is part of the query result (oracle row_number)
     window = stamp_ord(
-        _with_max_ts(ev).filter(F.col("ts") >= F.col("__mx") - F.expr("INTERVAL 6 HOUR")).drop("__mx"),
+        In.with_now(ev).filter(F.col("ts") >= F.col(In.NOW_COL) - F.expr("INTERVAL 6 HOUR")).drop(In.NOW_COL),
         ["event_id"],
         0,
         dense=True,
     )
-    return append_union(pinned, window).select(F.col(ORD).alias("ord"), "event_id")
+    return pinned.unionByName(window, allowMissingColumns=True).select(F.col(ORD).alias("ord"), "event_id")
 
 
 @_register(
@@ -243,11 +236,7 @@ def s9_liked_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier")
     likes = li.select(F.col("l_suppkey").alias("user_key"), F.col("l_orderkey").alias("post_key"))
     members = supp.filter(F.col("s_acctbal") > 5000).select("s_suppkey")
-    # cache=False (r16): AQE reuses the deduped-edge exchange between the
-    # two consumers at runtime; persisting it on top measured as pure
-    # block-store overhead (1.63 s -> 1.52 s without, same pattern as the
-    # r8 pagerank persist lesson)
-    out = In.input_liked_weighted(likes, orders, members, base_like_count=2, cache=False)
+    out = In.input_liked_weighted(likes, orders, members, base_like_count=2)
     return out.select("o_orderkey", F.round("__batch_score", 6).alias("batch_score"))
 
 
@@ -279,9 +268,7 @@ def s10_liked_by_likers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").withColumn("key", F.col("o_orderkey"))
     likes = li.select(F.col("l_suppkey").alias("user_key"), F.col("l_orderkey").alias("post_key"))
     seeds = orders.filter(F.col("o_totalprice") > 490000)
-    # cache=False (r16): same exchange-reuse measurement as s9 — 2.57 s
-    # with the persist vs 1.70 s without at sf0.1
-    out = In.input_liked_by_likers(likes, orders, seeds, user_score_function="f1", cache=False)
+    out = In.input_liked_by_likers(likes, orders, seeds, user_score_function="f1")
     return out.select("o_orderkey", F.round("__batch_score", 6).alias("batch_score"))
 
 
@@ -624,8 +611,8 @@ def f15_profile_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SC3+SC5 hn-decay score, max-normalized ×2, plus SC2 like-copy normalized (main.rs:2190-2227, 2626-2657)",
 )
 def sc_hn_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    posts = _with_max_ts(posts_view(spark, sf_dir))
-    age_us = F.unix_micros("__mx") - F.unix_micros("ts")
+    posts = In.with_now(posts_view(spark, sf_dir))
+    age_us = F.unix_micros(In.NOW_COL) - F.unix_micros("ts")
     s1 = hn_score_from_micros(F.col("like_count"), age_us, 1.8)
     posts = posts.withColumn("__s1", s1).withColumn("__s2", F.col("like_count").cast("double"))
     # both batch maxes in ONE broadcast scalar aggregate (no global window)
@@ -750,8 +737,8 @@ def o7_posts_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     "O2 sort.hn: on-the-fly HN-decay sort + limit (main.rs:2245-2264)",
 )
 def o2_sort_hn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    posts = _with_max_ts(posts_view(spark, sf_dir))
-    age_us = F.unix_micros("__mx") - F.unix_micros("ts")
+    posts = In.with_now(posts_view(spark, sf_dir))
+    age_us = F.unix_micros(In.NOW_COL) - F.unix_micros("ts")
     hn = hn_score_from_micros(F.col("like_count"), age_us, 1.8)
     posts = posts.withColumn("__hn", hn)
     top = So.top_n_with_ord(posts, [F.col("__hn").desc(), F.col("id").desc()], 50, 0)
@@ -839,7 +826,7 @@ def u_stash_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     signups = stamp_ord(ev.filter(F.col("event_type") == "signup"), ["event_id"], 2, dense=True)
     # pop: stash contents re-stamped to follow the current working set
     popped = stamp_ord(purchases.drop(ORD), ["event_id"], 3, dense=True)
-    cur = append_union(signups, popped)
+    cur = signups.unionByName(popped, allowMissingColumns=True)
     high = ev.filter(F.col("value") > 180).select("event_id")
     cur = cur.join(high, "event_id", "left_anti")
     return cur.select(F.col(ORD).alias("ord"), "event_id", "event_type")

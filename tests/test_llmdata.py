@@ -1221,6 +1221,11 @@ def test_codec_contract_fixes(spark):
     media = spark.createDataFrame([(1, MM.make_avi(1, 4, 3, 4))], "media_id long, payload binary")
     with pytest.raises(ValueError):
         MM.avi_frame_features(media, every_n=0)
+    for frame_hashes in (MM.video_frame_hashes, MM.mp4_video_frame_hashes):
+        with pytest.raises(ValueError):
+            frame_hashes(media, every_n=0)
+        with pytest.raises(ValueError):
+            frame_hashes(media, max_frames=0)
 
 
 def test_hashed_classifier_separates_planted_classes(spark):

@@ -2,8 +2,9 @@
 
 The tools, bench.py and __spark_entry__.py import the engine lazily,
 inside their functions, so a rename in the package breaks them only when
-they next run. These checks resolve every such import, and every query
-name the benchmarks pin, without starting Spark.
+they next run. These checks resolve every such import, every query name
+the benchmarks pin, and every name the package's modules export, without
+starting Spark.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ import glob
 import importlib
 import importlib.util
 import os
+import pkgutil
 import sys
 
 import pytest
@@ -64,3 +66,17 @@ def test_pinned_bench_queries_are_registered():
 
     pinned = bench.HEADLINE + bench_sfx.HEAVY10
     assert [n for n in pinned if n not in REGISTRY] == []
+
+
+def test_every_exported_name_exists():
+    """A stale `__all__` entry breaks `from module import *`."""
+    import query_engine_spark
+
+    modules = ["query_engine_spark"] + [
+        m.name for m in pkgutil.walk_packages(query_engine_spark.__path__, "query_engine_spark.")
+    ]
+    stale = []
+    for name in modules:
+        mod = importlib.import_module(name)
+        stale += [f"{name}.{n}" for n in getattr(mod, "__all__", ()) if not hasattr(mod, n)]
+    assert not stale
