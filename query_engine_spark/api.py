@@ -173,13 +173,16 @@ def record_feed_links(
 ) -> None:
     """Post↔feed lineage recording (main.rs:2546-2580, LinkedPostsState):
     append (feed_uri, post, ts) rows for the served feed to a parquet dir —
-    the reference's periodic link dump becomes a partition append."""
+    the reference's periodic link dump becomes a partition append. Rows
+    are stamped with `ctx.now`, or the driver's UTC wall clock in serving
+    mode (`now=None`), as the reference stamps `Utc::now()`."""
     rows = [(feed_uri, f["post"]) for f in response.get("feed", [])]
     if not rows:
         return
+    served_at = ctx.now if ctx.now is not None else _dt.datetime.now(_dt.timezone.utc)
     df = (
         ctx.spark.createDataFrame(rows, "feed_uri string, post string")
-        .withColumn("served_at", F.lit(ctx.now))
+        .withColumn("served_at", F.lit(served_at))
     )
     df.write.mode("append").parquet(store_path)
 
@@ -218,7 +221,12 @@ class FeedServer:
 
             def do_POST(self):
                 path = self.path.split("?")[0]
-                n = int(self.headers.get("Content-Length", "0"))
+                try:
+                    n = int(self.headers.get("Content-Length", "0"))
+                except ValueError:
+                    n = -1
+                if n < 0:
+                    return self._send(400, {"error": "invalid Content-Length"})
                 try:
                     payload = json.loads(self.rfile.read(n) or b"{}")
                     blocks = payload.get("blocks", payload if isinstance(payload, list) else [])

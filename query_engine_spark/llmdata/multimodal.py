@@ -46,6 +46,7 @@ from __future__ import annotations
 import struct as _struct
 import zlib as _zlib
 from collections.abc import Callable, Iterable, Iterator, Sequence
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -571,8 +572,93 @@ def bmp_resize(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     )
 
 
+# --- RIFF: one chunk walker and one chunk writer serve WAV, AVI and WebP ---
+
+
+def _riff_chunk(cid: bytes, body: bytes) -> bytes:
+    """One RIFF chunk: fourcc, little-endian size, body, pad byte when the
+    body is odd (chunks are 2-byte aligned)."""
+    return cid + len(body).to_bytes(4, "little") + body + b"\x00" * (len(body) & 1)
+
+
+def _riff_file(form: bytes, chunks: bytes) -> bytes:
+    """A RIFF file of type `form` ('WAVE', 'AVI ', 'WEBP') around encoded
+    chunks."""
+    return b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + form + chunks
+
+
+def _riff_chunks(blob: bytes, form: bytes, what: str) -> Iterator[tuple[bytes, int, int]]:
+    """Check the RIFF header (magic, `form`, declared size within the
+    blob), then walk the top-level chunks. `what` names the format in the
+    header error ("a WAV payload")."""
+    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != form:
+        raise ValueError(f"not {what} (missing RIFF/{form.decode()} header)")
+    end = 8 + int.from_bytes(blob[4:8], "little")
+    if end > len(blob):
+        raise ValueError(f"RIFF size past end of file: declares {end} bytes, have {len(blob)}")
+    return _riff_span(blob, 12, end)
+
+
+def _riff_span(blob: bytes, pos: int, end: int) -> Iterator[tuple[bytes, int, int]]:
+    """Yield (fourcc, body_start, body_end) for each chunk in blob[pos:end].
+    A chunk whose body runs past `end` raises; bodies are 2-byte aligned."""
+    while pos + 8 <= end:
+        cid = blob[pos : pos + 4]
+        size = int.from_bytes(blob[pos + 4 : pos + 8], "little")
+        body_end = pos + 8 + size
+        if body_end > end:
+            raise ValueError(f"truncated chunk {cid!r}: declares {size} bytes")
+        yield cid, pos + 8, body_end
+        pos = body_end + (size & 1)
+
+
 # --- real WAV/PCM decode (same no-codec-needed reasoning as BMP: RIFF is
 # chunked headers + raw little-endian samples) -------------------------------
+
+# between fmt and data on purpose: a decoder that assumes samples start at
+# byte 44 (instead of walking chunks) reads garbage and fails the oracle
+_WAV_JUNK = _riff_chunk(b"JUNK", bytes(4))
+
+
+def _wav_fmt(tag: int, channels: int, rate: int, block_align: int, bits: int) -> bytes:
+    """The 16-byte WAVE fmt body; byte_rate is rate·block_align."""
+    import struct
+
+    return struct.pack("<HHIIHH", tag, channels, rate, rate * block_align, block_align, bits)
+
+
+def _wav_file(fmt: bytes, data: bytes, *, junk: bool = True) -> bytes:
+    """RIFF/WAVE assembly shared by every WAV writer: fmt, the JUNK chunk
+    (unless `junk` is off), then data."""
+    return _riff_file(
+        b"WAVE", _riff_chunk(b"fmt ", fmt) + (_WAV_JUNK if junk else b"") + _riff_chunk(b"data", data)
+    )
+
+
+def _wav_chunks(blob: bytes) -> tuple[bytes, bytes]:
+    """(fmt body, data body) of a RIFF/WAVE payload — the chunk walk every
+    WAV decoder shares; each decoder validates the fmt fields itself."""
+    fmt = data = None
+    for cid, start, stop in _riff_chunks(blob, b"WAVE", "a WAV payload"):
+        if cid == b"fmt ":
+            fmt = blob[start:stop]
+        elif cid == b"data":
+            if data is not None:
+                # the spec allows one data chunk; accepting extras silently
+                # would let the decoders disagree on which one to read
+                raise ValueError("multiple data chunks")
+            data = blob[start:stop]
+    if fmt is None or data is None:
+        raise ValueError("missing fmt/data chunk")
+    return fmt, data
+
+
+def _formula_pcm16(media_id: int, n: int) -> bytes:
+    """Sample i = ``((media_id*131 + i*17) % 65536) - 32768`` as 16-bit
+    little-endian — the fixture stream of the mono, stereo and
+    multichannel WAV writers."""
+    i = np.arange(n, dtype=np.int64)
+    return (((media_id * 131 + i * 17) % 65536) - 32768).astype("<i2").tobytes()
 
 
 def make_wav(media_id: int, n_samples: int, sample_rate: int = 8000) -> bytes:
@@ -580,16 +666,10 @@ def make_wav(media_id: int, n_samples: int, sample_rate: int = 8000) -> bytes:
 
     Sample i is ``((media_id*131 + i*17) % 65536) - 32768`` — a pure
     function of (media_id, position), so an oracle predicts every decoded
-    feature by integer arithmetic. A JUNK chunk is inserted between the
-    fmt and data chunks on purpose: a decoder that assumes samples start
-    at byte 44 (instead of walking chunks) reads garbage and fails the
-    oracle hash.
+    feature by integer arithmetic. Carries the JUNK chunk between fmt
+    and data (see `_WAV_JUNK`).
     """
-    import struct
-
-    i = np.arange(n_samples, dtype=np.int64)
-    data = (((media_id * 131 + i * 17) % 65536) - 32768).astype("<i2").tobytes()
-    return _pack_wav_pcm(data, sample_rate)
+    return _pack_wav_pcm(_formula_pcm16(media_id, n_samples), sample_rate)
 
 
 def mulaw_decode_byte(b: int) -> int:
@@ -609,17 +689,8 @@ def make_wav_mulaw(media_id: int, n_samples: int, sample_rate: int = 8000) -> by
     so the oracle predicts every DECODED sample through the same mu-law
     expansion. Keeps the deliberate JUNK chunk so offset-44 shortcuts
     fail."""
-    import struct
-
     data = bytes((media_id * 13 + j * 7) % 256 for j in range(n_samples))
-    fmt = struct.pack("<HHIIHH", 7, 1, sample_rate, sample_rate, 1, 8)
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"JUNK" + struct.pack("<I", 4) + b"\x00\x00\x00\x00"
-        + b"data" + struct.pack("<I", len(data)) + data
-        + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _wav_file(_wav_fmt(7, 1, sample_rate, 1, 8), data)
 
 
 def decode_wav_mulaw(blob: bytes) -> tuple[int, int, list[int]]:
@@ -631,25 +702,7 @@ def decode_wav_mulaw(blob: bytes) -> tuple[int, int, list[int]]:
     cross-sample state."""
     import struct
 
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    (riff_size,) = struct.unpack_from("<I", blob, 4)
-    end = min(len(blob), 8 + riff_size)
-    pos = 12
-    fmt = None
-    data = None
-    while pos + 8 <= end:
-        cid = blob[pos : pos + 4]
-        (csize,) = struct.unpack_from("<I", blob, pos + 4)
-        if pos + 8 + csize > end:
-            raise ValueError(f"truncated chunk {cid!r}")
-        if cid == b"fmt ":
-            fmt = blob[pos + 8 : pos + 8 + csize]
-        elif cid == b"data":
-            data = blob[pos + 8 : pos + 8 + csize]
-        pos += 8 + csize + (csize & 1)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
+    fmt, data = _wav_chunks(blob)
     tag, channels, rate, _, _, bits = struct.unpack_from("<HHIIHH", fmt, 0)
     if tag != 7:
         raise NotImplementedError(
@@ -713,17 +766,8 @@ def make_wav_alaw(media_id: int, n_samples: int, sample_rate: int = 8000) -> byt
     mu-law fixture so a decoder wired to the wrong expansion cannot pass
     both oracles by coincidence). Keeps the deliberate JUNK chunk so
     offset-44 shortcuts fail."""
-    import struct
-
     data = bytes((media_id * 11 + j * 5) % 256 for j in range(n_samples))
-    fmt = struct.pack("<HHIIHH", 6, 1, sample_rate, sample_rate, 1, 8)
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"JUNK" + struct.pack("<I", 4) + b"\x00\x00\x00\x00"
-        + b"data" + struct.pack("<I", len(data)) + data
-        + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _wav_file(_wav_fmt(6, 1, sample_rate, 1, 8), data)
 
 
 def decode_wav_alaw(blob: bytes) -> tuple[int, int, list[int]]:
@@ -733,25 +777,7 @@ def decode_wav_alaw(blob: bytes) -> tuple[int, int, list[int]]:
     byte via `alaw_decode_byte`."""
     import struct
 
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    (riff_size,) = struct.unpack_from("<I", blob, 4)
-    end = min(len(blob), 8 + riff_size)
-    pos = 12
-    fmt = None
-    data = None
-    while pos + 8 <= end:
-        cid = blob[pos : pos + 4]
-        (csize,) = struct.unpack_from("<I", blob, pos + 4)
-        if pos + 8 + csize > end:
-            raise ValueError(f"truncated chunk {cid!r}")
-        if cid == b"fmt ":
-            fmt = blob[pos + 8 : pos + 8 + csize]
-        elif cid == b"data":
-            data = blob[pos + 8 : pos + 8 + csize]
-        pos += 8 + csize + (csize & 1)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
+    fmt, data = _wav_chunks(blob)
     tag, channels, rate, _, _, bits = struct.unpack_from("<HHIIHH", fmt, 0)
     if tag != 6:
         raise NotImplementedError(
@@ -832,13 +858,7 @@ def encode_wav_adpcm(pred0: int, idx0: int, nibbles: list[int], rate: int = 8000
         by.append(lo | (hi << 4))
     data += bytes(by)
     fmt = struct.pack("<HHIIHHHH", 0x11, 1, rate, rate, len(data), 4, 2, n_samples)
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"JUNK" + struct.pack("<I", 4) + b"\x00\x00\x00\x00"
-        + b"data" + struct.pack("<I", len(data)) + data
-        + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _wav_file(fmt, data)
 
 
 def make_wav_adpcm(media_id: int, n_samples: int, rate: int = 8000) -> bytes:
@@ -865,25 +885,7 @@ def decode_wav_adpcm(blob: bytes) -> tuple[int, list[int]]:
     remaining audio boundary is transform codecs (MP3/AAC)."""
     import struct
 
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    (riff_size,) = struct.unpack_from("<I", blob, 4)
-    end = min(len(blob), 8 + riff_size)
-    pos = 12
-    fmt = None
-    data = None
-    while pos + 8 <= end:
-        cid = blob[pos : pos + 4]
-        (csize,) = struct.unpack_from("<I", blob, pos + 4)
-        if pos + 8 + csize > end:
-            raise ValueError(f"truncated chunk {cid!r}")
-        if cid == b"fmt ":
-            fmt = blob[pos + 8 : pos + 8 + csize]
-        elif cid == b"data":
-            data = blob[pos + 8 : pos + 8 + csize]
-        pos += 8 + csize + (csize & 1)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
+    fmt, data = _wav_chunks(blob)
     tag, channels, rate, _, block_align, bits = struct.unpack_from("<HHIIHH", fmt, 0)
     if tag != 0x11:
         raise NotImplementedError(
@@ -945,16 +947,7 @@ def _pack_wav_pcm(data: bytes, sample_rate: int) -> bytes:
     """RIFF/WAVE 16-bit mono PCM container shared by the wav generators —
     keeps the deliberate JUNK chunk so every generated payload exercises
     the chunk walker."""
-    import struct
-
-    block_align = 2  # mono * 16-bit
-    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * block_align, block_align, 16)
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"JUNK" + struct.pack("<I", 4) + b"\x00\x00\x00\x00"
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _wav_file(_wav_fmt(1, 1, sample_rate, 2, 16), data)
 
 
 def make_wav_tone(media_id: int, n_samples: int, sample_rate: int = 8000) -> bytes:
@@ -981,54 +974,37 @@ def decode_wav(blob: bytes) -> tuple[int, int, int, int, int, int]:
     """Parse RIFF/WAVE 16-bit mono PCM →
     (sample_rate, n_samples, duration_ms, amp_sum, peak, first_sample).
 
-    A real chunk walker: iterates chunks (word-aligned, per the RIFF spec)
-    until it has seen `fmt ` and `data`, validating magic, declared sizes
-    against the actual byte count, PCM format tag, and fmt-field
-    consistency (block_align, byte_rate). `amp_sum`/`peak`/`first_sample`
-    are over SIGNED sample values, so an unsigned misread fails the oracle.
+    The shared chunk walk (`_wav_chunks`) finds `fmt ` and `data`; the fmt
+    fields are checked for the PCM format tag and consistency (block_align,
+    byte_rate). `amp_sum`/`peak`/`first_sample` are over SIGNED sample
+    values, so an unsigned misread fails the oracle.
     """
     import struct
 
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    (riff_size,) = struct.unpack_from("<I", blob, 4)
-    if 8 + riff_size > len(blob):
-        raise ValueError(f"truncated RIFF: declares {8 + riff_size} bytes, have {len(blob)}")
-    end = 8 + riff_size
-    fmt_body = data_body = None
-    pos = 12
-    while pos + 8 <= end:
-        cid = blob[pos : pos + 4]
-        (csize,) = struct.unpack_from("<I", blob, pos + 4)
-        body = blob[pos + 8 : pos + 8 + csize]
-        if len(body) < csize:
-            raise ValueError(f"truncated chunk {cid!r}: declares {csize} bytes")
-        if cid == b"fmt ":
-            fmt_body = body
-        elif cid == b"data":
-            if data_body is not None:
-                # the spec allows one data chunk; accepting extras silently
-                # would let decode/resample disagree on which one to read
-                raise ValueError("multiple data chunks")
-            data_body = body
-        pos += 8 + csize + (csize & 1)  # chunks are 2-byte aligned
-    if fmt_body is None or data_body is None:
-        raise ValueError("missing fmt / data chunk")
-    if len(fmt_body) < 16:
-        raise ValueError("fmt chunk too short")
-    audio_format, channels, rate, byte_rate, block_align, bits = struct.unpack_from(
-        "<HHIIHH", fmt_body, 0
-    )
-    if audio_format != 1 or bits != 16 or channels != 1:
-        raise NotImplementedError("only 16-bit mono PCM (format tag 1) supported")
-    if rate <= 0 or block_align != 2 or byte_rate != rate * block_align:
-        raise ValueError("inconsistent fmt fields")
-    n = len(data_body) // 2
-    samples = struct.unpack(f"<{n}h", data_body[: n * 2]) if n else ()
+    rate, data = _wav_pcm16_mono(blob)
+    n = len(data) // 2
+    samples = struct.unpack(f"<{n}h", data[: n * 2]) if n else ()
     amp_sum = sum(samples)
     peak = max(samples) if samples else 0
     first = samples[0] if samples else 0
     return rate, n, n * 1000 // rate, amp_sum, peak, first
+
+
+def _wav_pcm16_mono(blob: bytes) -> tuple[int, bytes]:
+    """(sample rate, data chunk) of a 16-bit mono PCM WAV, fmt validated —
+    the parse under `decode_wav`, `resample_wav` and
+    `audio_envelope_bands`."""
+    import struct
+
+    fmt, data = _wav_chunks(blob)
+    if len(fmt) < 16:
+        raise ValueError("fmt chunk too short")
+    audio_format, channels, rate, byte_rate, block_align, bits = struct.unpack_from("<HHIIHH", fmt, 0)
+    if audio_format != 1 or bits != 16 or channels != 1:
+        raise NotImplementedError("only 16-bit mono PCM (format tag 1) supported")
+    if rate <= 0 or block_align != 2 or byte_rate != rate * block_align:
+        raise ValueError("inconsistent fmt fields")
+    return rate, data
 
 
 def resample_wav(blob: bytes, out_rate: int) -> bytes:
@@ -1043,30 +1019,14 @@ def resample_wav(blob: bytes, out_rate: int) -> bytes:
     integer-exact cross-engine form — nearest-neighbor is the deterministic
     tier, matching the integer-arithmetic contract of the oracle suite.
     """
-    import struct
-
     if out_rate <= 0:
         raise ValueError(f"invalid target rate {out_rate}")
-    rate, n, _, _, _, _ = decode_wav(blob)
-    # re-walk chunks for the raw data (decode_wav validated everything)
-    pos, data = 12, b""
-    while pos + 8 <= len(blob):
-        cid = blob[pos : pos + 4]
-        (csize,) = struct.unpack_from("<I", blob, pos + 4)
-        if cid == b"data":
-            data = blob[pos + 8 : pos + 8 + csize]
-            break
-        pos += 8 + csize + (csize & 1)
+    rate, data = _wav_pcm16_mono(blob)
+    n = len(data) // 2
     out_n = n * out_rate // rate
     arr = np.frombuffer(data[: n * 2], dtype="<i2")
     picks = arr[(np.arange(out_n, dtype=np.int64) * n) // out_n].tobytes()
-    block_align = 2
-    fmt = struct.pack("<HHIIHH", 1, 1, out_rate, out_rate * block_align, block_align, 16)
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(picks)) + picks
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _wav_file(_wav_fmt(1, 1, out_rate, 2, 16), picks, junk=False)
 
 
 def make_wav_stereo(media_id: int, n_frames: int, sample_rate: int = 16000) -> bytes:
@@ -1076,18 +1036,7 @@ def make_wav_stereo(media_id: int, n_frames: int, sample_rate: int = 16000) -> b
     PCM-family oracle form covers it). block_align 4, byte_rate
     rate·4 — a decoder that ignores the channel count halves the
     duration and fails the oracle. Keeps the deliberate JUNK chunk."""
-    import struct
-
-    i = np.arange(2 * n_frames, dtype=np.int64)
-    data = (((media_id * 131 + i * 17) % 65536) - 32768).astype("<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 2, sample_rate, sample_rate * 4, 4, 16)
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"JUNK" + struct.pack("<I", 4) + b"\x00\x00\x00\x00"
-        + b"data" + struct.pack("<I", len(data)) + data
-        + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _wav_file(_wav_fmt(1, 2, sample_rate, 4, 16), _formula_pcm16(media_id, 2 * n_frames))
 
 
 def decode_wav_stereo(blob: bytes) -> tuple[int, int, list[int]]:
@@ -1099,25 +1048,7 @@ def decode_wav_stereo(blob: bytes) -> tuple[int, int, list[int]]:
     interleaved stream."""
     import struct
 
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    (riff_size,) = struct.unpack_from("<I", blob, 4)
-    end = min(len(blob), 8 + riff_size)
-    pos = 12
-    fmt = None
-    data = None
-    while pos + 8 <= end:
-        cid = blob[pos : pos + 4]
-        (csize,) = struct.unpack_from("<I", blob, pos + 4)
-        if pos + 8 + csize > end:
-            raise ValueError(f"truncated chunk {cid!r}")
-        if cid == b"fmt ":
-            fmt = blob[pos + 8 : pos + 8 + csize]
-        elif cid == b"data":
-            data = blob[pos + 8 : pos + 8 + csize]
-        pos += 8 + csize + (csize & 1)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
+    fmt, data = _wav_chunks(blob)
     tag, channels, rate, byte_rate, block_align, bits = struct.unpack_from(
         "<HHIIHH", fmt, 0
     )
@@ -1161,22 +1092,12 @@ def make_wav_extensible(
 
     if channels < 1:
         raise ValueError(f"invalid channel count {channels}")
-    i = np.arange(channels * n_frames, dtype=np.int64)
-    data = (((media_id * 131 + i * 17) % 65536) - 32768).astype("<i2").tobytes()
-    ba = 2 * channels
     fmt = (
-        struct.pack(
-            "<HHIIHH", 0xFFFE, channels, sample_rate, sample_rate * ba, ba, 16
-        )
+        _wav_fmt(0xFFFE, channels, sample_rate, 2 * channels, 16)
         + struct.pack("<HHI", 22, 16, (1 << channels) - 1)
         + _KSDATAFORMAT_SUBTYPE_PCM
     )
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-        + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _wav_file(fmt, _formula_pcm16(media_id, channels * n_frames), junk=False)
 
 
 def make_wav_multich(
@@ -1187,21 +1108,11 @@ def make_wav_multich(
     interleaved stream is `make_wav`'s sample formula at
     channels·n_frames samples (the stereo fixture's convention extended),
     block_align 2·channels. Keeps the deliberate JUNK chunk."""
-    import struct
-
     if channels < 1:
         raise ValueError(f"invalid channel count {channels}")
-    i = np.arange(channels * n_frames, dtype=np.int64)
-    data = (((media_id * 131 + i * 17) % 65536) - 32768).astype("<i2").tobytes()
-    ba = 2 * channels
-    fmt = struct.pack("<HHIIHH", 1, channels, sample_rate, sample_rate * ba, ba, 16)
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"JUNK" + struct.pack("<I", 4) + b"\x00\x00\x00\x00"
-        + b"data" + struct.pack("<I", len(data)) + data
-        + (b"\x00" if len(data) & 1 else b"")
+    return _wav_file(
+        _wav_fmt(1, channels, sample_rate, 2 * channels, 16), _formula_pcm16(media_id, channels * n_frames)
     )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
 def decode_wav_multich(blob: bytes) -> tuple[int, int, int, list[int]]:
@@ -1212,25 +1123,7 @@ def decode_wav_multich(blob: bytes) -> tuple[int, int, int, list[int]]:
     divide by the channel count is a hard error, not a truncation."""
     import struct
 
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    (riff_size,) = struct.unpack_from("<I", blob, 4)
-    end = min(len(blob), 8 + riff_size)
-    pos = 12
-    fmt = None
-    data = None
-    while pos + 8 <= end:
-        cid = blob[pos : pos + 4]
-        (csize,) = struct.unpack_from("<I", blob, pos + 4)
-        if pos + 8 + csize > end:
-            raise ValueError(f"truncated chunk {cid!r}")
-        if cid == b"fmt ":
-            fmt = blob[pos + 8 : pos + 8 + csize]
-        elif cid == b"data":
-            data = blob[pos + 8 : pos + 8 + csize]
-        pos += 8 + csize + (csize & 1)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
+    fmt, data = _wav_chunks(blob)
     tag, channels, rate, byte_rate, block_align, bits = struct.unpack_from(
         "<HHIIHH", fmt, 0
     )
@@ -1303,8 +1196,6 @@ def make_wav24(media_id: int, n_samples: int, sample_rate: int = 8000) -> bytes:
     stored 3 bytes little-endian two's complement (block_align 3 — an odd
     stride, so the word-aligned chunk walk is exercised by the data chunk's
     pad byte whenever 3·n is odd). Keeps the deliberate JUNK chunk."""
-    import struct
-
     i = np.arange(n_samples, dtype=np.int64)
     v = (media_id * 521 + i * 73) % (1 << 24) - (1 << 23)  # signed value
     u = v % (1 << 24)  # its two's-complement bit pattern
@@ -1312,15 +1203,7 @@ def make_wav24(media_id: int, n_samples: int, sample_rate: int = 8000) -> bytes:
     b[:, 0] = u & 0xFF
     b[:, 1] = (u >> 8) & 0xFF
     b[:, 2] = (u >> 16) & 0xFF
-    data = b.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 3, 3, 24)
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"JUNK" + struct.pack("<I", 4) + b"\x00\x00\x00\x00"
-        + b"data" + struct.pack("<I", len(data)) + data
-        + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _wav_file(_wav_fmt(1, 1, sample_rate, 3, 24), b.tobytes())
 
 
 def decode_wav24(blob: bytes) -> tuple[int, int, list[int]]:
@@ -1332,25 +1215,7 @@ def decode_wav24(blob: bytes) -> tuple[int, int, list[int]]:
     amp_sum/peak and fails the oracle."""
     import struct
 
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    (riff_size,) = struct.unpack_from("<I", blob, 4)
-    end = min(len(blob), 8 + riff_size)
-    pos = 12
-    fmt = None
-    data = None
-    while pos + 8 <= end:
-        cid = blob[pos : pos + 4]
-        (csize,) = struct.unpack_from("<I", blob, pos + 4)
-        if pos + 8 + csize > end:
-            raise ValueError(f"truncated chunk {cid!r}")
-        if cid == b"fmt ":
-            fmt = blob[pos + 8 : pos + 8 + csize]
-        elif cid == b"data":
-            data = blob[pos + 8 : pos + 8 + csize]
-        pos += 8 + csize + (csize & 1)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
+    fmt, data = _wav_chunks(blob)
     tag, channels, rate, byte_rate, block_align, bits = struct.unpack_from(
         "<HHIIHH", fmt, 0
     )
@@ -2731,6 +2596,35 @@ def wav_resample(df: DataFrame, out_rate: int) -> DataFrame:
 # no-codec-needed reasoning — the format is chunked headers + raw pixels) ----
 
 
+def _avi_list(list_type: bytes, body: bytes) -> bytes:
+    return _riff_chunk(b"LIST", list_type + body)
+
+
+def _avi_file(
+    width: int, height: int, fps: int, handler: bytes, buf_size: int, strf: bytes, cid: bytes, frames: list[bytes]
+) -> bytes:
+    """RIFF 'AVI ' assembly shared by the AVI writers: an hdrl of avih +
+    one 'vids' strl (strh with `handler`, the caller's strf), then a movi
+    LIST of `cid` frame chunks."""
+    import struct
+
+    avih = struct.pack(
+        "<IIIIIIIIII16s",
+        1_000_000 // fps, buf_size * fps, 0, 0x10, len(frames), 0, 1, buf_size,
+        width, height, b"\x00" * 16,
+    )
+    # AVISTREAMHEADER: fccType fccHandler flags prio lang init scale rate
+    # start length sugg_buffer quality(signed) sample_size rcFrame
+    strh = struct.pack(
+        "<4s4sIHHIIIIIIiI8s",
+        b"vids", handler, 0, 0, 0, 0, 1, fps, 0, len(frames), buf_size, -1, 0,
+        struct.pack("<hhhh", 0, 0, width, height),
+    )
+    strl = _avi_list(b"strl", _riff_chunk(b"strh", strh) + _riff_chunk(b"strf", strf))
+    hdrl = _avi_list(b"hdrl", _riff_chunk(b"avih", avih) + strl)
+    return _riff_file(b"AVI ", hdrl + _avi_list(b"movi", b"".join(_riff_chunk(cid, fr) for fr in frames)))
+
+
 def make_avi(media_id: int, width: int, height: int, n_frames: int, fps: int = 10) -> bytes:
     """Pack a deterministic uncompressed AVI: RIFF 'AVI ' with an hdrl
     (avih + strl{strh 'vids'/'DIB ', strf BITMAPINFOHEADER}) and a movi
@@ -2756,31 +2650,11 @@ def make_avi(media_id: int, width: int, height: int, n_frames: int, fps: int = 1
             rows.extend(b"\x00" * (stride - width * 3))
         return bytes(rows)
 
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-    def lst(list_type: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", list_type + body)
-
-    avih = struct.pack(
-        "<IIIIIIIIII16s",
-        1_000_000 // fps, frame_size * fps, 0, 0x10, n_frames, 0, 1, frame_size,
-        width, height, b"\x00" * 16,
-    )
-    # AVISTREAMHEADER: fccType fccHandler flags prio lang init scale rate
-    # start length sugg_buffer quality(signed) sample_size rcFrame
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIiI8s",
-        b"vids", b"DIB ", 0, 0, 0, 0, 1, fps, 0, n_frames, frame_size, -1, 0,
-        struct.pack("<hhhh", 0, 0, width, height),
-    )
     strf = struct.pack(
         "<IiiHHIIiiII", 40, width, height, 1, 24, 0, frame_size, 2835, 2835, 0, 0
     )
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00db", frame(f)) for f in range(n_frames)))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    frames = [frame(f) for f in range(n_frames)]
+    return _avi_file(width, height, fps, b"DIB ", frame_size, strf, b"00db", frames)
 
 
 def _riff_walk(blob: bytes) -> tuple[bytes, list[tuple[bytes, bytes]]]:
@@ -2788,18 +2662,10 @@ def _riff_walk(blob: bytes) -> tuple[bytes, list[tuple[bytes, bytes]]]:
     '00db'/'00dc' frame chunks). Validates magic, sizes and 2-byte chunk
     alignment; the CALLER applies codec rules to the fourcc/strf pair
     (demux_avi: raw 24-bpp '00db'; decode_avi_rle8: RLE8 '00dc')."""
-    import struct
-
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI payload")
-    (riff_size,) = struct.unpack_from("<I", blob, 4)
-    if 8 + riff_size > len(blob):
-        raise ValueError(f"truncated RIFF: declares {8 + riff_size} bytes, have {len(blob)}")
-
     strf: bytes | None = None
     frames: list[tuple[bytes, bytes]] = []
 
-    def walk(pos: int, end: int, depth: int = 0) -> None:
+    def walk(chunks: Iterator[tuple[bytes, int, int]], depth: int) -> None:
         nonlocal strf
         # real AVIs nest LIST chunks ~3 deep (RIFF>hdrl>strl, RIFF>movi);
         # without a cap a crafted 60 KB blob of nested LIST headers blows
@@ -2810,21 +2676,15 @@ def _riff_walk(blob: bytes) -> tuple[bytes, list[tuple[bytes, bytes]]]:
         # random flips never create deep nesting)
         if depth > 64:
             raise ValueError("RIFF LIST nesting exceeds the 64-level cap")
-        while pos + 8 <= end:
-            cid = blob[pos : pos + 4]
-            (csize,) = struct.unpack_from("<I", blob, pos + 4)
-            body_start, body_end = pos + 8, pos + 8 + csize
-            if body_end > end:
-                raise ValueError(f"truncated chunk {cid!r}: declares {csize} bytes")
+        for cid, start, stop in chunks:
             if cid == b"LIST":
-                walk(body_start + 4, body_end, depth + 1)  # skip the list type
+                walk(_riff_span(blob, start + 4, stop), depth + 1)  # skip the list type
             elif cid == b"strf":
-                strf = blob[body_start:body_end]
+                strf = blob[start:stop]
             elif cid in (b"00db", b"00dc"):
-                frames.append((cid, blob[body_start:body_end]))
-            pos = body_end + (csize & 1)  # chunks are 2-byte aligned
+                frames.append((cid, blob[start:stop]))
 
-    walk(12, 8 + riff_size)
+    walk(_riff_chunks(blob, b"AVI ", "an AVI payload"), 0)
     if strf is None or len(strf) < 40:
         raise ValueError("missing/short strf (BITMAPINFOHEADER) chunk")
     return strf, frames
@@ -2964,33 +2824,15 @@ def make_avi_rle8(media_id: int, width: int, height: int, n_frames: int, fps: in
             ]
         )
 
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-    def lst(list_type: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", list_type + body)
-
     frame_size = ((width + 3) & ~3) * height  # decoded size upper bound
-    avih = struct.pack(
-        "<IIIIIIIIII16s",
-        1_000_000 // fps, frame_size * fps, 0, 0x10, n_frames, 0, 1, frame_size,
-        width, height, b"\x00" * 16,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIiI8s",
-        b"vids", b"MRLE", 0, 0, 0, 0, 1, fps, 0, n_frames, frame_size, -1, 0,
-        struct.pack("<hhhh", 0, 0, width, height),
-    )
     # BITMAPINFOHEADER with biCompression=1 (BI_RLE8) + 256 RGBQUAD palette
     strf = struct.pack(
         "<IiiHHIIiiII", 40, width, height, 1, 8, 1, frame_size, 2835, 2835, 256, 0
     ) + b"".join(
         bytes((b, g, r, 0)) for r, g, b in (_rle8_palette(i) for i in range(256))
     )
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", encode_frame(f)) for f in range(n_frames)))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    frames = [encode_frame(f) for f in range(n_frames)]
+    return _avi_file(width, height, fps, b"MRLE", frame_size, strf, b"00dc", frames)
 
 
 def decode_avi_rle8(blob: bytes) -> tuple[int, int, list[list[list[int]]], list[tuple[int, int, int]]]:
@@ -3117,30 +2959,11 @@ def make_avi_mjpeg(media_id: int, n_frames: int, fps: int = 10) -> bytes:
     frames = [make_jpeg(media_id * 131 + f * 17, bw, bh) for f in range(n_frames)]
     max_size = max(len(fr) for fr in frames)
 
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-    def lst(list_type: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", list_type + body)
-
     (mjpg,) = struct.unpack("<I", b"MJPG")
-    avih = struct.pack(
-        "<IIIIIIIIII16s",
-        1_000_000 // fps, max_size * fps, 0, 0x10, n_frames, 0, 1, max_size,
-        width, height, b"\x00" * 16,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIiI8s",
-        b"vids", b"MJPG", 0, 0, 0, 0, 1, fps, 0, n_frames, max_size, -1, 0,
-        struct.pack("<hhhh", 0, 0, width, height),
-    )
     strf = struct.pack(
         "<IiiHHIIiiII", 40, width, height, 1, 24, mjpg, max_size, 2835, 2835, 0, 0
     )
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", fr) for fr in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _avi_file(width, height, fps, b"MJPG", max_size, strf, b"00dc", frames)
 
 
 def demux_avi_mjpeg(blob: bytes) -> tuple[int, int, list[bytes]]:
@@ -3566,6 +3389,17 @@ def _png_filter_rows(rows: list[bytes], bpp: int, ft_of) -> bytearray:
     return raw
 
 
+def _png_chunk(typ: bytes, data: bytes) -> bytes:
+    """One PNG chunk: big-endian length, type, data, CRC-32 of type+data."""
+    import struct
+    import zlib
+
+    return (
+        struct.pack(">I", len(data)) + typ + data
+        + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
+    )
+
+
 def make_png(
     media_id: int, width: int, height: int, *, interlace: bool = False,
     color_type: int = 2,
@@ -3587,12 +3421,6 @@ def make_png(
 
     if color_type not in (0, 2, 3, 4, 6):
         raise ValueError(f"unsupported fixture color type {color_type}")
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
 
     bpp = _PNG_CHANNELS[color_type]
 
@@ -3622,16 +3450,16 @@ def make_png(
     idat = zlib.compress(bytes(raw))
     plte = b""
     if color_type == 3:
-        plte = chunk(
+        plte = _png_chunk(
             b"PLTE",
             bytes(v for i in range(256) for v in (i, (i * 3) % 256, (i * 7) % 256)),
         )
     return (
         b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IHDR", ihdr)
         + plte
-        + chunk(b"IDAT", idat)
-        + chunk(b"IEND", b"")
+        + _png_chunk(b"IDAT", idat)
+        + _png_chunk(b"IEND", b"")
     )
 
 
@@ -3658,12 +3486,6 @@ def make_png_packed(
     if color_type not in (0, 3):
         raise ValueError(
             f"sub-byte depths apply to grayscale (0) or palette (3), got {color_type}"
-        )
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
         )
 
     n_vals = 1 << depth
@@ -3697,16 +3519,16 @@ def make_png_packed(
     )
     plte = b""
     if color_type == 3:
-        plte = chunk(
+        plte = _png_chunk(
             b"PLTE",
             bytes(v for i in range(n_vals) for v in (i, (i * 3) % 256, (i * 7) % 256)),
         )
     return (
         b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IHDR", ihdr)
         + plte
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
+        + _png_chunk(b"IDAT", zlib.compress(bytes(raw)))
+        + _png_chunk(b"IEND", b"")
     )
 
 
@@ -3725,12 +3547,6 @@ def make_png16(
 
     if color_type not in (0, 2):
         raise ValueError(f"16-bit fixture supports color types 0/2, got {color_type}")
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
 
     ch = _PNG_CHANNELS[color_type]
     bpp = ch * 2
@@ -3760,9 +3576,9 @@ def make_png16(
     )
     return (
         b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(bytes(raw)))
+        + _png_chunk(b"IEND", b"")
     )
 
 
@@ -3773,14 +3589,10 @@ def png_insert_trns(blob: bytes, table: bytes) -> bytes:
     transport: the fixture generators compose this over
     `make_png`/`make_png_packed` output."""
     import struct
-    import zlib
 
     if blob[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG payload")
-    chunk = (
-        struct.pack(">I", len(table)) + b"tRNS" + table
-        + struct.pack(">I", zlib.crc32(b"tRNS" + table) & 0xFFFFFFFF)
-    )
+    chunk = _png_chunk(b"tRNS", table)
     pos, insert_at = 8, None
     while pos + 12 <= len(blob):
         (clen,) = struct.unpack_from(">I", blob, pos)
@@ -4326,6 +4138,40 @@ def _gif_interlace_rows(height: int) -> list[int]:
     return order
 
 
+# the fixtures' 256-entry table: entry i = (i, i·3 mod 256, i·7 mod 256)
+_GIF_PALETTE = bytes(v for i in range(256) for v in (i, (i * 3) % 256, (i * 7) % 256))
+
+# NETSCAPE2.0 application extension: loop forever
+_GIF_LOOP = b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
+
+
+def _gif_gce(flags: int, delay_cs: int, transparent_index: int = 0) -> bytes:
+    """Graphic Control Extension: packed flags (disposal << 2 |
+    transparency), delay in centiseconds, transparent index."""
+    return b"\x21\xf9\x04" + bytes((flags, delay_cs & 0xFF, delay_cs >> 8, transparent_index)) + b"\x00"
+
+
+def _gif_image_data(idx: bytes) -> bytes:
+    """LZW minimum code size 8, then the LZW stream in 255-byte
+    sub-blocks and the block terminator."""
+    lzw = _lzw_compress(idx, 8)
+    out = bytearray(b"\x08")
+    for i in range(0, len(lzw), 255):
+        sub = lzw[i : i + 255]
+        out.append(len(sub))
+        out += sub
+    out.append(0)
+    return bytes(out)
+
+
+def _gif_animation_header(width: int, height: int, bg_index: int) -> bytearray:
+    import struct
+
+    return bytearray(
+        b"GIF89a" + struct.pack("<HHBBB", width, height, 0xF7, bg_index, 0) + _GIF_PALETTE + _GIF_LOOP
+    )
+
+
 def make_gif(
     media_id: int,
     width: int,
@@ -4344,32 +4190,21 @@ def make_gif(
     both real-corpus shapes."""
     import struct
 
-    palette = bytes(
-        v for i in range(256) for v in (i, (i * 3) % 256, (i * 7) % 256)
-    )
     rows = _gif_interlace_rows(height) if interlace else range(height)
     idx = bytes(
         (media_id * 31 + y * 7 + x * 3) % 256
         for y in rows
         for x in range(width)
     )
-    lzw = _lzw_compress(idx, 8)
-    blocks = bytearray()
-    for i in range(0, len(lzw), 255):
-        sub = lzw[i : i + 255]
-        blocks.append(len(sub))
-        blocks += sub
-    blocks.append(0)  # block terminator
     screen_packed = 0x07 if local_palette else 0xF7  # GCT flag + size
     img_packed = (0x40 if interlace else 0) | (0x87 if local_palette else 0)
     return (
         b"GIF89a"
         + struct.pack("<HHBBB", width, height, screen_packed, 0, 0)
-        + (b"" if local_palette else palette)
+        + (b"" if local_palette else _GIF_PALETTE)
         + b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, img_packed)
-        + (palette if local_palette else b"")
-        + b"\x08"  # LZW min code size
-        + bytes(blocks)
+        + (_GIF_PALETTE if local_palette else b"")
+        + _gif_image_data(idx)
         + b"\x3b"
     )
 
@@ -4388,71 +4223,97 @@ def make_gif_animated(
 
     if n_frames <= 0:
         raise ValueError(f"invalid n_frames {n_frames}")
-    palette = bytes(
-        v for i in range(256) for v in (i, (i * 3) % 256, (i * 7) % 256)
-    )
-    out = bytearray(
-        b"GIF89a" + struct.pack("<HHBBB", width, height, 0xF7, 0, 0) + palette
-    )
-    # application extension: NETSCAPE2.0 infinite loop
-    out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
+    out = _gif_animation_header(width, height, 0)
     for f in range(n_frames):
-        out += b"\x21\xf9\x04" + bytes((0x04, delay_cs & 0xFF, delay_cs >> 8, 0)) + b"\x00"
+        out += _gif_gce(0x04, delay_cs)
         out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, 0)
-        idx = bytes(
+        out += _gif_image_data(bytes(
             (media_id * 31 + f * 97 + y * 7 + x * 3) % 256
             for y in range(height)
             for x in range(width)
-        )
-        lzw = _lzw_compress(idx, 8)
-        out += b"\x08"
-        for i in range(0, len(lzw), 255):
-            sub = lzw[i : i + 255]
-            out.append(len(sub))
-            out += sub
-        out.append(0)
+        ))
     out += b"\x3b"
     return bytes(out)
 
 
-def decode_gif_frames(blob: bytes) -> tuple[int, int, bytes, list[bytes]]:
-    """REAL animated-GIF decode → (width, height, palette, [per-frame
-    indices in natural row order]). Walks every block to the trailer:
-    Graphic Control Extensions are PARSED (not blindly skipped) so the
-    compositing boundaries stay honest — transparency or
-    restore-to-previous disposal raise NotImplementedError; other
-    extensions (NETSCAPE looping, comments) are skipped per spec. Every
-    image descriptor must be FULL-FRAME (left 0, top 0, screen dims) —
-    partial-update frames require compositing state and raise; interlaced
-    frames de-interlace through the 4-pass map, and a per-frame local
-    color table raises (one palette per animation keeps the feature fold
-    exact — real multi-palette GIFs are the next boundary out)."""
+class _GifImage(NamedTuple):
+    """One image of a GIF block stream with the Graphic Control Extension
+    that preceded it (defaults when there was none)."""
+
+    left: int
+    top: int
+    width: int
+    height: int
+    local_palette: bytes  # b"" when the descriptor carries none
+    interlaced: bool
+    min_code_size: int
+    lzw: bytes
+    disposal: int
+    transparent: bool
+    transparent_index: int
+
+    def indices(self) -> bytes:
+        """LZW-decode the pixel indices, bounded by the frame size, in
+        NATURAL top-to-bottom row order (interlaced rows de-interlaced
+        through the 4-pass map)."""
+        iw, ih = self.width, self.height
+        _bounds_check_dims(iw, ih, "GIF frame")
+        idx = _lzw_decompress(self.lzw, self.min_code_size, max_out=iw * ih)
+        if len(idx) != iw * ih:
+            raise ValueError(f"decoded {len(idx)} indices for {iw}x{ih} frame")
+        if not self.interlaced:
+            return idx
+        # stored row k of the stream is natural row order[k]
+        natural = bytearray(iw * ih)
+        for k, y in enumerate(_gif_interlace_rows(ih)):
+            natural[y * iw : (y + 1) * iw] = idx[k * iw : (k + 1) * iw]
+        return bytes(natural)
+
+
+def _gif_color_table(blob: bytes, pos: int, packed: int, scope: str) -> tuple[bytes, int]:
+    """(table, position after it) for a descriptor's packed byte; b"" when
+    its table flag is clear."""
+    if not packed & 0x80:
+        return b"", pos
+    n = 2 << (packed & 0x07)
+    table = blob[pos : pos + 3 * n]
+    if len(table) < 3 * n:
+        raise ValueError(f"truncated {scope} color table")
+    return table, pos + 3 * n
+
+
+def _gif_screen(blob: bytes) -> tuple[int, int, int, bytes, int]:
+    """Parse the header, logical screen descriptor and global color table
+    → (width, height, background index, global palette or b"", position of
+    the first block)."""
     import struct
 
     if blob[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
     if len(blob) < 13:
         raise ValueError("truncated logical screen descriptor")
-    sw, sh, packed, _, _ = struct.unpack_from("<HHBBB", blob, 6)
-    pos = 13
-    if not packed & 0x80:
-        raise ValueError("animated fixture requires a global color table")
-    n = 2 << (packed & 0x07)
-    palette = blob[pos : pos + 3 * n]
-    if len(palette) < 3 * n:
-        raise ValueError("truncated global color table")
-    pos += 3 * n
+    sw, sh, packed, bg_index, _ = struct.unpack_from("<HHBBB", blob, 6)
+    palette, pos = _gif_color_table(blob, 13, packed, "global")
+    return sw, sh, bg_index, palette, pos
 
-    frames: list[bytes] = []
-    transparent = False
-    disposal = 0
+
+def _gif_images(blob: bytes, pos: int) -> Iterator[_GifImage]:
+    """THE GIF block walker: yield every image from `pos` to the trailer.
+    Graphic Control Extensions are PARSED (not blindly skipped) and apply
+    to the next image only; other extensions (NETSCAPE looping, comments)
+    are skipped per spec. A stream that ends before the trailer raises
+    when the walk reaches the end, so a caller that stops at the first
+    image needs no trailer."""
+    import struct
+
+    disposal, transparent, t_index = 0, False, 0
     while True:
         if pos >= len(blob):
             raise ValueError("no trailer before end of data")
         b0 = blob[pos]
         pos += 1
         if b0 == 0x3B:
-            break
+            return
         if b0 == 0x21:  # extension
             if pos >= len(blob):
                 raise ValueError("truncated extension block")
@@ -4464,10 +4325,10 @@ def decode_gif_frames(blob: bytes) -> tuple[int, int, bytes, list[bytes]]:
                 flags = blob[pos + 1]
                 disposal = (flags >> 2) & 0x07
                 transparent = bool(flags & 0x01)
-                pos += 5
-                if blob[pos] != 0:
+                t_index = blob[pos + 4]
+                if blob[pos + 5] != 0:
                     raise ValueError("graphic control missing terminator")
-                pos += 1
+                pos += 6
             else:
                 while pos < len(blob) and blob[pos] != 0:
                     pos += 1 + blob[pos]
@@ -4478,21 +4339,7 @@ def decode_gif_frames(blob: bytes) -> tuple[int, int, bytes, list[bytes]]:
         if pos + 9 > len(blob):
             raise ValueError("truncated image descriptor")
         left, top, iw, ih, ipacked = struct.unpack_from("<HHHHB", blob, pos)
-        pos += 9
-        if transparent or disposal == 3:
-            raise NotImplementedError(
-                "transparency composites via decode_gif_frames_composited "
-                "(this is the raw-frame fast path; restore-previous "
-                "disposal remains a boundary there too)"
-            )
-        if (left, top, iw, ih) != (0, 0, sw, sh):
-            raise NotImplementedError(
-                f"partial-update frame at ({left},{top}) {iw}x{ih} inside "
-                f"{sw}x{sh}: composite via decode_gif_frames_composited"
-            )
-        if ipacked & 0x80:
-            raise NotImplementedError("per-frame local color tables unsupported")
-        interlaced = bool(ipacked & 0x40)
+        local, pos = _gif_color_table(blob, pos + 9, ipacked, "local")
         min_code_size = blob[pos]
         pos += 1
         lzw = bytearray()
@@ -4505,21 +4352,121 @@ def decode_gif_frames(blob: bytes) -> tuple[int, int, bytes, list[bytes]]:
                 break
             lzw += blob[pos : pos + nsub]
             pos += nsub
-        _bounds_check_dims(iw, ih, "GIF frame")
-        idx = _lzw_decompress(bytes(lzw), min_code_size, max_out=iw * ih)
-        if len(idx) != iw * ih:
-            raise ValueError(f"decoded {len(idx)} indices for {iw}x{ih} frame")
-        if interlaced:
-            natural = bytearray(iw * ih)
-            for k, y in enumerate(_gif_interlace_rows(ih)):
-                natural[y * iw : (y + 1) * iw] = idx[k * iw : (k + 1) * iw]
-            idx = bytes(natural)
-        frames.append(idx)
-        transparent = False
-        disposal = 0
+        yield _GifImage(
+            left, top, iw, ih, local, bool(ipacked & 0x40), min_code_size, bytes(lzw),
+            disposal, transparent, t_index,
+        )
+        disposal, transparent, t_index = 0, False, 0
+
+
+def decode_gif_frames(blob: bytes) -> tuple[int, int, bytes, list[bytes]]:
+    """REAL animated-GIF decode → (width, height, palette, [per-frame
+    indices in natural row order]). Walks every block to the trailer
+    (`_gif_images`), so the compositing boundaries stay honest —
+    transparency or restore-to-previous disposal raise
+    NotImplementedError. Every image descriptor must be FULL-FRAME (left
+    0, top 0, screen dims) — partial-update frames require compositing
+    state and raise; interlaced frames de-interlace through the 4-pass
+    map, and a per-frame local color table raises (one palette per
+    animation keeps the feature fold exact — real multi-palette GIFs are
+    the next boundary out)."""
+    sw, sh, _, palette, pos = _gif_screen(blob)
+    if not palette:
+        raise ValueError("animated fixture requires a global color table")
+    frames: list[bytes] = []
+    for img in _gif_images(blob, pos):
+        if img.transparent or img.disposal == 3:
+            raise NotImplementedError(
+                "transparency composites via decode_gif_frames_composited "
+                "(this is the raw-frame fast path; restore-previous "
+                "disposal remains a boundary there too)"
+            )
+        if (img.left, img.top, img.width, img.height) != (0, 0, sw, sh):
+            raise NotImplementedError(
+                f"partial-update frame at ({img.left},{img.top}) {img.width}x{img.height} "
+                f"inside {sw}x{sh}: composite via decode_gif_frames_composited"
+            )
+        if img.local_palette:
+            raise NotImplementedError("per-frame local color tables unsupported")
+        frames.append(img.indices())
     if not frames:
         raise ValueError("no image descriptor before trailer")
     return sw, sh, palette, frames
+
+
+def _gif_composited_fixture(
+    kind: str,
+    media_id: int,
+    width: int,
+    height: int,
+    n_frames: int,
+    delay_cs: int,
+    bg_index: int,
+    transparent_index: int,
+    *,
+    disposal_of: Callable[[int], int],
+    local_palettes: bool = False,
+) -> bytes:
+    """The compositing fixtures (`kind` names one in errors): frame 0 is a
+    full-frame OPAQUE base (disposal 1), every later frame a PARTIAL-RECT
+    update with TRANSPARENCY on. All geometry and pixel values are
+    integer functions of (media_id, f, x, y) so a SQL oracle can replay
+    the paint-event sequence exactly:
+
+    - opaque value at SCREEN (x, y): (media_id*31 + f*97 + y*7 + x*3) % 255
+      (mod 255 keeps values clear of the transparent index);
+    - frame f >= 1 rect: (w//2)x(h//2) at ((f*3) % (w - w//2 + 1),
+      (f*2) % (h - h//2 + 1));
+    - transparent hole where (x + y + f) % 5 == 0;
+    - background color index `bg_index`, written in the logical screen
+      descriptor (what disposal-2 restores paint);
+    - frame f >= 1 uses disposal `disposal_of(f)`;
+    - with `local_palettes`, frames f >= 1 carry a local color table,
+      entry i = ((i+f) % 256, (i·5+f) % 256, (i·11+f) % 256).
+    """
+    import struct
+
+    if n_frames <= 0:
+        raise ValueError(f"invalid n_frames {n_frames}")
+    if width < 2 or height < 2:
+        raise ValueError(
+            f"{kind} fixture needs width/height >= 2, got {width}x{height}"
+        )
+    out = _gif_animation_header(width, height, bg_index)
+    rw, rh = width // 2, height // 2
+    for f in range(n_frames):
+        ipacked = 0
+        if f == 0:
+            left, top, iw, ih = 0, 0, width, height
+            out += _gif_gce(0x04, delay_cs)  # disposal 1, no transparency
+        else:
+            left = (f * 3) % (width - rw + 1)
+            top = (f * 2) % (height - rh + 1)
+            iw, ih = rw, rh
+            out += _gif_gce((disposal_of(f) << 2) | 0x01, delay_cs, transparent_index)
+            if local_palettes:
+                ipacked = 0x87  # local color table, 256 entries
+        out += b"\x2c" + struct.pack("<HHHHB", left, top, iw, ih, ipacked)
+        if ipacked & 0x80:
+            out += bytes(
+                v
+                for i in range(256)
+                for v in ((i + f) % 256, (i * 5 + f) % 256, (i * 11 + f) % 256)
+            )
+        out += _gif_image_data(bytes(
+            transparent_index
+            if f > 0 and (x + y + f) % 5 == 0
+            else (media_id * 31 + f * 97 + y * 7 + x * 3) % 255
+            for y in range(top, top + ih)
+            for x in range(left, left + iw)
+        ))
+    out += b"\x3b"
+    return bytes(out)
+
+
+def _gif_disposal_2_1(f: int) -> int:
+    """Restore-to-background on even frames, no-dispose on odd ones."""
+    return 2 if f % 2 == 0 else 1
 
 
 def make_gif_animated_composited(
@@ -4534,68 +4481,13 @@ def make_gif_animated_composited(
 ) -> bytes:
     """Pack a deterministic ANIMATED GIF89a that exercises COMPOSITING —
     the dominant real-web shape `make_gif_animated` deliberately avoids:
-    frame 0 is a full-frame OPAQUE base (disposal 1), every later frame a
-    PARTIAL-RECT update with TRANSPARENCY on (index 255) and disposal
+    partial-rect updates with transparency (index 255) and disposal
     alternating between restore-to-background (2, even f) and no-dispose
-    (1, odd f). All geometry and pixel values are integer functions of
-    (media_id, f, x, y) so a SQL oracle can replay the paint-event
-    sequence exactly:
-
-    - opaque value at SCREEN (x, y): (media_id*31 + f*97 + y*7 + x*3) % 255
-      (mod 255 keeps values clear of the transparent index);
-    - frame f >= 1 rect: (w//2)x(h//2) at ((f*3) % (w - w//2 + 1),
-      (f*2) % (h - h//2 + 1));
-    - transparent hole where (x + y + f) % 5 == 0;
-    - background color index 3, written in the logical screen descriptor
-      (what disposal-2 restores paint).
-    """
-    import struct
-
-    if n_frames <= 0:
-        raise ValueError(f"invalid n_frames {n_frames}")
-    if width < 2 or height < 2:
-        raise ValueError(
-            f"composited fixture needs width/height >= 2, got {width}x{height}"
-        )
-    palette = bytes(v for i in range(256) for v in (i, (i * 3) % 256, (i * 7) % 256))
-    out = bytearray(
-        b"GIF89a" + struct.pack("<HHBBB", width, height, 0xF7, bg_index, 0) + palette
+    (1, odd f). Geometry and value formulas: `_gif_composited_fixture`."""
+    return _gif_composited_fixture(
+        "composited", media_id, width, height, n_frames, delay_cs, bg_index, transparent_index,
+        disposal_of=_gif_disposal_2_1,
     )
-    out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
-    rw, rh = width // 2, height // 2
-    for f in range(n_frames):
-        if f == 0:
-            flags = 0x04  # disposal 1, no transparency
-            left, top, iw, ih = 0, 0, width, height
-            out += b"\x21\xf9\x04" + bytes(
-                (flags, delay_cs & 0xFF, delay_cs >> 8, 0)
-            ) + b"\x00"
-        else:
-            disposal = 2 if f % 2 == 0 else 1
-            flags = (disposal << 2) | 0x01
-            left = (f * 3) % (width - rw + 1)
-            top = (f * 2) % (height - rh + 1)
-            iw, ih = rw, rh
-            out += b"\x21\xf9\x04" + bytes(
-                (flags, delay_cs & 0xFF, delay_cs >> 8, transparent_index)
-            ) + b"\x00"
-        out += b"\x2c" + struct.pack("<HHHHB", left, top, iw, ih, 0)
-        idx = bytes(
-            transparent_index
-            if f > 0 and (x + y + f) % 5 == 0
-            else (media_id * 31 + f * 97 + y * 7 + x * 3) % 255
-            for y in range(top, top + ih)
-            for x in range(left, left + iw)
-        )
-        lzw = _lzw_compress(idx, 8)
-        out += b"\x08"
-        for i in range(0, len(lzw), 255):
-            sub = lzw[i : i + 255]
-            out.append(len(sub))
-            out += sub
-        out.append(0)
-    out += b"\x3b"
-    return bytes(out)
 
 
 def make_gif_animated_disposals(
@@ -4609,60 +4501,16 @@ def make_gif_animated_disposals(
     transparent_index: int = 255,
 ) -> bytes:
     """The FULL disposal-method matrix over the composited fixture's
-    geometry: frame 0 is the opaque full-frame base, frames f >= 1 cycle
-    disposal 1 → 2 → 3 (no-dispose, restore-to-background,
-    restore-to-PREVIOUS) with transparency on — same rects, hole pattern
-    and value formula as `make_gif_animated_composited`, so the one
-    paint-event oracle family covers it with a per-event persistence
-    flag (an ephemeral disposal-3 paint is visible only in its own
-    displayed frame)."""
-    import struct
-
-    if n_frames <= 0:
-        raise ValueError(f"invalid n_frames {n_frames}")
-    if width < 2 or height < 2:
-        raise ValueError(
-            f"disposal fixture needs width/height >= 2, got {width}x{height}"
-        )
-    palette = bytes(v for i in range(256) for v in (i, (i * 3) % 256, (i * 7) % 256))
-    out = bytearray(
-        b"GIF89a" + struct.pack("<HHBBB", width, height, 0xF7, bg_index, 0) + palette
+    geometry: frames f >= 1 cycle disposal 1 → 2 → 3 (no-dispose,
+    restore-to-background, restore-to-PREVIOUS) with transparency on —
+    same rects, hole pattern and value formula as
+    `make_gif_animated_composited`, so the one paint-event oracle family
+    covers it with a per-event persistence flag (an ephemeral disposal-3
+    paint is visible only in its own displayed frame)."""
+    return _gif_composited_fixture(
+        "disposal", media_id, width, height, n_frames, delay_cs, bg_index, transparent_index,
+        disposal_of=lambda f: 1 + (f - 1) % 3,
     )
-    out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
-    rw, rh = width // 2, height // 2
-    for f in range(n_frames):
-        if f == 0:
-            flags = 0x04  # disposal 1, no transparency
-            left, top, iw, ih = 0, 0, width, height
-            out += b"\x21\xf9\x04" + bytes(
-                (flags, delay_cs & 0xFF, delay_cs >> 8, 0)
-            ) + b"\x00"
-        else:
-            disposal = 1 + (f - 1) % 3
-            flags = (disposal << 2) | 0x01
-            left = (f * 3) % (width - rw + 1)
-            top = (f * 2) % (height - rh + 1)
-            iw, ih = rw, rh
-            out += b"\x21\xf9\x04" + bytes(
-                (flags, delay_cs & 0xFF, delay_cs >> 8, transparent_index)
-            ) + b"\x00"
-        out += b"\x2c" + struct.pack("<HHHHB", left, top, iw, ih, 0)
-        idx = bytes(
-            transparent_index
-            if f > 0 and (x + y + f) % 5 == 0
-            else (media_id * 31 + f * 97 + y * 7 + x * 3) % 255
-            for y in range(top, top + ih)
-            for x in range(left, left + iw)
-        )
-        lzw = _lzw_compress(idx, 8)
-        out += b"\x08"
-        for i in range(0, len(lzw), 255):
-            sub = lzw[i : i + 255]
-            out.append(len(sub))
-            out += sub
-        out.append(0)
-    out += b"\x3b"
-    return bytes(out)
 
 
 def make_gif_animated_local_palettes(
@@ -4682,61 +4530,10 @@ def make_gif_animated_local_palettes(
     folds through the wrong palette shifts every channel sum. Geometry,
     transparency holes, value formulas and the 1/2 disposal alternation
     match `make_gif_animated_composited`."""
-    import struct
-
-    if n_frames <= 0:
-        raise ValueError(f"invalid n_frames {n_frames}")
-    if width < 2 or height < 2:
-        raise ValueError(
-            f"local-palette fixture needs width/height >= 2, got {width}x{height}"
-        )
-    palette = bytes(v for i in range(256) for v in (i, (i * 3) % 256, (i * 7) % 256))
-    out = bytearray(
-        b"GIF89a" + struct.pack("<HHBBB", width, height, 0xF7, bg_index, 0) + palette
+    return _gif_composited_fixture(
+        "local-palette", media_id, width, height, n_frames, delay_cs, bg_index, transparent_index,
+        disposal_of=_gif_disposal_2_1, local_palettes=True,
     )
-    out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
-    rw, rh = width // 2, height // 2
-    for f in range(n_frames):
-        if f == 0:
-            flags = 0x04
-            left, top, iw, ih = 0, 0, width, height
-            ipacked = 0
-            out += b"\x21\xf9\x04" + bytes(
-                (flags, delay_cs & 0xFF, delay_cs >> 8, 0)
-            ) + b"\x00"
-        else:
-            disposal = 2 if f % 2 == 0 else 1
-            flags = (disposal << 2) | 0x01
-            left = (f * 3) % (width - rw + 1)
-            top = (f * 2) % (height - rh + 1)
-            iw, ih = rw, rh
-            ipacked = 0x87  # local color table, 256 entries
-            out += b"\x21\xf9\x04" + bytes(
-                (flags, delay_cs & 0xFF, delay_cs >> 8, transparent_index)
-            ) + b"\x00"
-        out += b"\x2c" + struct.pack("<HHHHB", left, top, iw, ih, ipacked)
-        if ipacked & 0x80:
-            out += bytes(
-                v
-                for i in range(256)
-                for v in ((i + f) % 256, (i * 5 + f) % 256, (i * 11 + f) % 256)
-            )
-        idx = bytes(
-            transparent_index
-            if f > 0 and (x + y + f) % 5 == 0
-            else (media_id * 31 + f * 97 + y * 7 + x * 3) % 255
-            for y in range(top, top + ih)
-            for x in range(left, left + iw)
-        )
-        lzw = _lzw_compress(idx, 8)
-        out += b"\x08"
-        for i in range(0, len(lzw), 255):
-            sub = lzw[i : i + 255]
-            out.append(len(sub))
-            out += sub
-        out.append(0)
-    out += b"\x3b"
-    return bytes(out)
 
 
 def decode_gif_frames_composited(blob: bytes) -> tuple[int, int, bytes, list[bytes]]:
@@ -4777,25 +4574,14 @@ def decode_gif_frames_composited_rgb(blob: bytes) -> tuple[int, int, list[bytes]
 
 
 def _gif_composite(blob: bytes, *, rgb_mode: bool):
-    import struct
-
-    if blob[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    if len(blob) < 13:
-        raise ValueError("truncated logical screen descriptor")
-    sw, sh, packed, bg_index, _ = struct.unpack_from("<HHBBB", blob, 6)
+    sw, sh, bg_index, palette, pos = _gif_screen(blob)
     # the compositing canvas below is allocated at SCREEN dims ((sh, sw,
     # 3) ndarray — 12.9 GB at the 16-bit maximum), which the per-frame
     # check cannot bound (r12 review find, second pass)
     _bounds_check_dims(sw, sh, "GIF canvas")
-    pos = 13
-    if not packed & 0x80:
+    if not palette:
         raise ValueError("animated fixture requires a global color table")
-    n = 2 << (packed & 0x07)
-    palette = blob[pos : pos + 3 * n]
-    if len(palette) < 3 * n:
-        raise ValueError("truncated global color table")
-    pos += 3 * n
+    n = len(palette) // 3
     if bg_index >= n:
         raise ValueError(f"background index {bg_index} >= palette size {n}")
 
@@ -4807,90 +4593,26 @@ def _gif_composite(blob: bytes, *, rgb_mode: bool):
         canvas = np.full((sh, sw), bg_index, dtype=np.uint8)
         bg_fill = bg_index
     frames: list[bytes] = []
-    transparent = False
-    t_index = 0
-    disposal = 0
-    while True:
-        if pos >= len(blob):
-            raise ValueError("no trailer before end of data")
-        b0 = blob[pos]
-        pos += 1
-        if b0 == 0x3B:
-            break
-        if b0 == 0x21:  # extension
-            if pos >= len(blob):
-                raise ValueError("truncated extension block")
-            label = blob[pos]
-            pos += 1
-            if label == 0xF9:  # graphic control: parse, don't skip
-                if pos + 6 > len(blob) or blob[pos] != 4:
-                    raise ValueError("malformed graphic control extension")
-                flags = blob[pos + 1]
-                disposal = (flags >> 2) & 0x07
-                transparent = bool(flags & 0x01)
-                t_index = blob[pos + 4]
-                pos += 5
-                if blob[pos] != 0:
-                    raise ValueError("graphic control missing terminator")
-                pos += 1
-            else:
-                while pos < len(blob) and blob[pos] != 0:
-                    pos += 1 + blob[pos]
-                pos += 1
-            continue
-        if b0 != 0x2C:
-            raise ValueError(f"unexpected block 0x{b0:02x}")
-        if pos + 9 > len(blob):
-            raise ValueError("truncated image descriptor")
-        left, top, iw, ih, ipacked = struct.unpack_from("<HHHHB", blob, pos)
-        pos += 9
-        if disposal > 3:
-            raise ValueError(f"reserved disposal method {disposal}")
+    for img in _gif_images(blob, pos):
+        left, top, iw, ih = img.left, img.top, img.width, img.height
+        if img.disposal > 3:
+            raise ValueError(f"reserved disposal method {img.disposal}")
         if left + iw > sw or top + ih > sh:
             raise ValueError(
                 f"frame rect ({left},{top}) {iw}x{ih} exceeds screen {sw}x{sh}"
             )
-        if ipacked & 0x80:
+        if img.local_palette:
             if not rgb_mode:
                 raise NotImplementedError(
                     "per-frame local color tables need the RGB canvas — "
                     "composite via decode_gif_frames_composited_rgb (index "
                     "compositing is ill-defined across palettes)"
                 )
-            ln_loc = 2 << (ipacked & 0x07)
-            loc = blob[pos : pos + 3 * ln_loc]
-            if len(loc) < 3 * ln_loc:
-                raise ValueError("truncated local color table")
-            pos += 3 * ln_loc
-            active_pal, active_n = (
-                np.frombuffer(loc, dtype=np.uint8).reshape(ln_loc, 3),
-                ln_loc,
-            )
+            active_n = len(img.local_palette) // 3
+            active_pal = np.frombuffer(img.local_palette, dtype=np.uint8).reshape(active_n, 3)
         else:
             active_pal, active_n = gpal, n
-        interlaced = bool(ipacked & 0x40)
-        min_code_size = blob[pos]
-        pos += 1
-        lzw = bytearray()
-        while True:
-            if pos >= len(blob):
-                raise ValueError("truncated image data sub-blocks")
-            nsub = blob[pos]
-            pos += 1
-            if nsub == 0:
-                break
-            lzw += blob[pos : pos + nsub]
-            pos += nsub
-        _bounds_check_dims(iw, ih, "GIF frame")
-        idx = _lzw_decompress(bytes(lzw), min_code_size, max_out=iw * ih)
-        if len(idx) != iw * ih:
-            raise ValueError(f"decoded {len(idx)} indices for {iw}x{ih} frame")
-        if interlaced:
-            natural = bytearray(iw * ih)
-            for k, y in enumerate(_gif_interlace_rows(ih)):
-                natural[y * iw : (y + 1) * iw] = idx[k * iw : (k + 1) * iw]
-            idx = bytes(natural)
-        arr = np.frombuffer(idx, dtype=np.uint8).reshape(ih, iw)
+        arr = np.frombuffer(img.indices(), dtype=np.uint8).reshape(ih, iw)
         if int(arr.max(initial=0)) >= active_n:
             raise ValueError(
                 f"palette index {int(arr.max())} >= table size {active_n}"
@@ -4900,21 +4622,18 @@ def _gif_composite(blob: bytes, *, rgb_mode: bool):
         # rect reverts to its pre-paint state after display, so only this
         # frame's own output ever sees the paint (GIF89a §23; one saved
         # rect suffices because the revert happens before the next paint)
-        saved = region.copy() if disposal == 3 else None
+        saved = region.copy() if img.disposal == 3 else None
         paint = active_pal[arr] if rgb_mode else arr
-        if transparent:
-            mask = arr != t_index
+        if img.transparent:
+            mask = arr != img.transparent_index
             region[mask] = paint[mask]
         else:
             region[...] = paint
         frames.append(canvas.tobytes())
-        if disposal == 2:
+        if img.disposal == 2:
             canvas[top : top + ih, left : left + iw] = bg_fill
-        elif disposal == 3:
+        elif img.disposal == 3:
             region[...] = saved
-        transparent = False
-        t_index = 0
-        disposal = 0
     if not frames:
         raise ValueError("no image descriptor before trailer")
     return sw, sh, palette, frames
@@ -5002,83 +4721,25 @@ def decode_gif_indices(blob: bytes) -> tuple[int, int, bytes, bytes]:
     reorder).
 
     Parses the logical screen descriptor, global color table, extension
-    blocks (skipped per spec), and the first image descriptor, then
-    LZW-DECOMPRESSES the pixel indices (variable-width codes, clear/EOI,
-    KwKwK) and folds them through the palette. Interlaced images are
-    de-interlaced through the 4-pass row map (top_left_idx reads NATURAL
-    row 0 after reordering); a local color table on the image descriptor
-    overrides the global one per spec. A truncated stream or an index
-    count that disagrees with the descriptor raises ValueError."""
-    import struct
-
-    if blob[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    if len(blob) < 13:
-        raise ValueError("truncated logical screen descriptor")
-    _, _, packed, _, _ = struct.unpack_from("<HHBBB", blob, 6)
-    pos = 13
-    palette = b""
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        palette = blob[pos : pos + 3 * n]
-        if len(palette) < 3 * n:
-            raise ValueError("truncated global color table")
-        pos += 3 * n
-    while True:
-        if pos >= len(blob):
-            raise ValueError("no image descriptor before end of data")
-        b0 = blob[pos]
-        pos += 1
-        if b0 == 0x3B:
-            raise ValueError("trailer before any image descriptor")
-        if b0 == 0x21:  # extension: label + sub-blocks, skip
-            pos += 1
-            while pos < len(blob) and blob[pos] != 0:
-                pos += 1 + blob[pos]
-            pos += 1
-            continue
-        if b0 != 0x2C:
-            raise ValueError(f"unexpected block 0x{b0:02x}")
-        if pos + 9 > len(blob):
-            raise ValueError("truncated image descriptor")
-        _, _, iw, ih, ipacked = struct.unpack_from("<HHHHB", blob, pos)
-        pos += 9
-        interlaced = bool(ipacked & 0x40)
-        if ipacked & 0x80:  # local color table overrides the global one
-            n = 2 << (ipacked & 0x07)
-            palette = blob[pos : pos + 3 * n]
-            if len(palette) < 3 * n:
-                raise ValueError("truncated local color table")
-            pos += 3 * n
-        break
+    blocks, and the FIRST image descriptor through the shared block
+    walker (`_gif_images` — it stops there, so no trailer is needed),
+    then LZW-DECOMPRESSES the pixel indices (variable-width codes,
+    clear/EOI, KwKwK). Interlaced images are de-interlaced through the
+    4-pass row map (top_left_idx reads NATURAL row 0 after reordering); a
+    local color table on the image descriptor overrides the global one
+    per spec. A truncated stream, a malformed Graphic Control Extension or
+    an index count that disagrees with the descriptor raises ValueError."""
+    _, _, _, palette, pos = _gif_screen(blob)
+    img = next(_gif_images(blob, pos), None)
+    if img is None:
+        raise ValueError("trailer before any image descriptor")
+    iw, ih = img.width, img.height
     if iw <= 0 or ih <= 0:
         raise ValueError(f"invalid dimensions {iw}x{ih}")
+    palette = img.local_palette or palette
     if not palette:
         raise ValueError("no color table for image")
-    min_code_size = blob[pos]
-    pos += 1
-    lzw = bytearray()
-    while True:
-        if pos >= len(blob):
-            raise ValueError("truncated image data sub-blocks")
-        n = blob[pos]
-        pos += 1
-        if n == 0:
-            break
-        lzw += blob[pos : pos + n]
-        pos += n
-    _bounds_check_dims(iw, ih, "GIF image")
-    idx = _lzw_decompress(bytes(lzw), min_code_size, max_out=iw * ih)
-    if len(idx) != iw * ih:
-        raise ValueError(f"decoded {len(idx)} indices for {iw}x{ih} image")
-    if interlaced:
-        # stored row k of the stream is natural row order[k] — invert the
-        # 4-pass map so downstream sees natural top-to-bottom rows
-        natural = bytearray(iw * ih)
-        for k, y in enumerate(_gif_interlace_rows(ih)):
-            natural[y * iw : (y + 1) * iw] = idx[k * iw : (k + 1) * iw]
-        idx = bytes(natural)
-    return iw, ih, palette, idx
+    return iw, ih, palette, img.indices()
 
 
 def decode_gif(blob: bytes) -> tuple[int, int, int, int, int]:
@@ -5262,6 +4923,19 @@ def _packbits_decompress(data: bytes, expected: int) -> bytes:
     return bytes(out)
 
 
+def _tiff_entry(e: str, tag: int, typ: int, count: int, value: int) -> bytes:
+    """One 12-byte IFD entry in byte order `e` ('<' or '>'). The value
+    (or offset) fits in 4 bytes; a single SHORT sits in the low half per
+    the byte order's packing rules."""
+    import struct
+
+    if typ == 3 and count == 1:
+        packed = struct.pack(e + "HH", value, 0)
+    else:
+        packed = struct.pack(e + "I", value)
+    return struct.pack(e + "HHI", tag, typ, count) + packed
+
+
 def make_tiff(
     media_id: int,
     width: int,
@@ -5320,25 +4994,16 @@ def make_tiff(
     off += 4 * nstrips
     ifd_pos = off
 
-    def entry(tag: int, typ: int, count: int, value: int) -> bytes:
-        # value fits in 4 bytes; SHORT values sit in the low half per the
-        # byte order's packing rules
-        if typ == 3:
-            packed = struct.pack(e + "HH", value, 0)
-        else:
-            packed = struct.pack(e + "I", value)
-        return struct.pack(e + "HHI", tag, typ, count) + packed
-
     entries = [
-        entry(256, 3, 1, width),  # ImageWidth
-        entry(257, 3, 1, height),  # ImageLength
-        entry(258, 3, 1, 8),  # BitsPerSample
-        entry(259, 3, 1, compression),
-        entry(262, 3, 1, 1),  # PhotometricInterpretation: BlackIsZero
-        entry(273, 4, nstrips, offsets[0] if nstrips == 1 else off_arr_pos),
-        entry(277, 3, 1, 1),  # SamplesPerPixel
-        entry(278, 3, 1, rows_per_strip),
-        entry(279, 4, nstrips, len(strips[0]) if nstrips == 1 else cnt_arr_pos),
+        _tiff_entry(e, 256, 3, 1, width),  # ImageWidth
+        _tiff_entry(e, 257, 3, 1, height),  # ImageLength
+        _tiff_entry(e, 258, 3, 1, 8),  # BitsPerSample
+        _tiff_entry(e, 259, 3, 1, compression),
+        _tiff_entry(e, 262, 3, 1, 1),  # PhotometricInterpretation: BlackIsZero
+        _tiff_entry(e, 273, 4, nstrips, offsets[0] if nstrips == 1 else off_arr_pos),
+        _tiff_entry(e, 277, 3, 1, 1),  # SamplesPerPixel
+        _tiff_entry(e, 278, 3, 1, rows_per_strip),
+        _tiff_entry(e, 279, 4, nstrips, len(strips[0]) if nstrips == 1 else cnt_arr_pos),
     ]
     out = bytearray()
     out += byte_order.encode() + struct.pack(e + "HI", 42, ifd_pos)
@@ -5379,13 +5044,6 @@ def make_tiff_multipage(
         raise ValueError(f"invalid n_pages {n_pages}")
     e = "<" if byte_order == "II" else ">"
 
-    def entry(tag: int, typ: int, count: int, value: int) -> bytes:
-        if typ == 3:
-            packed = struct.pack(e + "HH", value, 0)
-        else:
-            packed = struct.pack(e + "I", value)
-        return struct.pack(e + "HHI", tag, typ, count) + packed
-
     out = bytearray(b"\x00" * 8)  # header patched at the end
     first_ifd = 0
     prev_next_ptr: int | None = None
@@ -5425,15 +5083,15 @@ def make_tiff_multipage(
             struct.pack_into(e + "I", out, prev_next_ptr, ifd_pos)
 
         entries = [
-            entry(256, 3, 1, width),
-            entry(257, 3, 1, height),
-            entry(258, 3, 1, 8),
-            entry(259, 3, 1, compression),
-            entry(262, 3, 1, 1),
-            entry(273, 4, nstrips, offsets[0] if nstrips == 1 else off_arr_pos),
-            entry(277, 3, 1, 1),
-            entry(278, 3, 1, rows_per_strip),
-            entry(279, 4, nstrips, len(strips[0]) if nstrips == 1 else cnt_arr_pos),
+            _tiff_entry(e, 256, 3, 1, width),
+            _tiff_entry(e, 257, 3, 1, height),
+            _tiff_entry(e, 258, 3, 1, 8),
+            _tiff_entry(e, 259, 3, 1, compression),
+            _tiff_entry(e, 262, 3, 1, 1),
+            _tiff_entry(e, 273, 4, nstrips, offsets[0] if nstrips == 1 else off_arr_pos),
+            _tiff_entry(e, 277, 3, 1, 1),
+            _tiff_entry(e, 278, 3, 1, rows_per_strip),
+            _tiff_entry(e, 279, 4, nstrips, len(strips[0]) if nstrips == 1 else cnt_arr_pos),
         ]
         for s in strips:
             out += s
@@ -5507,24 +5165,17 @@ def make_tiff_rgb(
     off += 4 * nstrips
     ifd_pos = off
 
-    def entry(tag: int, typ: int, count: int, value: int) -> bytes:
-        if typ == 3 and count == 1:
-            packed = struct.pack(e + "HH", value, 0)
-        else:
-            packed = struct.pack(e + "I", value)
-        return struct.pack(e + "HHI", tag, typ, count) + packed
-
     entries = [
-        entry(256, 3, 1, width),
-        entry(257, 3, 1, height),
-        entry(258, 3, 3, bits_arr_pos),  # BitsPerSample: out-of-line [8,8,8]
-        entry(259, 3, 1, compression),
-        entry(262, 3, 1, 2),  # PhotometricInterpretation: RGB
-        entry(273, 4, nstrips, offsets[0] if nstrips == 1 else off_arr_pos),
-        entry(277, 3, 1, 3),  # SamplesPerPixel
-        entry(278, 3, 1, rows_per_strip),
-        entry(279, 4, nstrips, len(strips[0]) if nstrips == 1 else cnt_arr_pos),
-        entry(284, 3, 1, 1),  # PlanarConfiguration: chunky
+        _tiff_entry(e, 256, 3, 1, width),
+        _tiff_entry(e, 257, 3, 1, height),
+        _tiff_entry(e, 258, 3, 3, bits_arr_pos),  # BitsPerSample: out-of-line [8,8,8]
+        _tiff_entry(e, 259, 3, 1, compression),
+        _tiff_entry(e, 262, 3, 1, 2),  # PhotometricInterpretation: RGB
+        _tiff_entry(e, 273, 4, nstrips, offsets[0] if nstrips == 1 else off_arr_pos),
+        _tiff_entry(e, 277, 3, 1, 3),  # SamplesPerPixel
+        _tiff_entry(e, 278, 3, 1, rows_per_strip),
+        _tiff_entry(e, 279, 4, nstrips, len(strips[0]) if nstrips == 1 else cnt_arr_pos),
+        _tiff_entry(e, 284, 3, 1, 1),  # PlanarConfiguration: chunky
     ]
     out = bytearray()
     out += byte_order.encode() + struct.pack(e + "HI", 42, ifd_pos)
@@ -5923,78 +5574,111 @@ def encode_jpeg_blocks(
     `restart_interval` a DRI segment is emitted and every interval
     boundary gets a byte-aligned RSTm marker (sequence modulo 8) with the
     DC predictor reset — the web-crawl-common stream shape (T.81 E.1.4)."""
-    import struct
-
     if len(blocks) != blocks_w * blocks_h:
         raise ValueError("blocks list must cover blocks_w*blocks_h")
-    w, h = blocks_w * 8, blocks_h * 8
-    dc_syms: list[int] = []
-    ac_syms: list[int] = []
-    per_block: list[tuple[int, list[tuple[int, int, int]]]] = []
-    pred = 0
-    for bi, qc in enumerate(blocks):
-        if restart_interval and bi and bi % restart_interval == 0:
-            pred = 0  # predictor resets at every restart boundary
-        diff = qc[0] - pred
-        pred = qc[0]
-        dc_syms.append(_jpeg_csize(diff))
-        acs: list[tuple[int, int, int]] = []
-        run = 0
-        for k in range(1, 64):
-            v = qc[k]
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                acs.append((0xF0, 0, 0))
-                ac_syms.append(0xF0)
-                run -= 16
-            s = _jpeg_csize(v)
-            acs.append(((run << 4) | s, v, s))
-            ac_syms.append((run << 4) | s)
+    return _jpeg_baseline(
+        blocks_w * 8, blocks_h * 8, [(0x11, 0)], [[(0, qc)] for qc in blocks],
+        restart_interval=restart_interval,
+    )
+
+
+def _jpeg_seg(marker: int, payload: bytes) -> bytes:
+    """A marker segment: marker, big-endian length (payload + 2), payload."""
+    import struct
+
+    return struct.pack(">HH", marker, len(payload) + 2) + payload
+
+
+def _jpeg_baseline(
+    width: int,
+    height: int,
+    comps: list[tuple[int, int]],
+    mcus: list[list[tuple[int, list[int]]]],
+    *,
+    app: bytes = b"",
+    restart_interval: int | None = None,
+) -> bytes:
+    """THE baseline (SOF0) JPEG writer behind every baseline fixture.
+    `comps` is (sampling byte, table id) per component — table id picks
+    both the quant table (0 luma, 1 chroma) and the Huffman pair; `mcus`
+    holds each MCU's blocks in scan order as (component, zigzag
+    coefficients). DC differences use per-component predictors (reset at
+    restart boundaries), ACs are run-length symbols with ZRL/EOB, and
+    each table id gets one canonical DC/AC table pair built from the
+    symbols it actually codes. Segments: SOI, `app`, DQT, SOF0, DHT, DRI
+    (with `restart_interval`), SOS, the scan, EOI."""
+    import struct
+
+    tids = sorted({tid for _, tid in comps})
+    syms: dict[tuple[int, int], list[int]] = {(cls, tid): [] for tid in tids for cls in (0, 1)}
+    coded: list[list[tuple[int, int, list[tuple[int, int, int]]]]] = []  # per MCU: (tid, diff, acs)
+    preds = [0] * len(comps)
+    for mi, mcu in enumerate(mcus):
+        if restart_interval and mi and mi % restart_interval == 0:
+            preds = [0] * len(comps)  # predictors reset at every restart boundary
+        units = []
+        for c, qc in mcu:
+            tid = comps[c][1]
+            diff = qc[0] - preds[c]
+            preds[c] = qc[0]
+            syms[(0, tid)].append(_jpeg_csize(diff))
+            acs: list[tuple[int, int, int]] = []  # (symbol, value, size)
             run = 0
-        if run:
-            acs.append((0x00, 0, 0))
-            ac_syms.append(0x00)
-        per_block.append((diff, acs))
-    if 0x00 not in ac_syms:
-        ac_syms.append(0x00)
-    dc_bits, dc_vals, dc_tab = _jpeg_canonical(dc_syms)
-    ac_bits, ac_vals, ac_tab = _jpeg_canonical(ac_syms)
+            for v in qc[1:64]:
+                if v == 0:
+                    run += 1
+                    continue
+                while run > 15:
+                    acs.append((0xF0, 0, 0))
+                    run -= 16
+                s = _jpeg_csize(v)
+                acs.append(((run << 4) | s, v, s))
+                run = 0
+            if run:
+                acs.append((0x00, 0, 0))
+            syms[(1, tid)] += [sym for sym, _, _ in acs]
+            units.append((tid, diff, acs))
+        coded.append(units)
+
+    tabs: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
+    dht = b""
+    for tid in tids:
+        for cls in (0, 1):
+            # every AC table carries EOB, even when no block ends early
+            bits, vals, tabs[(cls, tid)] = _jpeg_canonical(syms[(cls, tid)] + [0x00] * cls)
+            dht += _jpeg_seg(0xFFC4, bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals))
 
     bw = _JpegBitWriter()
-    for bi, (diff, acs) in enumerate(per_block):
-        if restart_interval and bi and bi % restart_interval == 0:
+    for mi, units in enumerate(coded):
+        if restart_interval and mi and mi % restart_interval == 0:
             bw.flush()  # byte-align (1-padding), then the bare marker
-            bw.out += bytes([0xFF, 0xD0 + ((bi // restart_interval - 1) & 7)])
-        s = _jpeg_csize(diff)
-        code, ln = dc_tab[s]
-        bw.put(code, ln)
-        if s:
-            bw.put(diff if diff > 0 else diff + (1 << s) - 1, s)
-        for sym, v, sz in acs:
-            code, ln = ac_tab[sym]
-            bw.put(code, ln)
-            if sz:
-                bw.put(v if v > 0 else v + (1 << sz) - 1, sz)
+            bw.out += bytes([0xFF, 0xD0 + ((mi // restart_interval - 1) & 7)])
+        for tid, diff, acs in units:
+            s = _jpeg_csize(diff)
+            bw.put(*tabs[(0, tid)][s])
+            if s:
+                bw.put(diff if diff > 0 else diff + (1 << s) - 1, s)
+            for sym, v, sz in acs:
+                bw.put(*tabs[(1, tid)][sym])
+                if sz:
+                    bw.put(v if v > 0 else v + (1 << sz) - 1, sz)
     bw.flush()
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    dri = (
-        seg(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b""
+    dqt = _jpeg_seg(0xFFDB, bytes([0x00]) + bytes(_JPEG_QTAB))
+    if 1 in tids:
+        dqt += _jpeg_seg(0xFFDB, bytes([0x01]) + bytes(_JPEG_QTAB_C))
+    sof = struct.pack(">BHHB", 8, height, width, len(comps)) + b"".join(
+        bytes([c + 1, samp, tid]) for c, (samp, tid) in enumerate(comps)
     )
+    sos = (
+        bytes([len(comps)])
+        + b"".join(bytes([c + 1, (tid << 4) | tid]) for c, (_, tid) in enumerate(comps))
+        + bytes([0, 63, 0])
+    )
+    dri = _jpeg_seg(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b""
     return (
-        b"\xff\xd8"
-        + seg(0xFFDB, bytes([0x00]) + bytes(_JPEG_QTAB))
-        + seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-        + seg(0xFFC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-        + seg(0xFFC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-        + dri
-        + seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-        + bytes(bw.out)
-        + b"\xff\xd9"
+        b"\xff\xd8" + app + dqt + _jpeg_seg(0xFFC0, sof) + dht + dri + _jpeg_seg(0xFFDA, sos)
+        + bytes(bw.out) + b"\xff\xd9"
     )
 
 
@@ -6015,91 +5699,7 @@ def make_jpeg_color(pat: int, blocks_w: int = 2, blocks_h: int = 2) -> bytes:
     chroma 1), separate canonical Huffman table pairs (class 0/1 ids 0/1)
     and per-component DC predictors — the full multi-component scan
     structure of T.81 baseline, coefficients from `jpeg_color_qcoefs`."""
-    import struct
-
-    w, h = blocks_w * 8, blocks_h * 8
-    dc_syms: dict[int, list[int]] = {0: [], 1: []}
-    ac_syms: dict[int, list[int]] = {0: [], 1: []}
-    per_mcu: list[list[tuple[int, list[tuple[int, int, int]]]]] = []
-    preds = [0, 0, 0]
-    for bi in range(blocks_w * blocks_h):
-        mcu = []
-        for c in range(3):
-            tid = 0 if c == 0 else 1
-            qc = jpeg_color_qcoefs(pat, bi, c)
-            diff = qc[0] - preds[c]
-            preds[c] = qc[0]
-            dc_syms[tid].append(_jpeg_csize(diff))
-            acs: list[tuple[int, int, int]] = []
-            run = 0
-            for k in range(1, 64):
-                v = qc[k]
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    acs.append((0xF0, 0, 0))
-                    ac_syms[tid].append(0xF0)
-                    run -= 16
-                s = _jpeg_csize(v)
-                acs.append(((run << 4) | s, v, s))
-                ac_syms[tid].append((run << 4) | s)
-                run = 0
-            if run:
-                acs.append((0x00, 0, 0))
-                ac_syms[tid].append(0x00)
-            mcu.append((diff, acs))
-        per_mcu.append(mcu)
-    for tid in (0, 1):
-        if 0x00 not in ac_syms[tid]:
-            ac_syms[tid].append(0x00)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    tabs: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
-    dht = b""
-    for tid in (0, 1):
-        db, dv, dt = _jpeg_canonical(dc_syms[tid])
-        ab, av, at = _jpeg_canonical(ac_syms[tid])
-        tabs[(0, tid)] = dt
-        tabs[(1, tid)] = at
-        dht += seg(0xFFC4, bytes([tid]) + bytes(db) + bytes(dv))
-        dht += seg(0xFFC4, bytes([0x10 | tid]) + bytes(ab) + bytes(av))
-
-    bw = _JpegBitWriter()
-    for mcu in per_mcu:
-        for c in range(3):
-            tid = 0 if c == 0 else 1
-            diff, acs = mcu[c]
-            s = _jpeg_csize(diff)
-            code, ln = tabs[(0, tid)][s]
-            bw.put(code, ln)
-            if s:
-                bw.put(diff if diff > 0 else diff + (1 << s) - 1, s)
-            for sym, v, sz in acs:
-                code, ln = tabs[(1, tid)][sym]
-                bw.put(code, ln)
-                if sz:
-                    bw.put(v if v > 0 else v + (1 << sz) - 1, sz)
-    bw.flush()
-
-    return (
-        b"\xff\xd8"
-        + seg(0xFFDB, bytes([0x00]) + bytes(_JPEG_QTAB))
-        + seg(0xFFDB, bytes([0x01]) + bytes(_JPEG_QTAB_C))
-        + seg(
-            0xFFC0,
-            struct.pack(">BHHB", 8, h, w, 3)
-            + bytes([1, 0x11, 0])
-            + bytes([2, 0x11, 1])
-            + bytes([3, 0x11, 1]),
-        )
-        + dht
-        + seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-        + bytes(bw.out)
-        + b"\xff\xd9"
-    )
+    return make_jpeg_subsampled(pat, blocks_w, blocks_h, luma_h=1, luma_v=1)
 
 
 def make_jpeg_cmyk(pat: int, blocks_w: int = 2, blocks_h: int = 2) -> bytes:
@@ -6113,96 +5713,14 @@ def make_jpeg_cmyk(pat: int, blocks_w: int = 2, blocks_h: int = 2) -> bytes:
     SQL oracle replays all four IDCT plane chains exactly."""
     import struct
 
-    w, h = blocks_w * 8, blocks_h * 8
-    tid_of = [0, 1, 1, 0]
-    dc_syms: dict[int, list[int]] = {0: [], 1: []}
-    ac_syms: dict[int, list[int]] = {0: [], 1: []}
-    per_mcu: list[list[tuple[int, list[tuple[int, int, int]]]]] = []
-    preds = [0, 0, 0, 0]
-    for bi in range(blocks_w * blocks_h):
-        mcu = []
-        for c in range(4):
-            tid = tid_of[c]
-            qc = jpeg_color_qcoefs(pat, bi, c)
-            diff = qc[0] - preds[c]
-            preds[c] = qc[0]
-            dc_syms[tid].append(_jpeg_csize(diff))
-            acs: list[tuple[int, int, int]] = []
-            run = 0
-            for k in range(1, 64):
-                v = qc[k]
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    acs.append((0xF0, 0, 0))
-                    ac_syms[tid].append(0xF0)
-                    run -= 16
-                s = _jpeg_csize(v)
-                acs.append(((run << 4) | s, v, s))
-                ac_syms[tid].append((run << 4) | s)
-                run = 0
-            if run:
-                acs.append((0x00, 0, 0))
-                ac_syms[tid].append(0x00)
-            mcu.append((diff, acs))
-        per_mcu.append(mcu)
-    for tid in (0, 1):
-        if 0x00 not in ac_syms[tid]:
-            ac_syms[tid].append(0x00)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    tabs: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
-    dht = b""
-    for tid in (0, 1):
-        db, dv, dt = _jpeg_canonical(dc_syms[tid])
-        ab, av, at = _jpeg_canonical(ac_syms[tid])
-        tabs[(0, tid)] = dt
-        tabs[(1, tid)] = at
-        dht += seg(0xFFC4, bytes([tid]) + bytes(db) + bytes(dv))
-        dht += seg(0xFFC4, bytes([0x10 | tid]) + bytes(ab) + bytes(av))
-
-    bw = _JpegBitWriter()
-    for mcu in per_mcu:
-        for c in range(4):
-            tid = tid_of[c]
-            diff, acs = mcu[c]
-            s = _jpeg_csize(diff)
-            code, ln = tabs[(0, tid)][s]
-            bw.put(code, ln)
-            if s:
-                bw.put(diff if diff > 0 else diff + (1 << s) - 1, s)
-            for sym, v, sz in acs:
-                code, ln = tabs[(1, tid)][sym]
-                bw.put(code, ln)
-                if sz:
-                    bw.put(v if v > 0 else v + (1 << sz) - 1, sz)
-    bw.flush()
-
+    mcus = [
+        [(c, jpeg_color_qcoefs(pat, bi, c)) for c in range(4)]
+        for bi in range(blocks_w * blocks_h)
+    ]
     transform = 0 if pat % 2 == 0 else 2
-    app14 = seg(
-        0xFFEE,
-        b"Adobe" + struct.pack(">HHHB", 100, 0, 0, transform),
-    )
-    sof_comps = b"".join(
-        bytes([1 + c, 0x11, tid_of[c]]) for c in range(4)
-    )
-    sos_comps = b"".join(
-        bytes([1 + c, (tid_of[c] << 4) | tid_of[c]]) for c in range(4)
-    )
-    return (
-        b"\xff\xd8"
-        + app14
-        + seg(0xFFDB, bytes([0x00]) + bytes(_JPEG_QTAB))
-        + seg(0xFFDB, bytes([0x01]) + bytes(_JPEG_QTAB_C))
-        + seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 4) + sof_comps)
-        + dht
-        + seg(0xFFDA, bytes([4]) + sos_comps + bytes([0, 63, 0]))
-        + bytes(bw.out)
-        + b"\xff\xd9"
-    )
+    app14 = _jpeg_seg(0xFFEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, transform))
+    comps = [(0x11, tid) for tid in (0, 1, 1, 0)]
+    return _jpeg_baseline(blocks_w * 8, blocks_h * 8, comps, mcus, app=app14)
 
 
 def make_jpeg_420(pat: int, mcus_w: int = 1, mcus_h: int = 1) -> bytes:
@@ -6232,103 +5750,22 @@ def make_jpeg_422(pat: int, mcus_w: int = 1, mcus_h: int = 1) -> bytes:
 def make_jpeg_subsampled(
     pat: int, mcus_w: int, mcus_h: int, *, luma_h: int, luma_v: int
 ) -> bytes:
-    """Shared encoder for chroma-subsampled baseline fixtures: Y sampled
-    `luma_h`×`luma_v` (1–2 each), chroma 1×1. Y blocks are interleaved
-    left-to-right top-to-bottom within each MCU (T.81 A.2.3) and keyed by
-    their global Y-block raster index; chroma blocks by the MCU index."""
-    import struct
-
-    w, h = mcus_w * 8 * luma_h, mcus_h * 8 * luma_v
-    dc_syms: dict[int, list[int]] = {0: [], 1: []}
-    ac_syms: dict[int, list[int]] = {0: [], 1: []}
-    # per MCU: [(tid, diff, acs)] in scan order — luma_h·luma_v × Y, Cb, Cr
-    per_mcu: list[list[tuple[int, int, list[tuple[int, int, int]]]]] = []
-    preds = [0, 0, 0]
+    """Shared encoder for the color baseline fixtures: Y sampled
+    `luma_h`×`luma_v` (1–2 each; 1×1 is 4:4:4), chroma 1×1. Y blocks are
+    interleaved left-to-right top-to-bottom within each MCU (T.81 A.2.3)
+    and keyed by their global Y-block raster index; chroma blocks by the
+    MCU index."""
+    mcus = []
     for mi in range(mcus_w * mcus_h):
         mx, my = mi % mcus_w, mi // mcus_w
-        units: list[tuple[int, int]] = []  # (component, formula block index)
-        for vy in range(luma_v):
-            for vx in range(luma_h):
-                units.append((
-                    0,
-                    (my * luma_v + vy) * (luma_h * mcus_w) + (mx * luma_h + vx),
-                ))
-        units += [(1, mi), (2, mi)]
-        mcu = []
-        for c, bi in units:
-            tid = 0 if c == 0 else 1
-            qc = jpeg_color_qcoefs(pat, bi, c)
-            diff = qc[0] - preds[c]
-            preds[c] = qc[0]
-            dc_syms[tid].append(_jpeg_csize(diff))
-            acs: list[tuple[int, int, int]] = []
-            run = 0
-            for k in range(1, 64):
-                v = qc[k]
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    acs.append((0xF0, 0, 0))
-                    ac_syms[tid].append(0xF0)
-                    run -= 16
-                s = _jpeg_csize(v)
-                acs.append(((run << 4) | s, v, s))
-                ac_syms[tid].append((run << 4) | s)
-                run = 0
-            if run:
-                acs.append((0x00, 0, 0))
-                ac_syms[tid].append(0x00)
-            mcu.append((tid, diff, acs))
-        per_mcu.append(mcu)
-    for tid in (0, 1):
-        if 0x00 not in ac_syms[tid]:
-            ac_syms[tid].append(0x00)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    tabs: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
-    dht = b""
-    for tid in (0, 1):
-        db, dv, dt = _jpeg_canonical(dc_syms[tid])
-        ab, av, at = _jpeg_canonical(ac_syms[tid])
-        tabs[(0, tid)] = dt
-        tabs[(1, tid)] = at
-        dht += seg(0xFFC4, bytes([tid]) + bytes(db) + bytes(dv))
-        dht += seg(0xFFC4, bytes([0x10 | tid]) + bytes(ab) + bytes(av))
-
-    bw = _JpegBitWriter()
-    for mcu in per_mcu:
-        for tid, diff, acs in mcu:
-            s = _jpeg_csize(diff)
-            code, ln = tabs[(0, tid)][s]
-            bw.put(code, ln)
-            if s:
-                bw.put(diff if diff > 0 else diff + (1 << s) - 1, s)
-            for sym, v, sz in acs:
-                code, ln = tabs[(1, tid)][sym]
-                bw.put(code, ln)
-                if sz:
-                    bw.put(v if v > 0 else v + (1 << sz) - 1, sz)
-    bw.flush()
-
-    return (
-        b"\xff\xd8"
-        + seg(0xFFDB, bytes([0x00]) + bytes(_JPEG_QTAB))
-        + seg(0xFFDB, bytes([0x01]) + bytes(_JPEG_QTAB_C))
-        + seg(
-            0xFFC0,
-            struct.pack(">BHHB", 8, h, w, 3)
-            + bytes([1, (luma_h << 4) | luma_v, 0])
-            + bytes([2, 0x11, 1])
-            + bytes([3, 0x11, 1]),
-        )
-        + dht
-        + seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-        + bytes(bw.out)
-        + b"\xff\xd9"
-    )
+        luma = [
+            (0, jpeg_color_qcoefs(pat, (my * luma_v + vy) * (luma_h * mcus_w) + (mx * luma_h + vx), 0))
+            for vy in range(luma_v)
+            for vx in range(luma_h)
+        ]
+        mcus.append(luma + [(1, jpeg_color_qcoefs(pat, mi, 1)), (2, jpeg_color_qcoefs(pat, mi, 2))])
+    comps = [((luma_h << 4) | luma_v, 0), (0x11, 1), (0x11, 1)]
+    return _jpeg_baseline(mcus_w * 8 * luma_h, mcus_h * 8 * luma_v, comps, mcus)
 
 
 _JPEG_DEFAULT_PROG_SCANS: list[tuple] = [
@@ -6428,9 +5865,6 @@ def encode_jpeg_progressive(
         c = comp_idx[0]
         return [(c, b) for b in range(len(blocks[c]))]
 
-    def csize(v: int) -> int:
-        return 0 if v == 0 else abs(v).bit_length()
-
     scan_payloads: list[tuple[dict, list]] = []  # (tables used, ops)
     for comp_idx, ss, se, ah, al in scans:
         ops: list[tuple] = []  # ("sym", table_key, sym) | ("bits", val, n)
@@ -6442,7 +5876,7 @@ def encode_jpeg_progressive(
                     vis = blocks[c][bi][0] >> al  # arithmetic shift (G.1.2.1)
                     diff = vis - preds[c]
                     preds[c] = vis
-                    s = csize(diff)
+                    s = _jpeg_csize(diff)
                     ops.append(("sym", ("dc", 0 if c == 0 else 1), s))
                     if s:
                         ops.append(
@@ -6483,7 +5917,7 @@ def encode_jpeg_progressive(
                         while r > 15:
                             ops.append(("sym", t, 0xF0))
                             r -= 16
-                        s = csize(vis)
+                        s = _jpeg_csize(vis)
                         ops.append(("sym", t, (r << 4) | s))
                         ops.append(
                             ("bits", vis if vis > 0 else vis + (1 << s) - 1, s)
@@ -6552,18 +5986,15 @@ def encode_jpeg_progressive(
                 flush_eob()
         scan_payloads.append(((comp_idx, ss, se, ah, al), ops))
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
     w, h = blocks_w * 8 * luma_h, blocks_h * 8 * luma_v
-    out = b"\xff\xd8" + seg(0xFFDB, bytes([0x00]) + bytes(_JPEG_QTAB))
+    out = b"\xff\xd8" + _jpeg_seg(0xFFDB, bytes([0x00]) + bytes(_JPEG_QTAB))
     if ncomp == 3:
-        out += seg(0xFFDB, bytes([0x01]) + bytes(_JPEG_QTAB_C))
+        out += _jpeg_seg(0xFFDB, bytes([0x01]) + bytes(_JPEG_QTAB_C))
     sof = struct.pack(">BHHB", 8, h, w, ncomp)
     for c in range(ncomp):
         samp = (luma_h << 4) | luma_v if c == 0 else 0x11
         sof += bytes([c + 1, samp, 0 if c == 0 else 1])
-    out += seg(0xFFC2, sof)
+    out += _jpeg_seg(0xFFC2, sof)
 
     for (comp_idx, ss, se, ah, al), ops in scan_payloads:
         # canonical tables for THIS scan's symbols, emitted just before it
@@ -6576,7 +6007,7 @@ def encode_jpeg_progressive(
             bits_, vals_, tab = _jpeg_canonical(ss_)
             tabs[key] = tab
             tc = 0 if key[0] == "dc" else 1
-            out += seg(
+            out += _jpeg_seg(
                 0xFFC4, bytes([(tc << 4) | key[1]]) + bytes(bits_) + bytes(vals_)
             )
         bw = _JpegBitWriter()
@@ -6592,7 +6023,7 @@ def encode_jpeg_progressive(
             tid = 0 if c == 0 else 1
             sos += bytes([c + 1, (tid << 4) | tid])
         sos += bytes([ss, se, (ah << 4) | al])
-        out += seg(0xFFDA, sos) + bytes(bw.out)
+        out += _jpeg_seg(0xFFDA, sos) + bytes(bw.out)
     return out + b"\xff\xd9"
 
 
@@ -6691,6 +6122,16 @@ class _JpegBitReader:
         if n > self._n:
             raise ValueError("truncated entropy-coded segment")
         self._n -= n
+
+    def read_sym(self, tab: tuple[list[int], list[int]]) -> int:
+        """Decode one Huffman symbol through a `_jpeg_huff_lut` table."""
+        sym, ln = tab
+        c = self.peek16()
+        length = ln[c]
+        if length == 0:
+            raise ValueError("invalid Huffman code")
+        self.skip(length)
+        return sym[c]
 
     def restart(self, m: int) -> None:
         """Consume an RSTm marker at a restart-interval boundary: discard
@@ -6920,15 +6361,7 @@ def _decode_jpeg_progressive(
 
     for sc, ss, se, ah, al, huff, seg in prog_scans:
         br = _JpegBitReader(seg)
-
-        def read_sym(tab):
-            sym, ln = tab
-            c = br.peek16()
-            length = ln[c]
-            if length == 0:
-                raise ValueError("invalid Huffman code")
-            br.skip(length)
-            return sym[c]
+        read_sym = br.read_sym
 
         if ss == 0:
             # DC scan: may be interleaved; Se must be 0 (G.1.1.1.1)
@@ -7212,15 +6645,7 @@ def decode_jpeg_np(blob: bytes) -> tuple[int, int, "np.ndarray"]:
     if data.endswith(b"\xff\xd9"):
         data = data[:-2]
     br = _JpegBitReader(data)
-
-    def read_sym(tab: tuple[list[int], list[int]]) -> int:
-        sym, ln = tab
-        c = br.peek16()
-        length = ln[c]
-        if length == 0:
-            raise ValueError("invalid Huffman code")
-        br.skip(length)
-        return sym[c]
+    read_sym = br.read_sym
 
     meta_of = {cid: (qid, sh, sv) for cid, qid, sh, sv in comps}
     hmax = max(sh for _, _, sh, _ in comps)
@@ -7499,7 +6924,7 @@ def build_exif_app1(
         b"MM" + struct.pack(">HI", 42, 8)
     )
     payload = b"Exif\x00\x00" + header + tiff
-    return struct.pack(">HH", 0xFFE1, len(payload) + 2) + payload
+    return _jpeg_seg(0xFFE1, payload)
 
 
 def _exif_parse_ifd(tiff: bytes, off: int, e: str) -> dict[int, object]:
@@ -8022,16 +7447,8 @@ def audio_envelope_bands(blob: bytes, *, frames: int = 32) -> tuple[int, int]:
     """
     import struct
 
-    rate, n, _, _, _, _ = decode_wav(blob)  # full validation
-    # re-walk for raw samples (decode_wav validated structure)
-    pos, data = 12, b""
-    end = 8 + struct.unpack_from("<I", blob, 4)[0]
-    while pos + 8 <= end:
-        cid = blob[pos : pos + 4]
-        (csize,) = struct.unpack_from("<I", blob, pos + 4)
-        if cid == b"data":
-            data = blob[pos + 8 : pos + 8 + csize]
-        pos += 8 + csize + (csize & 1)
+    _, data = _wav_pcm16_mono(blob)
+    n = len(data) // 2
     samples = struct.unpack(f"<{n}h", data[: n * 2]) if n else ()
     if n < frames:
         raise ValueError(f"need >= {frames} samples for a {frames}-frame envelope")

@@ -42,7 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from query_engine_spark.llmdata.multimodal import _map_media
+from query_engine_spark.llmdata.multimodal import _map_media, _riff_chunk, _riff_chunks, _riff_file
 
 # --------------------------------------------------------------------------
 # bit I/O — VP8L is LSB-first within little-endian bytes, like DEFLATE
@@ -674,12 +674,7 @@ def decode_webp(blob: bytes) -> tuple[int, int, list[int]]:
     list, raster order). Lossy ("VP8 ") payloads and non-animation VP8X
     features raise honest boundaries; animated files decode through
     `decode_webp_frames`."""
-    if len(blob) < 20 or blob[:4] != b"RIFF" or blob[8:12] != b"WEBP":
-        raise ValueError("not a WebP (missing RIFF/WEBP header)")
-    riff_len = int.from_bytes(blob[4:8], "little")
-    if riff_len + 8 > len(blob):
-        raise ValueError("RIFF size past end of file")
-    fourcc = blob[12:16]
+    fourcc, payload = _webp_first_chunk(blob)
     if fourcc == b"VP8 ":
         raise NotImplementedError(
             "lossy WebP (VP8) pixel decode not supported: the bitstream"
@@ -696,11 +691,15 @@ def decode_webp(blob: bytes) -> tuple[int, int, list[int]]:
         )
     if fourcc != b"VP8L":
         raise ValueError(f"unknown WebP chunk {fourcc!r}")
-    chunk_len = int.from_bytes(blob[16:20], "little")
-    payload = blob[20 : 20 + chunk_len]
-    if len(payload) != chunk_len:
-        raise ValueError("VP8L chunk truncated")
     return _decode_vp8l_payload(payload)
+
+
+def _webp_first_chunk(blob: bytes) -> tuple[bytes, bytes]:
+    """(fourcc, payload) of the first chunk — the one that says whether
+    the file is lossy, lossless or extended."""
+    for fourcc, start, stop in _riff_chunks(blob, b"WEBP", "a WebP"):
+        return fourcc, blob[start:stop]
+    raise ValueError("WebP without a chunk")
 
 
 # --------------------------------------------------------------------------
@@ -1096,21 +1095,10 @@ def _encode_vp8l_payload(
     return b"\x2f" + bw.bytes()
 
 
-def _chunk(fourcc: bytes, payload: bytes) -> bytes:
-    out = fourcc + len(payload).to_bytes(4, "little") + payload
-    if len(payload) & 1:
-        out += b"\x00"
-    return out
-
-
-def _riff(chunks: bytes) -> bytes:
-    return b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WEBP" + chunks
-
-
 def encode_webp(w: int, h: int, pixels: list[int], **kw) -> bytes:
     """Encode ARGB pixels as a real (static) lossless WebP file. See
     `_encode_vp8l_payload` for the transform/entropy options."""
-    return _riff(_chunk(b"VP8L", _encode_vp8l_payload(w, h, pixels, **kw)))
+    return _riff_file(b"WEBP", _riff_chunk(b"VP8L", _encode_vp8l_payload(w, h, pixels, **kw)))
 
 
 # --------------------------------------------------------------------------
@@ -1217,13 +1205,13 @@ def encode_webp_anim(
     VP8L encoder kwargs under "vp8l"."""
     if not (1 <= cw <= 1 << 24 and 1 <= ch <= 1 << 24):
         raise ValueError("canvas dimensions out of VP8X range")
-    body = _chunk(
+    body = _riff_chunk(
         b"VP8X",
         bytes([0x02]) + b"\x00\x00\x00"
         + (cw - 1).to_bytes(3, "little") + (ch - 1).to_bytes(3, "little"),
     )
     a, r, g, b = _chans(bg_argb)
-    body += _chunk(
+    body += _riff_chunk(
         b"ANIM", bytes([b, g, r, a]) + loop.to_bytes(2, "little")
     )
     for f in frames:
@@ -1241,15 +1229,15 @@ def encode_webp_anim(
             + (f["h"] - 1).to_bytes(3, "little")
             + int(f.get("dur_ms", 40)).to_bytes(3, "little")
             + bytes([flags])
-            + _chunk(
+            + _riff_chunk(
                 b"VP8L",
                 _encode_vp8l_payload(
                     f["w"], f["h"], f["pixels"], **f.get("vp8l", {})
                 ),
             )
         )
-        body += _chunk(b"ANMF", payload)
-    return _riff(body)
+        body += _riff_chunk(b"ANMF", payload)
+    return _riff_file(b"WEBP", body)
 
 
 def decode_webp_frames(blob: bytes) -> tuple[int, int, list[dict]]:
@@ -1263,28 +1251,17 @@ def decode_webp_frames(blob: bytes) -> tuple[int, int, list[dict]]:
     rect including alpha. Disposal fills the frame rect with the ANIM
     background color AFTER the frame displays (the container-spec rule).
     Lossy VP8 frames raise."""
-    if len(blob) < 20 or blob[:4] != b"RIFF" or blob[8:12] != b"WEBP":
-        raise ValueError("not a WebP (missing RIFF/WEBP header)")
-    if blob[12:16] != b"VP8X":
+    if _webp_first_chunk(blob)[0] != b"VP8X":
         raise ValueError("not an extended WebP (no VP8X chunk)")
-    pos = 12
     vp8x = None
     bg = 0
     frames_out: list[dict] = []
     canvas: list[int] | None = None
     cw = ch = 0
-    end = 8 + int.from_bytes(blob[4:8], "little")
-    if end > len(blob):
-        raise ValueError("RIFF size past end of file")
-    while pos + 8 <= end:
-        fourcc = blob[pos : pos + 4]
-        clen = int.from_bytes(blob[pos + 4 : pos + 8], "little")
-        payload = blob[pos + 8 : pos + 8 + clen]
-        if len(payload) != clen:
-            raise ValueError(f"{fourcc!r} chunk truncated")
-        pos += 8 + clen + (clen & 1)
+    for fourcc, start, stop in _riff_chunks(blob, b"WEBP", "a WebP"):
+        payload = blob[start:stop]
         if fourcc == b"VP8X":
-            if clen != 10:
+            if len(payload) != 10:
                 raise ValueError("VP8X payload must be 10 bytes")
             vp8x = payload
             if not payload[0] & 0x02:
@@ -1506,7 +1483,7 @@ def make_webp_lossy(media_id: int, w: int, h: int) -> bytes:
         + (((media_id % 4) << 14) | w).to_bytes(2, "little")
         + (((media_id % 3) << 14) | h).to_bytes(2, "little")
     )
-    return _riff(_chunk(b"VP8 ", hdr + part0))
+    return _riff_file(b"WEBP", _riff_chunk(b"VP8 ", hdr + part0))
 
 
 def webp_meta(blob: bytes) -> dict:
@@ -1516,18 +1493,13 @@ def webp_meta(blob: bytes) -> dict:
     arithmetic), 'VP8L' 14-bit header dims, and 'VP8X' canvas dims
     (24-bit minus-one fields) with the ANMF frame count. Returns
     kind/width/height/n_frames/lossy_version (-1 for non-lossy)."""
-    if len(blob) < 20 or blob[:4] != b"RIFF" or blob[8:12] != b"WEBP":
-        raise ValueError("not a WebP (missing RIFF/WEBP header)")
-    riff_end = 8 + int.from_bytes(blob[4:8], "little")
-    if riff_end > len(blob):
-        # a partially-downloaded crawl file: the census must refuse, not
-        # undercount (same contract as decode_webp/decode_webp_frames)
-        raise ValueError("RIFF size past end of file")
-    fourcc = blob[12:16]
-    size = int.from_bytes(blob[16:20], "little")
-    payload = blob[20 : 20 + size]
-    if len(payload) != size:
-        raise ValueError(f"{fourcc!r} chunk truncated")
+    # the walker refuses a partially-downloaded crawl file (RIFF size past
+    # the end): the census must refuse, not undercount, and it bounds the
+    # walk by the RIFF-declared end, not len(blob) — crawl files routinely
+    # carry trailing padding past the RIFF payload
+    chunks = _riff_chunks(blob, b"WEBP", "a WebP")
+    fourcc, start, stop = next(chunks, (None, 0, 0))
+    payload = blob[start:stop]
     if fourcc == b"VP8 ":
         m = parse_vp8_meta(payload)
         return {
@@ -1549,24 +1521,11 @@ def webp_meta(blob: bytes) -> dict:
             "lossy_version": -1,
         }
     if fourcc == b"VP8X":
-        if size != 10:
+        if len(payload) != 10:
             raise ValueError("VP8X chunk must be 10 bytes")
         cw = int.from_bytes(payload[4:7], "little") + 1
         ch = int.from_bytes(payload[7:10], "little") + 1
-        n_frames = 0
-        pos = 20 + size + (size & 1)
-        # bound the walk by the RIFF-declared payload end, not by
-        # len(blob): crawl files routinely carry trailing padding past
-        # the RIFF payload (decode_webp_frames uses the same bound; a
-        # SHORT file already refused above, so riff_end <= len(blob))
-        while pos + 8 <= riff_end:
-            cc = blob[pos : pos + 4]
-            clen = int.from_bytes(blob[pos + 4 : pos + 8], "little")
-            if pos + 8 + clen > riff_end:
-                raise ValueError(f"{cc!r} chunk truncated")
-            if cc == b"ANMF":
-                n_frames += 1
-            pos += 8 + clen + (clen & 1)
+        n_frames = sum(cc == b"ANMF" for cc, _, _ in chunks)
         return {
             "kind": "vp8x",
             "width": cw,

@@ -20,9 +20,8 @@ materialized only when a consumer actually READS cross-segment order:
 - a plain `limit` / the implicit final 500  → per-segment TakeOrdered(n) +
   bounded stamp (never a full sort)
 - a `sort` block  → discards all pending order for free (it unions the
-  segments' DATA and re-sorts; the tiebreak is `id`, and rows that share an
-  `id` are clones of the same store row — the reference's Arc<PostV1> —
-  so the dropped previous-order tiebreak is unobservable)
+  segments' DATA and re-sorts with `id` as the tiebreak; see the sort
+  deviation below)
 - `stash`/`pop`  → segments move as-is; nothing materializes
 
 Differences from the reference, by design:
@@ -31,6 +30,15 @@ Differences from the reference, by design:
 - `sort.random` takes an optional seed.
 - remote fetches (feed skeletons, list resolution) are injected as
   DataFrames/callables on PipelineContext — I/O stays at the edges.
+
+Known deviation (not by design): a `sort` breaks ties by `id`, where the
+reference's stable `sort_by` (main.rs:2238-2307) keeps the previous
+working-set order. Rows that tie on the sort key but have different ids
+come out in a different order: `[firehose, sort created_at asc, sort
+reply_count desc]` on the test fixture gives keys `[1..8]` here and
+`[1, 6, 5, 4, 3, 8, 7, 2]` in the reference. Keeping the previous order
+needs the pending order keys to survive the segment union, which changes
+the sort plans.
 
 Score state: a (key → score) side table exactly like the reference's
 `post_score_global` map (main.rs:1399): per score block the batch map is
@@ -726,11 +734,12 @@ def _score_block(block, ctx, ws, scores, now_epoch_expr, now_us):
 
 def _sort_block(block, ctx, ws, scores, seq, now_us, fuse_n=None):
     """A sort discards ALL pending (and stamped) order for free — the
-    segments' data is unioned unordered and re-sorted. Tiebreak is `id`;
-    rows sharing an id are clones of the same store row (the reference's
-    working set holds Arc<PostV1> clones of one store, so same-key rows are
-    bitwise-identical there too), making the previous-order tiebreak of
-    Rust's stable sort unobservable in the output."""
+    segments' data is unioned unordered and re-sorted. Tiebreak is `id`.
+    Rows sharing an id are clones of the same store row, so among them
+    the order does not matter; but rows that tie on the sort key with
+    DIFFERENT ids come out by id, where Rust's stable sort keeps their
+    previous working-set order — an observable deviation (module
+    docstring, "Known deviation")."""
     sort_type = block.get("sortType", "created_at")
     asc = block.get("sortDirection", block.get("direction", "desc")) == "asc"
 

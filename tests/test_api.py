@@ -178,6 +178,13 @@ def test_record_feed_links(spark, posts, tmp_path):
     assert links.count() == 6
     got = {(r["feed_uri"], r["post"]) for r in links.collect()}
     assert ("at://feed/1", "p0006") in got and ("at://feed/2", "p0001") in got
+    # serving mode (now=None, the PostStore.serving_view shape) stamps the
+    # driver's wall clock instead of writing a void column
+    serving = PipelineContext(spark=spark, posts=posts, now=None)
+    record_feed_links(serving, "at://feed/3", resp, str(tmp_path / "served"))
+    served = spark.read.parquet(str(tmp_path / "served"))
+    assert dict(served.dtypes)["served_at"] == "timestamp"
+    assert served.filter("served_at IS NULL").count() == 0
 
 
 def test_http_list_route(spark, posts, profiles):
@@ -227,6 +234,31 @@ def test_http_server_roundtrip(spark, posts):
         with urllib.request.urlopen(req, timeout=60) as r:
             err = json.loads(r.read())
         assert "error" in err and "Too many blocks" in err["error"]
+    finally:
+        server.stop()
+
+
+@pytest.mark.parametrize("length", ["abc", "-1"])
+def test_http_bad_content_length_gets_400(length):
+    """A non-integer or negative Content-Length is refused with a JSON 400
+    instead of dropping the connection or blocking the handler thread in
+    rfile.read(-1). The handler never reaches the context, so no Spark."""
+    import socket
+
+    server = FeedServer(None).start()
+    try:
+        host, port = server.address.removeprefix("http://").split(":")
+        with socket.create_connection((host, int(port)), timeout=5) as sock:
+            sock.sendall(
+                b"POST /xrpc/me.skyfeed.builder.generateFeedSkeleton HTTP/1.1\r\n"
+                b"Host: localhost\r\nContent-Length: " + length.encode() + b"\r\n\r\n"
+            )
+            reply = b""
+            while chunk := sock.recv(4096):
+                reply += chunk
+        head, _, body = reply.partition(b"\r\n\r\n")
+        assert head.split(b"\r\n")[0].split()[1] == b"400"
+        assert "Content-Length" in json.loads(body)["error"]
     finally:
         server.stop()
 

@@ -412,6 +412,83 @@ def test_audio_fits_mutation_fuzz(maker, decoder):
             continue
 
 
+# --- one container walker: the strictest check applies to every decoder ----
+
+# the six WAV decoders that used to walk RIFF leniently, with a fixture each
+_LENIENT_WAV = [
+    (lambda: M.make_wav_mulaw(1, 10), M.decode_wav_mulaw),
+    (lambda: M.make_wav_alaw(1, 10), M.decode_wav_alaw),
+    (lambda: M.make_wav_adpcm(1, 21), M.decode_wav_adpcm),
+    (lambda: M.make_wav_stereo(1, 5), M.decode_wav_stereo),
+    (lambda: M.make_wav_multich(1, 5, channels=3), M.decode_wav_multich),
+    (lambda: M.make_wav24(1, 10), M.decode_wav24),
+]
+_LENIENT_WAV_IDS = ["mulaw", "alaw", "adpcm", "stereo", "multich", "wav24"]
+
+
+def _with_riff_size(blob: bytes, size: int) -> bytes:
+    return blob[:4] + struct.pack("<I", size) + blob[8:]
+
+
+@pytest.mark.parametrize("maker,decoder", _LENIENT_WAV, ids=_LENIENT_WAV_IDS)
+def test_wav_riff_size_past_end_raises(maker, decoder):
+    """A RIFF that declares more bytes than the blob holds is a truncated
+    download: every WAV decoder refuses it, as decode_wav always did."""
+    blob = maker()
+    decoder(blob)
+    with pytest.raises(ValueError, match="RIFF size past end"):
+        decoder(_with_riff_size(blob, len(blob) - 8 + 100))
+
+
+@pytest.mark.parametrize("maker,decoder", _LENIENT_WAV, ids=_LENIENT_WAV_IDS)
+def test_wav_second_data_chunk_raises(maker, decoder):
+    """Two data chunks: the lenient walks decoded only the LAST one and
+    silently dropped the real samples."""
+    blob = maker()
+    data_chunk = blob[blob.index(b"data", 12) :]  # data is the last chunk
+    doubled = _with_riff_size(blob + data_chunk, len(blob) + len(data_chunk) - 8)
+    with pytest.raises(ValueError, match="multiple data"):
+        decoder(doubled)
+
+
+@pytest.mark.parametrize(
+    "maker,decoder",
+    [
+        (lambda: M.make_wav(1, 10), M.decode_wav),
+        (lambda: WB.make_webp(1, 9, 8), WB.decode_webp),
+        (lambda: WB.make_webp_lossy(1, 16, 16), WB.webp_meta),
+        (lambda: WB.make_webp_animated(1), WB.decode_webp_frames),
+    ],
+    ids=["wav", "webp", "webp_meta", "webp_frames"],
+)
+def test_riff_chunk_past_declared_end_raises(maker, decoder):
+    """A chunk that runs past the RIFF's declared size is truncated even
+    when the blob holds its bytes: these decoders used to bound chunks by
+    the blob, the lenient WAV decoders and AVI by the declared size."""
+    blob = maker()
+    decoder(blob)
+    with pytest.raises(ValueError, match="truncated chunk"):
+        decoder(_with_riff_size(blob, len(blob) - 8 - 2))
+
+
+@pytest.mark.parametrize(
+    "gce",
+    [b"\x21\xf9\x05\x00\x00\x00\x00\x00\x00", b"\x21\xf9\x04\x00\x00\x00\x00\x01\x00\x00"],
+    ids=["block-size-5", "no-terminator"],
+)
+def test_gif_malformed_gce_before_first_image_raises(gce):
+    """decode_gif used to skip every extension as opaque sub-blocks, so a
+    malformed Graphic Control Extension decoded there while the frame
+    decoders refused it; the one block walker parses it everywhere."""
+    blob = M.make_gif(1, 4, 3)
+    pos = 13 + 3 * 256  # after the global color table
+    bad = blob[:pos] + gce + blob[pos:]
+    for decode in (M.decode_gif, M.decode_gif_indices, M.decode_gif_frames):
+        with pytest.raises(ValueError, match="graphic control"):
+            decode(bad)
+    assert M.decode_gif(blob)[:2] == (4, 3)
+
+
 # --- CPU bombs: catastrophic regex scans in the HTML extractors -------------
 
 

@@ -80,3 +80,30 @@ def test_every_exported_name_exists():
         mod = importlib.import_module(name)
         stale += [f"{name}.{n}" for n in getattr(mod, "__all__", ()) if not hasattr(mod, n)]
     assert not stale
+
+
+def _function_bodies(path: str) -> list[tuple[str, int, str]]:
+    """(name, line, body dump) for every function and closure in the file
+    whose body, docstring excluded, spans 4 or more lines."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    found = []
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        body = node.body
+        if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant) and isinstance(body[0].value.value, str):
+            body = body[1:]
+        if body and body[-1].end_lineno - body[0].lineno + 1 >= 4:
+            found.append((node.name, node.lineno, "\n".join(ast.dump(s) for s in body)))
+    return found
+
+
+def test_no_duplicate_function_bodies():
+    """Two functions (or closures) with the same body are one helper
+    written twice; the copies drift apart when one of them is fixed."""
+    seen: dict[str, list[str]] = {}
+    for path in sorted(glob.glob(os.path.join(ROOT, "query_engine_spark", "**", "*.py"), recursive=True)):
+        for name, line, dump in _function_bodies(path):
+            seen.setdefault(dump, []).append(f"{os.path.relpath(path, ROOT)}:{line} {name}")
+    assert [sites for sites in seen.values() if len(sites) > 1] == []
