@@ -42,6 +42,10 @@ __all__ = [
 ]
 
 QUERY_TIMEOUT_SECONDS = 30  # main.rs:1182
+# socket timeout of a FeedServer connection: a client that declares more
+# Content-Length than it sends gets a 400 after this long instead of holding
+# a handler thread in the body read
+READ_TIMEOUT_SECONDS = 5
 
 
 def _collect_with_timeout(spark, df, timeout_s: float):
@@ -208,6 +212,8 @@ class FeedServer:
         api_profile_ctx = profile_ctx
 
         class Handler(http.server.BaseHTTPRequestHandler):
+            timeout = READ_TIMEOUT_SECONDS
+
             def log_message(self, *args):  # quiet
                 pass
 
@@ -228,7 +234,13 @@ class FeedServer:
                 if n < 0:
                     return self._send(400, {"error": "invalid Content-Length"})
                 try:
-                    payload = json.loads(self.rfile.read(n) or b"{}")
+                    body = self.rfile.read(n)
+                except TimeoutError:
+                    body = b""
+                if len(body) < n:
+                    return self._send(400, {"error": f"body shorter than its Content-Length {n}"})
+                try:
+                    payload = json.loads(body or b"{}")
                     blocks = payload.get("blocks", payload if isinstance(payload, list) else [])
                     if path == "/xrpc/me.skyfeed.builder.generateFeedSkeleton":
                         return self._send(200, generate_feed_skeleton(api_ctx, blocks))

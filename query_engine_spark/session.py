@@ -14,7 +14,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark"]
 
 
 def _cpus() -> int:
@@ -62,9 +62,3 @@ def get_spark(app_name: str = "query_engine_spark", *, shuffle_partitions: int |
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -1,11 +1,10 @@
 """Source/sink connectors beyond parquet.
 
 The reference ingests from SurrealDB over HTTP SQL (main.rs:3143-3285) and
-serves JSON over HTTP. The Spark-native equivalents: explicit-schema JSON/CSV
-readers (never inferSchema in production — a schema drift becomes a silent
-full-scan surprise), a JDBC reader with predicate-pushdown partitioning for
-paged ingest (the analog of the reference's range-SELECT pages), and lakehouse
-formats gated behind import-tries (Delta/Iceberg jars aren't in this image).
+serves JSON over HTTP. The Spark-native equivalents: an explicit-schema JSON
+reader (never inferSchema in production — a schema drift becomes a silent
+full-scan surprise) and lakehouse formats gated behind import-tries
+(Delta/Iceberg jars aren't in this image).
 """
 
 from __future__ import annotations
@@ -20,8 +19,6 @@ from pyspark.sql import types as T
 
 __all__ = [
     "read_json",
-    "read_csv",
-    "read_jdbc_paged",
     "write_partitioned",
     "delta_available",
     "read_delta",
@@ -36,38 +33,6 @@ def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame
     """NDJSON with an explicit schema (loose fields → null, matching the
     reference's null-tolerant coercion; pair with datamodel.normalize_posts)."""
     return spark.read.schema(schema).json(path)
-
-
-def read_csv(spark: SparkSession, path: str, schema: T.StructType, *, header: bool = True) -> DataFrame:
-    return spark.read.schema(schema).option("header", str(header).lower()).csv(path)
-
-
-def read_jdbc_paged(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    *,
-    partition_column: str,
-    lower_bound: int,
-    upper_bound: int,
-    num_partitions: int = 32,
-    properties: dict[str, str] | None = None,
-) -> DataFrame:
-    """Range-partitioned JDBC read — the distributed analog of the
-    reference's `SELECT ... FROM post:<last>..<max> LIMIT 1000000` paging
-    (main.rs:3163-3173): each executor pulls one id-range slice."""
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("partitionColumn", partition_column)
-        .option("lowerBound", str(lower_bound))
-        .option("upperBound", str(upper_bound))
-        .option("numPartitions", str(num_partitions))
-    )
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()
 
 
 def write_partitioned(df: DataFrame, path: str, *, partition_by: str = "dt", mode: str = "overwrite") -> None:

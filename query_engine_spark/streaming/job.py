@@ -20,10 +20,26 @@ no max(ts) subtree, and because `now` is data rather than a literal, their
 generated code stays cached across commits. The store keeps exactly one
 live snapshot and frees the previous one when it publishes the next.
 
+Size rule: the snapshot is coalesced to max(1, ceil(bytes /
+maxPartitionBytes)) partitions, where `bytes` is the window's optimized-plan
+size estimate (no job) and maxPartitionBytes is
+`spark.sql.files.maxPartitionBytes`; it has fewer when the scan has fewer
+splits. It is read, checkpointed and planned in a serving session the store
+owns (`spark.newSession()`, made on the first publish). Each publish resets
+that session's conf to a copy of the caller's, checkpoints the snapshot
+without AQE (so the snapshot keeps the coalesce's output partitioning), and
+then sets, on the serving session only, `spark.sql.shuffle.partitions` to
+the snapshot's partition count n and `spark.sql.adaptive.enabled` to
+(n > 1). A request over a small window thus runs one task per stage and no
+AQE re-planning, while a window of several partitions keeps AQE's skew and
+coalescing handling. The caller's session conf is never changed.
+
 Concurrency: a snapshot depends on no file, so reads of it may overlap an
 `ingest` (which rewrites the day partitions it was read from). They must not
 overlap a publish: publishing frees the previous snapshot's blocks under
-any reader still scanning them.
+any reader still scanning them, and it resets the serving session's conf,
+so a request collected across a publish may also plan with the next
+snapshot's settings.
 """
 
 from __future__ import annotations
@@ -50,6 +66,7 @@ class PostStore:
         self.ts_col = ts_col
         self.id_col = id_col
         self._free_snapshot = None  # frees the live serving snapshot
+        self._serving: SparkSession | None = None  # made on the first publish
 
     def _exists(self) -> bool:
         return os.path.isdir(self.path) and any(
@@ -89,17 +106,58 @@ class PostStore:
     def window(self, now: _dt.datetime, days: int = 7) -> DataFrame:
         """The last `days` days before `now` as a lazy read: the dt predicate
         eliminates whole partitions before any IO."""
+        return self._window(self.spark, now, days)
+
+    def _window(self, spark: SparkSession, now: _dt.datetime, days: int) -> DataFrame:
         cutoff = (now - _dt.timedelta(days=days)).strftime("%Y-%m-%d")
-        return self.read().filter(F.col("dt") >= cutoff)
+        return spark.read.parquet(self.path).filter(F.col("dt") >= cutoff)
+
+    def _serving_session(self) -> SparkSession:
+        """The store's serving session, its conf reset to a copy of the
+        caller's: a new session starts from the static conf only, and the
+        caller may have set or unset runtime settings since the last
+        publish. The copy is made in the JVM: a few py4j round trips,
+        where reading the conf into Python takes ~140."""
+        if self._serving is None:
+            self._serving = self.spark.newSession()
+        settings = self.spark._jvm.java.util.Properties()
+        settings.putAll(self.spark._jsparkSession.conf().getAllAsJava())
+        conf = self._serving._jsparkSession.sessionState().conf()
+        conf.clear()
+        conf.setConf(settings)
+        return self._serving
 
     def serving_view(self, now: _dt.datetime, days: int = 7) -> DataFrame:
         """Publish the reference's in-RAM window (main.rs:218-222): `window`
         materialized once, with its max(ts) as the `inputs.NOW_COL` column
         that `now=None` pipelines read, and the lineage cut so no later
-        `ingest` can invalidate it. Frees the previously published snapshot:
-        call it once per commit, never while a read of the previous snapshot
-        is running."""
-        snapshot, free = local_checkpoint_with_free(with_now(self.window(now, days), self.ts_col))
+        `ingest` can invalidate it.
+
+        The snapshot is coalesced to max(1, ceil(bytes /
+        spark.sql.files.maxPartitionBytes)) partitions, `bytes` being the
+        window's optimized-plan size estimate (fewer when the scan has fewer
+        splits). It belongs to the store's serving session, whose shuffle
+        partitions are set to the snapshot's partition count and whose AQE
+        is on only when that count exceeds 1. Requests built on the
+        snapshot plan with that conf; the caller's session is left as it
+        was.
+
+        Frees the previously published snapshot and resets the serving
+        conf: call it once per commit, never while a read of the previous
+        snapshot is running or still to be collected."""
+        spark = self._serving_session()
+        window = self._window(spark, now, days)
+        size = int(window._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        n = max(1, -(-size // spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()))
+        # planned without AQE, the checkpoint records the coalesce's output
+        # partitioning: over one partition, a request's global aggregates
+        # and one-partition hash shuffles then need no exchange
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        snapshot, free = local_checkpoint_with_free(with_now(window, self.ts_col).coalesce(n))
+        if n > 1:  # the scan may have fewer splits than n
+            n = snapshot._jdf.rdd().getNumPartitions()
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        spark.conf.set("spark.sql.adaptive.enabled", str(n > 1).lower())
         if self._free_snapshot is not None:
             self._free_snapshot()
         self._free_snapshot = free

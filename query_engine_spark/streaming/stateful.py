@@ -6,19 +6,10 @@ over gap markers — fully SQL-expressible, oracle-checkable); the streaming
 form is the same semantics as an `applyInPandasWithState` operator with
 per-user state (open-session accumulator) and event-time timeout — the
 pattern for any custom stateful operator the DSL might need.
-
-`RegexCache` — the reference's incremental regex result cache
-(/root/reference/src/main.rs:76-79, 2013-2071): per (pattern, target) it
-keeps the set of matching post ids plus a high-water mark, and each refresh
-scans only posts newer than the mark. Here the "cache" is a DataFrame
-(id set) + HWM string, refreshed per micro-batch — driveable from
-foreachBatch; correctness does not depend on it (a cold scan gives the same
-answer — asserted in tests).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import Iterator
 
 import pandas as pd
@@ -26,7 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-__all__ = ["sessionize_batch", "sessionize_stream", "RegexCache", "cusum_batch", "cusum_stream"]
+__all__ = ["sessionize_batch", "sessionize_stream", "cusum_batch", "cusum_stream"]
 
 
 def sessionize_batch(
@@ -106,49 +97,6 @@ def sessionize_stream(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
             fn, _SESSION_OUT_SCHEMA, _SESSION_STATE_SCHEMA, "append", GroupStateTimeout.EventTimeTimeout
         )
     )
-
-
-@dataclass
-class RegexCache:
-    """Incremental regex result cache with a high-water mark (main.rs:2013-2071).
-
-    `matches` holds the ids matched so far; `hwm` the largest id scanned.
-    `refresh` scans only rows with id > hwm — on a time-ordered id (TID
-    semantics) that is the newest slice, so refresh cost tracks the ingest
-    rate instead of the corpus size (the reference measured ~150 µs warm vs
-    ~2.5-28 s cold, main.rs:2072-2083)."""
-
-    pattern: str
-    target: str = "text"
-    matches: DataFrame | None = None
-    hwm: str | None = None
-    # above this many cached match ids, apply() switches from a broadcast
-    # semi-join to a shuffled one — a hot regex over a 100 TB corpus can
-    # match far more ids than the driver/executors can broadcast (round-2
-    # advice); feed-sized sets stay on the broadcast fast path
-    broadcast_threshold: int = 1_000_000
-    _n_matches: int = 0
-
-    def refresh(self, posts: DataFrame, id_col: str = "id") -> DataFrame:
-        new = posts if self.hwm is None else posts.filter(F.col(id_col) > self.hwm)
-        found = new.filter(F.coalesce(F.col(self.target), F.lit("")).rlike(self.pattern)).select(id_col)
-        self.matches = found if self.matches is None else self.matches.unionByName(found).distinct()
-        top = posts.agg(F.max(id_col).alias("m")).collect()[0]["m"]
-        if top is not None and (self.hwm is None or top > self.hwm):
-            self.hwm = top
-        # cache the materialized id set — this is the point of the cache
-        self.matches = self.matches.persist()
-        self._n_matches = self.matches.count()
-        return self.matches
-
-    def apply(self, working_set: DataFrame, id_col: str = "id", *, invert: bool = False) -> DataFrame:
-        if self.matches is None:
-            raise ValueError("refresh() the cache before applying it")
-        how = "left_anti" if invert else "left_semi"
-        right = self.matches
-        if self._n_matches <= self.broadcast_threshold:
-            right = F.broadcast(right)
-        return working_set.join(right, id_col, how)
 
 
 def cusum_batch(

@@ -263,6 +263,33 @@ def test_http_bad_content_length_gets_400(length):
         server.stop()
 
 
+def test_http_short_body_gets_400_after_read_timeout(monkeypatch):
+    """A client that declares 100 body bytes and sends 10 gets a JSON 400
+    once the handler's socket timeout fires, instead of holding the handler
+    thread in rfile.read until it hangs up. No Spark."""
+    import socket
+
+    from query_engine_spark import api
+
+    monkeypatch.setattr(api, "READ_TIMEOUT_SECONDS", 0.5)
+    server = FeedServer(None).start()
+    try:
+        host, port = server.address.removeprefix("http://").split(":")
+        with socket.create_connection((host, int(port)), timeout=2) as sock:
+            sock.sendall(
+                b"POST /xrpc/me.skyfeed.builder.generateFeedSkeleton HTTP/1.1\r\n"
+                b"Host: localhost\r\nContent-Length: 100\r\n\r\n" + b"0123456789"
+            )
+            reply = b""
+            while chunk := sock.recv(4096):
+                reply += chunk
+        head, _, body = reply.partition(b"\r\n\r\n")
+        assert head.split(b"\r\n")[0].split()[1] == b"400"
+        assert "Content-Length" in json.loads(body)["error"]
+    finally:
+        server.stop()
+
+
 def test_fetched_feed_skeleton_roundtrip(spark, posts):
     """S5 end-to-end through the HTTP fetch adapter: recorded feed-skeleton
     fixture → fetch_feed_skeleton → PipelineContext.feeds → input.feed block

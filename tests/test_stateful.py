@@ -1,13 +1,11 @@
-"""Tests for stateful operators: sessionization (batch ≡ streaming) and the
-incremental regex cache (warm ≡ cold)."""
+"""Tests for stateful operators: sessionization and CUSUM drift (batch ≡
+streaming)."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
-from query_engine_spark.streaming.stateful import RegexCache, sessionize_batch, sessionize_stream
+from query_engine_spark.streaming.stateful import sessionize_batch, sessionize_stream
 
 
 def _events(spark):
@@ -58,48 +56,6 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
     }
     for r in emitted:
         assert (r["user_id"], r["session_start_us"], r["session_end_us"], r["n_events"]) in batch
-
-
-def test_regex_cache_warm_equals_cold(spark, posts):
-    cache = RegexCache(pattern="(?i)spark")
-    first_half = posts.filter(F.col("key") <= 4)
-    cache.refresh(first_half)
-    assert {r["id"] for r in cache.matches.collect()} == {"p0001"}
-    assert cache.hwm == "p0004"
-
-    # incremental refresh over the full store scans only id > p0004
-    cache.refresh(posts)
-    warm = {r["id"] for r in cache.matches.collect()}
-    cold = {r["id"] for r in posts.filter(F.col("text").rlike("(?i)spark")).select("id").collect()}
-    assert warm == cold == {"p0001"}
-    assert cache.hwm == "p0008"
-
-    # apply as semi/anti join on the working set
-    kept = cache.apply(posts)
-    assert [r["key"] for r in kept.collect()] == [1]
-    dropped = cache.apply(posts, invert=True)
-    assert sorted(r["key"] for r in dropped.collect()) == [2, 3, 4, 5, 6, 7, 8]
-
-
-def test_regex_cache_large_set_drops_broadcast_hint(spark, posts):
-    # past the broadcast threshold apply() must not FORCE a broadcast of the
-    # match set (a hot regex at 100 TB can exceed broadcast limits) — the
-    # hint disappears and the planner sizes the join from stats; results
-    # agree with the broadcast path
-    small = RegexCache(pattern=".")  # matches every post
-    small.refresh(posts)
-    big = RegexCache(pattern=".", broadcast_threshold=2)
-    big.refresh(posts)
-    assert big._n_matches > big.broadcast_threshold
-
-    def analyzed(df):
-        return df._jdf.queryExecution().analyzed().toString()
-
-    assert "ResolvedHint" in analyzed(small.apply(posts))
-    assert "Hint" not in analyzed(big.apply(posts))
-    a = sorted(r["key"] for r in small.apply(posts).collect())
-    b = sorted(r["key"] for r in big.apply(posts).collect())
-    assert a == b and len(a) >= 7  # key 7 has empty text — '.' no-match
 
 
 def test_cusum_stream_equals_batch(spark, tmp_path):

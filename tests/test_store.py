@@ -200,17 +200,54 @@ def _shape_requests():
     return [inputs.request(shape, i) for shape, (params, _) in inputs.SHAPES.items() for i in range(len(params))]
 
 
-@pytest.mark.parametrize("days_ahead", [0, 30])  # 30: the window is empty
-def test_snapshot_serves_the_same_feeds_as_the_lazy_window(spark, feed_store, days_ahead):
+@pytest.mark.parametrize(
+    "days_ahead, max_partition_bytes",
+    [(0, None), (30, None), (0, "16k")],  # 30: the window is empty
+    ids=["0", "30", "multi-partition"],
+)
+def test_snapshot_serves_the_same_feeds_as_the_lazy_window(spark, feed_store, days_ahead, max_partition_bytes):
+    """Both sides of the size rule: the window fits one partition (one task
+    per stage, AQE off) or, under a caller-set tiny maxPartitionBytes that
+    must reach the serving session, several (AQE on)."""
     store, newest = feed_store
     now = newest + dt.timedelta(days=days_ahead)
-    lazy = store.window(now)
-    snapshot = store.serving_view(now)
+    key = "spark.sql.files.maxPartitionBytes"
+    if max_partition_bytes:
+        spark.conf.set(key, max_partition_bytes)
+    try:
+        lazy = store.window(now)
+        snapshot = store.serving_view(now)
+    finally:
+        spark.conf.unset(key)
+    n = snapshot.rdd.getNumPartitions()
+    assert (n > 1) == bool(max_partition_bytes)
+    serving = snapshot.sparkSession.conf
+    assert serving.get("spark.sql.shuffle.partitions") == str(n)
+    assert serving.get("spark.sql.adaptive.enabled") == str(n > 1).lower()
     assert snapshot.count() == lazy.count()
     for r in _shape_requests():
         want = _feed(spark, lazy, r["blocks"])[1]
         assert _feed(spark, snapshot, r["blocks"])[1] == want, r["key"]
         assert want or days_ahead, f"{r['key']}: empty feed over a full window"
+
+
+def test_publish_leaves_the_caller_session_conf_alone(spark, feed_store):
+    """A publish changes only the serving session's conf, and the caller's
+    runtime settings reach it, whether set or unset since the last publish."""
+    store, newest = feed_store
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(key, "256m")
+    try:
+        serving = store.serving_view(newest).sparkSession.conf
+        assert serving.get(key) == "256m"
+    finally:
+        spark.conf.unset(key)
+    serving = store.serving_view(newest).sparkSession.conf
+    assert serving.get(key) == spark.conf.get(key)
+    assert serving.get("spark.sql.adaptive.enabled") == "false"
+    assert {k: spark.conf.get(k) for k in keys} == before
 
 
 def test_snapshot_outlives_ingest_of_its_partitions(spark, tmp_path):
@@ -256,7 +293,9 @@ def test_served_request_plans_no_scan_and_no_now_join(spark, feed_store):
     for posts, served in ((store.window(newest), False), (store.serving_view(newest), True)):
         out, _ = _feed(spark, posts, blocks)
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "isFinalPlan=true" in plan
+        # a one-partition snapshot plans without AQE
+        assert ("AdaptiveSparkPlan" in plan) != served
+        assert served or "isFinalPlan=true" in plan
         assert ("FileScan parquet" in plan) != served
         # the in-plan now: max(ts) broadcast into a nested-loop cross join
         assert bool(re.search(r"functions=\[max\(ts#", plan)) != served
