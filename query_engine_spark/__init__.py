@@ -22,7 +22,7 @@ Layout:
     functions/            scalar helpers: TID/DID/URI codecs, script translator
     operators/            block semantics: inputs, filters, score
                           expressions, top-N helpers, joins, aggregates
-    plans/                JSON block-pipeline → DataFrame translator (also
+    plans/                JSON block-pipeline → one-SQL-statement compiler (also
                           the score, sort, limit and stash blocks)
     streaming/            ingest lifecycle (batch incremental + streaming)
     llmdata/              dedup / similarity / text analysis / multimodal

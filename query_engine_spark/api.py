@@ -8,7 +8,7 @@ thin stdlib HTTP wrapper (SURVEY §3).
   (main.rs:626-688).
 - ``generate_list_skeleton`` ←→ list mode (main.rs:2676-2985).
 
-The engine call is one lazy plan + one collect; the 30 s budget
+The engine call is one compiled SQL statement + one collect; the 30 s budget
 (main.rs:1182-1186) is enforced with Spark's job-group cancellation rather
 than the reference's tokio timeout. Per-block counts (debug mode,
 main.rs:2493-2506) re-evaluate each block prefix — a debugging tool, not the
@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import dataclasses
 import datetime as _dt
+import http.server
 import json
 import threading
 import time
@@ -46,6 +47,9 @@ QUERY_TIMEOUT_SECONDS = 30  # main.rs:1182
 # Content-Length than it sends gets a 400 after this long instead of holding
 # a handler thread in the body read
 READ_TIMEOUT_SECONDS = 5
+# most FeedServer handler threads at once (one per open connection); later
+# connections wait in the listen backlog until a handler finishes
+MAX_HANDLER_THREADS = 8
 
 
 def _collect_with_timeout(spark, df, timeout_s: float):
@@ -191,6 +195,29 @@ def record_feed_links(
     df.write.mode("append").parquet(store_path)
 
 
+class _BoundedHTTPServer(http.server.ThreadingHTTPServer):
+    """ThreadingHTTPServer with at most MAX_HANDLER_THREADS handler threads:
+    the accept loop waits for a free slot before it starts the next one."""
+
+    def server_activate(self):
+        self._slots = threading.BoundedSemaphore(MAX_HANDLER_THREADS)
+        super().server_activate()
+
+    def process_request(self, request, client_address):
+        self._slots.acquire()
+        try:
+            super().process_request(request, client_address)
+        except BaseException:
+            self._slots.release()
+            raise
+
+    def process_request_thread(self, request, client_address):
+        try:
+            super().process_request_thread(request, client_address)
+        finally:
+            self._slots.release()
+
+
 class FeedServer:
     """Thin stdlib HTTP wrapper exposing the reference's routes
     (main.rs:548-565, 567-570): POST generateFeedSkeleton + GET
@@ -206,8 +233,6 @@ class FeedServer:
         *,
         profile_ctx: ProfileContext | None = None,
     ):
-        import http.server
-
         api_ctx = ctx
         api_profile_ctx = profile_ctx
 
@@ -282,7 +307,7 @@ class FeedServer:
                             pass
                 self._send(200, get_trending_tags(api_ctx, minutes))
 
-        self._httpd = http.server.ThreadingHTTPServer((host, port), Handler)
+        self._httpd = _BoundedHTTPServer((host, port), Handler)
         self.address = f"http://{self._httpd.server_address[0]}:{self._httpd.server_address[1]}"
         self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
 
@@ -322,11 +347,12 @@ def explain_feed_pipeline(ctx: "PipelineContext", blocks: list[dict[str, Any]]) 
     executing it and return the Catalyst physical plan plus a
     plan-feature summary (exchange / join / window counts, cartesian
     check) — the debuggability surface a feed author needs to see WHY a
-    pipeline would be slow before it runs against the full corpus. Pure
-    plan analysis: no action is triggered."""
-    from query_engine_spark.plans.blocks import translate_pipeline
-
-    return _plan_summary(translate_pipeline(blocks, ctx))
+    pipeline would be slow before it runs against the full corpus — and
+    the compiled statement as ``sql`` (``{posts}`` names the posts frame).
+    Pure plan analysis: no action is triggered."""
+    ctx = dataclasses.replace(ctx, script_tiers={})
+    summary = _plan_summary(translate_pipeline(blocks, ctx))
+    return {**summary, "sql": ctx.sql}
 
 
 def explain_curation_pipeline(docs, spec: list[dict[str, Any]]) -> dict[str, Any]:

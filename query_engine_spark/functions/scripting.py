@@ -96,6 +96,8 @@ import pandas as pd
 
 from pyspark.sql import Column, functions as F
 
+from query_engine_spark.operators.sql import sql_literal
+
 __all__ = [
     "ScriptTranslationError",
     "ScriptRuntimeError",
@@ -472,7 +474,7 @@ def _to_sql(node: tuple, env: dict[str, tuple[str, str | None]], now_epoch_expr:
             return f"CAST({node[1]!r} AS DOUBLE)", "f"
         return str(node[1]), "i"
     if kind == "str":
-        return "'" + node[1].replace("'", "''") + "'", "s"
+        return sql_literal(node[1]), "s"
     if kind == "bool":
         return ("true" if node[1] else "false"), "b"
     if kind == "var":
@@ -1044,20 +1046,20 @@ def translate_script_with_tier(
     now_epoch_expr: str = "unix_seconds(current_timestamp())",
     allow_udf: bool = False,
     boolean: bool = False,
-) -> tuple[Column, str, str | None]:
+) -> tuple[str | Column, str, str | None]:
     """``translate_script`` plus tier observability: returns
-    ``(column, tier, reason)`` where tier is ``"sql"`` (Catalyst
-    expression, codegen fast path) or ``"udf"`` (sandboxed interpreter,
-    the documented 10-100× slow path), and reason is the _NeedsUdf
-    routing message for the UDF tier (None on the SQL tier). Since the
-    r15 ADVICE closures route statically ill-typed shapes to the UDF
-    tier instead of hard-failing, a buggy or hostile feed config can
-    silently land a whole query on the slow tier — the blocks
+    ``(expression, tier, reason)`` where tier is ``"sql"`` (the expression
+    is Catalyst SQL text, codegen fast path) or ``"udf"`` (a Column calling
+    the sandboxed interpreter, the documented 10-100× slow path), and reason
+    is the _NeedsUdf routing message for the UDF tier (None on the SQL
+    tier). Since the r15 ADVICE closures route statically ill-typed shapes
+    to the UDF tier instead of hard-failing, a buggy or hostile feed config
+    can silently land a whole query on the slow tier — the blocks
     translator records this per block and the serving layer surfaces it
     in the debug payload (r16, verdict r15 ask #5)."""
     ast = _parse(script)
     try:
-        return F.expr(_block_to_sql(ast, {}, now_epoch_expr)), "sql", None
+        return _block_to_sql(ast, {}, now_epoch_expr), "sql", None
     except _NeedsUdf as why:
         if not allow_udf:
             raise ScriptTranslationError(
@@ -1082,9 +1084,10 @@ def translate_script(
     UDF tier yields a boolean predicate (the SQL tier's type is already
     whatever the expression produces, like the reference's eval).
     """
-    return translate_script_with_tier(
+    expr, tier, _ = translate_script_with_tier(
         script,
         now_epoch_expr=now_epoch_expr,
         allow_udf=allow_udf,
         boolean=boolean,
-    )[0]
+    )
+    return F.expr(expr) if tier == "sql" else expr

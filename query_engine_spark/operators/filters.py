@@ -1,11 +1,12 @@
 """Filter/predicate blocks (SURVEY §2.2, F1–F15).
 
 Every reference filter is ``posts.retain(pred)`` with dual keep/remove
-polarity (/root/reference/src/main.rs:1796-2150). Here each builder returns a
-pure ``Column`` predicate; ``apply_filter`` applies it with the polarity. Pure
-Column predicates stay inside whole-stage codegen and push down to the parquet
-scan — the 100 TB behavior we want (the reference instead re-scans its RAM
-vector per block).
+polarity (/root/reference/src/main.rs:1796-2150). Here each builder writes a
+pure SQL predicate (``fn.sql(...)``, what the feed compiler splices in) and
+returns it as a ``Column`` (``fn(...)``); ``apply_filter`` applies it with the
+polarity. Pure predicates stay inside whole-stage codegen and push down to
+the parquet scan — the 100 TB behavior we want (the reference instead
+re-scans its RAM vector per block).
 
 Null semantics: the reference's fields are non-null (ingest defaults,
 main.rs:3477-3530), so predicates here wrap nullable inputs with coalesce
@@ -16,9 +17,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from query_engine_spark.operators.ordering import ORD
+from query_engine_spark.operators.sql import sql_column, sql_literal
 
 __all__ = [
     "apply_filter",
@@ -28,6 +30,7 @@ __all__ = [
     "count_cmp",
     "language_is",
     "in_list",
+    "occurrence",
     "keep_first_duplicates",
     "keep_non_duplicates",
     "embed_kind",
@@ -45,41 +48,37 @@ def apply_filter(df: DataFrame, pred: Column, *, keep: bool = True) -> DataFrame
 
 # F1 — item kind: reply test is `parent != ""` (main.rs:4324-4326);
 # has_labels / has_no_labels (main.rs:1808-1815)
-def is_reply(parent: str = "parent") -> Column:
-    return F.coalesce(F.col(parent), F.lit("")) != ""
+@sql_column
+def is_reply(parent: str = "parent") -> str:
+    return f"coalesce({parent}, '') != ''"
 
 
-def has_labels(labels: str = "labels") -> Column:
-    return F.size(F.coalesce(F.col(labels), F.array())) > 0
+@sql_column
+def has_labels(labels: str = "labels") -> str:
+    return f"size(coalesce({labels}, array())) > 0"
 
 
 # F2 — image_count 0 / 1 / 2+ (main.rs:1817-1830)
-def image_count_is(value: str, col: str = "image_count") -> Column:
-    if value == "2+":
-        return F.col(col) >= 2
-    return F.col(col) == int(value)
+@sql_column
+def image_count_is(value: str, col: str = "image_count") -> str:
+    return f"{col} >= 2" if value == "2+" else f"{col} = {int(value)}"
 
 
 # F3/F4/F5 — count comparisons < > == != (main.rs:1831-1884)
-_OPS = {
-    "<": lambda c, v: c < v,
-    ">": lambda c, v: c > v,
-    "==": lambda c, v: c == v,
-    "!=": lambda c, v: c != v,
-    "<=": lambda c, v: c <= v,
-    ">=": lambda c, v: c >= v,
-}
+_OPS = {"<": "<", ">": ">", "==": "=", "!=": "!=", "<=": "<=", ">=": ">="}
 
 
-def count_cmp(col: str, op: str, value: float) -> Column:
+@sql_column
+def count_cmp(col: str, op: str, value: float) -> str:
     if op not in _OPS:
         raise ValueError(f"unsupported comparison {op!r}")
-    return _OPS[op](F.col(col), F.lit(value))
+    return f"{col} {_OPS[op]} {sql_literal(value)}"
 
 
 # F6 — language membership in the `langs` set, default "en" (main.rs:1885-1902)
-def language_is(lang: str = "en", langs: str = "langs") -> Column:
-    return F.array_contains(F.coalesce(F.col(langs), F.array()), lang)
+@sql_column
+def language_is(lang: str = "en", langs: str = "langs") -> str:
+    return f"array_contains(coalesce({langs}, array()), {sql_literal(lang)})"
 
 
 # F7 — list membership = semi/anti join on author (main.rs:1903-1915).
@@ -92,60 +91,46 @@ def in_list(df: DataFrame, list_df: DataFrame, on: str, *, keep: bool = True) ->
 
 # F8/F9 — order-sensitive dedup: keep first occurrence / keep only 2nd+
 # (main.rs:1916-1921). The occurrence rank is a window PARTITIONED by the key
-# — no global sort. Pass `order_by` columns directly when the working-set
+# — no global sort. Pass `order_by` (SQL sort items) when the working-set
 # order is expressible from natural columns (skips the global __ord stamp
 # entirely, the scalable path); default uses the __ord convention.
-def _occurrence_rank(key_cols: Sequence[str], order_by: Sequence[Column]) -> Column:
-    w = Window.partitionBy(*key_cols).orderBy(*order_by)
-    return F.row_number().over(w)
+@sql_column
+def occurrence(key_cols: Sequence[str], order_by: Sequence[str] = (ORD,)) -> str:
+    return f"row_number() OVER (PARTITION BY {', '.join(key_cols)} ORDER BY {', '.join(order_by)})"
 
 
-def _order_cols(df: DataFrame, order_by: Sequence[Column | str] | None) -> list[Column]:
-    if order_by is not None:
-        return [F.col(c) if isinstance(c, str) else c for c in order_by]
-    return [F.col(ORD)]
+def _occurrences(df: DataFrame, key_cols: Sequence[str], order_by: Sequence[str] | None, cond: str) -> DataFrame:
+    rank = occurrence(key_cols, order_by or (ORD,))
+    return df.withColumn("__occ", rank).filter(f"__occ {cond}").drop("__occ")
 
 
-def keep_first_duplicates(
-    df: DataFrame, key_cols: Sequence[str], order_by: Sequence[Column | str] | None = None
-) -> DataFrame:
-    return (
-        df.withColumn("__occ", _occurrence_rank(key_cols, _order_cols(df, order_by)))
-        .filter(F.col("__occ") == 1)
-        .drop("__occ")
-    )
+def keep_first_duplicates(df: DataFrame, key_cols: Sequence[str], order_by: Sequence[str] | None = None) -> DataFrame:
+    return _occurrences(df, key_cols, order_by, "= 1")
 
 
-def keep_non_duplicates(
-    df: DataFrame, key_cols: Sequence[str], order_by: Sequence[Column | str] | None = None
-) -> DataFrame:
-    return (
-        df.withColumn("__occ", _occurrence_rank(key_cols, _order_cols(df, order_by)))
-        .filter(F.col("__occ") > 1)
-        .drop("__occ")
-    )
+def keep_non_duplicates(df: DataFrame, key_cols: Sequence[str], order_by: Sequence[str] | None = None) -> DataFrame:
+    return _occurrences(df, key_cols, order_by, "> 1")
 
 
 # F10 — embed kind on the `record` ref: none / feed… / post… (main.rs:1922-1935)
-def embed_kind(value: str, record: str = "record") -> Column:
-    rec = F.coalesce(F.col(record), F.lit(""))
+@sql_column
+def embed_kind(value: str, record: str = "record") -> str:
     if value == "none":
-        return rec == ""
-    return rec.startswith(value)
+        return f"coalesce({record}, '') = ''"
+    return f"startswith(coalesce({record}, ''), {sql_literal(value)})"
 
 
 # F11 — label anti-membership (main.rs:1936-1951); label keys are
 # "self/<val>" or "<labeler_did>/<val>" (main.rs:3261, 3964-3974)
-def has_any_label(wanted: Sequence[str], labels: str = "labels") -> Column:
-    return F.arrays_overlap(
-        F.coalesce(F.col(labels), F.array()),
-        F.array(*[F.lit(x) for x in wanted]),
-    )
+@sql_column
+def has_any_label(wanted: Sequence[str], labels: str = "labels") -> str:
+    return f"arrays_overlap(coalesce({labels}, array()), array({', '.join(sql_literal(x) for x in wanted)}))"
 
 
 # F13 — video presence (main.rs:1972-1981)
-def is_video(video: str = "video") -> Column:
-    return F.col(video).isNotNull()
+@sql_column
+def is_video(video: str = "video") -> str:
+    return f"{video} IS NOT NULL"
 
 
 # F14 — regex block (main.rs:1982-2150).
@@ -177,29 +162,26 @@ def _java_pattern(pattern: str, case_sensitive: bool) -> str:
     return pattern
 
 
+@sql_column
 def regex_match(
     pattern: str,
     target: str = "text",
     *,
     case_sensitive: bool = False,
     invert: bool = False,
-    columns: dict[str, Column] | None = None,
-) -> Column:
+    columns: dict[str, str] | None = None,
+) -> str:
     """OR of rlike over the target columns; `columns` maps logical target
-    names (text / alt_text / link) to actual Columns (link defaults to the
+    names (text / alt_text / link) to SQL expressions (link defaults to the
     concatenated `links` array, matching main.rs:2100)."""
     if target not in REGEX_TARGETS:
         raise ValueError(f"unknown regex target {target!r}")
     columns = columns or {}
-    pat = _java_pattern(pattern, case_sensitive)
-    pred: Column | None = None
-    for name in REGEX_TARGETS[target]:
-        col = columns.get(name)
-        if col is None:
-            # links are matched on their no-separator concatenation
-            # (`p.links.concat()`, main.rs:2100)
-            col = F.array_join(F.col("links"), "") if name == "link" else F.col(name)
-        this = F.coalesce(col, F.lit("")).rlike(pat)
-        pred = this if pred is None else (pred | this)
-    assert pred is not None
-    return ~pred if invert else pred
+    pat = sql_literal(_java_pattern(pattern, case_sensitive))
+    # links are matched on their no-separator concatenation
+    # (`p.links.concat()`, main.rs:2100)
+    default = {"link": "array_join(links, '')"}
+    pred = " OR ".join(
+        f"coalesce({columns.get(n, default.get(n, n))}, '') RLIKE {pat}" for n in REGEX_TARGETS[target]
+    )
+    return f"NOT ({pred})" if invert else f"({pred})"

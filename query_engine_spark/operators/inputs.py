@@ -16,22 +16,24 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import TimestampType
 
+from query_engine_spark.operators.filters import has_any_label, is_reply
 from query_engine_spark.operators.scoring import weight_fn
+from query_engine_spark.operators.sql import sql_column, sql_literal
 
 __all__ = [
     "NOW_COL",
     "with_now",
+    "now_sql",
     "window_pred",
-    "input_firehose",
-    "input_list",
+    "tags_overlap",
     "input_tags",
     "input_labels",
     "input_feed",
     "input_did",
     "input_post",
-    "input_archived",
     "input_liked_weighted",
     "input_liked_by_likers",
 ]
@@ -56,76 +58,44 @@ def with_now(posts: DataFrame, ts: str = "ts") -> DataFrame:
     return posts.crossJoin(F.broadcast(posts.agg(F.max(ts).alias(NOW_COL))))
 
 
-def window_pred(now: _dt.datetime | Column, seconds: int, ts: str = "ts") -> Column:
-    """ts >= now - seconds (main.rs:1417-1424 cutoff-TID range).
-
-    `now` may be a Column (the NOW_COL attached by `with_now`) so the
-    cutoff stays in-plan — no driver round-trip.
-    A datetime `now` folds to a literal, which parquet min/max skipping and
+def now_sql(now: _dt.datetime | None) -> str:
+    """`now` as SQL: None reads the in-plan NOW_COL; a datetime folds to an
+    exact microsecond literal, which parquet min/max skipping and
     partition pruning can use directly."""
-    if isinstance(now, Column):
-        return F.col(ts) >= now - F.expr(f"INTERVAL {int(seconds)} SECOND")
-    cutoff = now - _dt.timedelta(seconds=seconds)
-    return F.col(ts) >= F.lit(cutoff)
+    return NOW_COL if now is None else f"timestamp_micros({TimestampType().toInternal(now)})"
 
 
-def input_firehose(posts: DataFrame, now: _dt.datetime, seconds: int = 86400) -> DataFrame:
-    """S1 — main.rs:1410-1426 (default firehoseSeconds=86400)."""
-    return posts.filter(window_pred(now, seconds))
+@sql_column
+def window_pred(now: str, seconds: int, ts: str = "ts") -> str:
+    """ts >= now - seconds (main.rs:1417-1424 cutoff-TID range); `now` is
+    `now_sql` text."""
+    return f"{ts} >= {now} - INTERVAL {int(seconds)} SECOND"
 
 
-def input_list(
-    posts: DataFrame,
-    list_df: DataFrame,
-    now: _dt.datetime,
-    seconds: int = 604800,
-    *,
-    author: str = "author_key",
-) -> DataFrame:
-    """S2 — posts by list members within historySeconds (main.rs:1427-1452).
-    Lists are small → broadcast semi-join."""
-    members = list_df.select(F.col(list_df.columns[0]).alias(author)).distinct()
-    return posts.join(F.broadcast(members), author, "left_semi").filter(window_pred(now, seconds))
+@sql_column
+def tags_overlap(tags: list[str], tags_col: str = "tags") -> str:
+    """S3 — union of per-tag postings (main.rs:1606-1668). The reference
+    unions tag bitmaps; `arrays_overlap` on the lowered tag array is the
+    same set, one scan."""
+    wanted = ", ".join(sql_literal(t.lower()) for t in tags)
+    return f"arrays_overlap(transform(coalesce({tags_col}, array()), t -> lower(t)), array({wanted}))"
 
 
-def input_tags(
-    posts: DataFrame,
-    tags: list[str],
-    now: _dt.datetime,
-    seconds: int = 604800,
-    *,
-    tags_col: str = "tags",
-) -> DataFrame:
-    """S3 — union of per-tag postings within window (main.rs:1606-1668).
-    The reference unions tag bitmaps; `arrays_overlap` on the lowered tag
-    array is the same set, one scan."""
-    wanted = F.array(*[F.lit(t.lower()) for t in tags])
-    lowered = F.transform(F.coalesce(F.col(tags_col), F.array()), F.lower)
-    return posts.filter(F.arrays_overlap(lowered, wanted)).filter(window_pred(now, seconds))
+def input_tags(posts: DataFrame, tags: list[str], now: _dt.datetime | None, seconds: int = 604800) -> DataFrame:
+    """S3 within the history window."""
+    return posts.filter(tags_overlap(tags)).filter(window_pred(now_sql(now), seconds))
 
 
-def input_labels(
-    posts: DataFrame,
-    labels: list[str],
-    now: _dt.datetime,
-    seconds: int = 604800,
-    *,
-    labels_col: str = "labels",
-) -> DataFrame:
+def input_labels(posts: DataFrame, labels: list[str], now: _dt.datetime | None, seconds: int = 604800) -> DataFrame:
     """S4 — main.rs:1669-1703; label keys "self/<val>" / "<did>/<val>"."""
-    wanted = F.array(*[F.lit(x) for x in labels])
-    return posts.filter(
-        F.arrays_overlap(F.coalesce(F.col(labels_col), F.array()), wanted)
-    ).filter(window_pred(now, seconds))
+    return posts.filter(has_any_label(labels)).filter(window_pred(now_sql(now), seconds))
 
 
 def input_feed(posts: DataFrame, feed_ids: DataFrame, *, id_col: str = "id") -> DataFrame:
     """S5 — external feed skeleton ids semi-joined against the store,
     preserving the feed's order (main.rs:1704-1737). `feed_ids` carries
     (id, __feed_ord); rows missing from the store drop out (inner join)."""
-    return (
-        feed_ids.join(posts, id_col, "inner")
-    )
+    return feed_ids.join(posts, id_col, "inner")
 
 
 def input_did(
@@ -159,11 +129,9 @@ def input_did(
     parts: list[DataFrame] = []
     if collection.startswith("post"):
         # tables without a parent ref have no reply notion — all rows are posts
-        parts.append(
-            authored.filter(F.coalesce(F.col(parent_col), F.lit("")) == "") if has_parent else authored
-        )
+        parts.append(authored.filter(~is_reply(parent_col)) if has_parent else authored)
     if "reply" in collection and has_parent:
-        parts.append(authored.filter(F.coalesce(F.col(parent_col), F.lit("")) != ""))
+        parts.append(authored.filter(is_reply(parent_col)))
     if "repost" in collection:
         if reposts is None:
             raise ValueError("collection includes 'repost' but no reposts edge table given")
@@ -185,24 +153,6 @@ def input_did(
 def input_post(posts: DataFrame, post_id, *, id_col: str = "id") -> DataFrame:
     """S7 — single post by id; the caller PREPENDS it (main.rs:1780-1791)."""
     return posts.filter(F.col(id_col) == F.lit(post_id))
-
-
-def input_archived(
-    posts: DataFrame,
-    pred: Column | None,
-    limit: int = 1000,
-    *,
-    newest_first: bool = True,
-    ts: str = "ts",
-    tiebreak: str = "id",
-) -> DataFrame:
-    """S8 — cold archive scan with pushed-down predicates and a ≤1000 cap
-    (main.rs:706-974, 1354-1376). On parquet this is just scan+filter+top-N:
-    Catalyst pushes the predicate to the footer level and
-    ``orderBy().limit()`` runs as TakeOrderedAndProject."""
-    df = posts if pred is None else posts.filter(pred)
-    order = [F.col(ts).desc(), F.col(tiebreak).desc()] if newest_first else [F.col(ts).asc(), F.col(tiebreak).asc()]
-    return df.orderBy(*order).limit(min(limit, 1000))
 
 
 def input_liked_weighted(

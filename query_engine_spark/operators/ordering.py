@@ -12,9 +12,9 @@ unordered, so an order-sensitive consumer reads an explicit ``__ord`` column:
 ``block_seq`` numbers the block that appended the rows; ``within_block_rank``
 is a rank of the row inside that block (for scans: id order, matching the
 reference's BTreeMap range iteration; for sorts: the sort rank). The feed
-translator (plans/blocks.py) keeps each block's order pending and calls
-`stamp_ord` only when a consumer reads cross-block order; registry queries
-whose result includes the rank call it directly.
+compiler (plans/blocks.py) keeps each block's order pending and writes the
+stamp (`mono_stamp` / `rank_stamp`) only when a consumer reads cross-block
+order; registry queries whose result includes the rank call `stamp_ord`.
 
 Scale design (the round-1 verdict's headline fix): the default stamp does NOT
 use a global (unpartitioned) window — that pulls the whole working set into a
@@ -54,11 +54,37 @@ ORD = "__ord"
 # mono ids are pid * 2^33 + offset; pid < 2^17 partitions keeps them < 2^50
 _BLOCK_SHIFT = 1 << 50
 
-__all__ = ["ORD", "stamp_ord", "dense_rank_over"]
+__all__ = ["ORD", "stamp_ord", "dense_rank_over", "mono_stamp", "rank_stamp"]
 
 
 def _cols(order_by: Sequence[Column | str]) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_by]
+
+
+def _sort_sql(df: DataFrame, order_by: Sequence[Column | str]) -> str:
+    """Sort items as SQL text (column names pass through)."""
+    expression = df.sparkSession._jsparkSession.expression
+    return ", ".join(c if isinstance(c, str) else expression(c._jc).sql() for c in order_by)
+
+
+def mono_stamp(block_seq: int) -> str:
+    """``__ord`` of rows already in order: the block's base plus the
+    map-side monotonically increasing id, which fails loudly instead of
+    spilling into the next block's range (>= 2^17 partitions or > 2^33
+    rows in one partition, plausible at 100 TB)."""
+    mono = "monotonically_increasing_id()"
+    error = (
+        "'__ord stamp overflow: monotonically_increasing_id >= 2^50 (more than 2^17 partitions "
+        "or 2^33 rows/partition); use dense=True or widen _BLOCK_SHIFT'"
+    )
+    base = block_seq * _BLOCK_SHIFT
+    return f"CAST({base} + CASE WHEN {mono} < {_BLOCK_SHIFT} THEN {mono} ELSE raise_error({error}) END AS BIGINT)"
+
+
+def rank_stamp(block_seq: int, order: str, partition: str = "__qe_pid") -> str:
+    """The block's base plus the row's rank in `order` (SQL sort items)
+    within `partition`."""
+    return f"CAST({block_seq * _BLOCK_SHIFT} + row_number() OVER (PARTITION BY {partition} ORDER BY {order}) AS BIGINT)"
 
 
 def stamp_ord(
@@ -75,38 +101,20 @@ def stamp_ord(
     the stamp is deterministic across runs and engines. See the module
     docstring for the dense/bounded variants.
     """
-    cols = _cols(order_by)
-    base = F.lit(block_seq * _BLOCK_SHIFT)
     if bounded:
-        return _bounded_stamp(df, cols, ORD, block_seq * _BLOCK_SHIFT)
+        return _bounded_stamp(df, _sort_sql(df, order_by), ORD, block_seq)
     if dense:
-        return _dense_stamp(df, cols, ORD, block_seq * _BLOCK_SHIFT)
-    ordered = df.orderBy(*cols)
-    # Overflow guard (checked, not a comment): mono ids are pid*2^33 + offset;
-    # with >= 2^17 post-AQE partitions (plausible at 100 TB) or > 2^33 rows in
-    # one partition the id would silently spill into the next block's __ord
-    # range, corrupting cross-block order. Fail loudly instead.
-    mono = F.monotonically_increasing_id()
-    checked = F.when(mono < F.lit(_BLOCK_SHIFT), mono).otherwise(
-        F.raise_error(
-            F.lit(
-                "__ord stamp overflow: monotonically_increasing_id >= 2^50 "
-                "(more than 2^17 partitions or 2^33 rows/partition); "
-                "use dense=True or widen _BLOCK_SHIFT"
-            )
-        )
-    )
-    return ordered.withColumn(ORD, (base + checked).cast("long"))
+        return _dense_stamp(df, _cols(order_by), ORD, block_seq * _BLOCK_SHIFT)
+    return df.orderBy(*_cols(order_by)).withColumn(ORD, F.expr(mono_stamp(block_seq)))
 
 
-def _bounded_stamp(df: DataFrame, cols: list[Column], out_col: str, base: int) -> DataFrame:
+def _bounded_stamp(df: DataFrame, order: str, out_col: str, block_seq: int) -> DataFrame:
     """Rank a structurally bounded set: one tiny round-robin exchange into a
     single partition, then a partition-local row_number. The partition key is
     ``spark_partition_id()`` (non-foldable) so no unpartitioned WindowExec
     appears; correctness does not depend on the upstream limit's partitioning."""
     one = df.repartition(1).withColumn("__qe_pid", F.spark_partition_id())
-    w = Window.partitionBy("__qe_pid").orderBy(*cols)
-    return one.withColumn(out_col, (F.lit(base) + F.row_number().over(w)).cast("long")).drop("__qe_pid")
+    return one.withColumn(out_col, F.expr(rank_stamp(block_seq, order))).drop("__qe_pid")
 
 
 def _dense_stamp(df: DataFrame, cols: list[Column], out_col: str, base: int) -> DataFrame:
@@ -144,5 +152,5 @@ def dense_rank_over(
     when the input is structurally limited (e.g. a pipeline's ≤500-row final
     output) — single tiny exchange instead of the 4-job two-phase rank."""
     if bounded:
-        return _bounded_stamp(df, _cols(order_by), out_col, 0)
+        return _bounded_stamp(df, _sort_sql(df, order_by), out_col, 0)
     return _dense_stamp(df, _cols(order_by), out_col, 0)

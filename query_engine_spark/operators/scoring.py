@@ -3,10 +3,9 @@
 The reference keeps score in a side map post_key→f64
 (/root/reference/src/main.rs:1399) that score blocks add into, optionally
 max-normalizing the batch first (`add_post_score_to_global_normalized`
-main.rs:2626-2657). The feed translator owns that map
-(``plans.blocks._ScoreState``) and the normalization
-(``plans.blocks._normalized_batch``); this module holds the per-row score
-expressions it and the registry share.
+main.rs:2626-2657). The feed compiler owns that map and the
+normalization (``plans.blocks._ScoreState``); this module holds the per-row
+score expressions it and the registry share.
 
 The user-selectable curator weight functions f0…f5 (main.rs:1548-1556) are a
 closed family → `weight_fn` dispatch.
@@ -16,20 +15,23 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from query_engine_spark.operators.sql import sql_column, sql_literal
+
 __all__ = ["hn_score_from_micros", "weight_fn"]
 
 
-def hn_score_from_micros(like_count: Column, age_us: Column, gravity: float = 1.8) -> Column:
+@sql_column
+def hn_score_from_micros(like_count: str, age_us: str, gravity: float = 1.8) -> str:
     """Hacker-News decay: like_count / (age_hours + 2)^gravity, with the age
     given in epoch MICROseconds (exact integer arithmetic end-to-end — the
-    cross-engine-reproducible form).
+    cross-engine-reproducible form). Arguments are SQL expressions.
 
     Matches `calculate_score` (main.rs:4338-4347) exactly: the reference
     truncates age to whole minutes (`num_minutes()`, abs) before dividing by
     60 and adding 2 — so we floor(|age| / 60 s) first.
     """
-    minutes = F.floor(F.abs(age_us) / F.lit(60000000)).cast("double")
-    return like_count.cast("double") / F.pow(minutes / F.lit(60.0) + F.lit(2.0), F.lit(float(gravity)))
+    minutes = f"CAST(floor(abs({age_us}) / 60000000) AS DOUBLE)"
+    return f"CAST({like_count} AS DOUBLE) / pow({minutes} / 60.0D + 2.0D, {sql_literal(float(gravity))})"
 
 
 def weight_fn(name: str, count: Column, score_exponent: float = 1.0) -> Column:

@@ -1,8 +1,10 @@
-"""Top-N helpers shared by the feed translator and the registry (SURVEY §2.4).
+"""Top-N helpers of the registry's DataFrame queries (SURVEY §2.4).
 
-The feed translator (plans/blocks.py) owns the sort and limit blocks; it
-calls the two helpers here. Reference sorts mutate the working Vec in place
-(main.rs:2238-2307) and limits truncate it (main.rs:2349-2384).
+The feed compiler (plans/blocks.py) owns the sort and limit blocks and
+writes them as SQL over the same stamp and window fragments
+(`ordering.rank_stamp`, `filters.occurrence`). Reference sorts mutate the
+working Vec in place (main.rs:2238-2307) and limits truncate it
+(main.rs:2349-2384).
 
 Scale note: a global sort is a range-partitioned shuffle. A sort that is
 immediately truncated — feeds return ≤500 rows — runs as
@@ -15,9 +17,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame
 
-from query_engine_spark.operators.ordering import ORD, stamp_ord
+from query_engine_spark.operators.filters import occurrence
+from query_engine_spark.operators.ordering import stamp_ord
 
 __all__ = ["top_n_with_ord", "posts_per_user"]
 
@@ -38,5 +41,4 @@ def posts_per_user(df: DataFrame, n: int = 3, *, author: str = "author_key") -> 
     order (main.rs:2349-2373). The window is PARTITIONED by author and
     Spark's WindowGroupLimit rewrites the rank filter into a per-partition
     partial top-N — no global sort."""
-    w = Window.partitionBy(author).orderBy(F.col(ORD))
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= n).drop("__rn")
+    return df.withColumn("__rn", occurrence([author])).filter(f"__rn <= {int(n)}").drop("__rn")

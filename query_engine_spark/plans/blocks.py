@@ -1,14 +1,23 @@
-"""JSON block-pipeline → DataFrame translator (SURVEY §3, entry point 1).
+"""JSON block pipeline → one SQL statement (SURVEY §3, entry point 1).
 
 The reference interprets the block list row-at-a-time over an in-memory Vec
-(/root/reference/src/main.rs:1229-2594). Here translation builds ONE lazy
-DataFrame expression chain — Catalyst then does what the reference never
-could: pushes filters into the scan, prunes columns, reorders/broadcasts the
-joins, and fuses everything into whole-stage codegen. Executing the plan is
-the driver's final `.collect()` of ≤500 id rows.
+(/root/reference/src/main.rs:1229-2594). Here translation writes the list
+as ONE ``WITH … SELECT`` statement, each block adding named relations over
+the previous working set, and makes one ``spark.sql`` call on the posts
+frame's session (a published snapshot keeps its serving conf). Catalyst
+then pushes filters into the scan, prunes columns, broadcasts the small
+joins and fuses the rest into whole-stage codegen; executing it is the
+driver's final `.collect()` of ≤500 rows. The translator tracks columns
+and pending order keys in Python, so a request costs a handful of py4j
+round trips, not one per DataFrame call. Request strings reach the text
+only through `operators.sql.sql_literal`; side inputs go in as DataFrame
+arguments (spark.sql registers them under unique names for the call).
+Blocks that exist only as DataFrame operators (liked inputs, input.did,
+replace, UDF-tier scripts) run the statement up to that block, apply the
+operator, and pass its output back in as one more relation.
 
 Ordering is LAZY (the round-2 → round-3 redesign). The reference's working
-set is an ordered Vec; DataFrames are unordered. Instead of eagerly stamping
+set is an ordered Vec; relations are unordered. Instead of eagerly stamping
 a global ``__ord`` per input block (round 2's approach — it costs a full
 range-partitioned sort per block that the next sort block immediately
 discards), the working set is kept as a list of *segments*, one per appended
@@ -53,18 +62,20 @@ the implicit final LIMIT 500 matches main.rs:2510-2512.
 from __future__ import annotations
 
 import datetime as _dt
+import re
+from collections import Counter
 from dataclasses import dataclass, field, replace as _dc_replace
 from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from query_engine_spark.operators import filters as Fi
 from query_engine_spark.operators import inputs as In
 from query_engine_spark.operators.inputs import NOW_COL
 from query_engine_spark.operators import joins as J
-from query_engine_spark.operators import sorts as So
 from query_engine_spark.operators.scoring import hn_score_from_micros
-from query_engine_spark.operators.ordering import ORD, stamp_ord
+from query_engine_spark.operators.ordering import ORD, mono_stamp, rank_stamp
+from query_engine_spark.operators.sql import ident, sql_literal
 from query_engine_spark.functions.scripting import translate_script_with_tier
 
 from query_engine_spark.errors import PipelineError
@@ -77,6 +88,9 @@ FINAL_LIMIT = 500  # main.rs:2510-2512
 
 # prefix of a pending segment's hidden order-key columns (__qe_o0, __qe_o1, …)
 _ORD_HIDDEN = "__qe_o"
+# a relation reference in a statement under construction (_Statement.cte);
+# sql_literal never writes NUL, so no request string can forge one
+_REF = re.compile("\x00(\\d+)\x00")
 
 # count columns by sort type (main.rs:2265-2282) and by score `from` name
 _SORT_COUNTS = {"likes": "like_count", "repost_count": "repost_count", "reply_count": "reply_count"}
@@ -119,6 +133,10 @@ class PipelineContext:
     # by api.generate_feed_skeleton in the debug payload so a config
     # that silently lands on the slow tier is visible, not inferred.
     script_tiers: dict[str, dict[str, str]] = field(default_factory=dict)
+    # the last statement translate_pipeline ran, for explain: it names the
+    # posts frame `{posts}` and any other relation `{f1}`, `{f2}` … as
+    # spark.sql keyword frames
+    sql: str | None = None
 
     def note_script_tier(
         self, block: dict[str, Any], kind: str, tier: str, reason: str | None
@@ -189,200 +207,260 @@ def _seconds(block: dict[str, Any], key: str, default: int) -> int:
     return int(v) if v is not None else default
 
 
+def _polar(pred: str, keep: bool) -> str:
+    """keep → retain(pred); remove → retain(!pred)  (main.rs:1800-1816 shape)."""
+    return pred if keep else f"NOT ({pred})"
+
+
+# ---------------------------------------------------------------------------
+# the statement under construction
+
+
+class _Statement:
+    """The ``WITH … SELECT`` being written: its relations in block order
+    and the DataFrames passed in (``{name}`` in the text, spark.sql's
+    keyword frames)."""
+
+    def __init__(self, posts: DataFrame):
+        self.session = posts.sparkSession
+        self.frames: dict[str, DataFrame] = {"posts": posts}
+        self.ctes: list[str] = []
+
+    def frame(self, df: DataFrame) -> str:
+        if df.sparkSession is not self.session:
+            # temp views are per session: a side input built on another
+            # session of the same context joins this one's statement
+            jds = self.session._jvm.org.apache.spark.sql.classic.Dataset
+            df = DataFrame(jds.ofRows(self.session._jsparkSession, df._jdf.logicalPlan()), self.session)
+        name = f"f{len(self.frames)}"
+        self.frames[name] = df
+        return "{" + name + "}"
+
+    def cte(self, body: str) -> str:
+        """Name a relation; `text` decides how it is written."""
+        self.ctes.append(body)
+        return f"\x00{len(self.ctes) - 1}\x00"
+
+    def text(self, select: str) -> str:
+        """The statement: relations read more than once become CTEs (b0,
+        b1, …) and the others are written inline as subqueries, because
+        the analyzer resolves one more level of chained CTEs per pass
+        (flagship translation, warm: 122 ms with a CTE per relation, 68 ms
+        so)."""
+        uses = Counter(_REF.findall(" ".join([*self.ctes, select])))
+        rendered: list[str] = []
+
+        def ref(m: re.Match) -> str:
+            return f"b{m[1]}" if uses[m[1]] > 1 else f"({rendered[int(m[1])]})"
+
+        for body in self.ctes:
+            rendered.append(_REF.sub(ref, body))
+        ctes = [f"b{i} AS ({r})" for i, r in enumerate(rendered) if uses[str(i)] > 1]
+        return (f"WITH {', '.join(ctes)} " if ctes else "") + _REF.sub(ref, select)
+
+    def run(self, select: str) -> DataFrame:
+        return self.session.sql(self.text(select), **self.frames)
+
+    def apply(self, rel: str, fn: Callable[[DataFrame], DataFrame]) -> str:
+        """Run the statement up to `rel`, apply a DataFrame operator to the
+        result and pass its output back in as a relation."""
+        return self.frame(fn(self.run(f"SELECT * FROM {rel}")))
+
+
+def _stamp(rel: str, order: str, seq: int, *, bounded: bool, drop: list[str]) -> str:
+    """`rel` with ``__ord`` stamped in `order`, minus the `drop` columns
+    (operators/ordering.py: a bounded set ranks in one partition, anything
+    else sorts range-partitioned and takes the checked mono id)."""
+    if bounded:
+        one = f"SELECT *, spark_partition_id() AS __qe_pid FROM (SELECT /*+ REPARTITION(1) */ * FROM {rel})"
+        return f"SELECT * EXCEPT ({', '.join(['__qe_pid', *drop])}), {rank_stamp(seq, order)} AS {ORD} FROM ({one})"
+    keep = f" EXCEPT ({', '.join(drop)})" if drop else ""
+    return f"SELECT *{keep}, {mono_stamp(seq)} AS {ORD} FROM (SELECT * FROM {rel} ORDER BY {order})"
+
+
+def _ranked(rel: str, keys: list[str], cond: str) -> str:
+    """Rows of `rel` whose occurrence rank in ``__ord`` order within `keys`
+    meets `cond` — a window PARTITIONED by the keys, no global sort."""
+    return f"SELECT * EXCEPT (__occ) FROM (SELECT *, {Fi.occurrence.sql(keys)} AS __occ FROM {rel}) WHERE __occ {cond}"
+
+
 # ---------------------------------------------------------------------------
 # lazily-ordered working set
 
 
 @dataclass
 class _Segment:
-    """One appended block's rows. Pending segments (stamped=False) carry the
-    order-key VALUES in hidden ``__qe_o{i}`` columns with per-key directions
-    in `asc` — pinned at creation so the order survives row transformations
-    (replace) without ever sorting. Stamped segments carry ``__ord``."""
+    """One appended block's rows, as a relation of the statement. Pending
+    segments (stamped=False) carry the order-key VALUES in hidden
+    ``__qe_o{i}`` columns with per-key directions in `asc` — pinned at
+    creation so the order survives row transformations (replace) without
+    ever sorting. Stamped segments carry ``__ord``."""
 
-    df: DataFrame
+    rel: str
     seq: int
     asc: tuple[bool, ...] = ()
     stamped: bool = False
     bounded: bool = False
+    # most rows a stamped segment can hold (a limit or a fused sort→limit)
+    cap: int | None = None
+    # filters not yet applied: consecutive filter blocks share one WHERE,
+    # so the statement nests one level per run of filters, not per block
+    where: tuple[str, ...] = ()
 
-    def order_cols(self) -> list[Column]:
+    def rows(self, select: str = "*") -> str:
+        return f"SELECT {select} FROM {self.rel}" + (f" WHERE {' AND '.join(self.where)}" if self.where else "")
+
+    def source(self) -> str:
+        """The segment's rows as a relation."""
+        return f"({self.rows()})" if self.where else self.rel
+
+    def hidden(self) -> list[str]:
+        return [ORD] if self.stamped else [f"{_ORD_HIDDEN}{i}" for i in range(len(self.asc))]
+
+    def order(self) -> str:
         if self.stamped:
-            return [F.col(ORD)]
-        return [
-            F.col(f"{_ORD_HIDDEN}{i}").asc() if a else F.col(f"{_ORD_HIDDEN}{i}").desc()
-            for i, a in enumerate(self.asc)
-        ]
-
-    def stamp(self) -> "_Segment":
-        """Materialize ``__ord`` (bounded → single tiny exchange; else a
-        range-partitioned sort + checked mono-id stamp)."""
-        if self.stamped:
-            return self
-        df = stamp_ord(self.df, self.order_cols(), self.seq, bounded=self.bounded)
-        return _Segment(df=_drop_hidden(df), seq=self.seq, stamped=True, bounded=self.bounded)
-
-    def take(self, n: int) -> "_Segment":
-        """Per-segment top-N in this segment's order: TakeOrderedAndProject +
-        bounded stamp — never a full sort. Valid because the global first-n
-        (by (seq, order)) is a subset of each segment's first-n."""
-        if self.stamped:
-            return _dc_replace(self, df=self.df.orderBy(F.col(ORD)).limit(n), bounded=True)
-        limited = self.df.orderBy(*self.order_cols()).limit(n)
-        df = stamp_ord(limited, self.order_cols(), self.seq, bounded=True)
-        return _Segment(df=_drop_hidden(df), seq=self.seq, stamped=True, bounded=True)
-
-
-def _drop_hidden(df: DataFrame) -> DataFrame:
-    return df.drop(*[c for c in df.columns if c.startswith(_ORD_HIDDEN)])
-
-
-def _union(dfs: list[DataFrame]) -> DataFrame:
-    """Bag union in list order, columns matched by name (missing → null)."""
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d, allowMissingColumns=True)
-    return out
-
-
-def _make_segment(
-    df: DataFrame, order: list[tuple[Column, bool]], seq: int, *, bounded: bool = False
-) -> _Segment:
-    for i, (expr, _a) in enumerate(order):
-        df = df.withColumn(f"{_ORD_HIDDEN}{i}", expr)
-    return _Segment(df=df, seq=seq, asc=tuple(a for _, a in order), bounded=bounded)
+            return ORD
+        return ", ".join(f"{h} {'ASC' if a else 'DESC'}" for h, a in zip(self.hidden(), self.asc))
 
 
 class _WorkingSet:
     """The reference's ordered Vec<&PostV1> as a list of lazily-ordered
-    segments (module docstring). Mutated in place by the translator."""
+    segments (module docstring). Every segment holds the posts columns plus
+    its hidden order columns. Mutated in place by the translator."""
 
-    def __init__(self, proto: DataFrame):
-        self.proto = proto
+    def __init__(self, stmt: _Statement, posts: str, columns: list[str]):
+        self.stmt = stmt
+        self.posts = posts
+        self.columns = columns
         self.segments: list[_Segment] = []
+        self._data: tuple[tuple[str, ...], str] | None = None
 
-    def append(self, seg: _Segment) -> None:
-        self.segments.append(seg)
+    def segment(self, rel: str, order: list[tuple[str, bool]], seq: int, *, where=None, bounded=False, drop=()):
+        """The rows of relation `rel` that pass `where`, with their order
+        keys pinned."""
+        keys = ", ".join(f"{e} AS {_ORD_HIDDEN}{i}" for i, (e, _) in enumerate(order))
+        rest = f" EXCEPT ({', '.join(drop)})" if drop else ""
+        rel = self.stmt.cte(f"SELECT *{rest}, {keys} FROM {rel}")
+        return _Segment(rel, seq, tuple(a for _, a in order), bounded=bounded, where=(where,) if where else ())
 
-    def replace_all(self, seg: _Segment) -> None:
-        self.segments = [seg]
-
-    def map(self, fn: Callable[[DataFrame], DataFrame]) -> None:
+    def map(self, fn: Callable[[str], str]) -> None:
         """Apply an order-preserving per-row transformation (filter, where,
-        replace-with-ref) to every segment."""
-        self.segments = [_dc_replace(s, df=fn(s.df)) for s in self.segments]
+        replace-with-ref) to every segment: `fn` writes the query over it."""
+        self.segments = [_Segment(self.stmt.cte(fn(s.source())), s.seq, s.asc, s.stamped, s.bounded) for s in self.segments]
 
-    def data(self) -> DataFrame:
+    def filter(self, pred: str) -> None:
+        self.segments = [_dc_replace(s, where=(*s.where, f"({pred})")) for s in self.segments]
+
+    def _union(self, segments: list[_Segment], *, stamped: bool = False) -> str:
+        cols = ", ".join(ident(c) for c in self.columns)
+        if not segments:
+            return f"SELECT {cols}{f', CAST(0 AS BIGINT) AS {ORD}' if stamped else ''} FROM {self.posts} LIMIT 0"
+        return " UNION ALL ".join(s.rows(cols + (f", {ORD}" if stamped else "")) for s in segments)
+
+    def data(self) -> str:
         """The working set's ROWS, order metadata dropped — for consumers
         that don't read order (score batches, sorts, inverse replace)."""
-        if not self.segments:
-            return self.proto.limit(0)
-        return _union([_drop_hidden(s.df).drop(ORD) for s in self.segments])
+        key = tuple(self.segments)
+        if self._data is None or self._data[0] != key:
+            self._data = (key, self.stmt.cte(self._union(self.segments)))
+        return self._data[1]
 
-    def materialize(self) -> DataFrame:
+    def stamp(self, s: _Segment) -> _Segment:
+        """Materialize ``__ord`` (bounded → single tiny exchange; else a
+        range-partitioned sort + checked mono-id stamp)."""
+        if s.stamped:
+            return s
+        rel = self.stmt.cte(_stamp(s.source(), s.order(), s.seq, bounded=s.bounded, drop=s.hidden()))
+        return _Segment(rel, s.seq, stamped=True, bounded=s.bounded)
+
+    def take(self, s: _Segment, n: int) -> _Segment:
+        """Per-segment top-N in this segment's order: TakeOrderedAndProject +
+        bounded stamp — never a full sort. Valid because the global first-n
+        (by (seq, order)) is a subset of each segment's first-n."""
+        if s.stamped and not s.where and s.cap is not None and s.cap <= n:
+            return s  # already the first n
+        top = f"{s.rows()} ORDER BY {s.order()} LIMIT {n}"
+        if s.stamped:
+            return _Segment(self.stmt.cte(top), s.seq, stamped=True, bounded=True, cap=n)
+        top = f"({top})"
+        rel = self.stmt.cte(_stamp(top, s.order(), s.seq, bounded=True, drop=s.hidden()))
+        return _Segment(rel, s.seq, stamped=True, bounded=True, cap=n)
+
+    def materialize(self) -> str:
         """Union with ``__ord`` stamped — only for consumers that read
         cross-segment order (dedup-first, per-user top-N)."""
-        if not self.segments:
-            return self.proto.limit(0).withColumn(ORD, F.lit(0).cast("long"))
-        return _union([s.stamp().df for s in self.segments])
+        return self.stmt.cte(self._union([self.stamp(s) for s in self.segments], stamped=True))
 
-    def set_materialized(self, df: DataFrame, seq: int, *, bounded: bool = False) -> None:
-        self.segments = [_Segment(df=df, seq=seq, stamped=True, bounded=bounded)]
+    def set_materialized(self, rel: str, seq: int, *, cap: int | None = None) -> None:
+        self.segments = [_Segment(rel, seq, stamped=True, bounded=cap is not None, cap=cap)]
 
-    def limited(self, n: int) -> DataFrame:
+    def limited(self, n: int) -> str:
         """First n rows in working-set order: per-segment TakeOrdered(n) +
         bounded stamps, then a global TakeOrdered(n) on __ord. Every step is
         a partial top-N — no full sort at any scale."""
-        if not self.segments:
-            return self.proto.limit(0).withColumn(ORD, F.lit(0).cast("long"))
-        return _union([s.take(n).df for s in self.segments]).orderBy(F.col(ORD)).limit(n)
+        if len(self.segments) == 1:
+            return self.take(self.segments[0], n).rel
+        union = self._union([self.take(s, n) for s in self.segments], stamped=True)
+        return self.stmt.cte(f"SELECT * FROM ({union}) ORDER BY {ORD} LIMIT {n}")
 
 
 class _ScoreState:
-    """post_score_global as a (key, score) DataFrame.
+    """post_score_global as a (key, score) relation. Each block's batch
+    map is per-key OVERWRITE (`post_score.insert`, main.rs:2166-2207: the
+    per-row score is a pure function of the post, so max == the overwritten
+    value); batch maps add per key (main.rs:2626-2657). Batches fold at
+    first read: union → repartition(key) → per-(key,batch) max → per-key
+    sum, both aggregations partition-local — one Exchange in all."""
 
-    The reference builds each block's batch map with `post_score.insert(key,
-    s)` — per-key OVERWRITE (main.rs:2166-2207), so duplicate working-set rows
-    contribute once (the per-row score is a pure function of the post, so max
-    == the overwritten value) — then adds batch maps per key into the global
-    map (main.rs:2626-2657). Batches are accumulated as DataFrames and folded
-    at first read: union → repartition(key) → per-(key,batch) max → per-key
-    sum. The explicit repartition makes BOTH aggregations partition-local
-    (hash(key) clusters (key, batch) too) — one Exchange total, vs round 2's
-    chained full_outer join per block.
-    """
+    def __init__(self, stmt: _Statement):
+        self.stmt = stmt
+        self._batches: list[str] = []
+        self._resolved: str | None = None
 
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self._batches: list[DataFrame] = []
-        self._resolved: DataFrame | None = None
-
-    def add(self, batch: DataFrame) -> None:
-        """batch: (key, __batch_score) — already normalized by the caller."""
+    def add(self, batch: str, block: dict[str, Any]) -> None:
+        """batch: a (key, __batch_score) relation, normalized here with the
+        reference's default max-normalization
+        (add_post_score_to_global_normalized, main.rs:2626-2657)."""
+        if block.get("normalize", True):
+            # batch max as a broadcast scalar, not an unpartitioned window
+            mult = sql_literal(float(block.get("scoreNormalizationMultiplier", "1.0")))
+            batch = self.stmt.cte(
+                f"SELECT /*+ BROADCAST(m) */ key, CASE WHEN __qe_mx != 0.0D THEN __batch_score / __qe_mx * {mult} "
+                f"ELSE 0.0D END AS __batch_score FROM {batch} "
+                f"CROSS JOIN (SELECT max(__batch_score) AS __qe_mx FROM {batch}) m"
+            )
         self._batches.append(batch)
         self._resolved = None
 
     @property
-    def df(self) -> DataFrame | None:
+    def rel(self) -> str | None:
         if not self._batches:
             return None
         if self._resolved is None:
             if len(self._batches) == 1:
-                self._resolved = (
-                    self._batches[0]
-                    .groupBy("key")
-                    .agg(F.max("__batch_score").alias("score"))
-                )
+                body = f"SELECT key, max(__batch_score) AS score FROM {self._batches[0]} GROUP BY key"
             else:
-                tagged = _union([b.withColumn("__b", F.lit(i)) for i, b in enumerate(self._batches)])
-                self._resolved = (
-                    tagged.repartition("key")
-                    .groupBy("key", "__b")
-                    .agg(F.max("__batch_score").alias("__s"))
-                    .groupBy("key")
-                    .agg(F.sum("__s").alias("score"))
+                tagged = " UNION ALL ".join(f"SELECT key, __batch_score, {i} AS __b FROM {b}" for i, b in enumerate(self._batches))
+                per_batch = (
+                    f"SELECT key, __b, max(__batch_score) AS __s FROM "
+                    f"(SELECT /*+ REPARTITION(key) */ * FROM ({tagged})) GROUP BY key, __b"
                 )
+                body = f"SELECT key, sum(__s) AS score FROM ({per_batch}) GROUP BY key"
+            self._resolved = self.stmt.cte(body)
         return self._resolved
 
-    def join_onto(self, df: DataFrame, *, default: float = 0.0) -> DataFrame:
-        scores = self.df
-        if scores is None:
-            return df.withColumn("score", F.lit(default))
-        out = df.join(scores, "key", "left")
-        return out.withColumn("score", F.coalesce(F.col("score"), F.lit(default)))
-
-    def inner_scored(self, df: DataFrame) -> DataFrame:
-        scores = self.df
-        if scores is None:
-            return df.limit(0).withColumn("score", F.lit(0.0))
-        return df.join(scores, "key", "inner")
-
-
-def _normalized_batch(batch: DataFrame, block: dict[str, Any]) -> DataFrame:
-    """Apply the reference's default max-normalization
-    (add_post_score_to_global_normalized, main.rs:2626-2657)."""
-    normalize = block.get("normalize", True)
-    if not normalize:
-        return batch
-    mult = float(block.get("scoreNormalizationMultiplier", "1.0"))
-    # batch max as a broadcast scalar (agg + crossJoin broadcast), not an
-    # unpartitioned window — same pattern as inputs.with_now
-    mx_df = batch.agg(F.max("__batch_score").alias("__qe_mx"))
-    mx = F.col("__qe_mx")
-    return (
-        batch.crossJoin(F.broadcast(mx_df))
-        .withColumn(
-            "__batch_score",
-            F.when(mx != 0.0, F.col("__batch_score") / mx * F.lit(mult)).otherwise(F.lit(0.0)),
-        )
-        .drop("__qe_mx")
-    )
+    def joined(self, rel: str, hide: str = "") -> str:
+        """`rel` (minus the `hide` columns) with its global score, 0 when
+        unscored."""
+        if self.rel is None:
+            return f"SELECT w.*{hide}, 0.0D AS score FROM {rel} w"
+        return f"SELECT w.*{hide}, coalesce(s.score, 0.0D) AS score FROM {rel} w LEFT JOIN {self.rel} s ON w.key = s.key"
 
 
 def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> DataFrame:
-    """Compose the block list into one DataFrame; returns the final working
-    set ordered by __ord and truncated to 500, with (id, key, score, __ord)
-    plus all post columns."""
+    """Compile the block list into one statement and run it on the posts
+    frame's session; returns the final working set ordered by __ord and
+    truncated to 500, with (id, key, score, __ord) plus all post columns."""
     if len(blocks) > MAX_BLOCKS:
         raise PipelineError(f"Too many blocks ({len(blocks)} > {MAX_BLOCKS})")
     n_regex = sum(1 for b in blocks if b.get("type") == "regex")
@@ -392,25 +470,24 @@ def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> Da
     # previous query's script-tier entries into this one's debug payload
     ctx.script_tiers.clear()
 
-    posts = ctx.posts
-    if ctx.now is None:
-        # every window cutoff / age expression below reads NOW_COL. Over
-        # posts that do not carry it, with_now's max(ts) subtree costs each
-        # query one shuffle stage and one broadcast stage (AQE reuses them
-        # for the plan's other copies of the subtree): measured warm on 4
-        # cores at 100k posts, flagship runs 10 Spark jobs over a parquet
-        # window and 8 over a published PostStore snapshot
-        posts = In.with_now(posts)
-        now_arg: _dt.datetime | Column = F.col(NOW_COL)
-        now_epoch_expr = f"unix_seconds({NOW_COL})"
-        now_us: Column = F.unix_micros(F.col(NOW_COL))
-    else:
-        now_arg = ctx.now
-        now_epoch_expr = str(int(ctx.now.timestamp()))
-        now_us = F.lit(int(round(ctx.now.timestamp() * 1_000_000)))
-    ws = _WorkingSet(posts)
+    stmt = _Statement(ctx.posts)
+    columns = list(ctx.posts.columns)
+    posts = "{posts}"
+    if ctx.now is None and NOW_COL not in columns:
+        # every window cutoff / age expression below reads NOW_COL; posts
+        # that do not carry it (a lazy window, not a published snapshot)
+        # get it the way inputs.with_now attaches it: max(ts) as a
+        # broadcast one-row cross join, one shuffle stage and one
+        # broadcast stage per query
+        posts = stmt.cte(
+            f"SELECT /*+ BROADCAST(n) */ * FROM {{posts}} CROSS JOIN (SELECT max(ts) AS {NOW_COL} FROM {{posts}}) n"
+        )
+        columns.append(NOW_COL)
+    now = In.now_sql(ctx.now)
+    now_epoch = f"unix_seconds({NOW_COL})" if ctx.now is None else str(int(ctx.now.timestamp()))
+    ws = _WorkingSet(stmt, posts, columns)
     stash: dict[str, list[_Segment]] = {}
-    scores = _ScoreState(ctx.spark)
+    scores = _ScoreState(stmt)
     seq = 1
     prepend_seq = -1
 
@@ -419,12 +496,12 @@ def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> Da
         i += 1
         b_type = block.get("type")
         if b_type == "input":
-            seq, prepend_seq = _input_block(block, ctx, ws, posts, scores, seq, prepend_seq, now_arg)
+            seq, prepend_seq = _input_block(block, ctx, ws, scores, seq, prepend_seq, now)
         elif b_type in ("keep", "remove", "regex"):
-            _filter_block(block, ctx, ws, scores, now_epoch_expr, seq)
+            _filter_block(block, ctx, ws, scores, now_epoch, seq)
             seq += 1
         elif b_type == "score":
-            _score_block(block, ctx, ws, scores, now_epoch_expr, now_us)
+            _score_block(block, ctx, ws, scores, now_epoch, now)
         elif b_type == "sort":
             # peephole: sort immediately followed by a plain limit fuses into
             # TakeOrderedAndProject (partial per-partition top-N) instead of a
@@ -433,7 +510,7 @@ def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> Da
             fuse_n = None
             if nxt and nxt.get("type") == "limit" and nxt.get("limitType") != "posts_per_user":
                 fuse_n = int(nxt.get("count", 100))
-            _sort_block(block, ctx, ws, scores, seq, now_us, fuse_n=fuse_n)
+            _sort_block(block, ctx, ws, scores, seq, now, fuse_n=fuse_n)
             seq += 1
         elif b_type == "limit":
             if block.get("limitType") != "posts_per_user" and i > 0 and blocks[i - 1].get("type") == "sort":
@@ -445,7 +522,7 @@ def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> Da
             key = block["key"]
             if action == "stash":
                 # move the working set into the slot (main.rs:2316-2318);
-                # segments are lazy plans, nothing materializes
+                # segments are relations, nothing materializes
                 stash[key] = list(ws.segments)
                 ws.segments = []
             elif action == "pop":
@@ -457,7 +534,7 @@ def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> Da
                         f"stash pop failed: no stash with key {key!r} (main.rs:2320-2324)"
                     )
                 for s in stash[key]:
-                    ws.append(_reseq(s, seq))
+                    ws.segments.append(_reseq(ws, s, seq))
                     seq += 1
             elif action == "subtract":
                 if key not in stash:
@@ -466,183 +543,173 @@ def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> Da
                     )
                 slot = stash[key]
                 if slot:
-                    keys = _union([s.df.select("key") for s in slot]).distinct()
-                    ws.map(lambda df: df.join(keys, "key", "left_anti"))
+                    keys = stmt.cte("SELECT DISTINCT key FROM (" + " UNION ALL ".join(s.rows("key") for s in slot) + ")")
+                    ws.map(lambda rel: f"SELECT w.* FROM {rel} w LEFT ANTI JOIN {keys} k ON w.key = k.key")
             else:
                 raise PipelineError(f"unknown stash action {action!r}")
         elif b_type == "replace":
-            seq = _replace_block(block, ws, posts, seq)
+            seq = _replace_block(block, ws, seq)
         elif b_type == "remember_posts":
             pass  # feed-lineage recording (main.rs:2385-2395) — a sink concern
         else:
             raise PipelineError(f"unknown block type {b_type!r}")
 
-    out = ws.limited(FINAL_LIMIT)
-    out = scores.join_onto(out)
-    return out.drop(NOW_COL).orderBy(ORD)
+    hide = f" EXCEPT ({NOW_COL})" if NOW_COL in columns else ""
+    final = f"{scores.joined(ws.limited(FINAL_LIMIT), hide)} ORDER BY {ORD}"
+    ctx.sql = stmt.text(final)
+    return stmt.run(final)
 
 
-def _reseq(s: _Segment, seq: int) -> _Segment:
+def _reseq(ws: _WorkingSet, s: _Segment, seq: int) -> _Segment:
     """Give a stashed segment a fresh block seq. A stamped segment's old
     ``__ord`` becomes the pending order key (re-stamped only if read)."""
     if s.stamped:
-        df = s.df.withColumn(f"{_ORD_HIDDEN}0", F.col(ORD)).drop(ORD)
-        return _Segment(df=df, seq=seq, asc=(True,), bounded=s.bounded)
+        rel = ws.stmt.cte(f"SELECT * EXCEPT ({ORD}), {ORD} AS {_ORD_HIDDEN}0 FROM {s.rel}")
+        return _Segment(rel, seq, asc=(True,), bounded=s.bounded, where=s.where)
     return _dc_replace(s, seq=seq)
 
 
-def _input_block(block, ctx, ws, posts, scores, seq, prepend_seq, now_arg):
+def _input_block(block, ctx, ws, scores, seq, prepend_seq, now):
+    stmt, posts = ws.stmt, ws.posts
     input_type = block.get("inputType", "firehose")
-    order: list[tuple[Column, bool]] = [(F.col("id"), True)]
-    bounded = False
+    order = [("id", True)]
+    rel, where, bounded = posts, None, False
+
+    def window(key, default):
+        return In.window_pred.sql(now, _seconds(block, key, default))
+
     if input_type == "firehose":
-        new = In.input_firehose(posts, now_arg, _seconds(block, "firehoseSeconds", 86400))
+        where = window("firehoseSeconds", 86400)
     elif input_type == "list":
-        new = In.input_list(posts, ctx.resolve_list(block), now_arg, _seconds(block, "historySeconds", 604800))
-    elif input_type == "tags":
-        new = In.input_tags(posts, list(block.get("tags", [])), now_arg, _seconds(block, "historySeconds", 604800))
-    elif input_type == "labels":
-        new = In.input_labels(posts, list(block.get("labels", [])), now_arg, _seconds(block, "historySeconds", 604800))
-    elif input_type == "did":
-        new = In.input_did(
-            posts,
-            block["did"],
-            collection=block.get("collection", "post"),
-            likes=ctx.likes,
-            reposts=ctx.reposts,
+        # lists are small → broadcast semi-join (main.rs:1427-1452)
+        members = ctx.resolve_list(block)
+        first = ident(members.columns[0])
+        rel = (
+            f"(SELECT /*+ BROADCAST(m) */ p.* FROM {posts} p LEFT SEMI JOIN (SELECT DISTINCT {first} AS author_key "
+            f"FROM {stmt.frame(members)}) m ON p.author_key = m.author_key)"
         )
+        where = window("historySeconds", 604800)
+    elif input_type == "tags":
+        where = f"{In.tags_overlap.sql(list(block.get('tags', [])))} AND {window('historySeconds', 604800)}"
+    elif input_type == "labels":
+        where = f"{Fi.has_any_label.sql(list(block.get('labels', [])))} AND {window('historySeconds', 604800)}"
+    elif input_type == "did":
+        rel = stmt.apply(posts, lambda p: In.input_did(
+            p, block["did"], collection=block.get("collection", "post"), likes=ctx.likes, reposts=ctx.reposts
+        ))
     elif input_type == "feed":
         uri = block.get("feedUri")
         if uri not in ctx.feeds:
             raise PipelineError(f"unknown feedUri {uri!r}")
-        new = In.input_feed(posts, ctx.feeds[uri])
-        order = [(F.col("__feed_ord"), True)]
-        seg = _make_segment(new, order, seq)
-        seg = _dc_replace(seg, df=seg.df.drop("__feed_ord"))
-        ws.append(seg)
+        # S5: the skeleton's ids joined against the store in feed order;
+        # ids missing from the store drop out (main.rs:1704-1737)
+        rel = f"(SELECT f.__feed_ord, p.* FROM {stmt.frame(ctx.feeds[uri])} f JOIN {posts} p ON f.id = p.id)"
+        ws.segments.append(ws.segment(rel, [("__feed_ord", True)], seq, drop=["__feed_ord"]))
         return seq + 1, prepend_seq
     elif input_type == "post":
-        new = In.input_post(posts, block.get("postId", block.get("postUri")))
+        where = f"id = {sql_literal(block.get('postId', block.get('postUri')))}"
         # input.post PREPENDS (main.rs:1780-1791): negative block seq
-        ws.segments.insert(0, _make_segment(new, order, prepend_seq, bounded=True))
+        ws.segments.insert(0, ws.segment(posts, order, prepend_seq, where=where, bounded=True))
         return seq, prepend_seq - 1
     elif input_type == "archived":
-        newest_first = not block.get("oldestFirst", False)
-        limit = int(block.get("limit", 1000))
+        # S8: cold archive scan, children pushed into the scan BEFORE the
+        # ≤1000 cap (main.rs:706-974, 1354-1376) — scan+filter+TakeOrdered
+        asc = block.get("oldestFirst", False)
         pred = _archived_children_pred(block.get("children", []))
-        new = In.input_archived(posts, pred, limit, newest_first=newest_first)
-        asc = not newest_first
-        order = [(F.col("ts"), asc), (F.col("id"), asc)]
+        direction = "ASC" if asc else "DESC"
+        limit = min(int(block.get("limit", 1000)), 1000)
+        rel = f"(SELECT * FROM {posts}{f' WHERE {pred}' if pred else ''} ORDER BY ts {direction}, id {direction} LIMIT {limit})"
+        order = [("ts", asc), ("id", asc)]
         bounded = True  # capped at 1000 (main.rs:1369-1371)
     elif input_type in ("custom_likedweighted", "custom_likedbylikers"):
         if ctx.likes is None:
             raise PipelineError(f"{input_type} needs likes edges")
         if input_type == "custom_likedweighted":
-            new = In.input_liked_weighted(
-                ctx.likes, posts, ctx.resolve_list(block), base_like_count=int(block.get("baseLikeCount", 0))
-            )
+            members = ctx.resolve_list(block)
+            base = int(block.get("baseLikeCount", 0))
+            liked = stmt.apply(posts, lambda p: In.input_liked_weighted(ctx.likes, p, members, base_like_count=base))
         else:
-            new = In.input_liked_by_likers(
+            seed = stmt.run(f"SELECT * FROM {ws.data()}")
+            liked = stmt.apply(posts, lambda p: In.input_liked_by_likers(
                 ctx.likes,
-                posts,
-                ws.data(),
+                p,
+                seed,
                 user_score_function=block.get("userScoreFunction", "f1"),
                 score_exponent=float(block.get("scoreExponent", "1.3")),
-            )
+            ))
         seconds = _seconds(block, "historySeconds", 604800)
         if seconds < 604800:
-            new = new.filter(In.window_pred(now_arg, seconds))
-        scores.add(_normalized_batch(new.select("key", "__batch_score"), block))
+            liked = stmt.cte(f"SELECT * FROM {liked} WHERE {In.window_pred.sql(now, seconds)}")
+        scores.add(stmt.cte(f"SELECT key, __batch_score FROM {liked}"), block)
         # S9/S10 REPLACE the working set, sorted by batch score desc
         # (main.rs:1500-1510, 1592-1599)
-        seg = _make_segment(new, [(F.col("__batch_score"), False), (F.col("key"), False)], seq)
-        ws.replace_all(_dc_replace(seg, df=seg.df.drop("__batch_score")))
+        order = [("__batch_score", False), ("key", False)]
+        ws.segments = [ws.segment(liked, order, seq, drop=["__batch_score"])]
         return seq + 1, prepend_seq
     else:
         raise PipelineError(f"unknown inputType {input_type!r}")
-    ws.append(_make_segment(new, order, seq, bounded=bounded))
+    ws.segments.append(ws.segment(rel, order, seq, where=where, bounded=bounded))
     return seq + 1, prepend_seq
 
 
 def _archived_children_pred(children):
     """Nested filters of input.archived (main.rs:784-899), ANDed and pushed
-    into the cold scan BEFORE the limit:
-    - regex with target key `regexType` (same targets as F14)
-    - keep/remove like_count with `min` → like_count >= min
-    - keep/remove videos → video presence
-    - tags child: dead code in the reference (collected, never applied)
-    """
-    pred = None
-
-    def conj(p):
-        nonlocal pred
-        pred = p if pred is None else (pred & p)
-
+    into the cold scan BEFORE the limit: regex with target key `regexType`
+    (same targets as F14), keep/remove like_count with `min` → like_count
+    >= min, keep/remove videos → video presence; a tags child is dead code
+    in the reference (main.rs:883-888: collected, never applied)."""
+    preds = []
     for child in children:
-        c_type = child.get("type")
+        c_type, subject = child.get("type"), child.get("subject")
         if c_type == "regex":
-            conj(
-                Fi.regex_match(
-                    child["value"],
-                    child.get("regexType", "text"),
-                    case_sensitive=child.get("caseSensitive", False),
-                    invert=child.get("invert", False),
-                )
-            )
-        elif c_type in ("keep", "remove"):
-            subject = child.get("subject")
-            if subject == "like_count" and "min" in child:
-                conj(F.col("like_count") >= int(child["min"]))
-            elif subject == "videos":
-                conj(Fi.is_video() if c_type == "keep" else ~Fi.is_video())
-            elif subject == "tags":
-                pass  # dead code in the reference (main.rs:883-888)
-            else:
-                raise PipelineError(f"unsupported archived child subject {subject!r}")
-        else:
+            preds.append(_regex(child, child.get("regexType", "text")))
+        elif c_type not in ("keep", "remove"):
             raise PipelineError(f"unsupported archived child type {c_type!r}")
-    return pred
+        elif subject == "like_count" and "min" in child:
+            preds.append(Fi.count_cmp.sql("like_count", ">=", int(child["min"])))
+        elif subject == "videos":
+            preds.append(_polar(Fi.is_video.sql(), c_type == "keep"))
+        elif subject != "tags":
+            raise PipelineError(f"unsupported archived child subject {subject!r}")
+    return " AND ".join(preds)
 
 
-def _filter_block(block, ctx, ws, scores, now_epoch_expr, seq):
-    b_type = block["type"]
-    if b_type == "regex":
-        pred = Fi.regex_match(
-            block["value"],
-            block.get("target", "text"),
-            case_sensitive=block.get("caseSensitive", False),
-            invert=block.get("invert", False),
-        )
-        ws.map(lambda df: df.filter(pred))
-        return
+def _regex(block, target):
+    return Fi.regex_match.sql(
+        block["value"], target, case_sensitive=block.get("caseSensitive", False), invert=block.get("invert", False)
+    )
 
-    keep = b_type == "keep"
-    subject = block.get("subject")
+
+# item value → the posts a keep/remove item block RETAINS (main.rs:1801-1816;
+# `keep item value=post` retains replies, `repost` is a no-op there)
+_ITEM_KEEPS = {
+    "post": Fi.is_reply.sql(),
+    "reply": f"NOT ({Fi.is_reply.sql()})",
+    "repost": None,
+    "has_labels": f"NOT ({Fi.has_labels.sql()})",
+    "has_no_labels": Fi.has_labels.sql(),
+}
+
+
+def _filter_block(block, ctx, ws, scores, now_epoch, seq):
+    stmt, subject = ws.stmt, block.get("subject")
+    keep = block["type"] == "keep"
     # NOTE: the reference IGNORES keep/remove polarity for item / image_count /
-    # count-comparison / language subjects — both spellings remove matching
-    # posts (main.rs:1796-1902; e.g. `keep item value=post` RETAINS replies).
-    # Polarity is honored only for list / where / videos below.
-    if subject == "item":
+    # count-comparison / language / embed / labels subjects — both spellings
+    # remove matching posts (main.rs:1796-1951). Polarity is honored only for
+    # list / where / videos.
+    if block["type"] == "regex":
+        ws.filter(_regex(block, block.get("target", "text")))
+    elif subject == "item":
         value = block.get("value") or "reply"  # default "reply" (main.rs:1801-1805)
-        if value == "post":
-            ws.map(lambda df: df.filter(Fi.is_reply()))  # remove non-replies (main.rs:1807-1808)
-        elif value == "reply":
-            ws.map(lambda df: df.filter(~Fi.is_reply()))
-        elif value == "repost":
-            pass  # no-op in the reference (main.rs:1811)
-        elif value == "has_labels":
-            ws.map(lambda df: df.filter(~Fi.has_labels()))
-        elif value == "has_no_labels":
-            ws.map(lambda df: df.filter(Fi.has_labels()))
-        else:
+        if value not in _ITEM_KEEPS:
             raise PipelineError(f"unknown item value {value!r}")
-        return
-    if subject == "image_count":
-        value = str(block.get("value") or "0")
-        # remove-matching in both polarities (main.rs:1817-1830)
-        ws.map(lambda df: df.filter(~Fi.image_count_is(value)))
-        return
-    if subject in ("reply_count", "repost_count", "like_count"):
+        if _ITEM_KEEPS[value]:
+            ws.filter(_ITEM_KEEPS[value])
+    elif subject == "image_count":
+        # remove-matching (main.rs:1817-1830)
+        ws.filter(f"NOT ({Fi.image_count_is.sql(str(block.get('value') or '0'))})")
+    elif subject in ("reply_count", "repost_count", "like_count"):
         # default operator "<"; remove-matching: `< v` retains >= v
         # (main.rs:1831-1884); value is required there (unwrap)
         if "value" not in block:
@@ -650,163 +717,171 @@ def _filter_block(block, ctx, ws, scores, now_epoch_expr, seq):
         op = block.get("operator") or "<"
         if op not in ("<", ">", "==", "!="):
             raise PipelineError(f"unsupported {subject} operator {op!r}")
-        ws.map(lambda df: df.filter(~Fi.count_cmp(subject, op, int(block["value"]))))
-        return
-    if subject == "language":
+        ws.filter(f"NOT ({Fi.count_cmp.sql(subject, op, int(block['value']))})")
+    elif subject == "language":
         # key is `language` only, default "en" (main.rs:1885-1902 reads
         # filter["language"]; a `value` key is IGNORED there); default
         # operator "!=": "==" removes posts IN the language, "!=" removes
-        # posts NOT in it
+        # posts NOT in it; other operators: no retain call at all
         op = block.get("operator") or "!="
-        lang = block.get("language") or "en"
-        member = Fi.language_is(lang)
-        if op == "==":
-            ws.map(lambda df: df.filter(~member))
-        elif op == "!=":
-            ws.map(lambda df: df.filter(member))
-        # other operators: no retain call at all (main.rs:1896-1901)
-        return
-    if subject == "list":
-        members = ctx.resolve_list(block)
-        ws.map(lambda df: Fi.in_list(df, members, "author_key", keep=keep))
-        return
-    if subject == "duplicates":
-        # cross-segment order read → materialize the stamp
-        ws.set_materialized(Fi.keep_first_duplicates(ws.materialize(), ["key"]), seq)
-        return
-    if subject == "non_duplicates":
-        ws.set_materialized(Fi.keep_non_duplicates(ws.materialize(), ["key"]), seq)
-        return
-    if subject == "embed":
-        value = block.get("value", "none")
-        # reference REMOVES matching rows in both polarities here
-        # (main.rs:1922-1935: keep/remove both call retain(!pred))
-        kind = {"feed": "feed", "post": "post", "none": "none"}[value]
-        ws.map(lambda df: df.filter(~Fi.embed_kind(kind)))
-        return
-    if subject == "labels":
-        # always REMOVES matching posts regardless of polarity, labels
-        # lowercased first (main.rs:1936-1951)
+        if op in ("==", "!="):
+            ws.filter(_polar(Fi.language_is.sql(block.get("language") or "en"), op == "!="))
+    elif subject == "list":
+        # F7: broadcast semi/anti join on the author (main.rs:1903-1915)
+        members = stmt.frame(ctx.resolve_list(block))
+        ws.map(
+            lambda rel: f"SELECT /*+ BROADCAST(m) */ w.* FROM {rel} w LEFT {'SEMI' if keep else 'ANTI'} JOIN "
+            f"(SELECT DISTINCT author_key FROM {members}) m ON w.author_key = m.author_key"
+        )
+    elif subject in ("duplicates", "non_duplicates"):
+        # cross-segment order read → materialize the stamp; F8/F9 keep the
+        # first occurrence / only the 2nd+ (main.rs:1916-1921)
+        cond = "= 1" if subject == "duplicates" else "> 1"
+        ws.set_materialized(stmt.cte(_ranked(ws.materialize(), ["key"], cond)), seq)
+    elif subject == "embed":
+        # remove-matching (main.rs:1922-1935: keep/remove both retain(!pred))
+        kind = {"feed": "feed", "post": "post", "none": "none"}[block.get("value", "none")]
+        ws.filter(f"NOT ({Fi.embed_kind.sql(kind)})")
+    elif subject == "labels":
+        # remove-matching, labels lowercased first (main.rs:1936-1951)
         wanted = [str(x).lower() for x in block.get("labels", [])]
-        ws.map(lambda df: df.filter(~Fi.has_any_label(wanted)))
-        return
-    if subject == "where":
+        ws.filter(f"NOT ({Fi.has_any_label.sql(wanted)})")
+    elif subject == "where":
         pred, tier, why = translate_script_with_tier(
-            block["value"],
-            now_epoch_expr=now_epoch_expr,
-            allow_udf=ctx.allow_udf_scripts,
-            boolean=True,
+            block["value"], now_epoch_expr=now_epoch, allow_udf=ctx.allow_udf_scripts, boolean=True
         )
         ctx.note_script_tier(block, "where", tier, why)
-        ws.map(lambda df: Fi.apply_filter(scores.join_onto(df), pred, keep=keep).drop("score"))
-        return
-    if subject == "videos":
-        ws.map(lambda df: Fi.apply_filter(df, Fi.is_video(), keep=keep))
-        return
-    raise PipelineError(f"unknown filter subject {subject!r}")
+        if tier == "sql" and not _reads_score(pred):
+            ws.filter(_polar(pred, keep))
+        elif tier == "sql":
+            cond = _polar(pred, keep)
+            ws.map(lambda rel: f"SELECT * EXCEPT (score) FROM ({scores.joined(rel)}) WHERE {cond}")
+        else:
+            def udf_filter(df):
+                return Fi.apply_filter(df, pred, keep=keep).drop("score")
+
+            ws.map(lambda rel: f"SELECT * FROM {stmt.apply(stmt.cte(scores.joined(rel)), udf_filter)}")
+    elif subject == "videos":
+        ws.filter(_polar(Fi.is_video.sql(), keep))
+    else:
+        raise PipelineError(f"unknown filter subject {subject!r}")
 
 
-def _score_block(block, ctx, ws, scores, now_epoch_expr, now_us):
+def _reads_score(script_sql: str) -> bool:
+    """Only a script that reads `score` needs the score map joined on."""
+    return re.search(r"\bscore\b", script_sql) is not None
+
+
+def _score_block(block, ctx, ws, scores, now_epoch, now):
     if block.get("scoreType", "add") != "add":
         raise PipelineError("only scoreType=add exists (main.rs:2151-2162)")
+    stmt = ws.stmt
     cur = ws.data()
     if "value" in block:
-        col, tier, why = translate_script_with_tier(
-            block["value"], now_epoch_expr=now_epoch_expr, allow_udf=ctx.allow_udf_scripts
+        expr, tier, why = translate_script_with_tier(
+            block["value"], now_epoch_expr=now_epoch, allow_udf=ctx.allow_udf_scripts
         )
         ctx.note_script_tier(block, "score", tier, why)
-        batch = scores.join_onto(cur).withColumn("__batch_score", col.cast("double"))
+        if tier == "sql":
+            rows = f"({scores.joined(cur)})" if _reads_score(expr) else cur
+            batch = stmt.cte(f"SELECT key, CAST({expr} AS DOUBLE) AS __batch_score FROM {rows}")
+        else:
+            batch = stmt.apply(
+                stmt.cte(scores.joined(cur)),
+                lambda df: df.select("key", expr.cast("double").alias("__batch_score")),
+            )
     else:
         from_ = block.get("from", "likes")
         if from_ in _SCORE_COUNTS:
-            batch = cur.withColumn("__batch_score", F.col(_SCORE_COUNTS[from_]).cast("double"))
+            score = f"CAST({_SCORE_COUNTS[from_]} AS DOUBLE)"
         elif from_ == "hn":
-            gravity = float(block.get("gravity", "1.8"))
-            age_us = now_us - F.unix_micros(F.col("ts"))
-            batch = cur.withColumn("__batch_score", hn_score_from_micros(F.col("like_count"), age_us, gravity))
+            score = _hn(block, now)
         elif from_ == "created_at":
             # main.rs:2201-2208: score = epoch millis / 1000 (integer division)
-            batch = cur.withColumn("__batch_score", F.floor(F.unix_millis(F.col("ts")) / 1000).cast("double"))
+            score = "CAST(floor(unix_millis(ts) / 1000) AS DOUBLE)"
         else:
             raise PipelineError(f"unknown score from {from_!r}")
-    scores.add(_normalized_batch(batch.select("key", "__batch_score"), block))
+        batch = stmt.cte(f"SELECT key, {score} AS __batch_score FROM {cur}")
+    scores.add(batch, block)
 
 
-def _sort_block(block, ctx, ws, scores, seq, now_us, fuse_n=None):
+def _hn(block, now):
+    return hn_score_from_micros.sql("like_count", f"unix_micros({now}) - unix_micros(ts)", float(block.get("gravity", "1.8")))
+
+
+def _sort_block(block, ctx, ws, scores, seq, now, fuse_n=None):
     """A sort discards ALL pending (and stamped) order for free — the
-    segments' data is unioned unordered and re-sorted. Tiebreak is `id`.
-    Rows sharing an id are clones of the same store row, so among them
-    the order does not matter; but rows that tie on the sort key with
-    DIFFERENT ids come out by id, where Rust's stable sort keeps their
-    previous working-set order — an observable deviation (module
-    docstring, "Known deviation")."""
+    segments' data is unioned unordered and re-sorted, ties broken by `id`
+    (module docstring, "Known deviation")."""
+    stmt = ws.stmt
     sort_type = block.get("sortType", "created_at")
-    asc = block.get("sortDirection", block.get("direction", "desc")) == "asc"
+    direction = "ASC" if block.get("sortDirection", block.get("direction", "desc")) == "asc" else "DESC"
 
-    def direction(c):
-        return F.col(c).asc() if asc else F.col(c).desc()
-
-    def finish(df, keys, drop=None):
-        if fuse_n is not None:
-            out = So.top_n_with_ord(df, keys, fuse_n, seq)
-        else:
-            out = stamp_ord(df, keys, seq)
-        if drop is not None:
-            out = out.drop(drop)
-        ws.set_materialized(out, seq, bounded=fuse_n is not None)
+    def finish(rows, keys, extra=()):
+        rel = f"({rows}{f' ORDER BY {keys} LIMIT {fuse_n}' if fuse_n is not None else ''})"
+        body = _stamp(rel, keys, seq, bounded=fuse_n is not None, drop=list(extra))
+        ws.set_materialized(stmt.cte(body), seq, cap=fuse_n)
 
     if sort_type == "score":
         # join global scores (inner: unscored drop — main.rs:2286-2307),
         # dedup by key, sort by score. Keep-FIRST-occurrence dedup needs no
         # order here: same-key rows are identical clones (see docstring), so
         # any per-key representative is the observable result.
-        scored = scores.inner_scored(ws.data()).dropDuplicates(["key"])
+        firsts = ", ".join(f"first({c}) AS {c}" for c in map(ident, [*ws.columns, "score"]) if c != "`key`")
+        scored = (
+            f"SELECT w.*, s.score FROM {ws.data()} w JOIN {scores.rel} s ON w.key = s.key"
+            if scores.rel
+            else f"SELECT *, 0.0D AS score FROM {ws.data()} LIMIT 0"
+        )
+        scored = f"SELECT key, {firsts} FROM ({scored}) GROUP BY key"
         # ties keep descending key order (BTreeMap .iter().rev() + stable sort)
-        finish(scored, [direction("score"), F.col("key").desc()], "score")
+        finish(scored, f"score {direction}, key DESC", ["score"])
         return
 
     cur = ws.data()
-    tie = F.col("id")
-    if sort_type == "created_at":
-        finish(cur, [direction("ts"), tie])
+    if sort_type == "created_at" or sort_type in _SORT_COUNTS:
+        finish(f"SELECT * FROM {cur}", f"{_SORT_COUNTS.get(sort_type, 'ts')} {direction}, id")
     elif sort_type == "hn":
-        gravity = float(block.get("gravity", "1.8"))
-        age_us = now_us - F.unix_micros(F.col("ts"))
-        cur = cur.withColumn("__hn", hn_score_from_micros(F.col("like_count"), age_us, gravity))
-        finish(cur, [direction("__hn"), tie], "__hn")
-    elif sort_type in _SORT_COUNTS:
-        finish(cur, [direction(_SORT_COUNTS[sort_type]), tie])
+        finish(f"SELECT *, {_hn(block, now)} AS __hn FROM {cur}", f"__hn {direction}, id", ["__hn"])
     elif sort_type == "random":
-        cur = cur.withColumn("__r", F.rand(ctx.random_seed) if ctx.random_seed is not None else F.rand())
-        finish(cur, [F.col("__r"), tie], "__r")
+        rand = f"rand({int(ctx.random_seed)})" if ctx.random_seed is not None else "rand()"
+        finish(f"SELECT *, {rand} AS __r FROM {cur}", "__r, id", ["__r"])
     else:
         raise PipelineError(f"unknown sortType {sort_type!r}")
 
 
 def _limit_block(block, ws, seq):
     if block.get("limitType") == "posts_per_user":
+        # group-wise top-N in current order (main.rs:2349-2373): Spark's
+        # WindowGroupLimit turns the rank filter into a partial top-N
         n = int(block.get("count", 3 if "count" in block else 5))
-        ws.set_materialized(So.posts_per_user(ws.materialize(), n), seq)
+        ws.set_materialized(ws.stmt.cte(_ranked(ws.materialize(), ["author_key"], f"<= {n}")), seq)
     else:
         n = int(block.get("count", 100))
-        ws.set_materialized(ws.limited(n), seq, bounded=True)
+        ws.set_materialized(ws.limited(n), seq, cap=n)
 
 
-def _replace_block(block, ws, posts, seq):
+def _replace_block(block, ws, seq):
+    stmt = ws.stmt
     target = block.get("with", "parent")
     keep_missing = block.get("keepItemsWithMissingTarget", True)
+    posts = stmt.run(f"SELECT * FROM {ws.posts}")
     # forward targets replace each row IN PLACE (main.rs:2402-2440) — the
     # pending order survives because its key VALUES are pinned in hidden
     # columns that pass through the join untouched
     if target in _FORWARD_REPLACE:
         ref, strip = _FORWARD_REPLACE[target]
-        ws.map(lambda df: J.replace_with_ref(df, posts, ref, keep_missing_ref=keep_missing, strip_prefix=strip))
+
+        def forward(df):
+            return J.replace_with_ref(df, posts, ref, keep_missing_ref=keep_missing, strip_prefix=strip)
+
+        ws.map(lambda rel: f"SELECT * FROM {stmt.apply(rel, forward)}")
         return seq
     # inverse targets REBUILD the working set from the store (main.rs:2441-2488,
     # iteration over the id-ordered map) → fresh id order
     if target not in _INVERSE_REPLACE:
         raise PipelineError(f"unknown replace target {target!r}")
     ref, strip = _INVERSE_REPLACE[target]
-    new = J.replace_with_inverse(ws.data(), posts, ref, strip_prefix=strip)
-    ws.replace_all(_make_segment(new, [(F.col("id"), True)], seq))
+    new = stmt.apply(ws.data(), lambda cur: J.replace_with_inverse(cur, posts, ref, strip_prefix=strip))
+    ws.segments = [ws.segment(new, [("id", True)], seq)]
     return seq + 1

@@ -89,7 +89,7 @@ def translate_profile_pipeline(blocks: list[dict[str, Any]], ctx: ProfileContext
                     block["value"],
                     "text",
                     case_sensitive=block.get("caseSensitive", False),
-                    columns={"text": F.col(name)},
+                    columns={"text": name},
                 )
                 pred = this if pred is None else (pred | this)
             if block.get("invert", False):

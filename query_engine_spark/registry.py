@@ -565,8 +565,8 @@ def f13_videos_notnull(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f14_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    keep = Fi.regex_match(r"\b(spark|merge)\b", "text", columns={"text": F.col("text")})
-    drop = Fi.regex_match(r"^src1$", "text", invert=True, columns={"text": F.col("source")})
+    keep = Fi.regex_match(r"\b(spark|merge)\b", "text", columns={"text": "text"})
+    drop = Fi.regex_match(r"^src1$", "text", invert=True, columns={"text": "source"})
     return docs.filter(keep).filter(drop).select("doc_id")
 
 
@@ -601,7 +601,7 @@ FROM n1 JOIN n2 USING (id)
 def f15_profile_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     has_avatar = F.col("c_acctbal") > 0
-    name_re = Fi.regex_match(r"customer#0*[0-9]*[02468]$", "text", columns={"text": F.col("c_name")})
+    name_re = Fi.regex_match(r"customer#0*[0-9]*[02468]$", "text", columns={"text": "c_name"})
     return cust.filter(has_avatar & name_re).select("c_custkey", "c_name")
 
 
@@ -612,8 +612,8 @@ def f15_profile_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sc_hn_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = In.with_now(posts_view(spark, sf_dir))
-    age_us = F.unix_micros(In.NOW_COL) - F.unix_micros("ts")
-    s1 = hn_score_from_micros(F.col("like_count"), age_us, 1.8)
+    age_us = f"unix_micros({In.NOW_COL}) - unix_micros(ts)"
+    s1 = hn_score_from_micros("like_count", age_us, 1.8)
     posts = posts.withColumn("__s1", s1).withColumn("__s2", F.col("like_count").cast("double"))
     # both batch maxes in ONE broadcast scalar aggregate (no global window)
     mxs = posts.agg(F.max("__s1").alias("__mx1"), F.max("__s2").alias("__mx2"))
@@ -738,8 +738,8 @@ def o7_posts_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def o2_sort_hn(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = In.with_now(posts_view(spark, sf_dir))
-    age_us = F.unix_micros(In.NOW_COL) - F.unix_micros("ts")
-    hn = hn_score_from_micros(F.col("like_count"), age_us, 1.8)
+    age_us = f"unix_micros({In.NOW_COL}) - unix_micros(ts)"
+    hn = hn_score_from_micros("like_count", age_us, 1.8)
     posts = posts.withColumn("__hn", hn)
     top = So.top_n_with_ord(posts, [F.col("__hn").desc(), F.col("id").desc()], 50, 0)
     return top.select(F.col(ORD).alias("ord"), "id", F.round("__hn", 6).alias("hn"))

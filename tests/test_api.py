@@ -290,6 +290,38 @@ def test_http_short_body_gets_400_after_read_timeout(monkeypatch):
         server.stop()
 
 
+def test_http_handler_threads_are_bounded(monkeypatch):
+    """Idle connections beyond MAX_HANDLER_THREADS wait in the listen
+    backlog instead of each getting a thread, and the server still answers
+    once they time out. No Spark."""
+    import socket
+    import threading
+    import time
+
+    from query_engine_spark import api
+
+    monkeypatch.setattr(api, "READ_TIMEOUT_SECONDS", 0.5)
+    server = FeedServer(None).start()
+
+    def handlers():
+        return sum("process_request_thread" in t.name for t in threading.enumerate())
+
+    try:
+        host, port = server.address.removeprefix("http://").split(":")
+        idle = [socket.create_connection((host, int(port)), timeout=5) for _ in range(api.MAX_HANDLER_THREADS + 3)]
+        peak = 0
+        for _ in range(20):
+            peak = max(peak, handlers())
+            time.sleep(0.05)
+        assert 0 < peak <= api.MAX_HANDLER_THREADS
+        with urllib.request.urlopen(server.address + "/health", timeout=10) as r:
+            assert r.status == 200
+        for sock in idle:
+            sock.close()
+    finally:
+        server.stop()
+
+
 def test_fetched_feed_skeleton_roundtrip(spark, posts):
     """S5 end-to-end through the HTTP fetch adapter: recorded feed-skeleton
     fixture → fetch_feed_skeleton → PipelineContext.feeds → input.feed block
@@ -349,6 +381,10 @@ def test_explain_feed_pipeline_no_execution(spark, posts):
     assert isinstance(s["exchanges"], int)
     # sort+limit must have fused: TakeOrderedAndProject in the plan text
     assert "TakeOrderedAndProject" in out["plan"]
+    # the compiled statement runs as it is shown, over the same posts
+    assert "{posts}" in out["sql"]
+    ran = spark.sql(out["sql"], posts=posts)
+    assert [r["id"] for r in ran.collect()] == ["p0006", "p0003", "p0001"]
 
 
 def test_explain_curation_pipeline_no_execution(spark):

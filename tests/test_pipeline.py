@@ -203,24 +203,27 @@ def test_duplicates_block_keeps_first_across_segments(spark, posts):
     assert run(spark, posts, blocks) == [1, 2, 3, 7, 8]
 
 
-def test_three_score_blocks_fold_into_one_exchange(spark, posts):
+def test_three_score_blocks_fold_into_one_exchange(spark, posts, tmp_path):
     """The score map (post_score_global) must resolve in ONE key-partitioned
     Exchange regardless of the number of score blocks — hash(key) clusters
     (key, batch) too, so both the per-(key,batch) max and the per-key sum
-    are partition-local (round 2 chained a full_outer join per block)."""
+    are partition-local (round 2 chained a full_outer join per block).
+    The fixture is read back from parquet, so the scan has size statistics
+    as a store window does and the final score join can broadcast."""
     import re
 
-    from query_engine_spark.plans.blocks import _ScoreState
-    from pyspark.sql import functions as F
-
-    s = _ScoreState(spark)
-    for i in range(3):
-        s.add(posts.select("key", (F.col("like_count") * (i + 1.0)).alias("__batch_score")))
-    plan = s.df._jdf.queryExecution().executedPlan().toString()
+    posts.write.parquet(str(tmp_path / "posts"))
+    posts = spark.read.parquet(str(tmp_path / "posts"))
+    blocks = [{"type": "input", "inputType": "firehose", "firehoseSeconds": 7 * 86400}] + [
+        {"type": "score", "scoreType": "add", "value": f"likeCount * {i + 1.0}", "normalize": False}
+        for i in range(3)
+    ]
+    out = translate_pipeline(blocks, PipelineContext(spark=spark, posts=posts, now=NOW))
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
     assert "full_outer" not in plan.lower()
     # semantics: batches sum per key (per-batch per-key overwrite first)
-    row = s.df.filter(F.col("key") == 6).collect()[0]
+    row = out.filter("key = 6").collect()[0]
     assert row["score"] == 100.0 * (1 + 2 + 3)
 
 

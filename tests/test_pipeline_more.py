@@ -241,3 +241,26 @@ def test_stash_pop_clones_and_missing_key_errors(spark, posts):
                 {"type": "input", "inputType": "firehose"},
                 {"type": "stash", "action": action, "key": "nope"},
             ])
+
+
+def test_request_strings_reach_spark_as_values(spark, posts):
+    """A regex value and a where-script string literal holding a quote, a
+    backslash and SQL comment markers match as values: no parse error, and
+    the same feed as the hand-built rlike / filter over the fixture."""
+    from pyspark.sql import functions as F
+
+    from query_engine_spark.datamodel import POST_SCHEMA, normalize_posts
+    from tests.conftest import POSTS_FIXTURE, _post
+
+    odd = "it's \\ -- */ {x}"
+    rows = POSTS_FIXTURE + [_post(9, text=f"say {odd} now", langs=[odd]), _post(10, text="it's -- */")]
+    odd_posts = normalize_posts(spark.createDataFrame(rows, schema=POST_SCHEMA))
+    week = {"type": "input", "inputType": "firehose", **WEEK}
+
+    pattern = "it's \\\\ -- \\*/"
+    want = sorted(r["key"] for r in odd_posts.filter(F.col("text").rlike("(?i)" + pattern)).collect())
+    assert run(spark, odd_posts, [week, {"type": "regex", "value": pattern}]) == want == [9]
+
+    script = 'lang == "' + odd.replace("\\", "\\\\") + '"'
+    want = sorted(r["key"] for r in odd_posts.filter(F.col("langs")[0] == odd).collect())
+    assert run(spark, odd_posts, [week, {"type": "keep", "subject": "where", "value": script}]) == want == [9]

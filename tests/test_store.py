@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import gc
 import re
 
 import pytest
@@ -300,3 +301,48 @@ def test_served_request_plans_no_scan_and_no_now_join(spark, feed_store):
         # the in-plan now: max(ts) broadcast into a nested-loop cross join
         assert bool(re.search(r"functions=\[max\(ts#", plan)) != served
         assert bool(re.search(r"BroadcastNestedLoopJoin[^\n]*__qe_now", plan)) != served
+
+
+def test_snapshot_request_joins_side_inputs_of_the_caller_session(spark, feed_store):
+    """The statement runs on the snapshot's serving session; a list built on
+    the caller's session still joins it."""
+    store, newest = feed_store
+    snapshot = store.serving_view(newest)
+    authors = sorted(r["author_key"] for r in snapshot.select("author_key").distinct().limit(3).collect())
+    members = spark.createDataFrame([(a,) for a in authors], "author_key long")
+    blocks = [inputs.FIREHOSE, {"type": "keep", "subject": "list", "listUri": "at://list"}]
+    ctx = PipelineContext(spark=spark, posts=snapshot, now=None, lists={"at://list": members})
+    got = {r["author_key"] for r in translate_pipeline(blocks, ctx).collect()}
+    base = translate_pipeline([inputs.FIREHOSE], PipelineContext(spark=spark, posts=snapshot, now=None))
+    assert got == {r["author_key"] for r in base.collect()} & set(authors) != set()
+
+
+def test_feed_requests_translate_in_few_py4j_calls(spark, feed_store, monkeypatch):
+    """Each request compiles to one statement: translating flagship over a
+    published snapshot costs at most 20 py4j round trips and every shape
+    at most 40, and translation starts no Spark job."""
+    from py4j.clientserver import ClientServerConnection
+
+    store, newest = feed_store
+    snapshot = store.serving_view(newest)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job = dag.nextJobId()
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        # a proxy garbage-collected meanwhile sends a memory command: not ours
+        calls.append(not command.startswith("m\n"))
+        return send(self, command, *args, **kwargs)
+
+    counts = {}
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    for r in _shape_requests():
+        gc.collect()
+        calls.clear()
+        translate_pipeline(r["blocks"], PipelineContext(spark=spark, posts=snapshot, now=None))
+        counts[r["key"]] = sum(calls)
+    monkeypatch.undo()
+    assert counts["flagship#0"] <= 20, counts
+    assert max(counts.values()) <= 40, counts
+    assert dag.nextJobId() == first_job
