@@ -20,6 +20,7 @@ from __future__ import annotations
 import dataclasses
 import datetime as _dt
 import http.server
+import io
 import json
 import threading
 import time
@@ -29,7 +30,7 @@ from pyspark.sql import functions as F
 
 from query_engine_spark.functions.ids import key_to_did_col, post_id_to_uri_col
 from query_engine_spark.operators.ordering import ORD
-from query_engine_spark.plans.blocks import PipelineContext, translate_pipeline
+from query_engine_spark.plans.blocks import PipelineContext, compile_pipeline, translate_pipeline
 from query_engine_spark.plans.profiles import ProfileContext, translate_profile_pipeline
 from query_engine_spark.operators.aggregates import trending_tags
 
@@ -43,9 +44,10 @@ __all__ = [
 ]
 
 QUERY_TIMEOUT_SECONDS = 30  # main.rs:1182
-# socket timeout of a FeedServer connection: a client that declares more
-# Content-Length than it sends gets a 400 after this long instead of holding
-# a handler thread in the body read
+# time a FeedServer connection has to send its whole request: a client that
+# declares more Content-Length than it sends, or trickles its request a byte
+# at a time, gets a 400 (or is dropped) after this long instead of holding a
+# handler thread in the read
 READ_TIMEOUT_SECONDS = 5
 # most FeedServer handler threads at once (one per open connection); later
 # connections wait in the listen backlog until a handler finishes
@@ -195,16 +197,47 @@ def record_feed_links(
     df.write.mode("append").parquet(store_path)
 
 
+class _DeadlineReader(io.RawIOBase):
+    """A connection's reads under one deadline for the whole request, each
+    recv waiting only for the time left."""
+
+    def __init__(self, sock, seconds: float):
+        self._sock = sock
+        self._seconds = seconds
+        self._deadline = time.monotonic() + seconds
+
+    def readable(self):
+        return True
+
+    def readinto(self, buf):
+        left = self._deadline - time.monotonic()
+        if left <= 0:
+            raise TimeoutError("request not read in time")
+        self._sock.settimeout(left)
+        try:
+            return self._sock.recv_into(buf)
+        finally:
+            self._sock.settimeout(self._seconds)  # for the response writes
+
+
 class _BoundedHTTPServer(http.server.ThreadingHTTPServer):
     """ThreadingHTTPServer with at most MAX_HANDLER_THREADS handler threads:
-    the accept loop waits for a free slot before it starts the next one."""
+    the accept loop waits for a free slot before it starts the next one,
+    and stops waiting when the server shuts down."""
 
     def server_activate(self):
         self._slots = threading.BoundedSemaphore(MAX_HANDLER_THREADS)
+        self._closing = threading.Event()
         super().server_activate()
 
+    def shutdown(self):
+        self._closing.set()
+        super().shutdown()
+
     def process_request(self, request, client_address):
-        self._slots.acquire()
+        while not self._slots.acquire(timeout=0.1):
+            if self._closing.is_set():
+                return self.shutdown_request(request)
         try:
             super().process_request(request, client_address)
         except BaseException:
@@ -238,6 +271,11 @@ class FeedServer:
 
         class Handler(http.server.BaseHTTPRequestHandler):
             timeout = READ_TIMEOUT_SECONDS
+
+            def setup(self):
+                super().setup()
+                self.rfile.close()
+                self.rfile = io.BufferedReader(_DeadlineReader(self.connection, self.timeout))
 
             def log_message(self, *args):  # quiet
                 pass
@@ -350,9 +388,8 @@ def explain_feed_pipeline(ctx: "PipelineContext", blocks: list[dict[str, Any]]) 
     pipeline would be slow before it runs against the full corpus — and
     the compiled statement as ``sql`` (``{posts}`` names the posts frame).
     Pure plan analysis: no action is triggered."""
-    ctx = dataclasses.replace(ctx, script_tiers={})
-    summary = _plan_summary(translate_pipeline(blocks, ctx))
-    return {**summary, "sql": ctx.sql}
+    stmt, final = compile_pipeline(blocks, ctx)
+    return {**_plan_summary(stmt.run(final)), "sql": stmt.text(final)}
 
 
 def explain_curation_pipeline(docs, spec: list[dict[str, Any]]) -> dict[str, Any]:

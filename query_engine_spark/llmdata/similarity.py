@@ -1145,7 +1145,7 @@ def rrf_fuse(
     full-outer join and fused top-k are tiny regardless of corpus size —
     the heavy lifting happened inside the retrieval operators.
     """
-    from query_engine_spark.operators.ordering import dense_rank_over
+    from query_engine_spark.operators.ordering import stamp_ord
 
     ra = a.select(F.col(id_col).alias("id"), F.col(rank_col).cast("long").alias("ra"))
     rb = b.select(F.col(id_col).alias("id"), F.col(rank_col).cast("long").alias("rb"))
@@ -1155,7 +1155,7 @@ def rrf_fuse(
     )
     scored = j.select("id", score.alias("score_q"))
     limited = scored.orderBy(F.col("score_q").desc(), "id").limit(top)
-    ranked = dense_rank_over(limited, [F.col("score_q").desc(), F.col("id")], "rank", bounded=True)
+    ranked = stamp_ord(limited, ["score_q DESC", "id"], bounded=True, out="rank")
     return ranked.select(F.col("id").alias(id_col), "score_q", "rank")
 
 

@@ -275,11 +275,11 @@ def _bm25_score(tf: DataFrame, stats: DataFrame, *, k1: float, b: float, top: in
         .groupBy("id")
         .agg(F.round(F.sum("term_score"), 6).alias("score"))
     )
-    from query_engine_spark.operators.ordering import dense_rank_over
+    from query_engine_spark.operators.ordering import stamp_ord
 
     # dense rank over the top-N survivors only (no unpartitioned window)
     limited = scored.orderBy(F.col("score").desc(), F.col("id")).limit(top)
-    ranked = dense_rank_over(limited, [F.col("score").desc(), F.col("id")], "rank", bounded=True)
+    ranked = stamp_ord(limited, ["score DESC", "id"], bounded=True, out="rank")
     return ranked.select(F.col("id").alias(id_col), "score", "rank")
 
 
@@ -1117,7 +1117,7 @@ def bpe_pair_counts(
     (≤ len(word) rows per vocab entry), a pair hash-agg, and a fused
     top-k; no window over unbounded data.
     """
-    from query_engine_spark.operators.ordering import dense_rank_over
+    from query_engine_spark.operators.ordering import stamp_ord
 
     toks = df.select(F.explode(_tokens(F.col(text_col))).alias("w")).filter(
         F.col("w") != ""
@@ -1138,9 +1138,7 @@ def bpe_pair_counts(
     )
     pc = pairs.groupBy("l", "r").agg(F.sum("cnt").alias("cnt"))
     limited = pc.orderBy(F.col("cnt").desc(), "l", "r").limit(top)
-    ranked = dense_rank_over(
-        limited, [F.col("cnt").desc(), F.col("l"), F.col("r")], "rank", bounded=True
-    )
+    ranked = stamp_ord(limited, ["cnt DESC", "l", "r"], bounded=True, out="rank")
     return ranked.select("l", "r", "cnt", "rank")
 
 
@@ -1359,17 +1357,16 @@ def weighted_sample(
     at any scale this is a map-side-combining heap merge, never a global
     sort. Returns the sampled rows + `sample_rank` (1 = first drawn).
     """
-    from query_engine_spark.operators.ordering import dense_rank_over
+    from query_engine_spark.operators.ordering import stamp_ord
     from query_engine_spark.operators.sketches import md5_hash60
+    from query_engine_spark.operators.sql import ident
 
     h = md5_hash60(F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string")))
     u = F.greatest(h, F.lit(1)).cast("double") / F.lit(float(1 << 60))
     key = F.log(u) / F.col(weight_col)
     keyed = df.filter(F.col(weight_col) > 0).withColumn("__key", key)
     limited = keyed.orderBy(F.col("__key").desc(), F.col(id_col)).limit(k)
-    ranked = dense_rank_over(
-        limited, [F.col("__key").desc(), F.col(id_col)], "sample_rank", bounded=True
-    )
+    ranked = stamp_ord(limited, ["__key DESC", ident(id_col)], bounded=True, out="sample_rank")
     return ranked.drop("__key")
 
 
@@ -1839,12 +1836,12 @@ def top_terms(
     explode → one hash-keyed aggregate (map-side partial) → fused top-k
     (TakeOrderedAndProject) → dense rank over the k survivors only.
     """
-    from query_engine_spark.operators.ordering import dense_rank_over
+    from query_engine_spark.operators.ordering import stamp_ord
 
     toks = df.select(F.explode(_tokens(F.col(text_col))).alias("term")).filter(F.col("term") != "")
     counts = toks.groupBy("term").agg(F.count(F.lit(1)).alias("cnt")).filter(F.col("cnt") >= min_count)
     limited = counts.orderBy(F.col("cnt").desc(), F.col("term")).limit(k)
-    return dense_rank_over(limited, [F.col("cnt").desc(), F.col("term")], "rank", bounded=True).select(
+    return stamp_ord(limited, ["cnt DESC", "term"], bounded=True, out="rank").select(
         "term", "cnt", "rank"
     )
 

@@ -20,7 +20,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from query_engine_spark.operators.ordering import ORD
-from query_engine_spark.operators.sql import sql_column, sql_literal
+from query_engine_spark.operators.sql import on_frame, sql_column, sql_literal
 
 __all__ = [
     "apply_filter",
@@ -30,7 +30,8 @@ __all__ = [
     "count_cmp",
     "language_is",
     "in_list",
-    "occurrence",
+    "occurrences_sql",
+    "keep_occurrences",
     "keep_first_duplicates",
     "keep_non_duplicates",
     "embed_kind",
@@ -94,22 +95,23 @@ def in_list(df: DataFrame, list_df: DataFrame, on: str, *, keep: bool = True) ->
 # — no global sort. Pass `order_by` (SQL sort items) when the working-set
 # order is expressible from natural columns (skips the global __ord stamp
 # entirely, the scalable path); default uses the __ord convention.
-@sql_column
-def occurrence(key_cols: Sequence[str], order_by: Sequence[str] = (ORD,)) -> str:
-    return f"row_number() OVER (PARTITION BY {', '.join(key_cols)} ORDER BY {', '.join(order_by)})"
+def occurrences_sql(rel: str, key_cols: Sequence[str], cond: str, order_by: Sequence[str] = (ORD,)) -> str:
+    """The rows of relation `rel` whose occurrence rank within `key_cols`,
+    in `order_by`, meets `cond` (``"= 1"``, ``"> 1"``, ``"<= 3"``)."""
+    rank = f"row_number() OVER (PARTITION BY {', '.join(key_cols)} ORDER BY {', '.join(order_by)})"
+    return f"SELECT * EXCEPT (__occ) FROM (SELECT *, {rank} AS __occ FROM {rel}) WHERE __occ {cond}"
 
 
-def _occurrences(df: DataFrame, key_cols: Sequence[str], order_by: Sequence[str] | None, cond: str) -> DataFrame:
-    rank = occurrence(key_cols, order_by or (ORD,))
-    return df.withColumn("__occ", rank).filter(f"__occ {cond}").drop("__occ")
+def keep_occurrences(df: DataFrame, key_cols: Sequence[str], cond: str, order_by: Sequence[str] | None = None) -> DataFrame:
+    return on_frame(df, occurrences_sql("{rel}", key_cols, cond, order_by or (ORD,)))
 
 
 def keep_first_duplicates(df: DataFrame, key_cols: Sequence[str], order_by: Sequence[str] | None = None) -> DataFrame:
-    return _occurrences(df, key_cols, order_by, "= 1")
+    return keep_occurrences(df, key_cols, "= 1", order_by)
 
 
 def keep_non_duplicates(df: DataFrame, key_cols: Sequence[str], order_by: Sequence[str] | None = None) -> DataFrame:
-    return _occurrences(df, key_cols, order_by, "> 1")
+    return keep_occurrences(df, key_cols, "> 1", order_by)
 
 
 # F10 — embed kind on the `record` ref: none / feed… / post… (main.rs:1922-1935)

@@ -21,11 +21,12 @@ from pyspark.sql.types import TimestampType
 
 from query_engine_spark.operators.filters import has_any_label, is_reply
 from query_engine_spark.operators.scoring import weight_fn
-from query_engine_spark.operators.sql import sql_column, sql_literal
+from query_engine_spark.operators.sql import on_frame, sql_column, sql_literal
 
 __all__ = [
     "NOW_COL",
     "with_now",
+    "with_now_sql",
     "now_sql",
     "window_pred",
     "tags_overlap",
@@ -53,9 +54,12 @@ def with_now(posts: DataFrame, ts: str = "ts") -> DataFrame:
     column comes from a broadcast one-row crossJoin (the SC5
     broadcast-scalar pattern), which Spark re-plans with every query that
     reads it: one extra shuffle stage (the max) and one broadcast stage."""
-    if NOW_COL in posts.columns:
-        return posts
-    return posts.crossJoin(F.broadcast(posts.agg(F.max(ts).alias(NOW_COL))))
+    return posts if NOW_COL in posts.columns else on_frame(posts, with_now_sql("{rel}", ts))
+
+
+def with_now_sql(rel: str, ts: str = "ts") -> str:
+    """The query that attaches NOW_COL to relation `rel` (`with_now`)."""
+    return f"SELECT /*+ BROADCAST(n) */ * FROM {rel} CROSS JOIN (SELECT max({ts}) AS {NOW_COL} FROM {rel}) n"
 
 
 def now_sql(now: _dt.datetime | None) -> str:

@@ -3,8 +3,9 @@
 Each expression an operator contributes to a feed request is written once,
 as Spark SQL text: the feed compiler (plans/blocks.py) splices it into its
 one statement, and DataFrame callers (the registry, list mode) get the same
-text as a Column through ``F.expr``. Every value a fragment embeds goes
-through `sql_literal`.
+text as a Column through ``F.expr`` (`sql_column`), or run a whole query
+over a DataFrame (`on_frame`). Every value a fragment embeds goes through
+`sql_literal`.
 """
 
 from __future__ import annotations
@@ -14,9 +15,9 @@ import math
 import re
 from typing import Any, Callable
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-__all__ = ["sql_literal", "ident", "sql_column"]
+__all__ = ["sql_literal", "ident", "sql_column", "on_frame"]
 
 # strings quoted as written: no quote, backslash, brace or NUL
 _PLAIN = re.compile(r"[^'\\{}\x00]*")
@@ -57,3 +58,8 @@ def sql_column(fragment: Callable[..., str]) -> Callable[..., Column]:
 
     column.sql = fragment  # type: ignore[attr-defined]
     return column
+
+
+def on_frame(df: DataFrame, query: str) -> DataFrame:
+    """Run `query`, in which ``{rel}`` names `df`, on df's own session."""
+    return df.sparkSession.sql(query, rel=df)

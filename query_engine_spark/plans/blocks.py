@@ -5,40 +5,33 @@ The reference interprets the block list row-at-a-time over an in-memory Vec
 as ONE ``WITH … SELECT`` statement, each block adding named relations over
 the previous working set, and makes one ``spark.sql`` call on the posts
 frame's session (a published snapshot keeps its serving conf). Catalyst
-then pushes filters into the scan, prunes columns, broadcasts the small
-joins and fuses the rest into whole-stage codegen; executing it is the
-driver's final `.collect()` of ≤500 rows. The translator tracks columns
-and pending order keys in Python, so a request costs a handful of py4j
-round trips, not one per DataFrame call. Request strings reach the text
-only through `operators.sql.sql_literal`; side inputs go in as DataFrame
-arguments (spark.sql registers them under unique names for the call).
-Blocks that exist only as DataFrame operators (liked inputs, input.did,
-replace, UDF-tier scripts) run the statement up to that block, apply the
-operator, and pass its output back in as one more relation.
+pushes filters into the scan, prunes columns, broadcasts the small joins
+and fuses the rest into whole-stage codegen; executing it is the driver's
+final `.collect()` of ≤500 rows. Columns and pending order keys are tracked
+in Python, so a request costs a handful of py4j round trips. Request
+strings reach the text only through `operators.sql.sql_literal`; side
+inputs go in as DataFrame arguments. Blocks that exist only as DataFrame
+operators (liked inputs, input.did, replace, UDF-tier scripts) run the
+statement up to that block, apply the operator, and pass its output back
+in as one more relation.
 
-Ordering is LAZY (the round-2 → round-3 redesign). The reference's working
-set is an ordered Vec; relations are unordered. Instead of eagerly stamping
-a global ``__ord`` per input block (round 2's approach — it costs a full
-range-partitioned sort per block that the next sort block immediately
-discards), the working set is kept as a list of *segments*, one per appended
-block, each remembering its natural order as pinned hidden columns
-(``__qe_o{i}`` — a free projection, no sort). The ``__ord`` stamp is
-materialized only when a consumer actually READS cross-segment order:
+Ordering is LAZY. The reference's working set is an ordered Vec; relations
+are unordered. The working set is a list of *segments*, one per appended
+block, each carrying its natural order as pinned hidden columns
+(``__qe_o{i}``, a free projection, no sort). The ``__ord`` stamp is written
+only when a consumer READS cross-segment order:
 
 - `duplicates` / `non_duplicates` filters, `limit.posts_per_user`  → stamp
-- a plain `limit` / the implicit final 500  → per-segment TakeOrdered(n) +
-  bounded stamp (never a full sort)
-- a `sort` block  → discards all pending order for free (it unions the
-  segments' DATA and re-sorts with `id` as the tiebreak; see the sort
-  deviation below)
+- a plain `limit` / the implicit final 500  → per-segment top-N + bounded
+  stamp (never a full sort)
+- a `sort` block  → drops all pending order (it unions the segments' DATA
+  and re-sorts with `id` as the tiebreak; see the deviation below)
 - `stash`/`pop`  → segments move as-is; nothing materializes
 
-Differences from the reference, by design:
-- `now` is an explicit parameter (determinism; the reference calls
-  Utc::now() per block).
-- `sort.random` takes an optional seed.
-- remote fetches (feed skeletons, list resolution) are injected as
-  DataFrames/callables on PipelineContext — I/O stays at the edges.
+Differences from the reference, by design: `now` is an explicit parameter
+(the reference calls Utc::now() per block); `sort.random` takes an optional
+seed; remote fetches (feed skeletons, list resolution) are injected as
+DataFrames/callables on PipelineContext.
 
 Known deviation (not by design): a `sort` breaks ties by `id`, where the
 reference's stable `sort_by` (main.rs:2238-2307) keeps the previous
@@ -46,14 +39,12 @@ working-set order. Rows that tie on the sort key but have different ids
 come out in a different order: `[firehose, sort created_at asc, sort
 reply_count desc]` on the test fixture gives keys `[1..8]` here and
 `[1, 6, 5, 4, 3, 8, 7, 2]` in the reference. Keeping the previous order
-needs the pending order keys to survive the segment union, which changes
-the sort plans.
+needs the pending order keys to survive the segment union.
 
-Score state: a (key → score) side table exactly like the reference's
+Score state: a (key → score) relation like the reference's
 `post_score_global` map (main.rs:1399): per score block the batch map is
-per-key overwrite (max), batches SUM per key. Batches are accumulated and
-folded in ONE key-partitioned exchange at first read (round 2 chained a
-full_outer join per block — N shuffles of the score map).
+per-key overwrite (max), batches SUM per key, all folded in ONE
+key-partitioned exchange at first read.
 
 Admission control matches main.rs:1240-1281: ≤32 blocks, ≤10 regex blocks;
 the implicit final LIMIT 500 matches main.rs:2510-2512.
@@ -74,13 +65,14 @@ from query_engine_spark.operators import inputs as In
 from query_engine_spark.operators.inputs import NOW_COL
 from query_engine_spark.operators import joins as J
 from query_engine_spark.operators.scoring import hn_score_from_micros
-from query_engine_spark.operators.ordering import ORD, mono_stamp, rank_stamp
+from query_engine_spark.operators.ordering import ORD, stamp_sql
+from query_engine_spark.operators.sorts import top_n_sql
 from query_engine_spark.operators.sql import ident, sql_literal
 from query_engine_spark.functions.scripting import translate_script_with_tier
 
 from query_engine_spark.errors import PipelineError
 
-__all__ = ["PipelineContext", "translate_pipeline", "PipelineError"]
+__all__ = ["PipelineContext", "translate_pipeline", "compile_pipeline", "PipelineError"]
 
 MAX_BLOCKS = 32  # main.rs:1240-1254
 MAX_REGEX_BLOCKS = 10  # main.rs:1256-1281
@@ -99,6 +91,10 @@ _SCORE_COUNTS = {**_SORT_COUNTS, "like_count": "like_count"}
 # "post:<id>" — strip the 5-char prefix (main.rs:2431)
 _FORWARD_REPLACE = {"parent": ("parent", 0), "root": ("root", 0), "record": ("record", 5)}
 _INVERSE_REPLACE = {"direct_replies": ("parent", 0), "all_replies": ("root", 0), "quote_posts": ("record", 5)}
+# graph expansions around a DID by listType (fetch_list, main.rs:3046-3140)
+_LIST_TYPES = {
+    "following": J.following, "followers": J.followers, "mutuals": J.mutuals, "following_following": J.following_following
+}
 
 
 @dataclass
@@ -125,22 +121,13 @@ class PipelineContext:
     # opt-in for the sandboxed pandas-UDF script tier (scripting.py): scripts
     # beyond the SQL grammar (reassignment, while, return) run interpreted
     allow_udf_scripts: bool = False
-    # script-tier observability (r16, verdict r15): which tier each
-    # where/score script block landed on — "sql" (codegen fast path) or
-    # "udf" (sandboxed interpreter, 10-100× slow path, with its routing
-    # reason). Populated at translate time, keyed by block id (or a
-    # positional `where#N`/`score#N` when the block has no id); surfaced
-    # by api.generate_feed_skeleton in the debug payload so a config
-    # that silently lands on the slow tier is visible, not inferred.
+    # which tier each where/score script block landed on — "sql" (codegen)
+    # or "udf" (sandboxed interpreter, 10-100× slower, with its routing
+    # reason), keyed by block id or `where#N`/`score#N`; filled at translate
+    # time and shown in api.generate_feed_skeleton's debug payload
     script_tiers: dict[str, dict[str, str]] = field(default_factory=dict)
-    # the last statement translate_pipeline ran, for explain: it names the
-    # posts frame `{posts}` and any other relation `{f1}`, `{f2}` … as
-    # spark.sql keyword frames
-    sql: str | None = None
 
-    def note_script_tier(
-        self, block: dict[str, Any], kind: str, tier: str, reason: str | None
-    ) -> None:
+    def note_script_tier(self, block: dict[str, Any], kind: str, tier: str, reason: str | None) -> None:
         key = str(block.get("id") or f"{kind}#{len(self.script_tiers)}")
         entry = {"kind": kind, "tier": tier}
         if reason:
@@ -162,15 +149,9 @@ class PipelineContext:
         did = block.get("did")
         if did is None or self.follows is None:
             raise PipelineError("list block needs listUri, or did + follows edges")
-        if list_type == "following":
-            return J.following(self.follows, did)
-        if list_type == "followers":
-            return J.followers(self.follows, did)
-        if list_type == "mutuals":
-            return J.mutuals(self.follows, did)
-        if list_type == "following_following":
-            return J.following_following(self.follows, did)
-        raise PipelineError(f"unsupported listType {list_type!r}")
+        if list_type not in _LIST_TYPES:
+            raise PipelineError(f"unsupported listType {list_type!r}")
+        return _LIST_TYPES[list_type](self.follows, did)
 
     def _resolve_skygraph(self, uri: str) -> DataFrame:
         """skygraph://community/<name> → that community's members
@@ -185,20 +166,13 @@ class PipelineContext:
             if self.communities is None:
                 raise PipelineError("skygraph community list needs a communities table")
             name = parts[3] if len(parts) > 3 else ""
-            return (
-                self.communities.filter(F.col("community") == F.lit(name))
-                .select(F.col("user_key").alias("did"))
-                .distinct()
-            )
+            return self.communities.filter(F.col("community") == F.lit(name)).select(F.col("user_key").alias("did")).distinct()
         kind = parts[3] if len(parts) > 3 else ""
         if kind == "topMoots":
             if self.moots is None:
                 raise PipelineError("skygraph topMoots list needs a moots table")
-            return (
-                self.moots.filter(F.col("src_key") == F.lit(host))
-                .orderBy(F.col("weight").desc(), F.col("dst_key"))
-                .select(F.col("dst_key").alias("did"))
-            )
+            top = self.moots.filter(F.col("src_key") == F.lit(host)).orderBy(F.col("weight").desc(), F.col("dst_key"))
+            return top.select(F.col("dst_key").alias("did"))
         raise PipelineError(f"unsupported skygraph uri {uri!r}")
 
 
@@ -265,23 +239,6 @@ class _Statement:
         """Run the statement up to `rel`, apply a DataFrame operator to the
         result and pass its output back in as a relation."""
         return self.frame(fn(self.run(f"SELECT * FROM {rel}")))
-
-
-def _stamp(rel: str, order: str, seq: int, *, bounded: bool, drop: list[str]) -> str:
-    """`rel` with ``__ord`` stamped in `order`, minus the `drop` columns
-    (operators/ordering.py: a bounded set ranks in one partition, anything
-    else sorts range-partitioned and takes the checked mono id)."""
-    if bounded:
-        one = f"SELECT *, spark_partition_id() AS __qe_pid FROM (SELECT /*+ REPARTITION(1) */ * FROM {rel})"
-        return f"SELECT * EXCEPT ({', '.join(['__qe_pid', *drop])}), {rank_stamp(seq, order)} AS {ORD} FROM ({one})"
-    keep = f" EXCEPT ({', '.join(drop)})" if drop else ""
-    return f"SELECT *{keep}, {mono_stamp(seq)} AS {ORD} FROM (SELECT * FROM {rel} ORDER BY {order})"
-
-
-def _ranked(rel: str, keys: list[str], cond: str) -> str:
-    """Rows of `rel` whose occurrence rank in ``__ord`` order within `keys`
-    meets `cond` — a window PARTITIONED by the keys, no global sort."""
-    return f"SELECT * EXCEPT (__occ) FROM (SELECT *, {Fi.occurrence.sql(keys)} AS __occ FROM {rel}) WHERE __occ {cond}"
 
 
 # ---------------------------------------------------------------------------
@@ -370,7 +327,7 @@ class _WorkingSet:
         range-partitioned sort + checked mono-id stamp)."""
         if s.stamped:
             return s
-        rel = self.stmt.cte(_stamp(s.source(), s.order(), s.seq, bounded=s.bounded, drop=s.hidden()))
+        rel = self.stmt.cte(stamp_sql(s.source(), s.order(), s.seq, bounded=s.bounded, drop=s.hidden()))
         return _Segment(rel, s.seq, stamped=True, bounded=s.bounded)
 
     def take(self, s: _Segment, n: int) -> _Segment:
@@ -379,12 +336,11 @@ class _WorkingSet:
         (by (seq, order)) is a subset of each segment's first-n."""
         if s.stamped and not s.where and s.cap is not None and s.cap <= n:
             return s  # already the first n
-        top = f"{s.rows()} ORDER BY {s.order()} LIMIT {n}"
         if s.stamped:
-            return _Segment(self.stmt.cte(top), s.seq, stamped=True, bounded=True, cap=n)
-        top = f"({top})"
-        rel = self.stmt.cte(_stamp(top, s.order(), s.seq, bounded=True, drop=s.hidden()))
-        return _Segment(rel, s.seq, stamped=True, bounded=True, cap=n)
+            top = f"{s.rows()} ORDER BY {s.order()} LIMIT {n}"
+        else:
+            top = top_n_sql(s.rows(), s.order(), n, s.seq, drop=s.hidden())
+        return _Segment(self.stmt.cte(top), s.seq, stamped=True, bounded=True, cap=n)
 
     def materialize(self) -> str:
         """Union with ``__ord`` stamped — only for consumers that read
@@ -461,6 +417,14 @@ def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> Da
     """Compile the block list into one statement and run it on the posts
     frame's session; returns the final working set ordered by __ord and
     truncated to 500, with (id, key, score, __ord) plus all post columns."""
+    stmt, final = compile_pipeline(blocks, ctx)
+    return stmt.run(final)
+
+
+def compile_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> tuple[_Statement, str]:
+    """The statement of the block list and its final SELECT: ``stmt.text(final)``
+    is the text, in which ``{posts}`` names the posts frame and ``{f1}``,
+    ``{f2}`` … the other relations (``stmt.frames``)."""
     if len(blocks) > MAX_BLOCKS:
         raise PipelineError(f"Too many blocks ({len(blocks)} > {MAX_BLOCKS})")
     n_regex = sum(1 for b in blocks if b.get("type") == "regex")
@@ -476,12 +440,9 @@ def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> Da
     if ctx.now is None and NOW_COL not in columns:
         # every window cutoff / age expression below reads NOW_COL; posts
         # that do not carry it (a lazy window, not a published snapshot)
-        # get it the way inputs.with_now attaches it: max(ts) as a
-        # broadcast one-row cross join, one shuffle stage and one
+        # get it as inputs.with_now attaches it: one shuffle stage and one
         # broadcast stage per query
-        posts = stmt.cte(
-            f"SELECT /*+ BROADCAST(n) */ * FROM {{posts}} CROSS JOIN (SELECT max(ts) AS {NOW_COL} FROM {{posts}}) n"
-        )
+        posts = stmt.cte(In.with_now_sql("{posts}"))
         columns.append(NOW_COL)
     now = In.now_sql(ctx.now)
     now_epoch = f"unix_seconds({NOW_COL})" if ctx.now is None else str(int(ctx.now.timestamp()))
@@ -491,9 +452,7 @@ def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> Da
     seq = 1
     prepend_seq = -1
 
-    i = -1
-    for block in blocks:
-        i += 1
+    for i, block in enumerate(blocks):
         b_type = block.get("type")
         if b_type == "input":
             seq, prepend_seq = _input_block(block, ctx, ws, scores, seq, prepend_seq, now)
@@ -530,17 +489,13 @@ def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> Da
                 # missing key (main.rs:2319-2326); popped segments re-seq so
                 # they append AFTER the current set, keeping internal order
                 if key not in stash:
-                    raise PipelineError(
-                        f"stash pop failed: no stash with key {key!r} (main.rs:2320-2324)"
-                    )
+                    raise PipelineError(f"stash pop failed: no stash with key {key!r} (main.rs:2320-2324)")
                 for s in stash[key]:
                     ws.segments.append(_reseq(ws, s, seq))
                     seq += 1
             elif action == "subtract":
                 if key not in stash:
-                    raise PipelineError(
-                        f"stash subtract failed: no stash with key {key!r} (main.rs:2328-2333)"
-                    )
+                    raise PipelineError(f"stash subtract failed: no stash with key {key!r} (main.rs:2328-2333)")
                 slot = stash[key]
                 if slot:
                     keys = stmt.cte("SELECT DISTINCT key FROM (" + " UNION ALL ".join(s.rows("key") for s in slot) + ")")
@@ -555,9 +510,7 @@ def translate_pipeline(blocks: list[dict[str, Any]], ctx: PipelineContext) -> Da
             raise PipelineError(f"unknown block type {b_type!r}")
 
     hide = f" EXCEPT ({NOW_COL})" if NOW_COL in columns else ""
-    final = f"{scores.joined(ws.limited(FINAL_LIMIT), hide)} ORDER BY {ORD}"
-    ctx.sql = stmt.text(final)
-    return stmt.run(final)
+    return stmt, f"{scores.joined(ws.limited(FINAL_LIMIT), hide)} ORDER BY {ORD}"
 
 
 def _reseq(ws: _WorkingSet, s: _Segment, seq: int) -> _Segment:
@@ -737,7 +690,7 @@ def _filter_block(block, ctx, ws, scores, now_epoch, seq):
         # cross-segment order read → materialize the stamp; F8/F9 keep the
         # first occurrence / only the 2nd+ (main.rs:1916-1921)
         cond = "= 1" if subject == "duplicates" else "> 1"
-        ws.set_materialized(stmt.cte(_ranked(ws.materialize(), ["key"], cond)), seq)
+        ws.set_materialized(stmt.cte(Fi.occurrences_sql(ws.materialize(), ["key"], cond)), seq)
     elif subject == "embed":
         # remove-matching (main.rs:1922-1935: keep/remove both retain(!pred))
         kind = {"feed": "feed", "post": "post", "none": "none"}[block.get("value", "none")]
@@ -751,9 +704,7 @@ def _filter_block(block, ctx, ws, scores, now_epoch, seq):
             block["value"], now_epoch_expr=now_epoch, allow_udf=ctx.allow_udf_scripts, boolean=True
         )
         ctx.note_script_tier(block, "where", tier, why)
-        if tier == "sql" and not _reads_score(pred):
-            ws.filter(_polar(pred, keep))
-        elif tier == "sql":
+        if tier == "sql":
             cond = _polar(pred, keep)
             ws.map(lambda rel: f"SELECT * EXCEPT (score) FROM ({scores.joined(rel)}) WHERE {cond}")
         else:
@@ -767,11 +718,6 @@ def _filter_block(block, ctx, ws, scores, now_epoch, seq):
         raise PipelineError(f"unknown filter subject {subject!r}")
 
 
-def _reads_score(script_sql: str) -> bool:
-    """Only a script that reads `score` needs the score map joined on."""
-    return re.search(r"\bscore\b", script_sql) is not None
-
-
 def _score_block(block, ctx, ws, scores, now_epoch, now):
     if block.get("scoreType", "add") != "add":
         raise PipelineError("only scoreType=add exists (main.rs:2151-2162)")
@@ -783,8 +729,7 @@ def _score_block(block, ctx, ws, scores, now_epoch, now):
         )
         ctx.note_script_tier(block, "score", tier, why)
         if tier == "sql":
-            rows = f"({scores.joined(cur)})" if _reads_score(expr) else cur
-            batch = stmt.cte(f"SELECT key, CAST({expr} AS DOUBLE) AS __batch_score FROM {rows}")
+            batch = stmt.cte(f"SELECT key, CAST({expr} AS DOUBLE) AS __batch_score FROM ({scores.joined(cur)})")
         else:
             batch = stmt.apply(
                 stmt.cte(scores.joined(cur)),
@@ -818,8 +763,10 @@ def _sort_block(block, ctx, ws, scores, seq, now, fuse_n=None):
     direction = "ASC" if block.get("sortDirection", block.get("direction", "desc")) == "asc" else "DESC"
 
     def finish(rows, keys, extra=()):
-        rel = f"({rows}{f' ORDER BY {keys} LIMIT {fuse_n}' if fuse_n is not None else ''})"
-        body = _stamp(rel, keys, seq, bounded=fuse_n is not None, drop=list(extra))
+        if fuse_n is None:
+            body = stamp_sql(f"({rows})", keys, seq, drop=extra)
+        else:
+            body = top_n_sql(rows, keys, fuse_n, seq, drop=extra)
         ws.set_materialized(stmt.cte(body), seq, cap=fuse_n)
 
     if sort_type == "score":
@@ -855,7 +802,7 @@ def _limit_block(block, ws, seq):
         # group-wise top-N in current order (main.rs:2349-2373): Spark's
         # WindowGroupLimit turns the rank filter into a partial top-N
         n = int(block.get("count", 3 if "count" in block else 5))
-        ws.set_materialized(ws.stmt.cte(_ranked(ws.materialize(), ["author_key"], f"<= {n}")), seq)
+        ws.set_materialized(ws.stmt.cte(Fi.occurrences_sql(ws.materialize(), ["author_key"], f"<= {n}")), seq)
     else:
         n = int(block.get("count", 100))
         ws.set_materialized(ws.limited(n), seq, cap=n)

@@ -682,7 +682,7 @@ def sc4_created_at_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def o3_sort_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = posts_view(spark, sf_dir)
-    top = So.top_n_with_ord(posts, [F.col("repost_count").desc(), F.col("id").desc()], 50, 0)
+    top = So.top_n_with_ord(posts, "repost_count DESC, id DESC", 50, 0)
     return top.select(F.col(ORD).alias("ord"), "id", "repost_count")
 
 
@@ -699,7 +699,7 @@ def o3_sort_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def o1_sort_created_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # fused sort+limit: TakeOrderedAndProject, then __ord over 100 rows only
-    top = So.top_n_with_ord(ev, [F.col("ts").desc(), F.col("event_id").desc()], 100, 0)
+    top = So.top_n_with_ord(ev, "ts DESC, event_id DESC", 100, 0)
     return top.select(F.col(ORD).alias("ord"), "event_id", F.unix_micros("ts").alias("ts_us"))
 
 
@@ -741,7 +741,7 @@ def o2_sort_hn(spark: SparkSession, sf_dir: str) -> DataFrame:
     age_us = f"unix_micros({In.NOW_COL}) - unix_micros(ts)"
     hn = hn_score_from_micros("like_count", age_us, 1.8)
     posts = posts.withColumn("__hn", hn)
-    top = So.top_n_with_ord(posts, [F.col("__hn").desc(), F.col("id").desc()], 50, 0)
+    top = So.top_n_with_ord(posts, "__hn DESC, id DESC", 50, 0)
     return top.select(F.col(ORD).alias("ord"), "id", F.round("__hn", 6).alias("hn"))
 
 
@@ -752,7 +752,7 @@ def o2_sort_hn(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def o4_sort_random(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn("__r", F.rand(42))
-    top = So.top_n_with_ord(ev, [F.col("__r"), F.col("event_id")], 100, 0)
+    top = So.top_n_with_ord(ev, "__r, event_id", 100, 0)
     return top.select(F.col(ORD).alias("ord"), "event_id")
 
 
@@ -795,7 +795,7 @@ def o5_sort_score_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     out = translate_pipeline(blocks, ctx)
     # output is structurally ≤500 rows (implicit final limit) → bounded rank
-    out = dense_rank_over(out, [F.col(ORD)], "ord", bounded=True)
+    out = stamp_ord(out, [ORD], bounded=True, out="ord")
     return out.select("ord", "id", F.round("score", 6).alias("score"))
 
 
@@ -3285,7 +3285,7 @@ def pipeline_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = translate_pipeline(blocks, ctx)
     # output is structurally ≤500 rows (implicit final limit) → bounded rank:
     # one tiny exchange, no unpartitioned window
-    out = dense_rank_over(out, [F.col(ORD)], "ord", bounded=True)
+    out = stamp_ord(out, [ORD], bounded=True, out="ord")
     return out.select("ord", "id", F.round("score", 6).alias("score"))
 
 

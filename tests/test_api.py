@@ -322,6 +322,67 @@ def test_http_handler_threads_are_bounded(monkeypatch):
         server.stop()
 
 
+def test_http_trickling_client_is_cut_at_the_read_deadline(monkeypatch):
+    """A client that sends its body one byte every 0.1 s never lets a
+    single recv wait out the timeout; the request's deadline still ends it
+    about READ_TIMEOUT_SECONDS after it connected (a 400, or a reset for
+    the bytes left unread), not after the 100 declared bytes. No Spark."""
+    import socket
+    import time
+
+    from query_engine_spark import api
+
+    monkeypatch.setattr(api, "READ_TIMEOUT_SECONDS", 0.5)
+    server = FeedServer(None).start()
+    try:
+        host, port = server.address.removeprefix("http://").split(":")
+        with socket.create_connection((host, int(port)), timeout=0.1) as sock:
+            start = time.monotonic()
+            sock.sendall(
+                b"POST /xrpc/me.skyfeed.builder.generateFeedSkeleton HTTP/1.1\r\n"
+                b"Host: localhost\r\nContent-Length: 100\r\n\r\n"
+            )
+            ended = None
+            while ended is None and time.monotonic() - start < 3:
+                try:
+                    sock.sendall(b"x")
+                    ended = sock.recv(4096)
+                except TimeoutError:
+                    pass
+                except OSError:
+                    ended = b""
+            took = time.monotonic() - start
+        assert ended is not None and took < 2, took
+        assert ended == b"" or ended.split()[1] == b"400"
+    finally:
+        server.stop()
+
+
+def test_http_shutdown_does_not_wait_for_a_handler_slot(monkeypatch):
+    """With every handler slot held by an idle client and one more
+    connection waiting for a slot, shutting the server down returns at
+    once instead of after a slot frees. No Spark."""
+    import socket
+    import time
+
+    from query_engine_spark import api
+
+    monkeypatch.setattr(api, "READ_TIMEOUT_SECONDS", 5)
+    server = FeedServer(None).start()
+    host, port = server.address.removeprefix("http://").split(":")
+    idle = [socket.create_connection((host, int(port)), timeout=5) for _ in range(api.MAX_HANDLER_THREADS + 1)]
+    try:
+        time.sleep(0.3)  # the accept loop now waits for a slot
+        start = time.monotonic()
+        server._httpd.shutdown()
+        took = time.monotonic() - start
+    finally:
+        for sock in idle:
+            sock.close()
+        server.stop()
+    assert took < 1, took
+
+
 def test_fetched_feed_skeleton_roundtrip(spark, posts):
     """S5 end-to-end through the HTTP fetch adapter: recorded feed-skeleton
     fixture → fetch_feed_skeleton → PipelineContext.feeds → input.feed block

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import datetime as dt
-import gc
 import re
 
 import pytest
@@ -338,7 +337,6 @@ def test_feed_requests_translate_in_few_py4j_calls(spark, feed_store, monkeypatc
     counts = {}
     monkeypatch.setattr(ClientServerConnection, "send_command", counted)
     for r in _shape_requests():
-        gc.collect()
         calls.clear()
         translate_pipeline(r["blocks"], PipelineContext(spark=spark, posts=snapshot, now=None))
         counts[r["key"]] = sum(calls)

@@ -54,7 +54,7 @@ def main() -> int:
         "window_topn",
         lambda: So.top_n_with_ord(
             posts.filter(F.col("ts") >= F.timestamp_micros(F.lit(1_700_000_000_000_000 + (n // 2) * 1000))),
-            [F.col("like_count").desc(), F.col("id").desc()],
+            "like_count DESC, id DESC",
             500,
         ).count(),
     )
