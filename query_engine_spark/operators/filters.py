@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame
 
 from query_engine_spark.operators.ordering import ORD
 from query_engine_spark.operators.sql import on_frame, sql_column, sql_literal
@@ -29,6 +29,7 @@ __all__ = [
     "image_count_is",
     "count_cmp",
     "language_is",
+    "in_list_sql",
     "in_list",
     "occurrences_sql",
     "keep_occurrences",
@@ -85,9 +86,17 @@ def language_is(lang: str = "en", langs: str = "langs") -> str:
 # F7 — list membership = semi/anti join on author (main.rs:1903-1915).
 # `broadcast` because lists are small dimension sets; at 100 TB a shuffled
 # semi-join of the fact table against a tiny list would be the bottleneck.
+def in_list_sql(rel: str, members: str, on: str, *, keep: bool = True) -> str:
+    """The rows of relation `rel` whose `on` is (keep) or is not in the `on`
+    column of relation `members`."""
+    return (
+        f"SELECT /*+ BROADCAST(m) */ w.* FROM {rel} w LEFT {'SEMI' if keep else 'ANTI'} JOIN "
+        f"(SELECT DISTINCT {on} FROM {members}) m ON w.{on} = m.{on}"
+    )
+
+
 def in_list(df: DataFrame, list_df: DataFrame, on: str, *, keep: bool = True) -> DataFrame:
-    how = "left_semi" if keep else "left_anti"
-    return df.join(F.broadcast(list_df.select(on).distinct()), on, how)
+    return df.sparkSession.sql(in_list_sql("{rel}", "{members}", on, keep=keep), rel=df, members=list_df)
 
 
 # F8/F9 — order-sensitive dedup: keep first occurrence / keep only 2nd+

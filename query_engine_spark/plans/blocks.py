@@ -536,11 +536,8 @@ def _input_block(block, ctx, ws, scores, seq, prepend_seq, now):
     elif input_type == "list":
         # lists are small → broadcast semi-join (main.rs:1427-1452)
         members = ctx.resolve_list(block)
-        first = ident(members.columns[0])
-        rel = (
-            f"(SELECT /*+ BROADCAST(m) */ p.* FROM {posts} p LEFT SEMI JOIN (SELECT DISTINCT {first} AS author_key "
-            f"FROM {stmt.frame(members)}) m ON p.author_key = m.author_key)"
-        )
+        keys = f"(SELECT {ident(members.columns[0])} AS author_key FROM {stmt.frame(members)})"
+        rel = f"({Fi.in_list_sql(posts, keys, 'author_key')})"
         where = window("historySeconds", 604800)
     elif input_type == "tags":
         where = f"{In.tags_overlap.sql(list(block.get('tags', [])))} AND {window('historySeconds', 604800)}"
@@ -682,10 +679,7 @@ def _filter_block(block, ctx, ws, scores, now_epoch, seq):
     elif subject == "list":
         # F7: broadcast semi/anti join on the author (main.rs:1903-1915)
         members = stmt.frame(ctx.resolve_list(block))
-        ws.map(
-            lambda rel: f"SELECT /*+ BROADCAST(m) */ w.* FROM {rel} w LEFT {'SEMI' if keep else 'ANTI'} JOIN "
-            f"(SELECT DISTINCT author_key FROM {members}) m ON w.author_key = m.author_key"
-        )
+        ws.map(lambda rel: Fi.in_list_sql(rel, members, "author_key", keep=keep))
     elif subject in ("duplicates", "non_duplicates"):
         # cross-segment order read → materialize the stamp; F8/F9 keep the
         # first occurrence / only the 2nd+ (main.rs:1916-1921)
